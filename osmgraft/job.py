@@ -17,6 +17,13 @@ so a killed job resumes at the first incomplete stage):
 
     decode+extract -> rank -> label -> [knn dedup] -> tiles -> sink
 
+A staged write costs one Spark job per chunk (plus one checkpoint of the
+stage when more than one chunk is written): each chunk's row count and
+content hash are observed in its own write job. On --resume the reused
+chunks are checked from their parquet footers (no job) and then by content
+in one job for all of them; a chunk that fails is recomputed. The sink's
+row count is observed in the sink's write job, in parquet and text mode.
+
 Streaming ingest mode (the documents table grows continuously):
 
     ... osmgraft/job.py --streaming --checkpoint s3://bucket/_ckpt \
@@ -97,7 +104,8 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     # only stop a session this entrypoint itself created: under spark-submit
     # that's the job's own session; embedded (tests, notebooks) the caller
@@ -111,7 +119,6 @@ def main(argv: list[str] | None = None) -> None:
     from osmgraft.sources.config import default_config, load_config
 
     cfg = load_config(args.config) if args.config else default_config()
-    blobs = spark.read.parquet(args.blobs)
 
     if args.streaming:
         if not args.checkpoint:
@@ -133,7 +140,7 @@ def main(argv: list[str] | None = None) -> None:
         q = stream_pipeline_foreach_batch(
             spark,
             stream,
-            blobs,
+            spark.read.parquet(args.blobs),
             args.out,
             args.checkpoint,
             cfg=cfg,
@@ -148,8 +155,6 @@ def main(argv: list[str] | None = None) -> None:
         if owns_session:
             spark.stop()
         return
-
-    docs = spark.read.parquet(args.docs)
 
     def staged(name: str, builder):
         if args.stage_dir:
@@ -171,7 +176,13 @@ def main(argv: list[str] | None = None) -> None:
             return materialize(builder(), path, name)
         return builder()
 
-    labels = staged("labels", lambda: label_pipeline(spark, docs, blobs, cfg=cfg))
+    def build_labels():
+        # the inputs are read only if the stage is built: each bare parquet
+        # read runs a schema-inference job that a verified resume skips
+        docs, blobs = spark.read.parquet(args.docs), spark.read.parquet(args.blobs)
+        return label_pipeline(spark, docs, blobs, cfg=cfg)
+
+    labels = staged("labels", build_labels)
     if args.dedup_radius_m > 0:
         from osmgraft.operators.knn import dedup_labels
 
@@ -181,14 +192,13 @@ def main(argv: list[str] | None = None) -> None:
     tiled = assign_tiles(labels, z=args.tile_zoom)
 
     if args.text_format:
-        format_complete(tiled, export_hierarchy=args.export_hierarchy).write.mode(
-            "overwrite"
-        ).text(args.out)
-    else:
-        tiled.write.mode("overwrite").parquet(args.out)
+        tiled = format_complete(tiled, export_hierarchy=args.export_hierarchy)
+    # the sink's row count comes from its own write job, not a re-read
+    sunk = Observation()
+    writer = tiled.observe(sunk, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
+    (writer.text if args.text_format else writer.parquet)(args.out)
 
-    n = spark.read.parquet(args.out).count() if not args.text_format else None
-    print(json.dumps({"status": "ok", "out": args.out, "rows": n}))
+    print(json.dumps({"status": "ok", "out": args.out, "rows": sunk.get["rows"]}))
     if owns_session:
         spark.stop()
 

@@ -97,6 +97,54 @@ def _run_plain(spark, docs, blobs, out):
     return buf.getvalue().strip().splitlines()[-1]
 
 
+def test_job_staged_job_budget(spark, tmp_path, monkeypatch, capsys):
+    """Staging and verifying cost a bounded number of Spark jobs: a fresh
+    staged run adds at most one write per chunk plus two jobs to the
+    unstaged run, and a --resume with every chunk intact runs at most two
+    (verification) jobs before tiles and sink. Jobs are counted per run
+    through a job group. The sink reports its row count in text mode too."""
+    from osmgraft import job
+    from osmgraft.operators import tiles
+    from osmgraft.plans.lineage import read_lineage
+
+    docs, blobs = _write_inputs(spark, tmp_path)
+    sc = spark.sparkContext
+    n_chunks = 4
+    real_assign_tiles = tiles.assign_tiles
+    before_tiles = {}
+
+    def run(name, extra):
+        sc.setJobGroup(name, name)
+        try:
+            job.main(
+                ["--docs", docs, "--blobs", blobs, "--out", str(tmp_path / name),
+                 "--tile-zoom", "12", *extra]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    def counting_tiles(df, *args, **kw):
+        name = sc.getLocalProperty("spark.jobGroup.id")
+        before_tiles[name] = len(sc.statusTracker().getJobIdsForGroup(name))
+        return real_assign_tiles(df, *args, **kw)
+
+    monkeypatch.setattr(tiles, "assign_tiles", counting_tiles)
+    stage = ["--stage-dir", str(tmp_path / "stages"), "--resume-chunks", str(n_chunks)]
+    unstaged = run("budget_unstaged", [])
+    rows = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows"]
+    run("budget_text", ["--text-format"])
+    text_status = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert text_status["rows"] == rows  # a label may span lines: count rows, not lines
+    staged = run("budget_staged", stage)
+    assert staged <= unstaged + n_chunks + 2, (staged, unstaged)
+
+    run("budget_resumed", [*stage, "--resume"])
+    assert before_tiles["budget_resumed"] <= 2, before_tiles
+    assert all(c["resumed"] for c in read_lineage(str(tmp_path / "stages" / "labels"))["chunks"])
+
+
 def test_job_cli_streaming_incremental(spark, tmp_path, capsys):
     """--streaming drains the docs dir through the per-epoch pipeline sink;
     rerunning with the SAME checkpoint after new files arrive processes

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import pyspark.sql.functions as F
 import pytest
@@ -91,7 +92,13 @@ def test_adaptive_cell_split(spark):
 
 
 def test_lineage_resume(spark, tmp_path):
-    from osmgraft.plans.lineage import is_complete, materialize, read_lineage, resume_or_compute
+    from osmgraft.plans.lineage import (
+        is_complete,
+        materialize,
+        partition_fingerprint,
+        read_lineage,
+        resume_or_compute,
+    )
 
     path = str(tmp_path / "stage1")
     df = spark.range(1000).withColumn("v", F.col("id") * 2)
@@ -100,7 +107,8 @@ def test_lineage_resume(spark, tmp_path):
     assert is_complete(spark, path)
     meta = read_lineage(path)
     assert meta["total_rows"] == 1000
-    assert sum(p["rows"] for p in meta["partitions"]) == 1000
+    # the hash observed in the write job equals a re-read's fingerprint
+    assert meta["content_hash"] == str(sum(int(p["hash"]) for p in partition_fingerprint(out)))
 
     calls = []
 
@@ -117,6 +125,15 @@ def test_lineage_resume(spark, tmp_path):
     re2 = resume_or_compute(spark, path, "stage1", builder)
     assert re2.count() == 1000
     assert calls == [1]
+
+    # a lost part file: the footers no longer add up -> rebuild
+    parts = [f for f in os.listdir(path) if f.startswith("part-")]
+    assert len(parts) > 1
+    os.remove(os.path.join(path, parts[0]))
+    assert not is_complete(spark, path)
+    re3 = resume_or_compute(spark, path, "stage1", builder)
+    assert sorted(r["id"] for r in re3.collect()) == list(range(1000))
+    assert calls == [1, 1]
 
 
 def test_lineage_partition_range_resume(spark, tmp_path):
@@ -171,7 +188,10 @@ def test_lineage_partition_range_resume(spark, tmp_path):
     assert stage_meta["total_rows"] == 1000
     assert sorted(c.get("resumed", False) for c in stage_meta["chunks"]) == [False, True]
     resumed = [c for c in stage_meta["chunks"] if c.get("resumed")][0]
-    assert resumed["partitions"] == chunk0_meta["partitions"]
+    assert (resumed["total_rows"], resumed["content_hash"]) == (
+        chunk0_meta["total_rows"],
+        chunk0_meta["content_hash"],
+    )
     # content is complete and exact
     got = sorted((r["id"], r["v"]) for r in out.collect())
     assert got == [(i, 3 * i) for i in range(1000)]
@@ -303,3 +323,147 @@ def test_lineage_chunk_by_mismatch_recomputes(spark, tmp_path):
     meta = read_lineage(path)
     assert meta["n_chunks"] == 2 and meta["total_rows"] == 600
     assert all(c["chunk_by"] == ["v"] for c in meta["chunks"])
+
+
+def _part_files(path):
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-")
+    )
+
+
+def test_lineage_same_count_other_content_recomputes(spark, tmp_path):
+    """A chunk rewritten with other rows of the same count keeps a valid
+    structure (footers add up to its sidecar's total_rows) but fails the
+    content check: resume recomputes it, reuses the untouched chunk."""
+    from osmgraft.plans.lineage import (
+        is_complete,
+        materialize_chunked,
+        read_lineage,
+        resume_or_compute,
+    )
+
+    path = str(tmp_path / "stage5")
+    df = spark.range(800).withColumn("v", F.col("id") * 11)
+    materialize_chunked(df, path, "stage5", n_chunks=2, chunk_by=["id"])
+    chunk0 = os.path.join(path, "chunk-00000")
+    rows0 = read_lineage(chunk0)["total_rows"]
+
+    # foreign rows, same count: swap chunk 0's part files, keep its sidecar
+    other = str(tmp_path / "other")
+    spark.read.parquet(chunk0).withColumn("v", F.col("v") + 1).coalesce(1).write.parquet(other)
+    for f in os.listdir(chunk0):
+        if f.startswith(("part-", ".part-")):
+            os.remove(os.path.join(chunk0, f))
+    for f in _part_files(other):
+        shutil.copy(f, chunk0)
+    assert spark.read.parquet(chunk0).count() == rows0
+    assert is_complete(spark, chunk0)  # structure alone cannot tell
+
+    calls = []
+
+    def builder():
+        calls.append(1)
+        return spark.range(800).withColumn("v", F.col("id") * 11)
+
+    out = resume_or_compute(spark, path, "stage5", builder, n_chunks=2, chunk_by=["id"])
+    assert calls == [1]
+    got = sorted((r["id"], r["v"]) for r in out.collect())
+    assert got == [(i, 11 * i) for i in range(800)]
+    assert [c.get("resumed", False) for c in read_lineage(path)["chunks"]] == [False, True]
+
+
+def test_lineage_truncated_part_recomputes(spark, tmp_path, monkeypatch):
+    """A truncated part file is an unreadable footer: the chunk is
+    incomplete and recomputed. Errors other than missing/undecodable files
+    propagate out of is_complete instead of reading as "incomplete"."""
+    from osmgraft.plans import lineage
+    from osmgraft.plans.lineage import (
+        is_complete,
+        materialize_chunked,
+        read_lineage,
+        resume_or_compute,
+    )
+
+    path = str(tmp_path / "stage6")
+    df = spark.range(700).withColumn("v", F.col("id") * 13)
+    materialize_chunked(df, path, "stage6", n_chunks=2, chunk_by=["id"])
+    chunk1 = os.path.join(path, "chunk-00001")
+    part = max(_part_files(chunk1), key=os.path.getsize)
+    with open(part, "r+b") as fh:
+        fh.truncate(os.path.getsize(part) // 2)
+    assert not is_complete(spark, chunk1)
+
+    calls = []
+
+    def builder():
+        calls.append(1)
+        return spark.range(700).withColumn("v", F.col("id") * 13)
+
+    out = resume_or_compute(spark, path, "stage6", builder, n_chunks=2, chunk_by=["id"])
+    assert calls == [1]
+    got = sorted((r["id"], r["v"]) for r in out.collect())
+    assert got == [(i, 13 * i) for i in range(700)]
+    assert [c.get("resumed", False) for c in read_lineage(path)["chunks"]] == [True, False]
+
+    def broken(_):
+        raise RuntimeError("not a file-state error")
+
+    monkeypatch.setattr(lineage.pq, "read_metadata", broken)
+    with pytest.raises(RuntimeError):
+        is_complete(spark, chunk1)
+
+
+def test_lineage_empty_chunks_verify_and_resume(spark, tmp_path):
+    """More chunks than distinct chunk_by values leaves chunks empty. They
+    carry the fixed empty hash, verify, and are reused like any other."""
+    from osmgraft.plans.lineage import (
+        is_complete,
+        materialize_chunked,
+        read_lineage,
+        resume_or_compute,
+    )
+
+    path = str(tmp_path / "stage7")
+
+    def frame():
+        return spark.range(300).withColumn("k", (F.col("id") % 2).cast("int"))
+
+    materialize_chunked(frame(), path, "stage7", n_chunks=6, chunk_by=["k"])
+    chunks = read_lineage(path)["chunks"]
+    empty = [c for c in chunks if c["total_rows"] == 0]
+    assert len(empty) >= 4
+    assert all(c["content_hash"] == "0" for c in empty)
+    assert all(is_complete(spark, os.path.join(path, f"chunk-{i:05d}")) for i in range(6))
+
+    calls = []
+
+    def builder():
+        calls.append(1)
+        return frame()
+
+    out = resume_or_compute(spark, path, "stage7", builder, n_chunks=6, chunk_by=["k"])
+    assert calls == []  # every chunk, empty ones included, verified and reused
+    assert all(c["resumed"] for c in read_lineage(path)["chunks"])
+    got = sorted((r["id"], r["k"]) for r in out.collect())
+    assert got == [(i, i % 2) for i in range(300)]
+
+
+def test_lineage_chunk_of_other_schema_recomputes(spark, tmp_path):
+    """A verified chunk written by a plan with another schema (the pipeline
+    gained a column between the kill and the resume) is rewritten, never
+    read back under the new schema with the column silently null."""
+    from osmgraft.plans.lineage import materialize_chunked, read_lineage, resume_or_compute
+
+    path = str(tmp_path / "stage8")
+    df = spark.range(400).withColumn("v", F.col("id") * 3)
+    materialize_chunked(df, path, "stage8", n_chunks=2, chunk_by=["id"])
+    os.remove(os.path.join(path, "_lineage.json"))
+    shutil.rmtree(os.path.join(path, "chunk-00001"))
+
+    def builder():
+        return spark.range(400).withColumn("v", F.col("id") * 3).withColumn("w", F.col("id") + 1)
+
+    out = resume_or_compute(spark, path, "stage8", builder, n_chunks=2, chunk_by=["id"])
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(i, 3 * i, i + 1) for i in range(400)]
+    assert not any(c.get("resumed", False) for c in read_lineage(path)["chunks"])
