@@ -1,4 +1,5 @@
-"""J6: kNN joins + label deduplication via cell-ring candidate pruning.
+"""J6: kNN joins via cell-ring candidate pruning, and label deduplication
+by an election grid plus one exact probe for the elected leaders.
 
 Engine extension (north_rule); absent from the reference. The geometry is
 pure Catalyst: haversine distance is built from built-in trig functions
@@ -29,12 +30,24 @@ hemisphere on both sides, which turns the cap search into an exact
 per-hemisphere brute-force join INSIDE the same equi-join — no extra
 plan branches, and the operator is correct at every latitude instead of
 silently missing neighbors near the poles.
+
+Label dedup (:func:`dedup_labels`: drop a label if a better-ranked label
+lies within ``r``) is one linear plan, after the background-grid argument
+of Bridson's Poisson-disk sampling (SIGGRAPH 2007): in a grid whose cells
+have a diameter of at most ``r``, every pair in a cell lies within ``r``.
+Square lat/lon cells of side ``r / (sqrt(2) * DEG_M)`` degrees qualify at
+every latitude, because the great-circle distance never exceeds ``DEG_M``
+times the lat/lon plane distance. So one ``min(rank)`` per cell suppresses
+everyone ranked worse than the cell's best without a distance test, and
+only those leaders (ties included) go through the exact kNN join above.
+A label meets at most one leader per election cell within the join's
+reach, so the tested pairs are linear in the label count, however dense
+the labels are.
 """
 
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -44,7 +57,6 @@ from pyspark.sql import functions as F
 from osmgraft.functions.cells import (
     _HEX_BASE_EDGE,
     hex_cell,
-    hex_cell_udf,
     hex_edge_deg,
     hex_neighbors_expr,
     pack_hex,
@@ -208,91 +220,18 @@ def _suffix_right(right: DataFrame) -> list[Column]:
     return [F.col(c).alias(f"{c}_r") for c in right.columns]
 
 
-def _knn_candidates_at_res(
+def _candidate_pairs(
     left: DataFrame,
     right: DataFrame,
     radius_m: float,
-    res: int,
     left_cols: tuple[str, str],
     right_cols: tuple[str, str],
+    probe_k: int,
+    skew_max_rows: int | None | str,
 ) -> DataFrame:
-    """Single-resolution kernel (explicit ``res``): cell-pruned equi-join +
-    exact haversine. The caller owns the disk(1) containment guarantee."""
-    enc = hex_cell_udf(res)
-    l = left.withColumn("_cell", enc(F.col(left_cols[0]), F.col(left_cols[1])))
-
-    rlat, rlon = F.col(right_cols[0]), F.col(right_cols[1])
-    margin = F.lit(radius_m / DEG_M) / F.greatest(F.cos(F.radians(rlat)), F.lit(0.05)) + F.lit(
-        2 * hex_edge_deg(res)
-    )
-    east = right.where(rlon > 180.0 - margin).withColumn(right_cols[1] + "__s", rlon - 360.0)
-    west = right.where(rlon < -180.0 + margin).withColumn(right_cols[1] + "__s", rlon + 360.0)
-    shifted = east.unionByName(west)
-
-    def enc_right(df: DataFrame, lon_col: str) -> DataFrame:
-        out = df.withColumn("_cell_r", enc(rlat, F.col(lon_col)))
-        return out.select(_suffix_right(right) + [F.col("_cell_r")])
-
-    r_all = enc_right(right, right_cols[1]).unionByName(enc_right(shifted, right_cols[1] + "__s"))
-
-    l_exp = l.withColumn("_cand", F.explode(hex_neighbors_expr(F.col("_cell"), k=1))).drop("_cell")
-    pairs = l_exp.join(r_all, l_exp["_cand"] == r_all["_cell_r"]).drop("_cand", "_cell_r")
-    dist = haversine_m(
-        F.col(left_cols[0]), F.col(left_cols[1]), F.col(f"{right_cols[0]}_r"), F.col(f"{right_cols[1]}_r")
-    )
-    return pairs.withColumn("dist_m", dist).where(F.col("dist_m") <= radius_m)
-
-
-def knn_candidates(
-    left: DataFrame,
-    right: DataFrame,
-    radius_m: float,
-    res: int | None = None,
-    left_cols: tuple[str, str] = ("lat", "lon"),
-    right_cols: tuple[str, str] = ("lat", "lon"),
-    probe_k: int = 3,
-    skew_max_rows: int | None | str = "auto",
-) -> DataFrame:
-    """All (left, right) pairs within ``radius_m`` — cell-pruned equi-join +
-    exact haversine filter. Right columns arrive suffixed with ``_r``.
-
-    ``skew_max_rows`` (banded path): split hot cells before the equi-join —
-    right rows in cells over the bound are salted (pure hash of their
-    coordinates), left probe rows replicate once per salt bucket, and the
-    join runs on (cell, salt). Identical pairs out (tested), but a dense
-    urban cell's reduce work spreads over ceil(n/bound) tasks instead of
-    pinning one. Best-effort past ``hot_cell_map``'s 64-salt replication
-    cap: a cell beyond ``64 * skew_max_rows`` rows splits 64 ways
-    proportionally (see :func:`osmgraft.operators.skew.hot_cell_map`).
-    The default ``"auto"`` derives the bound from AQE's advisory
-    partition size (:func:`osmgraft.operators.skew.auto_skew_bound`), so
-    the rail is on unless explicitly disabled with ``None``.
-
-    With ``res=None`` (default) the resolution is latitude-banded and the
-    whole search — all bands, antimeridian replicas, and polar caps — is
-    ONE equi-join over single-pass encodings of each side (see module
-    docstring). Pass an explicit ``res`` to force one global resolution.
-
-    No pair can be emitted twice: a right row emits at most one cell per
-    (resolution, lon-replica) pair, the left disk(1) holds 7 cells of one
-    resolution spanning < 1 plane-degree, and lon replicas sit ~360
-    plane-degrees apart — so per left row at most one of a right row's
-    emitted cells can land in the disk, and no dedup pass is needed.
-    """
-    if res is not None:
-        # the forced-res path replicates seam rows wholesale; a pair can
-        # match via both the original and the shifted replica only in the
-        # seam sliver, so dedup is confined there.
-        out = _knn_candidates_at_res(left, right, radius_m, res, left_cols, right_cols)
-        rlat_r, rlon_r = F.col(f"{right_cols[0]}_r"), F.col(f"{right_cols[1]}_r")
-        margin_r = F.lit(radius_m / DEG_M) / F.greatest(
-            F.cos(F.radians(rlat_r)), F.lit(0.05)
-        ) + F.lit(2 * hex_edge_deg(res))
-        in_seam = (rlon_r > 180.0 - margin_r) | (rlon_r < -180.0 + margin_r)
-        safe = out.where(~in_seam)
-        seam = out.where(in_seam)
-        return safe.unionByName(seam.dropDuplicates(seam.columns))
-
+    """Every pair the cell equi-join of :func:`knn_candidates` emits, with
+    its haversine ``dist_m`` and before the radius filter: the pairs the
+    exact distance test is paid for."""
     l = left.withColumn(
         "_cell", _left_cell_udf(radius_m, probe_k)(F.col(left_cols[0]), F.col(left_cols[1]))
     )
@@ -327,7 +266,45 @@ def knn_candidates(
     dist = haversine_m(
         F.col(left_cols[0]), F.col(left_cols[1]), F.col(f"{right_cols[0]}_r"), F.col(f"{right_cols[1]}_r")
     )
-    return pairs.withColumn("dist_m", dist).where(F.col("dist_m") <= radius_m)
+    return pairs.withColumn("dist_m", dist)
+
+
+def knn_candidates(
+    left: DataFrame,
+    right: DataFrame,
+    radius_m: float,
+    left_cols: tuple[str, str] = ("lat", "lon"),
+    right_cols: tuple[str, str] = ("lat", "lon"),
+    probe_k: int = 3,
+    skew_max_rows: int | None | str = "auto",
+) -> DataFrame:
+    """All (left, right) pairs within ``radius_m`` — cell-pruned equi-join +
+    exact haversine filter. Right columns arrive suffixed with ``_r``.
+
+    ``skew_max_rows``: split hot cells before the equi-join —
+    right rows in cells over the bound are salted (pure hash of their
+    coordinates), left probe rows replicate once per salt bucket, and the
+    join runs on (cell, salt). Identical pairs out (tested), but a dense
+    urban cell's reduce work spreads over ceil(n/bound) tasks instead of
+    pinning one. Best-effort past ``hot_cell_map``'s 64-salt replication
+    cap: a cell beyond ``64 * skew_max_rows`` rows splits 64 ways
+    proportionally (see :func:`osmgraft.operators.skew.hot_cell_map`).
+    The default ``"auto"`` derives the bound from AQE's advisory
+    partition size (:func:`osmgraft.operators.skew.auto_skew_bound`), so
+    the rail is on unless explicitly disabled with ``None``.
+
+    The resolution is latitude-banded and the whole search — all bands,
+    antimeridian replicas, and polar caps — is ONE equi-join over
+    single-pass encodings of each side (see module docstring).
+
+    No pair can be emitted twice: a right row emits at most one cell per
+    (resolution, lon-replica) pair, the left disk(1) holds 7 cells of one
+    resolution spanning < 1 plane-degree, and lon replicas sit ~360
+    plane-degrees apart — so per left row at most one of a right row's
+    emitted cells can land in the disk, and no dedup pass is needed.
+    """
+    pairs = _candidate_pairs(left, right, radius_m, left_cols, right_cols, probe_k, skew_max_rows)
+    return pairs.where(F.col("dist_m") <= radius_m)
 
 
 def knn_join(
@@ -336,7 +313,6 @@ def knn_join(
     k: int,
     radius_m: float,
     left_key: str,
-    res: int | None = None,
     probe_k: int = 3,
 ) -> DataFrame:
     """Top-k nearest right rows per left row within ``radius_m``.
@@ -345,122 +321,45 @@ def knn_join(
     ``radius_m`` are irrelevant by construction, so no iterative ring
     expansion is needed.
     """
-    cand = knn_candidates(left, right, radius_m, res=res, probe_k=probe_k)
+    cand = knn_candidates(left, right, radius_m, probe_k=probe_k)
     w = Window.partitionBy(left_key).orderBy(F.col("dist_m").asc())
     return cand.withColumn("knn_rank", F.row_number().over(w)).where(F.col("knn_rank") <= k)
 
 
+def election_side_deg(radius_m: float) -> float:
+    """Side, in degrees, of the square election cells of
+    :func:`dedup_labels`: ``r / (sqrt(2) * DEG_M)``, so a cell's diagonal
+    spans ``r`` of plane degrees, shrunk by a relative 1e-9 so that float
+    rounding in the cell floor and in the haversine cannot carry a
+    same-cell pair past ``r``."""
+    return radius_m / (math.sqrt(2.0) * DEG_M) * (1.0 - 1e-9)
+
+
 def _dedup_frames(
-    slim: DataFrame,
-    radius_m: float,
-    rank_col: str,
-    id_col: str,
-    probe_k: int,
-    hot_threshold: int = 200,
-    routing_gate: float = 2.0,
+    slim: DataFrame, radius_m: float, rank_col: str, id_col: str, skew_max_rows: int | None | str
 ) -> dict[str, DataFrame]:
-    """Adaptive suppression plan for :func:`dedup_labels` — intermediate
-    frames exposed for the candidate-bound test.
-
-    Suppression only needs "EXISTS a better-ranked label within r", so the
-    all-pairs enumeration — quadratic in local label density: a 10^4-label
-    hot cell => ~10^8 candidate pairs through the haversine — is bounded
-    by routing each label through one of two sides of the SAME plan
-    (no driver action; the split is a column from the stats aggregation):
-
-    - ``cell_stats``: one groupBy over the right cell emission yields, per
-      occupied cell, its min-rank LEADER row and its row count. A label
-      whose own cell holds more than ``hot_threshold`` rows is HOT.
-    - HOT labels probe their disk(probe_k) against leaders only — LINEAR
-      (<= 3k(k+1)+1 probe rows each, one leader per cell). A hot label
-      with a better-ranked leader within r is suppressed right there (in
-      a dense cluster that is almost everyone); one with a better-ranked
-      leader in the disk but beyond r is ``undecided`` and falls through
-      to the exact join. Equivalence: any true suppressor M sits in a
-      probed cell, whose leader ranks <= M — so a hot label is phase-1
-      suppressed or undecided, never wrongly kept.
-    - COLD labels take the exact pair join unchanged (sparse regions pay
-      zero extra stages beyond the stats shuffle; the residual quadratic
-      term is cold-rows-adjacent-to-hot-cells x hot density).
-
-    Both routes apply the identical (dist <= r, rank <, id !=) predicate
-    against the complete label set, so the union of suppressions equals
-    the all-pairs result exactly (tested, incl. antimeridian + caps)."""
-    rank_r, id_r = F.col(f"{rank_col}_r"), F.col(f"{id_col}_r")
-
-    r_exp = slim.select(
-        _suffix_right(slim)
-        + [F.explode(_right_cells_udf(radius_m, probe_k)(F.col("lat"), F.col("lon"))).alias("_cell_r")]
-    ).where(F.col("_cell_r") != -1)
-    cell_stats = r_exp.groupBy("_cell_r").agg(
-        F.min(F.struct(rank_r, id_r, F.col("lat_r"), F.col("lon_r"))).alias("_m"),
-        F.count("*").alias("_n"),
+    """The plan of :func:`dedup_labels` over its slim (id, rank, lat, lon)
+    frame, its intermediate frames exposed for tests: ``leaders`` (each
+    election cell's min-rank labels), ``probed`` (every pair the leaders'
+    exact probe tests, with ``dist_m``) and ``suppressed`` (the ids to drop,
+    possibly repeated)."""
+    side = election_side_deg(radius_m)
+    cell = Window.partitionBy(F.floor(F.col("lat") / side), F.floor(F.col("lon") / side))
+    # null for a null rank: such a label is neither a leader nor suppressed
+    elected = slim.withColumn("_lead", F.col(rank_col) == F.min(rank_col).over(cell))
+    leaders = elected.where(F.col("_lead")).drop("_lead")
+    probed = _candidate_pairs(
+        leaders, slim, radius_m, ("lat", "lon"), ("lat", "lon"), probe_k=3, skew_max_rows=skew_max_rows
     )
-    # lazy checkpoint: the stats shuffle runs exactly once (on the skew
-    # probe below) and its small per-cell output is cached for the three
-    # routing consumers (leaders, hot flag, cold flag) IF routing engages;
-    # when it doesn't, the only cost paid was that single linear pass
-    cell_stats = cell_stats.localCheckpoint(eager=False)
-
-    l_cell = _left_cell_udf(radius_m, probe_k)(F.col("lat"), F.col("lon"))
-    l_all = slim.withColumn("_cell", l_cell)
-
-    def probe_join(left_frame: DataFrame, right_frame: DataFrame) -> DataFrame:
-        ex = left_frame.withColumn("_cand", F.explode(_left_cand_expr(F.col("_cell"), probe_k)))
-        out = ex.join(right_frame, ex["_cand"] == right_frame["_cell_r"])
-        return out.withColumn(
-            "dist_m", haversine_m(F.col("lat"), F.col("lon"), F.col("lat_r"), F.col("lon_r"))
-        )
-
-    hit = (F.col("dist_m") <= radius_m) & (rank_r < F.col(rank_col)) & (id_r != F.col(id_col))
-
-    # pay-as-you-go routing: ONE driver action probes the densest cell; if
-    # no cell exceeds routing_gate x hot_threshold, the leader machinery
-    # (flag join, leader probe, verdict groupBy, semi-join) cannot beat the
-    # plain exact join it exists to bound, so everyone routes exact and the
-    # prepass's total cost was the single stats pass. Above the gate the
-    # quadratic is real: the cached stats frame feeds the three routing
-    # consumers for free, and the hot list is nonempty by construction
-    # (mx > gate >= hot_threshold), small by construction
-    # (<= total/hot_threshold entries), so flagging is a broadcast left
-    # join — no shuffle of the label side.
-    mx = cell_stats.agg(F.max("_n")).first()[0] or 0
-    leaders = cell_stats.select("_cell_r", "_m.*")
-    if mx <= routing_gate * hot_threshold:
-        hot_l = cold_l = None
-        phase1 = undecided = None
-        exact_left = l_all
-        cold_count_frame = l_all
-    else:
-        hot_cells = cell_stats.where(F.col("_n") > hot_threshold).select(
-            F.col("_cell_r").alias("_cell"), F.lit(True).alias("_hot")
-        )
-        flagged = l_all.join(F.broadcast(hot_cells), "_cell", "left")
-        hot_l = flagged.where(F.col("_hot")).drop("_hot")
-        cold_l = flagged.where(F.col("_hot").isNull()).drop("_hot")
-        cold_count_frame = cold_l
-
-        hp = probe_join(hot_l, leaders).where(rank_r < F.col(rank_col))
-        verdict = hp.groupBy(id_col).agg(
-            F.max(((F.col("dist_m") <= radius_m) & (id_r != F.col(id_col))).cast("int")).alias("_s")
-        )
-        phase1 = verdict.where(F.col("_s") == 1).select(id_col)
-        undecided = hot_l.join(verdict.where(F.col("_s") == 0).select(id_col), id_col, "left_semi")
-        exact_left = undecided.unionByName(cold_l)
-
-    # duplicates are harmless to the final left_anti join, so no
-    # union-level distinct; phase2 keeps one to collapse the (id x
-    # suppressor-count) fan-out before it ships
-    phase2 = probe_join(exact_left, r_exp).where(hit).select(id_col).distinct()
-    suppressed = phase2 if phase1 is None else phase1.unionByName(phase2)
+    beaten = probed.where(
+        (F.col("dist_m") <= radius_m)
+        & (F.col(f"{rank_col}_r") < F.col(rank_col))
+        & (F.col(f"{id_col}_r") != F.col(id_col))
+    ).select(id_col)
     return {
         "leaders": leaders,
-        "phase1": phase1,
-        "undecided": undecided,
-        "cold": cold_count_frame,
-        "suppressed": suppressed,
-        "routed": phase1 is not None,
-        "max_cell_rows": mx,
+        "probed": probed,
+        "suppressed": elected.where(~F.col("_lead")).select(id_col).unionByName(beaten),
     }
 
 
@@ -469,83 +368,44 @@ def dedup_labels(
     radius_m: float,
     rank_col: str = "rank",
     id_col: str = "osm_id",
-    res: int | None = None,
-    probe_k: int = 3,
-    materialize: bool = True,
-    prepass: bool = True,
-    hot_threshold: int = 200,
-    prepass_min_rows: int = 100_000,
-    routing_gate: float = 2.0,
+    prepass_min_rows: int | None = None,
 ) -> DataFrame:
     """kNN label dedup: suppress any label that has a MORE important label
     (smaller ``rank_col``) within ``radius_m``. Deterministic because the
-    global rank is a total order.
+    global rank is a total order; ``id_col`` names one label per value and
+    ``lat``/``lon`` are non-null degrees.
 
-    ``prepass`` (default) routes through the adaptive hot/cold split
-    (:func:`_dedup_frames`), which bounds the dense-cell blow-up: the
-    all-pairs path enumerates O(n^2) candidate pairs inside a hot cell,
-    the leader route O(n) + exact pairs for the (small) undecided
-    residue, while cold (sparse) cells keep the exact join's cost profile
-    plus one stats shuffle. ``prepass=False`` keeps the single-join exact
-    path everywhere (the oracle-shaped reference). Results are identical
-    (tested, and the osm_dedup_labels DuckDB oracle runs the default).
+    One plan, no gates (see :func:`_dedup_frames`):
 
-    The prepass is pay-as-you-go on two levels, so small or unskewed
-    inputs never fund machinery they don't need:
+    - **Election.** Each label falls in a square cell
+      ``(floor(lat / s), floor(lon / s))`` of side ``s`` =
+      :func:`election_side_deg`. The sphere's metric is dominated by the
+      lat/lon plane's (``ds^2 = dlat^2 + cos^2(lat) dlon^2 <= dlat^2 +
+      dlon^2``, in ``DEG_M`` metres per degree), so the great-circle
+      distance of two points is at most ``DEG_M`` times their plane
+      distance, at every latitude, the poles included. A cell's diagonal
+      is ``r`` in those units: every pair in one cell lies within ``r``.
+    - **In-cell suppression.** Every label ranked worse than its cell's
+      ``min(rank)`` has a better-ranked label within ``r`` and is
+      suppressed without a distance test. Labels at the cell's minimum
+      are its leaders; tied labels are all kept as leaders, since a tie
+      never suppresses.
+    - **Leader probe.** Only leaders can survive. Each is decided exactly by
+      :func:`knn_candidates` (leaders x all labels) with the rule's
+      predicate; that join owns the band, antimeridian and polar-cap
+      handling. A label is met by at most the leaders of the election
+      cells within the probe's reach — a bounded number of cells for a
+      given radius, one leader each barring ties — so the tested pairs
+      grow linearly in the label count, whatever the density.
 
-    - **row gate** — below ``prepass_min_rows`` (counted on the already-
-      checkpointed slim frame, ~free) the exact join runs directly: at
-      that size the prepass's fixed multi-stage overhead (stats pass +
-      flag join + leader probe + verdict + semi-join scheduling) costs
-      more wall-clock than the bounded quadratic it avoids, and the
-      ``skew_max_rows`` salting rail still spreads a degenerate cell
-      across tasks. Set ``prepass_min_rows=0`` to force routing.
-    - **skew gate** — above the row gate, one driver action probes
-      ``max(cell rows)``; if no cell exceeds ``routing_gate *
-      hot_threshold`` the stats pass is the only cost paid and everyone
-      routes exact (see :func:`_dedup_frames`).
+    The slim (id, rank, lat, lon) projection is localCheckpointed once:
+    both join sides read it, and a nondeterministic upstream could
+    otherwise disagree with itself between them. Its count switches the
+    probe's skew rail off when no cell can exceed the rail's bound.
+    ``prepass_min_rows`` is accepted for old callers and has no effect."""
+    from osmgraft.operators.skew import auto_skew_bound
 
-    ``materialize`` (default) localCheckpoints the slim (id, rank, lat,
-    lon) projection once: the joins otherwise re-derive ``labels`` several
-    times, and a nondeterministic upstream (e.g. an unranked frame) could
-    disagree with itself between the join sides. The slim frame is
-    ~32 B/row — far cheaper than re-running the producing pipeline."""
-    slim = labels.select(id_col, rank_col, "lat", "lon")
-    if materialize:
-        slim = slim.localCheckpoint(eager=True)
-
-    # count on the checkpointed frame is ~free and feeds both gates below;
-    # an unmaterialized frame would re-run the producing pipeline just to
-    # count it, so the row gate defers to the skew gate inside _dedup_frames
-    n_rows = slim.count() if materialize else None
-
-    use_prepass = prepass and res is None
-    if use_prepass and prepass_min_rows > 0 and n_rows is not None:
-        use_prepass = n_rows >= prepass_min_rows
-
-    if use_prepass:
-        fr = _dedup_frames(
-            slim, radius_m, rank_col, id_col, probe_k, hot_threshold, routing_gate
-        )
-        suppressed = fr["suppressed"]
-    else:
-        # the salting rail can't trigger when total rows <= its auto bound
-        # (no cell can exceed the bound), so skip its count pre-pass too
-        skew: int | None | str = "auto"
-        if n_rows is not None:
-            from osmgraft.operators.skew import auto_skew_bound
-
-            if n_rows <= auto_skew_bound(slim.sparkSession):
-                skew = None
-        pairs = knn_candidates(
-            slim, slim, radius_m, res=res, probe_k=probe_k, skew_max_rows=skew
-        )
-        suppressed = (
-            pairs.where(
-                (F.col(f"{rank_col}_r") < F.col(rank_col))
-                & (F.col(f"{id_col}_r") != F.col(id_col))
-            )
-            .select(id_col)
-            .distinct()
-        )
+    slim = labels.select(id_col, rank_col, "lat", "lon").localCheckpoint(eager=True)
+    skew = None if slim.count() <= auto_skew_bound(slim.sparkSession) else "auto"
+    suppressed = _dedup_frames(slim, radius_m, rank_col, id_col, skew)["suppressed"]
     return labels.join(suppressed, id_col, "left_anti")

@@ -36,7 +36,9 @@ What is checked, and what it costs:
 - **resume, content** (:func:`resume_or_compute`, ONE Spark job for all
   candidate chunks together): each chunk's re-hashed (rows, hash) must
   equal its sidecar's, so a chunk rewritten with other rows of the same
-  count is caught.
+  count is caught. A chunk whose files cannot be read (a damaged data page
+  behind a valid footer) fails that job; the chunks are then re-hashed one
+  job each and the unreadable ones join the recomputed set.
 
 A chunk that fails either check is recomputed.
 """
@@ -52,6 +54,7 @@ from functools import reduce
 
 import pyarrow
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -129,12 +132,9 @@ def is_complete(spark: SparkSession, path: str) -> bool:
         return False
 
 
-def _verified(spark: SparkSession, candidates: dict[int, tuple[str, dict]]) -> list[int]:
-    """Keys of the ``candidates`` (key -> (path, sidecar)) whose re-hashed
-    (rows, hash) equal their sidecars'. One Spark job for all of them: an
-    Observation per chunk, a single noop write of their union."""
-    if not candidates:
-        return []
+def _rehash(spark: SparkSession, candidates: dict[int, tuple[str, dict]]) -> dict[int, tuple]:
+    """(rows, hash) of each candidate chunk, re-read with its recorded schema:
+    an Observation per chunk, a single noop write of their union."""
     obs, frames = {}, []
     for i, (p, meta) in candidates.items():
         schema = StructType.fromJson(meta["schema"])
@@ -142,8 +142,34 @@ def _verified(spark: SparkSession, candidates: dict[int, tuple[str, dict]]) -> l
         frame = spark.read.schema(schema).parquet(p)
         frames.append(frame.observe(obs[i], *_content(frame.columns)).select(F.lit(i)))
     reduce(DataFrame.unionAll, frames).write.format("noop").mode("overwrite").save()
-    seen = {i: (o.get["rows"], str(o.get["hash"])) for i, o in obs.items()}
-    return [i for i, (_, m) in candidates.items() if seen[i] == (m["total_rows"], m["content_hash"])]
+    return {i: (o.get["rows"], str(o.get["hash"])) for i, o in obs.items()}
+
+
+def _unreadable(err: Py4JJavaError) -> bool:
+    return "FAILED_READ_FILE" in str(err)
+
+
+def _verified(spark: SparkSession, candidates: dict[int, tuple[str, dict]]) -> list[int]:
+    """Keys of the ``candidates`` (key -> (path, sidecar)) whose re-hashed
+    (rows, hash) equal their sidecars'. One Spark job for all of them. If a
+    part file cannot be read (a damaged data page under a valid footer),
+    each chunk is re-hashed in its own job and the unreadable ones are left
+    out, so they are recomputed; any other failure propagates."""
+    if not candidates:
+        return []
+    try:
+        seen = _rehash(spark, candidates)
+    except Py4JJavaError as err:
+        if not _unreadable(err):
+            raise
+        seen = {}
+        for i, cand in candidates.items():
+            try:
+                seen.update(_rehash(spark, {i: cand}))
+            except Py4JJavaError as chunk_err:
+                if not _unreadable(chunk_err):
+                    raise
+    return [i for i, (_, m) in candidates.items() if seen.get(i) == (m["total_rows"], m["content_hash"])]
 
 
 def chunk_expr(n_chunks: int, cols: list[str]):

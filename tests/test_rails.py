@@ -413,6 +413,55 @@ def test_lineage_truncated_part_recomputes(spark, tmp_path, monkeypatch):
         is_complete(spark, chunk1)
 
 
+def test_lineage_damaged_data_page_recomputes(spark, tmp_path):
+    """A part file with a valid footer but a damaged data page passes the
+    structural check; the content check cannot read it, and the chunk is
+    recomputed, never reused. Chunk 1 loses its filesystem checksum files
+    too, so the parquet reader itself meets the damage; chunk 2 keeps them."""
+    import pyarrow.parquet as pq
+
+    from osmgraft.plans.lineage import (
+        is_complete,
+        materialize_chunked,
+        read_lineage,
+        resume_or_compute,
+    )
+
+    path = str(tmp_path / "stage8")
+
+    def frame():
+        return spark.range(900).withColumn("v", F.col("id") * 17)
+
+    materialize_chunked(frame(), path, "stage8", n_chunks=3, chunk_by=["id"])
+    for i in (1, 2):
+        chunk = os.path.join(path, f"chunk-{i:05d}")
+        part = max(_part_files(chunk), key=os.path.getsize)
+        col = pq.ParquetFile(part).metadata.row_group(0).column(1)
+        end = col.data_page_offset + col.total_compressed_size
+        with open(part, "r+b") as fh:
+            fh.seek(end - 40)
+            page = fh.read(30)
+            fh.seek(end - 40)
+            fh.write(bytes(b ^ 0xFF for b in page))
+        if i == 1:
+            for f in os.listdir(chunk):
+                if f.endswith(".crc"):
+                    os.remove(os.path.join(chunk, f))
+        assert is_complete(spark, chunk)  # the footer still adds up
+
+    calls = []
+
+    def builder():
+        calls.append(1)
+        return frame()
+
+    out = resume_or_compute(spark, path, "stage8", builder, n_chunks=3, chunk_by=["id"])
+    assert calls == [1]
+    got = sorted((r["id"], r["v"]) for r in out.collect())
+    assert got == [(i, 17 * i) for i in range(900)]
+    assert [c.get("resumed", False) for c in read_lineage(path)["chunks"]] == [True, False, False]
+
+
 def test_lineage_empty_chunks_verify_and_resume(spark, tmp_path):
     """More chunks than distinct chunk_by values leaves chunks empty. They
     carry the fixed empty hash, verify, and are reused like any other."""

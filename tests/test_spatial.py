@@ -385,8 +385,28 @@ def test_pip_join_left_with_duplicate_coordinates(spark):
     assert out == [(1, 1), (2, 1), (3, None)]
 
 
+def _hav_m(a, b):
+    """Haversine metres between (id, lat, lon, rank) rows, the engine's constants."""
+    from osmgraft.operators.knn import EARTH_RADIUS_M
+
+    p1, p2 = math.radians(a[1]), math.radians(b[1])
+    dphi = p2 - p1
+    dl = math.radians(b[2] - a[2])
+    x = math.sin(dphi / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2
+    return 2 * EARTH_RADIUS_M * math.asin(math.sqrt(min(x, 1.0)))
+
+
+def _brute_keep(rows, radius):
+    """Ids of the (id, lat, lon, rank) rows no better-ranked row lies within ``radius`` of."""
+    return sorted(
+        a[0]
+        for a in rows
+        if not any(b[3] < a[3] and b[0] != a[0] and _hav_m(a, b) <= radius for b in rows)
+    )
+
+
 def test_dedup_labels_matches_bruteforce(spark):
-    from osmgraft.operators.knn import dedup_labels, EARTH_RADIUS_M
+    from osmgraft.operators.knn import dedup_labels
 
     rng = np.random.default_rng(5)
     # clustered points so suppression actually triggers
@@ -399,121 +419,166 @@ def test_dedup_labels_matches_bruteforce(spark):
 
     radius = 500.0  # meters
     got = sorted(r["osm_id"] for r in dedup_labels(df, radius).collect())
-
-    def hav(a, b):
-        p1, p2 = math.radians(a[1]), math.radians(b[1])
-        dphi = p2 - p1
-        dl = math.radians(b[2] - a[2])
-        x = math.sin(dphi / 2) ** 2 + math.cos(p1) * math.cos(p2) * math.sin(dl / 2) ** 2
-        return 2 * EARTH_RADIUS_M * math.asin(math.sqrt(x))
-
-    keep = []
-    for a in rows:
-        if not any(b[3] < a[3] and hav(a, b) <= radius for b in rows if b[0] != a[0]):
-            keep.append(a[0])
-    assert got == sorted(keep)
+    assert got == _brute_keep(rows, radius)
     assert 0 < len(got) < n
 
 
-def test_dedup_prepass_equals_exact_path(spark):
-    """The leader pre-pass must reproduce the all-pairs path exactly,
-    including near the antimeridian and in the polar caps."""
+def test_dedup_seam_and_caps_match_bruteforce(spark):
+    """Election cells and the leader probe reproduce brute force across
+    the antimeridian, in the polar caps and at exactly lat +-90 (where
+    every longitude is one point)."""
     from osmgraft.operators.knn import dedup_labels
 
     rng = np.random.default_rng(17)
     rows = []
-    i = 0
-    for cx, cy, sd, m in [(0.0, 179.99, 0.02, 120), (86.0, 10.0, 0.5, 60), (-40.0, 0.0, 0.01, 120)]:
+    clusters = [
+        (0.0, 179.99, 0.02, 120), (86.0, 10.0, 0.5, 60), (-40.0, 0.0, 0.01, 120),
+        (89.99, 0.0, 0.01, 40), (-89.99, 120.0, 0.01, 40),
+    ]
+    for cx, cy, sd, m in clusters:
         for _ in range(m):
             lo = cy + rng.normal(0, sd)
-            rows.append((i, float(cx + rng.normal(0, sd)), float((lo + 180) % 360 - 180), i))
-            i += 1
+            la = float(np.clip(cx + rng.normal(0, sd), -90.0, 90.0))
+            rows.append((len(rows), la, float((lo + 180) % 360 - 180), int(rng.integers(10**6))))
+    for la in (90.0, -90.0):
+        for lo in (-180.0, -45.0, 0.0, 90.0, 180.0):
+            rows.append((len(rows), la, lo, int(rng.integers(10**6))))
     df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
-    # prepass_min_rows=0 + hot_threshold low enough that routing actually
-    # engages on this 300-row fixture (the default row/skew gates would
-    # short-circuit it to the exact path and make this test vacuous)
-    a = sorted(
-        r["osm_id"]
-        for r in dedup_labels(
-            df, 2000.0, prepass=True, prepass_min_rows=0, hot_threshold=20
-        ).collect()
-    )
-    b = sorted(r["osm_id"] for r in dedup_labels(df, 2000.0, prepass=False).collect())
-    assert a == b
-    assert 0 < len(a) < len(rows)
+    got = sorted(r["osm_id"] for r in dedup_labels(df, 2000.0).collect())
+    assert got == _brute_keep(rows, 2000.0)
+    assert 0 < len(got) < len(rows)
+    # the five labels on a pole are one point: at most one survives
+    assert sum(rows[i][1] == 90.0 for i in got) <= 1
+    assert sum(rows[i][1] == -90.0 for i in got) <= 1
 
 
-def test_dedup_prepass_gates(spark):
-    """Pay-as-you-go: below the row gate or the skew gate the prepass must
-    short-circuit to the exact join (no leader routing), and the output is
-    identical either way."""
-    from osmgraft.operators.knn import _dedup_frames, dedup_labels
+def test_dedup_rank_ties_match_bruteforce(spark):
+    """Ranks from a small range: tied labels never suppress each other, so
+    a cell can elect several leaders and they all stay unless beaten."""
+    from osmgraft.operators.knn import dedup_labels
 
-    rng = np.random.default_rng(31)
-    n = 900
+    rng = np.random.default_rng(29)
+    n = 500
     rows = [
-        (i, float(45.0 + rng.normal(0, 0.5)), float(7.0 + rng.normal(0, 0.5)), i)
+        (i, float(45.0 + rng.normal(0, 0.03)), float(7.0 + rng.normal(0, 0.03)), int(rng.integers(4)))
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
-    slim = df.select("osm_id", "rank", "lat", "lon").localCheckpoint(eager=True)
+    got = sorted(r["osm_id"] for r in dedup_labels(df, 2000.0).collect())
+    want = _brute_keep(rows, 2000.0)
+    assert got == want
+    # ties survive side by side within r
+    kept = [rows[i] for i in want]
+    assert any(a[0] < b[0] and _hav_m(a, b) <= 2000.0 for a in kept for b in kept)
 
-    # spread input: densest cell ~n/cells << 2x hot_threshold -> skew gate
-    # short-circuits (routed=False) even when the caller forces the prepass
-    fr = _dedup_frames(slim, 2000.0, "rank", "osm_id", probe_k=3, hot_threshold=200)
-    assert fr["routed"] is False and fr["max_cell_rows"] <= 400
 
-    # a 500-row blob in one cell exceeds 2 x hot_threshold=100 -> routed
-    blob = [(i, 45.0 + i * 1e-6, 7.0, i) for i in range(500)]
-    bdf = spark.createDataFrame(blob, "osm_id long, lat double, lon double, rank long")
-    bslim = bdf.select("osm_id", "rank", "lat", "lon").localCheckpoint(eager=True)
-    fr2 = _dedup_frames(bslim, 2000.0, "rank", "osm_id", probe_k=3, hot_threshold=100)
-    assert fr2["routed"] is True
+def test_election_cell_pairs_within_radius():
+    """Any two points in one election cell lie within r by the engine's
+    haversine constants: at every latitude, at the poles and at lon +-180,
+    with cells' extreme corners (the last doubles inside the floor) drawn
+    half of the time."""
+    from osmgraft.operators.knn import DEG_M, EARTH_RADIUS_M, election_side_deg
 
-    # default row gate (100k) skips the prepass entirely on this input;
-    # result identical to the forced-routing path
-    got_gated = sorted(r["osm_id"] for r in dedup_labels(df, 2000.0).collect())
-    got_routed = sorted(
-        r["osm_id"]
-        for r in dedup_labels(
-            df, 2000.0, prepass_min_rows=0, hot_threshold=50
-        ).collect()
-    )
-    assert got_gated == got_routed
+    rng = np.random.default_rng(41)
+
+    def first_in(cell, s):
+        x = cell * s
+        while (m := np.floor(x / s) < cell).any():
+            x = np.where(m, np.nextafter(x, np.inf), x)
+        return x
+
+    def last_in(cell, s):
+        x = (cell + 1) * s
+        while (m := np.floor(x / s) > cell).any():
+            x = np.where(m, np.nextafter(x, -np.inf), x)
+        return x
+
+    for radius in (1.0, 150.0, 2000.0, 50_000.0):
+        s = election_side_deg(radius)
+        assert s * math.sqrt(2.0) * DEG_M <= radius
+        n = 20_000
+        row = np.floor(rng.uniform(-90.0, 90.0, n) / s)
+        row[:4] = np.floor(np.array([90.0, -90.0, 89.999, -89.999]) / s)
+        seam = np.floor(rng.choice([-180.0, 180.0], n) / s) + rng.integers(-2, 1, n)
+        col = np.where(rng.random(n) < 0.5, np.floor(rng.uniform(-180.0, 180.0, n) / s), seam)
+
+        def draw(cell, lo_bound, hi_bound):
+            lo, hi = first_in(cell, s), last_in(cell, s)
+            x = np.where(rng.random(n) < 0.5, lo, lo + (hi - lo) * rng.random(n))
+            x = np.where(rng.random(n) < 0.5, hi, x)
+            return np.clip(x, lo_bound, hi_bound)
+
+        la1, la2 = draw(row, -90.0, 90.0), draw(row, -90.0, 90.0)
+        lo1, lo2 = draw(col, -180.0, 180.0), draw(col, -180.0, 180.0)
+        assert (np.floor(la1 / s) == row).all() and (np.floor(la2 / s) == row).all()
+        assert (np.floor(lo1 / s) == np.floor(lo2 / s)).all()
+        p1, p2 = np.radians(la1), np.radians(la2)
+        a = (
+            np.sin((p2 - p1) / 2) ** 2
+            + np.cos(p1) * np.cos(p2) * np.sin(np.radians(lo2 - lo1) / 2) ** 2
+        )
+        d = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(a))
+        assert (d <= radius).all(), (radius, d.max())
+        assert d.max() > 0.99 * radius  # the corners are reached
 
 
 def test_dedup_hot_cell_bounded(spark):
-    """Zipf hot cluster: >=10^4 labels inside one cell. The old all-pairs
-    path would enumerate ~10^8 candidate pairs; the leader pre-pass must
-    leave only a tiny undecided residue for the exact phase (the only
-    remaining quadratic term)."""
+    """Hot cluster: 12k labels inside one 2 km blob over a 1k background.
+    The blob collapses to one survivor, and the leader probe tests a number
+    of pairs linear in n (all-pairs inside the blob would be ~1.4e8)."""
     from osmgraft.operators.knn import _dedup_frames, dedup_labels
 
     rng = np.random.default_rng(23)
     n_hot, n_bg = 12_000, 1_000
+    n = n_hot + n_bg
     # sigma ~100 m: the whole blob is far inside the 2 km radius
     lats = np.concatenate([45.0 + rng.normal(0, 0.001, n_hot), rng.uniform(-60, 60, n_bg)])
     lons = np.concatenate([7.0 + rng.normal(0, 0.001, n_hot), rng.uniform(-170, 170, n_bg)])
-    ranks = rng.permutation(n_hot + n_bg)
-    rows = [(i, float(lats[i]), float(lons[i]), int(ranks[i])) for i in range(n_hot + n_bg)]
+    ranks = rng.permutation(n)
+    rows = [(i, float(lats[i]), float(lons[i]), int(ranks[i])) for i in range(n)]
     df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
 
     slim = df.select("osm_id", "rank", "lat", "lon").localCheckpoint(eager=True)
-    fr = _dedup_frames(slim, 2000.0, "rank", "osm_id", probe_k=3)
-    n_undecided = fr["undecided"].count()
-    n_cold = fr["cold"].count()
-    # exact-join work is (|undecided| + |cold|) x local density; the blob
-    # must be routed hot and almost entirely settled by its leaders (every
-    # blob point is within r of the blob's best-ranked label), leaving the
-    # exact phase only the sparse background + blob-tail residue
-    assert n_undecided < 200, f"undecided residue too large: {n_undecided}"
-    assert n_cold < n_bg + 2000, f"hot blob leaked into the cold route: {n_cold}"
+    fr = _dedup_frames(slim, 2000.0, "rank", "osm_id", None)
+    n_leaders = fr["leaders"].count()
+    n_probed = fr["probed"].count()
+    # the blob spans a handful of election cells; the background is one
+    # label per cell
+    assert n_leaders <= n_bg + 50, n_leaders
+    # measured 25,002 (1.92 n): the blob's two leaders each meet its 12k
+    # labels, a background leader mostly itself
+    assert n_probed <= 2 * n, n_probed
 
     out = dedup_labels(df, 2000.0).select("osm_id", "lat", "lon").collect()
     hot_survivors = [
         r for r in out if abs(r["lat"] - 45.0) < 0.01 and abs(r["lon"] - 7.0) < 0.01
     ]
     assert len(hot_survivors) == 1  # the blob collapses to its best label
+
+
+def test_dedup_job_budget(spark):
+    """dedup_labels plus a noop write of its output runs a fixed number of
+    Spark jobs: the slim checkpoint, its count, and the stages of the one
+    output query. No driver-side probe of the data is taken."""
+    from osmgraft.operators.knn import dedup_labels
+
+    rng = np.random.default_rng(7)
+    n = 3_000
+    rows = [
+        (i, float(45.0 + rng.normal(0, 0.05)), float(7.0 + rng.normal(0, 0.05)), i)
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
+    df = df.localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_budget", "dedup_budget")
+    try:
+        dedup_labels(df, 2000.0).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup_budget"))
+    assert jobs == 11, jobs  # measured: 2 for the slim frame, 9 for the query
 
 
 def test_skew_split_helpers_bound_hot_cells(spark):
