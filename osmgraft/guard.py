@@ -1,13 +1,13 @@
 """Boundary guard for parsers over untrusted bytes.
 
-Every codec/container entry point (`decode_wav`, `decode_png`,
-`decode_jpeg`, `parse_mp4_meta`, `parse_avi_mjpeg`, `parse_ttf`, ...)
-documents one contract: malformed input raises ``ValueError``. The
-parser BODIES use stdlib primitives whose own exception types leak on
-adversarial bytes — ``struct.error`` on a short buffer, ``zlib.error``
-on corrupt deflate, ``IndexError``/``OverflowError`` on a tampered
-offset or length field. Uncaught, any of those kills the Spark task
-(and after task retries, the 10^12-document job) on ONE bad payload.
+Every parser over untrusted bytes (`functions.ttf.parse_ttf`,
+`sources.geoblob.unpack`) documents one contract: malformed input raises
+``ValueError``. The parser BODIES use stdlib primitives whose own
+exception types leak on adversarial bytes — ``struct.error`` on a short
+buffer, ``zlib.error`` on corrupt deflate, ``IndexError`` /
+``OverflowError`` on a tampered offset or length field. Uncaught, any of
+those kills the Spark task (and after task retries, the 10^12-document
+job) on ONE bad payload.
 
 :func:`untrusted_parser` converts that closed set to ``ValueError`` at
 the function boundary (verified by ``tools/fuzz_codecs.py``'s mutation
@@ -37,7 +37,7 @@ _MALFORMED = (
 
 def untrusted_parser(fn):
     """Wrap a bytes-parsing entry point so malformed input always
-    surfaces as ``ValueError`` (the documented codec contract)."""
+    surfaces as ``ValueError`` (the documented parser contract)."""
 
     @functools.wraps(fn)
     def wrapped(*args, **kwargs):

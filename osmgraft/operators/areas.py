@@ -129,9 +129,11 @@ _AREA_OUT = StructType(
 )
 
 
-def _finalize_batches(pos_key: str, literal_bugs: bool, passthrough: tuple[str, ...] = ()):
+def _finalize_batches(literal_bugs: bool, passthrough: tuple[str, ...] = ()):
     """Batched A1+A2 kernel over packed (rel_id, mem) rows — thousands of
     relations per Arrow batch, plain-Python inner loop bounded by P8.
+    (A ``groupBy().applyInPandas`` builds one pandas frame per relation,
+    about 2 ms fixed cost each; the packed rows avoid that.)
 
     ``passthrough`` columns (e.g. the tags map) ride through the kernel for
     surviving rows, so relation metadata needs NO re-join after assembly —
@@ -156,14 +158,9 @@ def _finalize_batches(pos_key: str, literal_bugs: bool, passthrough: tuple[str, 
                     for nid, la, lo in zip(node_ids, m["lats"], m["lons"]):
                         coords[nid] = (float(la), float(lo))
                     if m["role"] == 0:
-                        outer_ids.append((int(m[pos_key]), wid))
-                outer_ids.sort()
-                outer = [w for _, w in outer_ids]
-                if not outer:
-                    continue
-                # P8: total outer node refs cap (:226-235)
-                if sum(len(segs[w]) for w in outer) > MAX_OUTER_NODE_REFS:
-                    continue
+                        outer_ids.append((int(m["ord"]), wid))
+                # P8/P9 already ran as Catalyst filters (packed_area_centroids)
+                outer = [w for _, w in sorted(outer_ids)]
                 rings = assemble_polygon(outer, segs, literal_bugs=literal_bugs)
                 if not rings:
                     continue
@@ -201,104 +198,20 @@ def packed_area_centroids(
     schema = StructType(
         _AREA_OUT.fields + [rel_packed.schema[c] for c in passthrough]
     )
-    return src.mapInPandas(_finalize_batches("ord", literal_bugs, passthrough), schema=schema)
+    return src.mapInPandas(_finalize_batches(literal_bugs, passthrough), schema=schema)
 
 
-def area_centroids(
-    relations: DataFrame,
-    ways: DataFrame,
-    nodes: DataFrame | None = None,
-    segments: DataFrame | None = None,
-    literal_bugs: bool = False,
-) -> DataFrame:
-    """(rel_id, lat, lon) for every relation that survives P8/P9/A1.
-
-    Two coordinate-resolution strategies with identical results:
-    - ``segments`` given (default path): coordinate arrays travel with the
-      decoded segment rows — no node explode, minimal shuffle (the 100-TB
-      plan: one shuffle to group by rel_id, group size bounded by P8).
-    - ``nodes`` given: reference-faithful hash-join resolution (J2/J3):
-      explode way node_ids -> join nodes -> regroup. Kept for parity tests
-      and for inputs where geometry is only available per node.
-
-    Prefer :func:`packed_area_centroids` when the decode stage's packed
-    relations frame is available — it shares the decode shuffle instead of
-    re-exploding members.
-    """
-    # P9: completeness — drop relations referencing missing ways (:637-655)
-    rel = relations.where(~F.col("has_missing"))
-
-    # one row per member, tagged with role + position (outer drives P8+centroid)
-    members = (
-        rel.select("rel_id", F.posexplode("outer").alias("pos", "way_id"), F.lit(0).alias("role"))
-        .unionByName(
-            rel.select("rel_id", F.posexplode("inner").alias("pos", "way_id"), F.lit(1).alias("role"))
-        )
-    )
-
-    if segments is not None:
-        seg_src = segments.select("way_id", "node_ids", "lats", "lons")
-        joined = members.join(seg_src, "way_id")
-    else:
-        if nodes is None:
-            raise ValueError("need segments or nodes")
-        exploded = ways.select("way_id", F.posexplode("node_ids").alias("npos", "node_id"))
-        resolved = exploded.join(nodes, "node_id")  # J3 hash join
-        regrouped = (
-            resolved.groupBy("way_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("npos", "node_id", "lat", "lon"))).alias("s")
-            )
-            .select(
-                "way_id",
-                F.transform("s", lambda x: x["node_id"]).alias("node_ids"),
-                F.transform("s", lambda x: x["lat"]).alias("lats"),
-                F.transform("s", lambda x: x["lon"]).alias("lons"),
-            )
-        )
-        joined = members.join(regrouped, "way_id")
-
-    # Pack each relation into ONE row via a Catalyst agg, then finalize with
-    # mapInPandas over LARGE Arrow batches (thousands of relations per
-    # batch). A groupBy().applyInPandas here would build one pandas frame
-    # per relation — measured ~2ms/group fixed overhead, i.e. 39s for 18k
-    # relations even with a no-op kernel; batched it is <2s. Group payload
-    # is bounded by P8 (<=100 outer refs), so a packed row stays tiny.
-    packed = joined.groupBy("rel_id").agg(
-        F.collect_list(
-            F.struct("pos", "role", "way_id", "node_ids", "lats", "lons")
-        ).alias("mem")
-    )
-    return packed.mapInPandas(_finalize_batches("pos", literal_bugs), schema=_AREA_OUT)
-
-
-def area_pois(
-    relations: DataFrame,
-    ways: DataFrame,
-    nodes: DataFrame | None = None,
-    segments: DataFrame | None = None,
-    packed: DataFrame | None = None,
-    literal_bugs: bool = False,
-) -> DataFrame:
+def area_pois(packed: DataFrame, literal_bugs: bool = False) -> DataFrame:
     """Finished area POIs: (osm_id, lat, lon, tags) — ready for U1 union
-    with node POIs (osminputhelper.cpp:706-734). With ``packed`` (the
-    decode stage's single-shuffle relations frame) the whole path is one
+    with node POIs (osminputhelper.cpp:706-734). ``packed`` is the decode
+    stage's single-shuffle relations frame, so the whole path is one
     shuffle + one narrow Arrow pass."""
-    if packed is not None:
-        # tags (and the literal-name column when present) ride THROUGH the
-        # assembly kernel — re-joining them afterwards would execute the
-        # member-join subtree twice (projections differ, so ReuseExchange
-        # cannot deduplicate it)
-        extra = ["_name_lit"] if "_name_lit" in packed.columns else []
-        cents = packed_area_centroids(
-            packed, literal_bugs=literal_bugs, passthrough=tuple(["tags"] + extra)
-        )
-        return cents.select(F.col("rel_id").alias("osm_id"), "lat", "lon", "tags", *extra)
-    cents = area_centroids(
-        relations, ways, nodes=nodes, segments=segments, literal_bugs=literal_bugs
+    # tags (and the literal-name column when present) ride THROUGH the
+    # assembly kernel — re-joining them afterwards would execute the
+    # member-join subtree twice (projections differ, so ReuseExchange
+    # cannot deduplicate it)
+    extra = ["_name_lit"] if "_name_lit" in packed.columns else []
+    cents = packed_area_centroids(
+        packed, literal_bugs=literal_bugs, passthrough=tuple(["tags"] + extra)
     )
-    extra = ["_name_lit"] if "_name_lit" in relations.columns else []
-    tags_src = relations.select("rel_id", "tags", *extra)
-    return cents.join(tags_src, "rel_id").select(
-        F.col("rel_id").alias("osm_id"), "lat", "lon", "tags", *extra
-    )
+    return cents.select(F.col("rel_id").alias("osm_id"), "lat", "lon", "tags", *extra)

@@ -66,24 +66,12 @@ def admitted_area_pois(
     frames: DecodedFrames,
     cfg: LabelConfig,
     levels: DataFrame,
-    use_node_join: bool = False,
     literal_bugs: bool = False,
-    segments: DataFrame | None = None,
 ) -> DataFrame:
     """S2+P8/P9+A1/A2 then P7-area: only 'level defined' is checked for
     areas (osminputhelper.cpp:656-662); no name/icon requirement."""
-    if frames.rel_packed is not None and not use_node_join and segments is None:
-        packed = frames.rel_packed.where(filter_expr(cfg.filter_tree, F.col("tags")))
-        pois = area_pois(None, None, packed=packed, literal_bugs=literal_bugs)
-    else:
-        rel = frames.relations.where(filter_expr(cfg.filter_tree, F.col("tags")))
-        pois = area_pois(
-            rel,
-            frames.ways,
-            nodes=frames.nodes if use_node_join else None,
-            segments=segments if not use_node_join else None,
-            literal_bugs=literal_bugs,
-        )
+    packed = frames.rel_packed.where(filter_expr(cfg.filter_tree, F.col("tags")))
+    pois = area_pois(packed, literal_bugs=literal_bugs)
     classified = (
         pois.withColumn("level_id", level_expr(cfg, F.col("tags")))
         .where(F.col("level_id") != 0)
@@ -106,15 +94,7 @@ def extract_pois(
     frames = decode_documents(docs, blobs, literal_names=literal_bugs)
 
     nodes_part = admitted_node_pois(frames.node_pois, cfg, levels, literal_bugs=literal_bugs)
-    # packed fast path (preferred); falls back to the segments join when the
-    # decode didn't produce a packed relations frame
-    areas_part = admitted_area_pois(
-        frames,
-        cfg,
-        levels,
-        segments=None if frames.rel_packed is not None else frames.segments,
-        literal_bugs=literal_bugs,
-    )
+    areas_part = admitted_area_pois(frames, cfg, levels, literal_bugs=literal_bugs)
     cols = ["osm_id", "kind", "lat", "lon", "tags", "level_id", "name", "level_name", "factor", "icon"]
     return nodes_part.select(*cols).unionByName(areas_part.select(*cols))
 

@@ -1,4 +1,5 @@
-"""Span decode: interleaved documents -> typed POI/relation/way/node frames.
+"""Span decode: interleaved documents -> node-POI, packed-relation and
+admin-polygon frames.
 
 The graft analogue of the reference's PBF scans S1-S4
 (/root/reference/src/input/osminputhelper.cpp:516-584, 277-359, 373-414,
@@ -6,8 +7,9 @@ The graft analogue of the reference's PBF scans S1-S4
 + ``map_from_entries`` — whole-stage codegen, pushdown-friendly); only the
 opaque geometry payloads cross into Python, as Arrow-batched kernels:
 
-- point blobs: fixed 17-byte layout, decoded with one ``np.frombuffer``
-  per batch (vectorized, no per-row parsing);
+- point blobs: fixed 17-byte layout, checked and decoded with one
+  ``np.frombuffer`` per batch (``geoblob.unpack_points``; no per-row
+  parsing);
 - segment blobs: variable length, decoded per blob with numpy views
   (bounded by the synth segment sizes; only ~10%% of documents are areas).
 
@@ -20,7 +22,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -112,16 +113,16 @@ _POINT_SCHEMA = StructType(
 def decode_points(blob_rows: DataFrame) -> DataFrame:
     """blobs(blob_id, payload) with POINT payloads -> (blob_id, lat, lon).
 
-    Fixed-size layout => one frombuffer per Arrow batch (true vectorization).
+    Fixed-size layout => one frombuffer per Arrow batch (true vectorization);
+    a payload of the wrong length or kind fails the task with a
+    ``ValueError`` naming its blob.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            raw = np.frombuffer(b"".join(pdf["payload"]), dtype=np.uint8).reshape(len(pdf), 17)
-            assert (raw[:, 0] == geoblob.KIND_POINT).all(), "non-point blob in point decode"
-            coords = raw[:, 1:].copy().view("<f8").reshape(len(pdf), 2)
+            coords = geoblob.unpack_points(pdf["blob_id"], pdf["payload"])
             yield pd.DataFrame(
                 {"blob_id": pdf["blob_id"], "lat": coords[:, 0], "lon": coords[:, 1]}
             )
@@ -164,15 +165,13 @@ def decode_node_pois(
         cols.append(import_name_literal_expr(tag_entries_expr()).alias("_name_lit"))
     base = node_docs.select(*cols)
     keep = ["osm_id", "tags"] + (["_name_lit"] if literal_names else [])
-    joined = base.join(blobs, "blob_id").select(*keep, "payload")
+    joined = base.join(blobs, "blob_id").select(*keep, "blob_id", "payload")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            raw = np.frombuffer(b"".join(pdf["payload"]), dtype=np.uint8).reshape(len(pdf), 17)
-            assert (raw[:, 0] == geoblob.KIND_POINT).all(), "non-point blob for node doc"
-            coords = raw[:, 1:].copy().view("<f8").reshape(len(pdf), 2)
+            coords = geoblob.unpack_points(pdf["blob_id"], pdf["payload"])
             out = {
                 "osm_id": pdf["osm_id"],
                 "lat": coords[:, 0],
@@ -230,14 +229,11 @@ def decode_segments(blob_rows: DataFrame) -> DataFrame:
 @dataclass
 class DecodedFrames:
     node_pois: DataFrame  # osm_id, lat, lon, tags
-    relations: DataFrame  # rel_id, tags, outer, inner  (unknown-role dropped)
-    ways: DataFrame       # way_id, node_ids
-    nodes: DataFrame      # node_id, lat, lon
     polygons: DataFrame   # poly_id, name, ring_lats, ring_lons
-    segments: DataFrame | None = None  # way_id, node_ids, lats, lons (decoded)
     # rel_id, tags, has_missing, mem:array<struct<ord,role,way_id,node_ids,lats,lons>>
     # — the single-shuffle packed form the area path consumes directly
-    rel_packed: DataFrame | None = None
+    # (unknown-role relations dropped)
+    rel_packed: DataFrame
 
 
 def decode_documents(
@@ -256,7 +252,7 @@ def decode_documents(
     # --- node POIs (single-shuffle path) --------------------------------
     node_pois = decode_node_pois(node_docs, blobs, literal_names=literal_names)
 
-    # --- relations + ways + nodes ---------------------------------------
+    # --- packed relations ------------------------------------------------
     rel_refs = geom_refs(rel_docs).withColumn(
         "rel_id", F.split_part(F.col("doc_id"), F.lit("/"), F.lit(2)).cast("long")
     )
@@ -304,32 +300,6 @@ def decode_documents(
     rel_tags = rel_docs.select(*rel_tag_cols)
     rel_packed = rel_grouped.join(rel_tags, "rel_id")
 
-    def _role_ids(role: int) -> Column:
-        return F.transform(
-            F.filter(F.col("mem"), lambda m: m["role"] == F.lit(role)),
-            lambda m: m["way_id"],
-        )
-
-    relations = rel_packed.select(
-        "rel_id",
-        _role_ids(geoblob.ROLE_OUTER).alias("outer"),
-        _role_ids(geoblob.ROLE_INNER).alias("inner"),
-        "has_missing",
-        "tags",
-    )
-
-    ways = segs.select("way_id", "node_ids")
-    nodes = (
-        segs.select(F.arrays_zip("node_ids", "lats", "lons").alias("z"))
-        .select(F.explode("z").alias("n"))
-        .select(
-            F.col("n.node_ids").alias("node_id"),
-            F.col("n.lats").alias("lat"),
-            F.col("n.lons").alias("lon"),
-        )
-        .dropDuplicates(["node_id"])
-    )
-
     # --- admin polygons --------------------------------------------------
     admin_refs = geom_refs(admin_docs)
     admin_blobs = blobs.join(admin_refs.select("blob_id"), "blob_id", "leftsemi")
@@ -350,6 +320,4 @@ def decode_documents(
         )
     )
 
-    return DecodedFrames(
-        node_pois, relations, ways, nodes, polygons, segments=segs, rel_packed=rel_packed
-    )
+    return DecodedFrames(node_pois, polygons, rel_packed)

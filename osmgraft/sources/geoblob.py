@@ -26,6 +26,8 @@ import numpy as np
 KIND_POINT = 1
 KIND_SEGMENT = 2
 
+POINT_BYTES = 17
+
 ROLE_OUTER = 0
 ROLE_INNER = 1
 ROLE_UNKNOWN = 255  # exercises the unknown-role relation drop (osminputhelper.cpp:328-337)
@@ -49,7 +51,7 @@ def pack_segment(role: int, way_id: int, node_ids, lats, lons) -> bytes:
 def unpack(payload: bytes) -> dict:
     """Decode one blob -> dict (used inside Arrow batch kernels and tests).
 
-    Untrusted-bytes contract (same as the multimodal codecs): any
+    Untrusted-bytes contract (same as ``functions.ttf.parse_ttf``): any
     malformed payload raises ``ValueError`` — never ``IndexError`` /
     ``struct.error`` — so a corrupt blob in the 10^12-doc table surfaces
     as the documented error instead of an opaque executor task death."""
@@ -57,8 +59,8 @@ def unpack(payload: bytes) -> dict:
         raise ValueError("empty geometry blob")
     kind = payload[0]
     if kind == KIND_POINT:
-        if len(payload) < 17:
-            raise ValueError(f"point blob truncated: {len(payload)} < 17 bytes")
+        if len(payload) < POINT_BYTES:
+            raise ValueError(f"point blob truncated: {len(payload)} < {POINT_BYTES} bytes")
         lat, lon = struct.unpack_from("<dd", payload, 1)
         return {"kind": kind, "lat": lat, "lon": lon}
     if kind == KIND_SEGMENT:
@@ -80,3 +82,27 @@ def unpack(payload: bytes) -> dict:
             "lons": lons,
         }
     raise ValueError(f"unknown blob kind {kind}")
+
+
+def unpack_points(blob_ids, payloads) -> np.ndarray:
+    """Decode a batch of POINT blobs -> float64 ``(n, 2)`` lat/lon array,
+    with one join and one ``frombuffer`` for the whole batch.
+
+    Every payload's length and kind is checked, vectorised, before the
+    reshape: a 16-byte blob next to an 18-byte one would otherwise join
+    to a multiple of 17 bytes and shift every later row. A bad payload
+    raises ``ValueError`` naming the first bad blob id."""
+    n = len(payloads)
+    sizes = np.fromiter(map(len, payloads), dtype=np.int64, count=n)
+    buf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    kinds = np.zeros(n, dtype=np.uint8)  # 0: no kind byte (empty payload)
+    nonempty = sizes > 0
+    kinds[nonempty] = buf[(np.cumsum(sizes) - sizes)[nonempty]]
+    bad = (sizes != POINT_BYTES) | (kinds != KIND_POINT)
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"blob {list(blob_ids)[i]!r}: {sizes[i]} bytes of kind {kinds[i]}, "
+            f"expected a {POINT_BYTES}-byte point (kind {KIND_POINT})"
+        )
+    return buf.reshape(n, POINT_BYTES)[:, 1:].copy().view("<f8")

@@ -69,54 +69,39 @@ def test_centroid_counts_duplicates():
 
 
 def test_area_centroids_spark(spark):
-    """End-to-end operator: inline-segments and node-join strategies agree,
-    P8 cap and P9 completeness enforced."""
-    import pyspark.sql.functions as F
+    """End-to-end operator over a hand-built ``rel_packed`` frame (the
+    decode stage's form): P8 cap and P9 completeness enforced, outer
+    members assembled in ``ord`` order whatever their array order, inner
+    members left out of P8 and the centroid, tags carried through."""
+    from osmgraft.operators.areas import packed_area_centroids
 
-    from osmgraft.operators.areas import area_centroids
-
-    relations = spark.createDataFrame(
-        [
-            (1, {"place": "suburb", "name": "A"}, [10, 11], [], False),
-            (2, {"place": "suburb", "name": "B"}, [20], [], False),
-            (3, {"place": "suburb", "name": "C"}, [30], [], True),  # P9 drop
-            (4, {"place": "suburb", "name": "D"}, [40], [], False),  # P8 drop (oversize)
-        ],
-        "rel_id long, tags map<string,string>, outer array<long>, inner array<long>, has_missing boolean",
-    )
+    # a member is (ord, role, way_id, node_ids, lats, lons); role 0 = outer
     big_ids = list(range(1000, 1105))  # 105 refs > 100
-    segments = spark.createDataFrame(
+    rel_packed = spark.createDataFrame(
         [
-            (10, [1, 2, 3], [0.0, 0.0, 2.0], [0.0, 2.0, 2.0]),
-            (11, [3, 4, 1], [2.0, 2.0, 0.0], [2.0, 0.0, 0.0]),
-            (20, [5, 6, 7], [1.0, 1.0, 3.0], [1.0, 3.0, 3.0]),
-            (30, [8, 9], [0.0, 1.0], [0.0, 1.0]),
-            (40, big_ids, [0.0] * 105, [0.0] * 105),
+            # members listed against ord order: starting the walk at way
+            # 11 would give the ring [3,4,1,2,3], centroid (1.2, 1.2)
+            (1, {"name": "A"}, False, [
+                (2, 1, 12, [50, 51, 52, 50], [9.0] * 4, [9.0] * 4),  # inner
+                (1, 0, 11, [3, 4, 1], [2.0, 2.0, 0.0], [2.0, 0.0, 0.0]),
+                (0, 0, 10, [1, 2, 3], [0.0, 0.0, 2.0], [0.0, 2.0, 2.0]),
+            ]),
+            (2, {"name": "B"}, False, [(0, 0, 20, [5, 6, 7], [1.0, 1.0, 3.0], [1.0, 3.0, 3.0])]),
+            (3, {"name": "C"}, True, [(0, 0, 30, [8, 9], [0.0, 1.0], [0.0, 1.0])]),  # P9 drop
+            (4, {"name": "D"}, False, [(0, 0, 40, big_ids, [0.0] * 105, [0.0] * 105)]),  # P8 drop
+            (5, {"name": "E"}, False, [(0, 1, 60, [7, 8, 7], [0.0] * 3, [0.0] * 3)]),  # no outer
         ],
-        "way_id long, node_ids array<long>, lats array<double>, lons array<double>",
-    )
-    ways = segments.select("way_id", "node_ids")
-    nodes = (
-        segments.select(F.explode(F.arrays_zip("node_ids", "lats", "lons")).alias("z"))
-        .select(
-            F.col("z.node_ids").alias("node_id"),
-            F.col("z.lats").alias("lat"),
-            F.col("z.lons").alias("lon"),
-        )
-        .dropDuplicates(["node_id"])
+        "rel_id long, tags map<string,string>, has_missing boolean, "
+        "mem array<struct<ord:int,role:int,way_id:long,node_ids:array<long>,"
+        "lats:array<double>,lons:array<double>>>",
     )
 
-    got_inline = {
-        r["rel_id"]: (r["lat"], r["lon"])
-        for r in area_centroids(relations, ways, segments=segments).collect()
+    got = {
+        r["rel_id"]: (r["lat"], r["lon"], r["tags"]["name"])
+        for r in packed_area_centroids(rel_packed, passthrough=("tags",)).collect()
     }
-    got_join = {
-        r["rel_id"]: (r["lat"], r["lon"])
-        for r in area_centroids(relations, ways, nodes=nodes).collect()
-    }
-    assert got_inline == got_join
-    assert set(got_inline) == {1, 2}
+    assert set(got) == {1, 2}
     # rel 1: ring [1,2,3,4,1]: lats (0+0+2+2+0)/5, lons (0+2+2+0+0)/5
-    assert got_inline[1] == (0.8, 0.8)
+    assert got[1] == (0.8, 0.8, "A")
     # rel 2: force-closed [5,6,7,5]: lats (1+1+3+1)/4, lons (1+3+3+1)/4
-    assert got_inline[2] == (1.5, 2.0)
+    assert got[2] == (1.5, 2.0, "B")

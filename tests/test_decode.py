@@ -91,27 +91,42 @@ def test_decode_frames(spark, synth_small):
         assert -90 <= r["lat"] <= 90 and -180 <= r["lon"] <= 180
         assert isinstance(r["tags"], dict) and len(r["tags"]) >= 1
 
-    rels = frames.relations.collect()
-    n_rel_docs = docs.where(F.col("doc_id").startswith("rel/")).count()
-    assert 0 < len(rels) <= n_rel_docs  # unknown-role relations dropped
-    for r in rels:
-        assert len(r["outer"]) >= 1
+    from osmgraft.sources.decode import doc_osm_id, geom_ref_array
 
-    # every relation's outer refs resolve to decoded ways unless has_missing
-    ok = frames.relations.where(~F.col("has_missing"))
-    way_ids = {r["way_id"] for r in frames.ways.collect()}
-    for r in ok.collect():
-        assert all(w in way_ids for w in r["outer"] + r["inner"])
+    rel_docs = docs.where(F.col("doc_id").startswith("rel/"))
+    n_refs = {
+        r["rel_id"]: r["n"]
+        for r in rel_docs.select(
+            doc_osm_id().alias("rel_id"), F.size(geom_ref_array()).alias("n")
+        ).collect()
+    }
+    rels = frames.rel_packed.collect()
+    assert 0 < len(rels) <= len(n_refs)  # unknown-role relations dropped
+    assert any(r["has_missing"] for r in rels) and not all(r["has_missing"] for r in rels)
+    coords = {}
+    for r in rels:
+        mem = r["mem"]
+        assert any(m["role"] == geoblob.ROLE_OUTER for m in mem)
+        assert all(m["role"] != geoblob.ROLE_UNKNOWN for m in mem)
+        # members are span-ordered, one per resolved geometry ref; a
+        # relation with a dangling ref is flagged, never silently complete
+        ords = [m["ord"] for m in mem]
+        assert ords == sorted(set(ords)) and 0 <= ords[0] and ords[-1] < n_refs[r["rel_id"]]
+        if r["has_missing"]:
+            assert len(mem) < n_refs[r["rel_id"]]
+        else:
+            assert len(mem) == n_refs[r["rel_id"]]
+        for m in mem:
+            assert len(m["node_ids"]) == len(m["lats"]) == len(m["lons"]) >= 2
+            for nid, la, lo in zip(m["node_ids"], m["lats"], m["lons"]):
+                # a node shared between ways carries one position
+                assert coords.setdefault(nid, (la, lo)) == (la, lo)
 
     polys = frames.polygons.collect()
     assert len(polys) > 0
     for r in polys:
         assert len(r["ring_lats"]) == len(r["ring_lons"]) >= 4
         assert r["name"].startswith("Region ")
-
-    # nodes frame is deduped
-    nodes = frames.nodes
-    assert nodes.count() == nodes.dropDuplicates(["node_id"]).count()
 
 
 def test_tags_decode_matches_generator(spark, synth_small):
@@ -199,3 +214,40 @@ def test_unpack_malformed_blobs_raise_valueerror():
     for payload in cases:
         with pytest.raises(ValueError):
             geoblob.unpack(payload)
+
+
+def test_unpack_points_checks_each_payload():
+    """The point-blob kernel checks every payload's length and kind before
+    the batch reshape: a 16-byte blob next to an 18-byte one joins to 34
+    bytes (a valid 2 x 17 reshape that would shift every later row), and
+    a kind check must not vanish under ``python -O``."""
+    import pytest
+
+    a, b = geoblob.pack_point(1.5, -2.5), geoblob.pack_point(-89.0, 179.0)
+    got = geoblob.unpack_points(["a", "b"], [a, b])
+    assert got.shape == (2, 2) and got.tolist() == [[1.5, -2.5], [-89.0, 179.0]]
+    assert geoblob.unpack_points([], []).shape == (0, 2)
+
+    short_long = [a, a[:16], a + b"\x00", b]
+    with pytest.raises(ValueError, match=r"blob 'short': 16 bytes"):
+        geoblob.unpack_points(["ok", "short", "long", "ok2"], short_long)
+
+    wrong_kind = bytes([geoblob.KIND_SEGMENT]) + a[1:]
+    with pytest.raises(ValueError, match=r"blob 'seg': 17 bytes of kind 2"):
+        geoblob.unpack_points(["ok", "seg", "ok2"], [a, wrong_kind, b])
+
+    with pytest.raises(ValueError, match=r"blob 'empty': 0 bytes"):
+        geoblob.unpack_points(["ok", "empty"], [a, b""])
+
+
+def test_decode_points_fails_loudly_on_bad_blob(spark):
+    import pytest
+
+    from osmgraft.sources.decode import decode_points
+
+    blobs = spark.createDataFrame(
+        [("p1", geoblob.pack_point(1.0, 2.0)), ("p2", geoblob.pack_point(3.0, 4.0)[:16])],
+        "blob_id string, payload binary",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="blob 'p2': 16 bytes"):
+        decode_points(blobs).collect()

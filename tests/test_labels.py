@@ -201,12 +201,33 @@ def test_font_atlas_png_raster(tmp_path):
 
 
 def test_png_gray8_roundtrip(tmp_path):
+    import struct
+    import zlib
+
     from osmgraft.functions.fontmetrics import read_png_gray8, write_png_gray8
 
     pix = bytes(range(256)) * 4  # 32x32
     p = str(tmp_path / "x.png")
     write_png_gray8(p, 32, 32, pix)
     assert read_png_gray8(p) == (32, 32, pix)
+
+    # non-square, and checked against the PNG spec rather than the
+    # matching reader: IHDR first, every chunk CRC valid, IEND last
+    pix = bytes((7 * i) % 256 for i in range(13 * 9))
+    write_png_gray8(p, 13, 9, pix)
+    assert read_png_gray8(p) == (13, 9, pix)
+    with open(p, "rb") as fh:
+        data = fh.read()
+    pos, tags = 8, []
+    while pos < len(data):
+        (ln,) = struct.unpack(">I", data[pos : pos + 4])
+        body = data[pos + 4 : pos + 8 + ln]
+        (crc,) = struct.unpack(">I", data[pos + 8 + ln : pos + 12 + ln])
+        assert crc == zlib.crc32(body) & 0xFFFFFFFF
+        tags.append(body[:4])
+        pos += 12 + ln
+    assert pos == len(data) and tags[0] == b"IHDR" and tags[-1] == b"IEND"
+    assert struct.unpack(">IIBBBBB", data[16:29]) == (13, 9, 8, 0, 0, 0, 0)
 
 
 # ---------------------------------------------------------------------------
