@@ -89,6 +89,199 @@ _PTS_SQL = (
 )
 
 
+_MEDIA_ORACLE_PATH = "/tmp/osmgraft_media_oracle.parquet"
+
+
+def _stage_media_oracle(n: int = 200) -> str:
+    """Deterministic opaque-media parquet staged WITHOUT Spark (pyarrow),
+    so it exists before either side of the multimodal oracle runs. The
+    payload rule is the table's definition: both Spark (length(payload))
+    and DuckDB (octet_length) measure the same staged bytes."""
+    import hashlib
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.exists(_MEDIA_ORACLE_PATH):
+        return _MEDIA_ORACLE_PATH
+    ids, mimes, payloads = [], [], []
+    for i in range(n):
+        seed = hashlib.blake2b(str(i).encode(), digest_size=32).digest()
+        length = 64 + (i * 37) % 448
+        payload = (seed * ((length // 32) + 1))[:length]
+        ids.append(i)
+        mimes.append(("image/png", "audio/wav", "video/mp4")[i % 3])
+        payloads.append(payload)
+    table = pa.table(
+        {
+            "media_id": pa.array(ids, pa.int64()),
+            "mime": pa.array(mimes, pa.string()),
+            "payload": pa.array(payloads, pa.binary()),
+        }
+    )
+    pq.write_table(table, _MEDIA_ORACLE_PATH)
+    return _MEDIA_ORACLE_PATH
+
+
+_WAV_ORACLE_PATH = "/tmp/osmgraft_wav_oracle.parquet"
+
+
+def _stage_wav_oracle(n: int = 150) -> str:
+    """Deterministic VALID PCM16 WAV payloads (sine + content-keyed phase)
+    staged without Spark. The ``rate`` column is the oracle's side-channel:
+    DuckDB recomputes n_samples/duration arithmetically from
+    ``octet_length`` + ``rate`` (canonical 44-byte header, 2 bytes/sample),
+    while the Spark side must recover both from the BYTES alone."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmgraft.operators.multimodal import encode_wav_pcm16
+
+    if os.path.exists(_WAV_ORACLE_PATH):
+        return _WAV_ORACLE_PATH
+    rates = (8000, 16000, 44100)
+    ids, rate_col, payloads = [], [], []
+    for i in range(n):
+        rate = rates[i % 3]
+        n_samples = 400 + (i * 97) % 4000
+        t = np.arange(n_samples) / rate
+        freq = 200.0 + 13.0 * i
+        wave = 0.7 * np.sin(2 * np.pi * freq * t + 0.01 * i)
+        ids.append(i)
+        rate_col.append(rate)
+        payloads.append(encode_wav_pcm16(wave, rate))
+    pq.write_table(
+        pa.table(
+            {
+                "media_id": pa.array(ids, pa.int64()),
+                "rate": pa.array(rate_col, pa.int64()),
+                "payload": pa.array(payloads, pa.binary()),
+            }
+        ),
+        _WAV_ORACLE_PATH,
+    )
+    return _WAV_ORACLE_PATH
+
+
+_MP4_ORACLE_PATH = "/tmp/osmgraft_mp4_oracle.parquet"
+
+
+def _stage_mp4_oracle(n: int = 120) -> str:
+    """Deterministic VALID ISO-BMFF payloads (ftyp+moov/mvhd+trak/tkhd,
+    mixed timescales) staged without Spark. duration/w/h/n_tracks are the
+    oracle's side-channel; the Spark side must recover all four from the
+    BYTES via the struct-only box walk."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmgraft.operators.multimodal import encode_mp4_stub
+
+    if os.path.exists(_MP4_ORACLE_PATH):
+        return _MP4_ORACLE_PATH
+
+    ids, durs, ws, hs, payloads = [], [], [], [], []
+    for i in range(n):
+        dur = 500 + (i * 977) % 60_000
+        w = 16 * (1 + (i * 3) % 120)
+        h = 16 * (1 + (i * 5) % 68)
+        ts = (1000, 90_000, 600, 25_000)[i % 4]
+        # writer quantizes duration to the timescale; record the value the
+        # parser can actually recover (floor twice, like the parser does)
+        dur_q = (dur * ts // 1000) * 1000 // ts
+        ids.append(i)
+        durs.append(dur_q)
+        ws.append(w)
+        hs.append(h)
+        payloads.append(encode_mp4_stub(dur, w, h, timescale=ts))
+    pq.write_table(
+        pa.table(
+            {
+                "media_id": pa.array(ids, pa.int64()),
+                "dur_ms": pa.array(durs, pa.int64()),
+                "w": pa.array(ws, pa.int64()),
+                "h": pa.array(hs, pa.int64()),
+                "payload": pa.array(payloads, pa.binary()),
+            }
+        ),
+        _MP4_ORACLE_PATH,
+    )
+    return _MP4_ORACLE_PATH
+
+
+_PNG_ORACLE_PATH = "/tmp/osmgraft_png_oracle.parquet"
+
+
+def _stage_png_oracle(n: int = 120) -> str:
+    """Deterministic VALID gray8 PNG payloads (mixed None/Up scanline
+    filters, zlib-deflated) staged without Spark. ``w``/``h``/``px_sum``
+    are the oracle's side-channel: DuckDB replays the staged geometry +
+    pixel sum while the Spark side must recover all three from the BYTES
+    (inflate + unfilter included — px_sum over reconstructed samples)."""
+    import os
+    import struct
+    import zlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.exists(_PNG_ORACLE_PATH):
+        return _PNG_ORACLE_PATH
+
+    def chunk(tag: bytes, payload: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(payload))
+            + tag
+            + payload
+            + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
+        )
+
+    ids, ws, hs, sums, payloads = [], [], [], [], []
+    for i in range(n):
+        w = 8 + (i * 7) % 40
+        h = 5 + (i * 11) % 30
+        y, x = np.mgrid[0:h, 0:w]
+        img = ((x * 3 + y * 5 + i) % 256).astype(np.uint8)
+        raw = b""
+        for yy in range(h):  # alternate filter None / Up per row
+            if yy % 2 == 0 or yy == 0:
+                raw += b"\x00" + img[yy].tobytes()
+            else:
+                raw += b"\x02" + ((img[yy].astype(np.int32) - img[yy - 1]) & 0xFF).astype(
+                    np.uint8
+                ).tobytes()
+        png = (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(raw))
+            + chunk(b"IEND", b"")
+        )
+        ids.append(i)
+        ws.append(w)
+        hs.append(h)
+        sums.append(int(img.astype(np.int64).sum()))
+        payloads.append(png)
+    pq.write_table(
+        pa.table(
+            {
+                "media_id": pa.array(ids, pa.int64()),
+                "w": pa.array(ws, pa.int64()),
+                "h": pa.array(hs, pa.int64()),
+                "px_sum": pa.array(sums, pa.int64()),
+                "payload": pa.array(payloads, pa.binary()),
+            }
+        ),
+        _PNG_ORACLE_PATH,
+    )
+    return _PNG_ORACLE_PATH
+
+
 def _stay_oracle_sql(rounded: bool = True) -> str:
     """DuckDB replica of operators.trajectory.stay_points over the
     deterministic synthetic trajectories of q_stay_points. ``rounded``
@@ -1477,6 +1670,38 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = quantize_embeddings(emb)
         return out.select("vec_id", "qvec", F.round("scale", 6).alias("scale"))
 
+    def q_multimodal_features(spark, sf):
+        from osmgraft.operators.multimodal import extract_features
+
+        media = spark.read.parquet(_stage_media_oracle())
+        return extract_features(media, dim=16).select("media_id", "n_bytes")
+
+    def q_wav_decode(spark, sf):
+        # the real stdlib WAV codec: sample_rate / n_samples / duration_ms
+        # recovered from the payload BYTES (media_id + payload only — the
+        # staged `rate` column is the oracle's, not ours)
+        from osmgraft.operators.multimodal import wav_decode_meta
+
+        media = spark.read.parquet(_stage_wav_oracle()).select("media_id", "payload")
+        return wav_decode_meta(media)
+
+    def q_png_decode(spark, sf):
+        # the real stdlib PNG codec: geometry + pixel sum recovered from
+        # the payload BYTES (zlib inflate + scanline unfilter; the staged
+        # w/h/px_sum columns are the oracle's, not ours)
+        from osmgraft.operators.multimodal import png_decode_meta
+
+        media = spark.read.parquet(_stage_png_oracle()).select("media_id", "payload")
+        return png_decode_meta(media)
+
+    def q_mp4_decode(spark, sf):
+        # the real ISO-BMFF box walk: duration/geometry/track count
+        # recovered from the payload BYTES (media_id + payload only)
+        from osmgraft.operators.multimodal import mp4_decode_meta
+
+        media = spark.read.parquet(_stage_mp4_oracle()).select("media_id", "payload")
+        return mp4_decode_meta(media)
+
     def q_hex_cells(spark, sf):
         from osmgraft.functions.cells import hex_cell_udf
 
@@ -2239,6 +2464,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_topk": q_ann_lsh,
         "ann_ivf_topk": q_ann_ivf,
         "quantize_embeddings": q_quantize_embeddings,
+        "multimodal_features": q_multimodal_features,
+        "wav_decode": q_wav_decode,
+        "png_decode": q_png_decode,
+        "mp4_decode": q_mp4_decode,
         "dedup_labels_pts": q_dedup_labels_pts,
         "hex_cells": q_hex_cells,
         "adaptive_cells_pts": q_adaptive_cells_pts,
@@ -2969,6 +3198,31 @@ def oracle_sql() -> dict[str, str]:
             "select q_id, vec_id, rk from (select q_id, vec_id, "
             "row_number() over (partition by q_id order by c desc, vec_id asc) as rk "
             "from scored) t where rk <= 5"
+        ),
+        "multimodal_features": (
+            f"select media_id, cast(octet_length(payload) as bigint) as n_bytes "
+            f"from read_parquet('{_stage_media_oracle()}')"
+        ),
+        "wav_decode": (
+            # canonical PCM16 mono: 44-byte header, 2 bytes/sample; integer
+            # math mirrors the kernel's n*1000 // rate exactly
+            f"select media_id, rate as sample_rate, "
+            "(octet_length(payload) - 44) // 2 as n_samples, "
+            "(((octet_length(payload) - 44) // 2) * 1000) // rate as duration_ms "
+            f"from read_parquet('{_stage_wav_oracle()}')"
+        ),
+        "png_decode": (
+            # staged side-channel geometry/pixel-sum; the Spark side must
+            # reproduce them from the PNG bytes (inflate + unfilter)
+            f"select media_id, w as width, h as height, px_sum "
+            f"from read_parquet('{_stage_png_oracle()}')"
+        ),
+        "mp4_decode": (
+            # staged side-channel timing/geometry; the Spark side must
+            # reproduce them from the ISO-BMFF bytes (box walk)
+            f"select media_id, dur_ms as duration_ms, w as width, "
+            f"h as height, cast(1 as bigint) as n_tracks "
+            f"from read_parquet('{_stage_mp4_oracle()}')"
         ),
         "dedup_labels_pts": (
             f"with p as ({_PTS_SQL}) "

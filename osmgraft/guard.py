@@ -1,6 +1,7 @@
 """Boundary guard for parsers over untrusted bytes.
 
-Every parser over untrusted bytes (`functions.ttf.parse_ttf`,
+Every parser over untrusted bytes (`decode_wav`, `decode_png`,
+`decode_pnm`, `parse_mp4_meta`, `functions.ttf.parse_ttf`,
 `sources.geoblob.unpack`) documents one contract: malformed input raises
 ``ValueError``. The parser BODIES use stdlib primitives whose own
 exception types leak on adversarial bytes — ``struct.error`` on a short

@@ -402,37 +402,22 @@ def image_features(img: np.ndarray, n_hist: int = 59) -> np.ndarray:
     return np.concatenate([head, hist / gray.size]).astype(np.float32)
 
 
-_JPEG_MIMES = ("image/jpeg", "image/jpg")
-
-
 @untrusted_parser
 def decode_media(payload: bytes, mime: str) -> np.ndarray:
     """Default codec for the ``extract_features`` seam.
 
     REAL stdlib decoders: ``audio/wav`` (RIFF parse ->
     :func:`wav_features`), ``image/png`` (gray/RGB/RGBA/gray-alpha at
-    8/16-bit, palette and sub-byte gray at 1/2/4-bit, all five filters),
-    ``image/jpeg`` (baseline + progressive Huffman — see
-    :mod:`osmgraft.operators.jpegcodec`), binary PNM P5/P6 ->
-    :func:`image_features`, and MJPEG AVI video (container walk + JPEG
-    decode of the middle frame -> :func:`image_features`). Anything
-    outside each decoder's envelope (arithmetic-coded JPEG, non-MJPEG
+    8/16-bit, palette and sub-byte gray at 1/2/4-bit, all five filters)
+    and binary PNM P5/P6 -> :func:`image_features`. Anything else (JPEG,
     video, ...) raises so nothing silently trains on fake pixels — real
     deployments plug Pillow/ffmpeg in via the ``codec=`` parameter."""
     if mime in _WAV_MIMES:
         return wav_features(*decode_wav(payload))
     if mime in _PNG_MIMES:
         return image_features(decode_png(payload))
-    if mime in _JPEG_MIMES:
-        from osmgraft.operators.jpegcodec import decode_jpeg
-
-        return image_features(decode_jpeg(payload))
     if mime in _PNM_MIMES:
         return image_features(decode_pnm(payload))
-    if mime in _AVI_MIMES:
-        meta = parse_avi_mjpeg(payload)
-        if meta["frames"]:  # features of the middle frame (real pixels)
-            return image_features(decode_avi_frame(payload, len(meta["frames"]) // 2))
     raise NotImplementedError(
         f"media codec for {mime!r} not available in this environment; "
         "wire Pillow/ffmpeg here on a real cluster"
@@ -585,41 +570,6 @@ def png_decode_meta(media: DataFrame, on_error: str = "raise") -> DataFrame:
             for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
                 try:
                     img = decode_png(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    if not skip:
-                        raise
-                    continue
-                mid.append(int(media_id))
-                hs.append(img.shape[0])
-                ws.append(img.shape[1])
-                sums.append(int(img.astype(np.int64).sum()))
-            if not mid:
-                continue
-            yield pd.DataFrame({"media_id": mid, "width": ws, "height": hs, "px_sum": sums})
-
-    return media.select("media_id", "payload").mapInPandas(kernel, schema=_PNG_META_SCHEMA)
-
-
-def jpeg_decode_meta(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Decode baseline-JPEG payloads at scale: (media_id, width, height,
-    px_sum) derived from the BYTES by
-    :func:`osmgraft.operators.jpegcodec.decode_jpeg` — Huffman entropy
-    decode + dequant + IDCT + color transform included, so ``px_sum``
-    proves the full pixel path. The DuckDB oracle replays staged
-    side-channel columns computed by the SAME decoder at staging time
-    (lossy format: the oracle can't re-derive pixels arithmetically like
-    WAV, so the pinned contract is decode determinism + the staged
-    ground truth from an independent in-process decode)."""
-    from osmgraft.operators.jpegcodec import decode_jpeg
-
-    skip = _on_error_policy(on_error)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mid, ws, hs, sums = [], [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_jpeg(bytes(payload))
                 except (ValueError, NotImplementedError):
                     if not skip:
                         raise
@@ -810,263 +760,6 @@ def sample_frames(media: DataFrame, fps_out: float = 1.0) -> DataFrame:
         .withColumn("frame_ms", (F.col("frame_idx") * F.lit(1000.0) / fps_out).cast("int"))
         .select("media_id", "frame_idx", "frame_ms")
     )
-
-
-# ---------------------------------------------------------------------------
-# AVI / MJPEG — real video FRAME decode (stdlib + the baseline JPEG codec)
-# ---------------------------------------------------------------------------
-
-_AVI_MIMES = ("video/x-msvideo", "video/avi", "video/mjpeg")
-
-
-@untrusted_parser
-def parse_avi_mjpeg(payload: bytes, max_chunks: int = 100_000) -> dict:
-    """RIFF-AVI metadata + frame index from BYTES: walks ``RIFF 'AVI '``
-    → ``LIST hdrl`` (``avih``: µs/frame, total frames, geometry) →
-    ``LIST movi`` (``..dc``/``..db`` chunks = one complete JPEG each for
-    the MJPEG handler). Returns ``{us_per_frame, n_frames, width, height,
-    handler, frames: [(offset, size), ...]}`` — frame entries are slices
-    into ``payload``, decodable individually via
-    :func:`osmgraft.operators.jpegcodec.decode_jpeg`, so a sampling plan
-    touches only the sampled frames' bytes.
-
-    Untrusted-bytes contract (same as :func:`parse_mp4_meta` /
-    :func:`decode_png`): bounded chunk count, every declared size checked
-    against its container before use, no allocation proportional to
-    claimed sizes — the frame list holds offsets, not copies."""
-    n = len(payload)
-    if n < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not a RIFF-AVI payload")
-    (riff_size,) = struct.unpack_from("<I", payload, 4)
-    end = min(n, 8 + riff_size)
-
-    us_per_frame = total_frames = None
-    width = height = None
-    handler = None
-    frames: list[tuple[int, int]] = []
-    budget = max_chunks
-
-    def walk(start: int, stop: int, in_movi: bool, depth: int) -> None:
-        nonlocal us_per_frame, total_frames, width, height, handler, budget
-        pos = start
-        while pos + 8 <= stop:
-            if budget <= 0:
-                raise ValueError("AVI chunk count exceeds bound")
-            budget -= 1
-            tag = payload[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", payload, pos + 4)
-            body = pos + 8
-            if body + size > stop:
-                raise ValueError(f"AVI chunk {tag!r} overruns its container")
-            if tag == b"LIST" and size >= 4 and depth < 6:
-                ltype = payload[body : body + 4]
-                walk(body + 4, body + size, ltype == b"movi", depth + 1)
-            elif tag == b"avih" and size >= 40:
-                us_per_frame, total_frames = struct.unpack_from("<I", payload, body)[0], struct.unpack_from("<I", payload, body + 16)[0]
-                width, height = struct.unpack_from("<II", payload, body + 32)
-            elif tag == b"strh" and size >= 8 and handler is None:
-                if payload[body : body + 4] == b"vids":
-                    handler = payload[body + 4 : body + 8].decode("ascii", "replace")
-            elif in_movi and len(tag) == 4 and tag[2:4] in (b"dc", b"db") and size > 0:
-                frames.append((body, size))
-            pos = body + size + (size & 1)  # chunks are word-aligned
-
-    walk(12, end, False, 0)
-    if us_per_frame is None:
-        raise ValueError("AVI missing avih header")
-    if us_per_frame == 0:
-        raise ValueError("AVI avih µs-per-frame is zero")
-    return {
-        "us_per_frame": us_per_frame,
-        "n_frames": len(frames) or total_frames or 0,
-        "width": width,
-        "height": height,
-        "handler": handler,
-        "frames": frames,
-    }
-
-
-def encode_avi_mjpeg(
-    frames: list[np.ndarray], fps: float = 10.0, quality: int = 90
-) -> bytes:
-    """Minimal valid RIFF-AVI MJPEG writer (test/synth counterpart of
-    :func:`parse_avi_mjpeg`): ``avih`` + one ``vids/MJPG`` stream
-    (``strh``+``strf`` BITMAPINFOHEADER) + ``movi`` with one baseline-JPEG
-    ``00dc`` chunk per frame + ``idx1``. Frames are uint8 gray (HxW) or
-    RGB (HxWx3) arrays, all the same geometry."""
-    from osmgraft.operators.jpegcodec import encode_jpeg_baseline
-
-    if not frames:
-        raise ValueError("encode_avi_mjpeg needs at least one frame")
-    h, w = frames[0].shape[:2]
-    if any(f.shape[:2] != (h, w) for f in frames):
-        raise ValueError("all AVI frames must share one geometry")
-    jpegs = [encode_jpeg_baseline(f, quality=quality) for f in frames]
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    us_per_frame = int(round(1_000_000 / fps))
-    avih = struct.pack(
-        "<14I",
-        us_per_frame, 0, 0, 0x10,          # µs/frame, maxbytes/s, padding, flags(HASINDEX)
-        len(jpegs), 0, 1, 0,               # total frames, initial, streams, sugg. buffer
-        w, h, 0, 0, 0, 0,                  # width, height, reserved[4]
-    )
-    strh = (
-        b"vids" + b"MJPG"
-        + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1000, int(round(fps * 1000)), 0, len(jpegs), 0, 0xFFFFFFFF, 0)
-        + struct.pack("<4H", 0, 0, w, h)
-    )
-    strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_chunks = [chunk(b"00dc", j) for j in jpegs]
-    movi = lst(b"movi", b"".join(movi_chunks))
-    idx, off = [], 4  # idx1 offsets are relative to the 'movi' fourcc
-    for j, c in zip(jpegs, movi_chunks):
-        idx.append(struct.pack("<4sIII", b"00dc", 0x10, off, len(j)))
-        off += len(c)
-    body = b"AVI " + hdrl + movi + chunk(b"idx1", b"".join(idx))
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def decode_avi_frame(payload: bytes, frame_idx: int) -> np.ndarray:
-    """Decode ONE frame of an MJPEG AVI to pixels (uint8 HxW[x3]) —
-    parses the container index, then JPEG-decodes only that frame's
-    bytes."""
-    from osmgraft.operators.jpegcodec import decode_jpeg
-
-    meta = parse_avi_mjpeg(payload)
-    frames = meta["frames"]
-    if not 0 <= frame_idx < len(frames):
-        raise IndexError(f"frame {frame_idx} out of range 0..{len(frames) - 1}")
-    off, size = frames[frame_idx]
-    return decode_jpeg(payload[off : off + size])
-
-
-_AVI_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_frames", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-    ]
-)
-
-
-def avi_decode_meta(media: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Parse AVI container metadata at scale: (media_id, n_frames,
-    duration_ms, width, height) from the BYTES via
-    :func:`parse_avi_mjpeg`. Arrow-batched ``mapInPandas``."""
-
-    skip = _on_error_policy(on_error)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in _AVI_META_SCHEMA.fields}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    meta = parse_avi_mjpeg(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    if not skip:
-                        raise
-                    continue
-                rows["media_id"].append(int(media_id))
-                rows["n_frames"].append(int(meta["n_frames"]))
-                rows["duration_ms"].append(int(meta["n_frames"] * meta["us_per_frame"] // 1000))
-                rows["width"].append(int(meta["width"] or 0))
-                rows["height"].append(int(meta["height"] or 0))
-            if not rows["media_id"]:
-                continue
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload").mapInPandas(kernel, schema=_AVI_META_SCHEMA)
-
-
-_FRAME_PX_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_ms", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("px_sum", LongType()),
-    ]
-)
-
-
-def decode_video_frames(
-    media: DataFrame, fps_out: float = 1.0, on_error: str = "raise"
-) -> DataFrame:
-    """REAL video frame sampling + decode for MJPEG AVIs: samples frames
-    at ``fps_out`` (the :func:`sample_frames` timestamp rule, applied to
-    the byte-derived duration) and JPEG-decodes ONLY the sampled frames —
-    (media_id, frame_idx, frame_ms, width, height, px_sum), one row per
-    sampled frame, pixels recovered from the payload bytes end-to-end.
-
-    ``frame_idx`` numbers the SAMPLE (0..k); the source frame is
-    ``floor(frame_ms * 1000 / us_per_frame)``, so a 1-fps sample of a
-    30-fps clip decodes 1/30th of the frames and never touches the rest
-    (the container parse is offset-only). Arrow-batched ``mapInPandas``;
-    non-AVI payloads raise (the honest-seam rule: nothing fakes pixels)."""
-    from osmgraft.operators.jpegcodec import decode_jpeg
-
-    skip = _on_error_policy(on_error)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in _FRAME_PX_SCHEMA.fields}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload)
-                # per-payload atomicity under on_error='skip': a video
-                # whose LAST frame is corrupt emits none of its rows
-                # (partial frame sets would look like short clips)
-                staged: list[tuple] = []
-                try:
-                    meta = parse_avi_mjpeg(raw)
-                    frames = meta["frames"]
-                    if not frames:
-                        # a structurally valid AVI whose movi list holds no
-                        # ..dc/..db chunks must route through the on_error
-                        # policy, not crash the task on frames[-1]
-                        raise ValueError("AVI contains no video frame chunks")
-                    dur_ms = meta["n_frames"] * meta["us_per_frame"] / 1000.0
-                    n_samples = max(int(dur_ms / 1000.0 * fps_out), 1)
-                    for k in range(n_samples):
-                        frame_ms = int(k * 1000.0 / fps_out)
-                        src = min(int(frame_ms * 1000 / meta["us_per_frame"]), len(frames) - 1)
-                        off, size = frames[src]
-                        img = decode_jpeg(raw[off : off + size])
-                        staged.append(
-                            (
-                                int(media_id),
-                                k,
-                                frame_ms,
-                                int(img.shape[1]),
-                                int(img.shape[0]),
-                                int(img.astype(np.int64).sum()),
-                            )
-                        )
-                except (ValueError, NotImplementedError):
-                    if not skip:
-                        raise
-                    continue
-                for mid_v, k, frame_ms, w, h, s in staged:
-                    rows["media_id"].append(mid_v)
-                    rows["frame_idx"].append(k)
-                    rows["frame_ms"].append(frame_ms)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["px_sum"].append(s)
-            if not rows["media_id"]:
-                continue
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload").mapInPandas(kernel, schema=_FRAME_PX_SCHEMA)
 
 
 def synth_media(spark, n: int, seed: int = 42) -> DataFrame:

@@ -230,10 +230,9 @@ def test_decode_media_image_mimes_real():
     v2 = decode_media(b"P6\n8 8\n255\n" + img.tobytes(), "image/x-portable-pixmap")
     # same pixels through two container formats -> identical features
     assert np.array_equal(v, v2)
-    # JPEG is a real codec now (see test_jpeg_codec.py); a truncated
-    # payload raises ValueError, and only genuinely codec-less mimes
-    # (video) keep the NotImplementedError seam
-    with pytest.raises(ValueError):
+    # JPEG and video have no codec here: they keep the
+    # NotImplementedError seam instead of decoding fake pixels
+    with pytest.raises(NotImplementedError):
         decode_media(b"\xff\xd8\xff", "image/jpeg")
     with pytest.raises(NotImplementedError):
         decode_media(b"\x00\x00\x00\x18ftypmp42", "video/mp4")
