@@ -13,13 +13,8 @@ uninterpretable on its own):
   the reported per-query number is the MEDIAN across rounds — a slow
   window hits all queries of that round symmetrically instead of pinning
   one query to a bogus number;
-- the cpu/membw calibration probes BRACKET the campaign: one before
-  round 1, one after each round, so every round sits between two probe
-  samples describing the window it actually ran in;
-- probes run in a SUBPROCESS (never fork a pool inside the live Spark
-  driver JVM) with a hard timeout;
-- per-round samples and all probe samples are written into the artifact,
-  so round-over-round comparison needs no forensic work.
+- per-round samples are written into the artifact, so round-over-round
+  comparison needs no forensic work.
 
 The synthetic documents table is staged once under /tmp (generation is
 NOT part of the measured time; the input is a parquet table, as in the
@@ -41,7 +36,6 @@ import hashlib
 import json
 import os
 import statistics
-import subprocess
 import sys
 import time
 
@@ -185,27 +179,6 @@ def stage_codec_media(spark, n: int = 12_000) -> str:
             "overwrite"
         ).parquet(paths[kind])
     return root
-
-
-def calibrate_probe(procs: int = 8, timeout: int = 300) -> dict:
-    """Host-window calibration (same probes as tools/scaling_bench.py at
-    the same proc count, so numbers are comparable with the campaign
-    tables). Runs in a child interpreter: multiprocessing pools must not
-    fork the live Spark driver (JVM/py4j threads present — a fork-induced
-    hang would stall the bench and isn't an exception)."""
-    code = (
-        "import sys, json; sys.path.insert(0, {!r}); "
-        "from scaling_bench import calibrate; "
-        "print(json.dumps(calibrate({})))".format(os.path.join(REPO, "tools"), procs)
-    )
-    try:
-        out = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=timeout
-        )
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-        return {k: round(v, 2) for k, v in json.loads(line).items()}
-    except Exception as e:  # calibration must never sink the bench record
-        return {"err": str(e)[:80]}
 
 
 def main() -> None:
@@ -510,10 +483,9 @@ def main() -> None:
         ("png_decode_12k", q_png_codec),
     ]
 
-    # ---- interleaved campaign with bracketing probes -----------------------
+    # ---- interleaved campaign ----------------------------------------------
 
     samples: dict[str, list[float]] = {name: [] for name, _ in QUERIES}
-    calib_samples: list[dict] = [calibrate_probe()]  # probe BEFORE round 1
     n_labels = 0
     for _ in range(rounds):
         for name, fn in QUERIES:
@@ -522,7 +494,6 @@ def main() -> None:
             samples[name].append(round(time.perf_counter() - t0, 3))
             if name == "osm_pipeline_tiles":
                 n_labels = out
-        calib_samples.append(calibrate_probe())  # probe AFTER each round
 
     times = {name: round(statistics.median(s), 3) for name, s in samples.items()}
     total = round(sum(times.values()), 3)
@@ -545,7 +516,6 @@ def main() -> None:
                     for k in ("wav", "png")
                 },
                 "query_samples": samples,
-                "calib_8_samples": calib_samples,
             }
         )
     )

@@ -16,10 +16,9 @@ environment, so both encoders are implemented from scratch:
   neighborhoods. NOT bit-compatible with H3 (documented; the published
   H3 icosahedral projection is not reproducible cheaply without the
   library) but provides the same API surface the engine needs: cell
-  assignment, ring candidate pruning for kNN, adaptive res splitting.
-  Distortion near poles is acknowledged: at |lat| -> 90 a fixed
-  degree-sized hex shrinks in ground meters; the kNN radius guard
-  compensates by choosing res from the *latitude-adjusted* cell size.
+  assignment, ring candidate pruning for line snapping, adaptive res
+  splitting. Distortion near poles is acknowledged: at |lat| -> 90 a
+  fixed degree-sized hex shrinks in ground meters.
 
 Everything here is either numpy inside pandas UDFs (cell encode) or
 pure Catalyst integer arithmetic (pack/unpack/neighbors) — no per-row
@@ -238,6 +237,9 @@ def s2_cell_udf(level: int = 12):
 # Hex grid (H3-like API)
 # ===========================================================================
 
+EARTH_RADIUS_M = 6_371_008.8
+DEG_M = EARTH_RADIUS_M * np.pi / 180.0  # meters per degree latitude
+
 _HEX_BASE_EDGE = 5.12  # degrees at res 0; res r edge = 5.12 / 2^r
 _HEX_OFF = 1 << 28
 _SQRT3 = np.sqrt(3.0)
@@ -247,13 +249,33 @@ def hex_edge_deg(res: int) -> float:
     return _HEX_BASE_EDGE / (1 << res)
 
 
-def hex_cell(lat_deg, lon_deg, res) -> np.ndarray:
-    """Vectorized lat/lon -> hex cell id (axial q,r packed with res).
+def res_for_radius(radius_m: float, min_cos_lat: float = 0.2, probe_k: int = 1) -> int:
+    """Finest hex resolution satisfying the disk(``probe_k``) containment
+    guarantee: any point within ``radius_m`` of a query lies in the
+    3k(k+1)+1-cell disk around the query's cell. Sufficient condition:
+    k * hex inradius (sqrt(3)/2 * edge, in plane degrees) >= the search
+    radius in degrees, where longitude degrees are inflated by 1/cos(lat)
+    up to the supported latitude (induction on k: dilating a cell union by
+    one inradius stays within its one-ring expansion).
 
-    ``res`` may be a scalar or a per-row int array (mixed-resolution
-    encoding in one pass — used by the latitude-banded kNN join)."""
-    res_a = np.asarray(res, dtype=np.int64)
-    size = _HEX_BASE_EDGE / (np.int64(1) << res_a).astype(np.float64)
+    Why probe deeper than disk(1): cell edges are powers of two, so the
+    coarsest-fitting cell can be ~2x oversize and the probed area up to
+    ~4x the search circle ON TOP of the 7/pi disk overhead. Finer cells +
+    a wider probe track the circle better: probed-area factor is
+    (3 + 3/k + 1/k^2) * (rounded-edge inflation)^2, i.e. k=3 cuts true
+    candidate volume ~2-3x for radii that round badly at k=1, at the cost
+    of a 37-cell probe explode (cheap codegen integers vs real pairs
+    through the haversine)."""
+    radius_deg = radius_m / (DEG_M * min_cos_lat)
+    for res in range(15, -1, -1):
+        if 0.866 * hex_edge_deg(res) * probe_k >= radius_deg:
+            return res
+    return 0
+
+
+def hex_cell(lat_deg, lon_deg, res: int) -> np.ndarray:
+    """Vectorized lat/lon -> hex cell id (axial q,r packed with res)."""
+    size = hex_edge_deg(res)
     x = np.asarray(lon_deg, dtype=np.float64)
     y = np.asarray(lat_deg, dtype=np.float64)
     qf = (_SQRT3 / 3.0 * x - y / 3.0) / size
@@ -267,7 +289,7 @@ def hex_cell(lat_deg, lon_deg, res) -> np.ndarray:
     rz = np.where(~((dx > dy) & (dx > dz)) & (dz > dy), -rx - ry, rz)
     q = rx.astype(np.int64)
     r = rz.astype(np.int64)
-    return pack_hex(q, r, res_a)
+    return pack_hex(q, r, res)
 
 
 def pack_hex(q, r, res):

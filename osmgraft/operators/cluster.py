@@ -8,8 +8,8 @@ dependent at the border points; this operator implements the standard
 deterministic distributed formulation:
 
 - eps-neighbor pairs come from the engine's cell-pruned radius join
-  (:func:`osmgraft.operators.knn.knn_candidates` — latitude-banded
-  covering, exact haversine, skew rail on by default), never an
+  (:func:`osmgraft.operators.knn.knn_candidates` — chord-grid
+  equi-join, exact haversine, skew rail on by default), never an
   all-pairs product;
 - a point is CORE iff its eps-neighborhood holds >= ``min_pts`` points
   (itself included — the textbook count);

@@ -1,35 +1,20 @@
-"""J6: kNN joins via cell-ring candidate pruning, and label deduplication
-by an election grid plus one exact probe for the elected leaders.
+"""J6: kNN joins on a 3-D chord grid, and label deduplication by an
+election grid plus one exact probe for the elected leaders.
 
 Engine extension (north_rule); absent from the reference. The geometry is
-pure Catalyst: haversine distance is built from built-in trig functions
-(whole-stage codegen — no UDF), and the candidate space is pruned by a
-hex-cell disk(``probe_k``) self-join: with k * cell inradius >= the search
-radius, every true neighbor within the radius lies in the 3k(k+1)+1-cell
-disk around the query point's cell, so the join is an equi-join on cell id
-(shuffle co-partitioned by cell; dense-city skew handled by
-operators/skew.py). probe_k=3 by default: finer cells + a wider probe
-track the search circle ~2x tighter than disk(1) at coarse cells (the
-power-of-two edge quantization can make the k=1 cell ~2x oversize), at the
-cost of a 37-integer probe explode — measured faster on dense data and
-identical in results (see res_for_radius).
+pure Catalyst: haversine distance and the cell keys are built from
+built-in trig functions and ``floor`` (whole-stage codegen — no UDF).
 
-Resolution is latitude-banded: the disk(1) guarantee must inflate the
-radius by 1/cos(lat) in longitude-degrees, and a single global resolution
-has to assume the worst latitude in the data — cells ~5x coarser than
-equatorial data needs, i.e. up to ~25x extra candidate pairs through the
-exact haversine filter. Each row is instead encoded ONCE at the finest
-resolution its own |lat| band supports (the resolution is packed into the
-cell id, so cells from different bands can never collide), and the whole
-search stays a single equi-join: right-side rows within the search radius
-of a band edge additionally emit the adjacent band's encoding, and rows
-near the antimeridian emit a lon+-360 replica, all produced in one
-vectorized kernel as an array<long> that Catalyst explodes. Polar caps
-(|lat| >= 84.26, where 1/cos blows up) collapse to one sentinel cell per
-hemisphere on both sides, which turns the cap search into an exact
-per-hemisphere brute-force join INSIDE the same equi-join — no extra
-plan branches, and the operator is correct at every latitude instead of
-silently missing neighbors near the poles.
+Candidate pairs come from one equi-join on a cubic grid in 3-D. A point's
+cell is ``floor((X, Y, Z) / c)``, where ``(X, Y, Z)`` is ``EARTH_RADIUS_M``
+times its ECEF unit vector and ``c`` is the chord of the search radius
+(:func:`chord_side_m`). A chord is never longer than its arc, so two
+points within the radius lie less than ``c`` apart on every axis and
+their cells are at most one apart per axis: the 3x3x3 block of cells
+around a query point holds every neighbor within the radius. The sphere
+in 3-D has no seams, so the grid needs no special case at the poles or at
+lon +-180, and no grid resolution depends on latitude. Dense-city skew is
+handled by operators/skew.py, as for every cell-keyed join.
 
 Label dedup (:func:`dedup_labels`: drop a label if a better-ranked label
 lies within ``r``) is one linear plan, after the background-grid argument
@@ -49,37 +34,23 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmgraft.functions.cells import (
-    _HEX_BASE_EDGE,
-    hex_cell,
-    hex_edge_deg,
-    hex_neighbors_expr,
-    pack_hex,
-)
+# res_for_radius (the hex probe size of snap/matching) is re-exported
+# because perfbench/workloads.py imports it from here
+from osmgraft.functions.cells import DEG_M, EARTH_RADIUS_M, res_for_radius  # noqa: F401
 
-EARTH_RADIUS_M = 6_371_008.8
-DEG_M = EARTH_RADIUS_M * math.pi / 180.0  # meters per degree latitude
-
-# |lat| band upper edges; cos at the edges: 0.700, 0.500, 0.250, 0.100.
-# Band b covers [_BAND_LO[b], _BAND_LO[b+1]); band 4 is the polar cap.
-_BAND_LO = np.array([0.0, 45.573, 60.0, 75.522, 84.261])
-POLAR_CAP_LAT = float(_BAND_LO[-1])
-# Sentinel "resolution" for the cap cells: above any real res (<=15), below
-# 32 so the packed id keeps the int64 sign bit clear.
-_SENTINEL_RES = 31
+_AXES = ("x", "y", "z")
+# the 27 offsets of a cell's 3x3x3 block
+_BLOCK = [(dx, dy, dz) for dx in (-1, 0, 1) for dy in (-1, 0, 1) for dz in (-1, 0, 1)]
 
 
 def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
     """Great-circle distance in meters — pure Catalyst expression.
 
     Periodic in longitude (sin^2(dlon/2) is symmetric about 180), so it
-    needs no antimeridian special-casing; only the *cell grid* does.
-    """
+    needs no antimeridian special-casing."""
     p1, p2 = F.radians(lat1), F.radians(lat2)
     dphi = F.radians(lat2 - lat1)
     dlmb = F.radians(lon2 - lon1)
@@ -87,133 +58,32 @@ def haversine_m(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colum
     return 2 * EARTH_RADIUS_M * F.asin(F.sqrt(a))
 
 
-def res_for_radius(radius_m: float, min_cos_lat: float = 0.2, probe_k: int = 1) -> int:
-    """Finest hex resolution satisfying the disk(``probe_k``) containment
-    guarantee: any point within ``radius_m`` of a query lies in the
-    3k(k+1)+1-cell disk around the query's cell. Sufficient condition:
-    k * hex inradius (sqrt(3)/2 * edge, in plane degrees) >= the search
-    radius in degrees, where longitude degrees are inflated by 1/cos(lat)
-    up to the supported latitude (induction on k: dilating a cell union by
-    one inradius stays within its one-ring expansion).
-
-    Why probe deeper than disk(1): cell edges are powers of two, so the
-    coarsest-fitting cell can be ~2x oversize and the probed area up to
-    ~4x the search circle ON TOP of the 7/pi disk overhead. Finer cells +
-    a wider probe track the circle better: probed-area factor is
-    (3 + 3/k + 1/k^2) * (rounded-edge inflation)^2, i.e. k=3 cuts true
-    candidate volume ~2-3x for radii that round badly at k=1, at the cost
-    of a 37-cell probe explode (cheap codegen integers vs real pairs
-    through the haversine)."""
-    radius_deg = radius_m / (DEG_M * min_cos_lat)
-    for res in range(15, -1, -1):
-        if 0.866 * hex_edge_deg(res) * probe_k >= radius_deg:
-            return res
-    return 0
+def chord_side_m(radius_m: float) -> float:
+    """Side, in meters, of the cubic cells of the kNN probe: the chord
+    ``2R sin(r / 2R)`` of ``r = min(radius_m, pi R)`` (no two points are
+    farther apart than half the circumference), grown by a relative 1e-9
+    so that float rounding in the cell floor cannot carry a pair within
+    ``radius_m`` two cells apart. Raises ``ValueError`` unless
+    ``radius_m`` is positive and finite."""
+    if not (math.isfinite(radius_m) and radius_m > 0):
+        raise ValueError(f"radius_m must be positive and finite, got {radius_m!r}")
+    r = min(radius_m, math.pi * EARTH_RADIUS_M)
+    return 2 * EARTH_RADIUS_M * math.sin(r / (2 * EARTH_RADIUS_M)) * (1.0 + 1e-9)
 
 
-def _band_res(radius_m: float, probe_k: int = 1) -> tuple[np.ndarray, float]:
-    """Per-band resolutions (4 hex bands; guarantee holds out to the band
-    edge + the latitude margin so boundary replicas are covered too)."""
-    lat_margin = radius_m / DEG_M
-    res = []
-    for hi in _BAND_LO[1:]:
-        min_cos = math.cos(math.radians(min(hi + lat_margin, 89.9)))
-        res.append(res_for_radius(radius_m, min_cos_lat=min_cos, probe_k=probe_k))
-    return np.asarray(res, dtype=np.int64), lat_margin
+def _chord_cell(lat: Column, lon: Column, side_m: float) -> Column:
+    """``struct<x, y, z>`` of longs: the chord-grid cell of a point."""
+    phi, lmb = F.radians(lat), F.radians(lon)
+    k = EARTH_RADIUS_M / side_m
+    unit = (F.cos(phi) * F.cos(lmb), F.cos(phi) * F.sin(lmb), F.sin(phi))
+    return F.struct(*[F.floor(u * k).alias(a) for u, a in zip(unit, _AXES)])
 
 
-def _sentinel(lat: np.ndarray) -> np.ndarray:
-    """One constant cell per hemisphere: equi-joining on it IS the polar
-    brute-force join (exact haversine filters afterwards)."""
-    return pack_hex((lat > 0).astype(np.int64), np.zeros(len(lat), np.int64), _SENTINEL_RES)
-
-
-def _enc_banded(lat: np.ndarray, lon: np.ndarray, res: np.ndarray) -> np.ndarray:
-    """Encode at per-row res; rows with res == _SENTINEL_RES get the
-    hemisphere sentinel instead of a grid cell."""
-    cap = res == _SENTINEL_RES
-    out = hex_cell(lat, lon, np.where(cap, 0, res))
-    if cap.any():
-        out = np.where(cap, _sentinel(lat), out)
-    return out
-
-
-def _left_cell_udf(radius_m: float, probe_k: int = 1):
-    res_by_band, _ = _band_res(radius_m, probe_k)
-
-    @F.pandas_udf("long")
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        band = np.digitize(np.abs(la), _BAND_LO[1:])
-        res = np.where(band < 4, res_by_band[np.clip(band, 0, 3)], _SENTINEL_RES)
-        return pd.Series(_enc_banded(la, lo, res))
-
-    return _enc
-
-
-def _right_cells_udf(radius_m: float, probe_k: int = 1):
-    res_by_band, lat_margin = _band_res(radius_m, probe_k)
-
-    @F.pandas_udf("array<long>")
-    def _enc(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        n = len(la)
-        ala = np.abs(la)
-        band = np.digitize(ala, _BAND_LO[1:])
-        own_res = np.where(band < 4, res_by_band[np.clip(band, 0, 3)], _SENTINEL_RES)
-
-        # boundary replica: within lat_margin of a band edge, also encode at
-        # the adjacent band's res so cross-band pairs survive the equi-join.
-        # (band widths >> margin, so at most one edge can be within margin.)
-        rep_res = np.full(n, -1, np.int64)
-        lower = (band >= 1) & (ala < _BAND_LO[np.clip(band, 1, 4)] + lat_margin)
-        rep_res[lower] = res_by_band[np.clip(band[lower] - 1, 0, 3)]
-        hi_edge = np.where(band < 4, _BAND_LO[np.clip(band + 1, 1, 4)], 90.0)
-        upper = (band < 4) & (ala >= hi_edge - lat_margin)
-        up_band = np.clip(band + 1, 0, 4)
-        rep_res[upper] = np.where(
-            up_band[upper] < 4, res_by_band[np.clip(up_band[upper], 0, 3)], _SENTINEL_RES
-        )
-        # adjacent bands may share a resolution (the radius can demand the
-        # same res on both sides of an edge) — then the "replica" would be
-        # the own cell again and every sliver pair would be emitted twice.
-        rep_res[rep_res == own_res] = -1
-
-        # antimeridian replica: the grid is a lon/lat plane, so a row near
-        # +-180 also emits its cell at lon -+ 360 (sentinels are lon-free
-        # and skip this). The exact haversine is periodic, so distances of
-        # replica matches are computed on the ORIGINAL coordinates.
-        grid_res = np.where(own_res == _SENTINEL_RES, np.where(rep_res >= 0, rep_res, 0), own_res)
-        edge = _HEX_BASE_EDGE / (np.int64(1) << grid_res).astype(np.float64)
-        lon_margin = radius_m / (DEG_M * np.maximum(np.cos(np.radians(la)), 0.05)) + (probe_k + 1) * edge
-        shift = np.where(lo > 180.0 - lon_margin, -360.0, np.where(lo < -180.0 + lon_margin, 360.0, 0.0))
-
-        cells = np.full((n, 4), -1, np.int64)
-        cells[:, 0] = _enc_banded(la, lo, own_res)
-        m = rep_res >= 0
-        if m.any():
-            cells[m, 1] = _enc_banded(la[m], lo[m], rep_res[m])
-        s = (shift != 0.0) & (own_res != _SENTINEL_RES)
-        if s.any():
-            cells[s, 2] = _enc_banded(la[s], lo[s] + shift[s], own_res[s])
-        sr = (shift != 0.0) & m & (rep_res != _SENTINEL_RES)
-        if sr.any():
-            cells[sr, 3] = _enc_banded(la[sr], lo[sr] + shift[sr], rep_res[sr])
-        return pd.Series(list(cells))
-
-    return _enc
-
-
-def _left_cand_expr(cell: Column, probe_k: int = 1) -> Column:
-    """Candidate cells a left row probes. Grid rows probe the disk(1)
-    neighborhood; polar-cap sentinel rows probe ONLY the sentinel cell —
-    the disk(1) offset arithmetic on a sentinel id would land on the
-    OPPOSITE hemisphere's sentinel ((q=1,r=0)+(-1,0) == (q=0,r=0)), turning
-    every cap left row into a brute-force join against the other cap's
-    right rows. Results were still correct (haversine filters the
-    cross-hemisphere pairs) but the candidate blow-up is unnecessary."""
-    is_sentinel = F.shiftrightunsigned(cell, 58) == F.lit(_SENTINEL_RES)
-    return F.when(is_sentinel, F.array(cell)).otherwise(hex_neighbors_expr(cell, k=probe_k))
+def _block(cell: Column) -> Column:
+    """The 27 cells of the 3x3x3 block around ``cell``."""
+    return F.array(
+        *[F.struct(*[(cell[a] + d).alias(a) for a, d in zip(_AXES, off)]) for off in _BLOCK]
+    )
 
 
 def _suffix_right(right: DataFrame) -> list[Column]:
@@ -226,24 +96,19 @@ def _candidate_pairs(
     radius_m: float,
     left_cols: tuple[str, str],
     right_cols: tuple[str, str],
-    probe_k: int,
     skew_max_rows: int | None | str,
 ) -> DataFrame:
     """Every pair the cell equi-join of :func:`knn_candidates` emits, with
     its haversine ``dist_m`` and before the radius filter: the pairs the
-    exact distance test is paid for."""
-    l = left.withColumn(
-        "_cell", _left_cell_udf(radius_m, probe_k)(F.col(left_cols[0]), F.col(left_cols[1]))
-    )
-    l_exp = l.withColumn(
-        "_cand", F.explode(_left_cand_expr(F.col("_cell"), probe_k))
-    ).drop("_cell")
-
-    r_cells = _right_cells_udf(radius_m, probe_k)(F.col(right_cols[0]), F.col(right_cols[1]))
-    r_exp = (
-        right.select(_suffix_right(right) + [F.explode(r_cells).alias("_cell_r")])
-        .where(F.col("_cell_r") != -1)
-    )
+    exact distance test is paid for. A left row probes the 27 cells of its
+    block, a right row sits in exactly one cell, so each pair meets at most
+    once. The left cell is a column of its own before the block is built
+    from it: inlined into all 27 block cells, its trig would run 27 times."""
+    side = chord_side_m(radius_m)
+    l = left.withColumn("_cell", _chord_cell(F.col(left_cols[0]), F.col(left_cols[1]), side))
+    l_exp = l.withColumn("_cand", F.explode(_block(F.col("_cell")))).drop("_cell")
+    r_cell = _chord_cell(F.col(right_cols[0]), F.col(right_cols[1]), side)
+    r_exp = right.select(_suffix_right(right) + [r_cell.alias("_cell_r")])
 
     if skew_max_rows == "auto":
         from osmgraft.operators.skew import auto_skew_bound
@@ -275,11 +140,12 @@ def knn_candidates(
     radius_m: float,
     left_cols: tuple[str, str] = ("lat", "lon"),
     right_cols: tuple[str, str] = ("lat", "lon"),
-    probe_k: int = 3,
     skew_max_rows: int | None | str = "auto",
 ) -> DataFrame:
-    """All (left, right) pairs within ``radius_m`` — cell-pruned equi-join +
-    exact haversine filter. Right columns arrive suffixed with ``_r``.
+    """All (left, right) pairs within ``radius_m`` — chord-grid equi-join
+    (see module docstring) + exact haversine filter, each pair once. Right
+    columns arrive suffixed with ``_r``; ``radius_m`` must be positive and
+    finite.
 
     ``skew_max_rows``: split hot cells before the equi-join —
     right rows in cells over the bound are salted (pure hash of their
@@ -292,18 +158,8 @@ def knn_candidates(
     The default ``"auto"`` derives the bound from AQE's advisory
     partition size (:func:`osmgraft.operators.skew.auto_skew_bound`), so
     the rail is on unless explicitly disabled with ``None``.
-
-    The resolution is latitude-banded and the whole search — all bands,
-    antimeridian replicas, and polar caps — is ONE equi-join over
-    single-pass encodings of each side (see module docstring).
-
-    No pair can be emitted twice: a right row emits at most one cell per
-    (resolution, lon-replica) pair, the left disk(1) holds 7 cells of one
-    resolution spanning < 1 plane-degree, and lon replicas sit ~360
-    plane-degrees apart — so per left row at most one of a right row's
-    emitted cells can land in the disk, and no dedup pass is needed.
     """
-    pairs = _candidate_pairs(left, right, radius_m, left_cols, right_cols, probe_k, skew_max_rows)
+    pairs = _candidate_pairs(left, right, radius_m, left_cols, right_cols, skew_max_rows)
     return pairs.where(F.col("dist_m") <= radius_m)
 
 
@@ -313,7 +169,6 @@ def knn_join(
     k: int,
     radius_m: float,
     left_key: str,
-    probe_k: int = 3,
 ) -> DataFrame:
     """Top-k nearest right rows per left row within ``radius_m``.
 
@@ -321,7 +176,7 @@ def knn_join(
     ``radius_m`` are irrelevant by construction, so no iterative ring
     expansion is needed.
     """
-    cand = knn_candidates(left, right, radius_m, probe_k=probe_k)
+    cand = knn_candidates(left, right, radius_m)
     w = Window.partitionBy(left_key).orderBy(F.col("dist_m").asc())
     return cand.withColumn("knn_rank", F.row_number().over(w)).where(F.col("knn_rank") <= k)
 
@@ -348,9 +203,7 @@ def _dedup_frames(
     # null for a null rank: such a label is neither a leader nor suppressed
     elected = slim.withColumn("_lead", F.col(rank_col) == F.min(rank_col).over(cell))
     leaders = elected.where(F.col("_lead")).drop("_lead")
-    probed = _candidate_pairs(
-        leaders, slim, radius_m, ("lat", "lon"), ("lat", "lon"), probe_k=3, skew_max_rows=skew_max_rows
-    )
+    probed = _candidate_pairs(leaders, slim, radius_m, ("lat", "lon"), ("lat", "lon"), skew_max_rows)
     beaten = probed.where(
         (F.col("dist_m") <= radius_m)
         & (F.col(f"{rank_col}_r") < F.col(rank_col))
@@ -392,11 +245,11 @@ def dedup_labels(
       never suppresses.
     - **Leader probe.** Only leaders can survive. Each is decided exactly by
       :func:`knn_candidates` (leaders x all labels) with the rule's
-      predicate; that join owns the band, antimeridian and polar-cap
-      handling. A label is met by at most the leaders of the election
-      cells within the probe's reach — a bounded number of cells for a
-      given radius, one leader each barring ties — so the tested pairs
-      grow linearly in the label count, whatever the density.
+      predicate; its chord grid has no seam at the poles or at lon +-180.
+      A label is met by at most the leaders of the election cells within
+      the probe's reach — a bounded number of cells for a given radius,
+      one leader each barring ties — so the tested pairs grow linearly in
+      the label count, whatever the density.
 
     The slim (id, rank, lat, lon) projection is localCheckpointed once:
     both join sides read it, and a nondeterministic upstream could

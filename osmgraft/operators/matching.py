@@ -50,8 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmgraft.functions.cells import hex_cell_udf, hex_neighbors_expr
-from osmgraft.operators.knn import DEG_M, res_for_radius
+from osmgraft.functions.cells import DEG_M, hex_cell_udf, hex_neighbors_expr, res_for_radius
 from osmgraft.operators.snap import _seg_cells_udf, point_segment_proj
 
 _SCALE = 1_000_000_000.0  # fixed-point: 1e-9 cost units

@@ -6,10 +6,9 @@ relates nodes to way geometry spatially). Real pipelines need it for
 snapping GPS traces / POI coordinates onto the road network — the
 candidate stage of every map-matcher.
 
-Scale shape (mirrors the kNN join, operators/knn.py, with a line-covered
-build side):
+Scale shape (a cell equi-join with a line-covered build side):
 
-- one shared hex resolution from :func:`knn.res_for_radius` (finest res
+- one shared hex resolution from :func:`cells.res_for_radius` (finest res
   whose disk(``probe_k``) containment guarantee covers ``radius_m`` out
   to ``|lat| <= acos(min_cos_lat)``);
 - segments are covered by the cells they pass through: samples every
@@ -35,8 +34,8 @@ segment's covering — the pair survives to the exact test.
 
 Limitations (documented, not silent): latitudes beyond
 acos(min_cos_lat) and segments crossing the antimeridian are outside
-the guarantee — the latitude-banding + lon±360-replica machinery of the
-kNN join extends here verbatim if a deployment needs either.
+the guarantee. The kNN join's 3-D chord grid (operators/knn.py) has
+neither seam, but no segment covering on it exists yet.
 """
 
 from __future__ import annotations
@@ -48,8 +47,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osmgraft.functions.cells import hex_cell, hex_cell_udf, hex_edge_deg, hex_neighbors_expr
-from osmgraft.operators.knn import DEG_M, res_for_radius
+from osmgraft.functions.cells import (
+    DEG_M,
+    hex_cell,
+    hex_cell_udf,
+    hex_edge_deg,
+    hex_neighbors_expr,
+    res_for_radius,
+)
 from osmgraft.operators.pip import _DISK1
 
 

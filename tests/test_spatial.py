@@ -522,6 +522,73 @@ def test_election_cell_pairs_within_radius():
         assert d.max() > 0.99 * radius  # the corners are reached
 
 
+def test_chord_cell_pairs_within_block():
+    """Any two points within r key into chord-grid cells at most one apart
+    on every axis, by the engine's haversine constants: pairs at 0.9r to r,
+    at random places, at the poles and at lon +-180, for radii from 1 m to
+    above half the circumference. A radius that is not positive and finite
+    raises."""
+    from osmgraft.operators.knn import EARTH_RADIUS_M, chord_side_m
+
+    rng = np.random.default_rng(43)
+    big_r = EARTH_RADIUS_M
+
+    def unit(lat, lon):
+        phi, lmb = np.radians(lat), np.radians(lon)
+        return np.stack([np.cos(phi) * np.cos(lmb), np.cos(phi) * np.sin(lmb), np.sin(phi)])
+
+    for radius in (1.0, 2000.0, 200_000.0, 3.0e7):
+        side = chord_side_m(radius)
+        reach = min(radius, math.pi * big_r)
+        n = 40_000
+        lat1 = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, n)))
+        lon1 = rng.uniform(-180.0, 180.0, n)
+        k = n // 8  # poles, near-poles and the antimeridian
+        lat1[:k] = rng.choice([90.0, -90.0, 89.9999, -89.9999], k)
+        lon1[k : 2 * k] = rng.choice([180.0, -180.0, 179.9999, -179.9999], k)
+        delta = rng.uniform(0.9, 1.0, n) * reach / big_r
+        theta = rng.uniform(0.0, 2 * math.pi, n)
+        p1 = np.radians(lat1)
+        p2 = np.arcsin(
+            np.clip(np.sin(p1) * np.cos(delta) + np.cos(p1) * np.sin(delta) * np.cos(theta), -1, 1)
+        )
+        dl = np.arctan2(
+            np.sin(theta) * np.sin(delta) * np.cos(p1), np.cos(delta) - np.sin(p1) * np.sin(p2)
+        )
+        lat2 = np.degrees(p2)
+        lon2 = (lon1 + np.degrees(dl) + 180.0) % 360.0 - 180.0
+        a = (
+            np.sin((p2 - p1) / 2) ** 2
+            + np.cos(p1) * np.cos(p2) * np.sin(np.radians(lon2 - lon1) / 2) ** 2
+        )
+        within = 2 * big_r * np.arcsin(np.sqrt(np.minimum(a, 1.0))) <= radius
+        assert within.mean() > 0.9, radius
+        # the engine's key: floor(unit vector * (R / side)) per axis
+        u1 = unit(lat1[within], lon1[within]) * (big_r / side)
+        u2 = unit(lat2[within], lon2[within]) * (big_r / side)
+        assert np.abs(np.floor(u1) - np.floor(u2)).max() <= 1, radius
+        # the block is tight: some pair spans nearly a whole cell side
+        assert np.abs(u1 - u2).max() > 0.9, radius
+
+    for bad in (0.0, -5.0, float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            chord_side_m(bad)
+
+
+def test_knn_and_dedup_plans_hold_no_python_eval(spark):
+    """The chord-grid probe is Catalyst only: neither the knn_candidates
+    plan nor the dedup_labels plan holds a Python eval node."""
+    from osmgraft.operators.knn import dedup_labels, knn_candidates
+
+    df = spark.createDataFrame(
+        [(i, 45.0 + i * 1e-3, 7.0, i) for i in range(20)],
+        "osm_id long, lat double, lon double, rank long",
+    )
+    for out in (knn_candidates(df, df, 2000.0), dedup_labels(df, 2000.0)):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_dedup_hot_cell_bounded(spark):
     """Hot cluster: 12k labels inside one 2 km blob over a 1k background.
     The blob collapses to one survivor, and the leader probe tests a number
@@ -706,7 +773,7 @@ def test_knn_banded_adversarial_coordinates(spark):
     # Exact band-edge latitudes (digitize boundaries), the poles, and
     # lon exactly +-180: the banded encode + sentinel caps + seam replicas
     # must still match brute force with zero duplicates.
-    from osmgraft.operators.knn import EARTH_RADIUS_M, _BAND_LO, knn_candidates
+    from osmgraft.operators.knn import EARTH_RADIUS_M, knn_candidates
 
     rng = np.random.default_rng(23)
     spots = [
@@ -749,7 +816,6 @@ def test_knn_banded_adversarial_coordinates(spark):
     )
     assert sorted(collected) == want
     assert len(want) > 50
-    assert len(_BAND_LO) == 5  # fixture covers every band edge
 
 
 def test_knn_join_topk(spark):
@@ -1076,34 +1142,10 @@ def test_vectorize_runs_never_merges_across_values(spark):
     assert runs == [(1, 1), (1, 2), (2, 1)]
 
 
-def test_polar_sentinel_probes_single_cell(spark):
-    # A sentinel id plus a disk(1) axial offset lands on the OPPOSITE
-    # hemisphere's sentinel ((q=1,r=0)+(-1,0) == (q=0,r=0)), which would
-    # brute-force-join the two polar caps against each other. Cap left rows
-    # must probe exactly their own sentinel cell; grid rows the 7-cell disk.
-    from osmgraft.operators.knn import _left_cand_expr, _left_cell_udf
-
-    df = spark.createDataFrame(
-        [(0, 89.0, 10.0), (1, -89.0, 10.0), (2, 10.0, 10.0)],
-        "pid long, lat double, lon double",
-    )
-    cells_df = df.withColumn("_cell", _left_cell_udf(2000.0)(F.col("lat"), F.col("lon")))
-    got = {
-        r["pid"]: r
-        for r in cells_df.select(
-            "pid", "_cell", F.array_sort(_left_cand_expr(F.col("_cell"))).alias("cand")
-        ).collect()
-    }
-    assert got[0]["cand"] == [got[0]["_cell"]]  # north cap: own sentinel only
-    assert got[1]["cand"] == [got[1]["_cell"]]  # south cap: own sentinel only
-    assert got[0]["_cell"] != got[1]["_cell"]   # hemispheres stay distinct
-    assert len(got[2]["cand"]) == 7             # grid row: full disk(1)
-
-
-def test_knn_probe_k_equivalence(spark):
-    # disk(k) probing at k-times-finer cells (the default k=3 scale path,
-    # commit d01bbc9) must emit EXACTLY the pair set of the conservative
-    # k=1 probe on data spanning band edges, the antimeridian, and a cap.
+def test_knn_matches_bruteforce_mixed_fixture(spark):
+    # random points plus a band edge, a polar cap, an equator cluster and
+    # the antimeridian: every ordered pair within r, self pairs included,
+    # with its distance, exactly once
     from osmgraft.operators.knn import knn_candidates
 
     rng = np.random.default_rng(23)
@@ -1122,17 +1164,15 @@ def test_knn_probe_k_equivalence(spark):
     lons = ((lons + 180.0) % 360.0) - 180.0
     rows = [(i, float(a), float(o)) for i, (a, o) in enumerate(zip(lats, lons))]
     df = spark.createDataFrame(rows, "pid long, lat double, lon double")
+    radius = 25_000.0
 
-    def pairs(k):
-        return sorted(
-            (r["pid"], r["pid_r"], round(r["dist_m"], 6))
-            for r in knn_candidates(df, df, 25_000.0, probe_k=k).collect()
-            if r["pid"] < r["pid_r"]
-        )
-
-    p1, p3 = pairs(1), pairs(3)
-    assert p1 == p3
-    assert len(p1) > 50
+    got = sorted(
+        (r["pid"], r["pid_r"], r["dist_m"]) for r in knn_candidates(df, df, radius).collect()
+    )
+    want = sorted((a[0], b[0], d) for a in rows for b in rows if (d := _hav_m(a, b)) <= radius)
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert all(abs(g[2] - w[2]) <= 1e-6 for g, w in zip(got, want))
+    assert sum(1 for g in got if g[0] < g[1]) > 50
 
 
 def test_tile_pyramid_matches_direct_per_level(spark):

@@ -135,7 +135,7 @@ def main() -> None:
     ]
     sections.append(("tile assignment — Catalyst only", p6, notes6))
 
-    # 7. banded kNN — ONE equi-join, no per-band plan branches, no IN-literal
+    # 7. chord-grid kNN — ONE equi-join on a Catalyst cell key, no IN-literal
     from osmgraft.operators.knn import knn_candidates
 
     pts_id = pts.withColumn("pid", F.monotonically_increasing_id())
@@ -149,8 +149,9 @@ def main() -> None:
         f"single equi-join (numbered operators): {n_joins7} join(s)",
         f"no cartesian/BNLJ: {'Cartesian' not in p7 and 'BroadcastNestedLoopJoin' not in p7}",
         f"haversine in codegen (ASIN/SIN in projection): {'ASIN' in p7 or 'asin' in p7.lower()}",
+        f"no Python operators: {'Python' not in p7}",
     ]
-    sections.append(("banded kNN candidates — one equi-join at per-row res", p7, notes7))
+    sections.append(("chord-grid kNN candidates — one equi-join on a 3-D cell key", p7, notes7))
 
     # default path (skew rail ON): the salted join stays an equi-join on
     # (cell, salt); the only additions are the broadcast hot-map joins
@@ -164,8 +165,9 @@ def main() -> None:
         # is still a hash equi-join, the property is "never nested-loop"
         f"salted main join still a hash equi-join (SMJ/SHJ/BHJ): "
         f"{bool(re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)', p7b))}",
+        f"no Python operators: {'Python' not in p7b}",
     ]
-    sections.append(("banded kNN candidates — auto skew rail active (default)", p7b, notes7b))
+    sections.append(("chord-grid kNN candidates — auto skew rail active (default)", p7b, notes7b))
 
     # 8. adaptive cell split — hot cells via broadcast join, never an IN-literal
     from osmgraft.operators.skew import adaptive_cell_split
@@ -875,7 +877,7 @@ def main() -> None:
         ("Viterbi map matching — one candidate equi-join + mover-batched decode", p46, notes46)
     )
 
-    # 47. DBSCAN — radius pairs via the banded kNN equi-join (checkpointed
+    # 47. DBSCAN — radius pairs via the chord-grid kNN equi-join (checkpointed
     # once for its three consumers), degree/border as same-key aggregates,
     # clusters via the log-round alternating-star CC. No cartesian, no
     # Python anywhere (pair kernel is Catalyst haversine).
