@@ -282,37 +282,6 @@ def _stage_png_oracle(n: int = 120) -> str:
     return _PNG_ORACLE_PATH
 
 
-def _stay_oracle_sql(rounded: bool = True) -> str:
-    """DuckDB replica of operators.trajectory.stay_points over the
-    deterministic synthetic trajectories of q_stay_points. ``rounded``
-    controls the centroid columns: the stay_points oracle compares them
-    rounded; od_flows composes on the raw centroids."""
-    cent = (
-        "round(avg(lat), 4) as lat, round(avg(lon), 4) as lon"
-        if rounded
-        else "avg(lat) as lat, avg(lon) as lon"
-    )
-    return (
-        "with fx as (select user_id, event_id, "
-        "date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts)) as ts_s, "
-        "cast(user_id % 120 as double)/2.0 + value % 0.01 as lat, "
-        "cast(user_id*37 % 360 as double) - 180.0 + value % 0.01 as lon from events), "
-        "st as (select *, lag(lat) over w as la1, lag(lon) over w as lo1 from fx "
-        "window w as (partition by user_id order by ts_s asc, event_id asc)), "
-        "br as (select *, case when la1 is null or "
-        "2*6371008.8*asin(sqrt(pow(sin(radians(lat-la1)/2),2) + "
-        "cos(radians(la1))*cos(radians(lat))*pow(sin(radians(lon-lo1)/2),2))) > 1500.0 "
-        "then 1 else 0 end as b from st), "
-        "run as (select *, sum(b) over (partition by user_id "
-        "order by ts_s asc, event_id asc rows unbounded preceding) as stay_seq from br), "
-        "agg as (select user_id, cast(stay_seq as bigint) as stay_seq, "
-        "count(*) as n_fixes, min(ts_s) as t_start, max(ts_s) as t_end, "
-        f"cast(max(ts_s) - min(ts_s) as bigint) as dwell_s, {cent} "
-        "from run group by 1, 2) "
-        "select * from agg where dwell_s >= 600 and n_fixes >= 3"
-    )
-
-
 def _s2_compact_oracle_sql(level_from: int = 13, level_to: int = 10) -> str:
     """DuckDB replica of functions.cells.compact_cells over the 4-children
     expansion of the distinct level-12 cells (see q_s2_compact): per level
@@ -515,42 +484,6 @@ def _poly_overlap_tris_sql() -> str:
     )
 
 
-def _snap_oracle_sql() -> str:
-    """Brute-force SQL replay of the snap join: the operator's exact
-    point-to-segment distance (same parenthesization, same three-case
-    endpoint/endpoint/perpendicular branch, same cos(lat)
-    equirectangular scaling), nearest per point via (dist2, sid)
-    ordering, with the radius and meters-per-degree constants embedded as
-    the driver-side Python doubles the Spark plan uses."""
-    from osmgraft.operators.knn import DEG_M
-
-    radius_deg2 = (250_000.0 / DEG_M) ** 2
-    seg = (
-        "select cast(s_suppkey as bigint) as sid, "
-        "(s_suppkey % 110) * 0.5 - 27.123 as y1, "
-        "(s_suppkey * 53 % 340) - 170.456 as x1, "
-        "(s_suppkey % 110) * 0.5 - 27.123 + ((s_suppkey % 7) - 3) * 0.8 + 0.123 as y2, "
-        "(s_suppkey * 53 % 340) - 170.456 + ((s_suppkey % 11) - 5) * 0.6 + 0.234 as x2 "
-        "from supplier"
-    )
-    return (
-        f"with p as ({_PTS_SQL}), s as ({seg}), "
-        "c as (select pid, sid, "
-        "(x1 - lon) * cos(radians(lat)) as xa, y1 - lat as ya, "
-        "(x2 - lon) * cos(radians(lat)) as xb, y2 - lat as yb from p, s), "
-        "d as (select pid, sid, xa, ya, xb, yb, xb - xa as dx, yb - ya as dy from c), "
-        "e as (select pid, sid, xa, ya, xb, yb, dx, dy, "
-        "dx*dx + dy*dy as len2, -(xa*dx + ya*dy) as u from d), "
-        "g as (select pid, sid, case "
-        "when u <= 0 then xa*xa + ya*ya "
-        "when u >= len2 then xb*xb + yb*yb "
-        "else greatest(0.0, xa*xa + ya*ya - u*u/len2) end as d2 from e) "
-        f"select pid, sid, sqrt(d2) * {DEG_M!r} as dist_m from g "
-        f"where d2 <= {radius_deg2!r} "
-        "qualify row_number() over (partition by pid order by d2, sid) = 1"
-    )
-
-
 def _label_pipeline_oracle_sql() -> str:
     """DuckDB replica of the FULL flagship pipeline over the staged synth
     corpus (see osmgraft/plans/sql_oracle.py for the derivation notes)."""
@@ -604,165 +537,6 @@ keyed as (
 )
 select min(doc_id) as doc_id, count(*) as n_dupes from keyed group by k
 """
-
-
-# --- map matching: deterministic trajectories along parallel road bundles ---
-_MM_RADIUS_M = 10_000.0
-_MM_SIGMA_M = 1_000.0
-_MM_BETA_M = 1_000.0
-_MM_CAND_K = 3
-
-
-def _match_inputs(spark: SparkSession, sf_dir: str, n_rows: int = 60, n_bundles: int = 10):
-    """(fixes, segments) for the map-matching queries: ``n_bundles`` road
-    bundles (supplier 1..n_bundles, each with 8 parallel offset segments)
-    and ``n_rows // 6`` movers (customer 1..n_rows -> 6 fixes each)
-    walking bundle ``u % n_bundles + 1`` near its j=3 line with
-    deterministic jitter. At the defaults every arithmetic step mirrors
-    the oracle SQL expression-for-expression (same association order) so
-    the fix/segment doubles are bit-identical across engines; larger
-    sizes feed the bench."""
-    n_users = n_rows // 6
-    s = _read(spark, sf_dir, "supplier").where(F.col("s_suppkey").between(1, n_bundles))
-    k = F.col("s_suppkey").cast("long")
-    base = s.select(
-        k.alias("k"),
-        ((k % 110).cast("double") * 0.5 - 27.123).alias("by1"),
-        ((k * 53 % 340).cast("double") - 170.456).alias("bx1"),
-        (((k % 7).cast("double") - 3) * 0.8 + 0.123).alias("dy"),
-        (((k % 11).cast("double") - 5) * 0.6 + 0.234).alias("dx"),
-    )
-    segs = (
-        base.withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(7))))
-        .withColumn("lat1", F.col("by1") + F.col("j") * 0.015)
-        .withColumn("lon1", F.col("bx1") + F.col("j") * 0.011)
-        .select(
-            (F.col("k") * 8 + F.col("j")).alias("sid"),
-            "lat1",
-            "lon1",
-            (F.col("lat1") + F.col("dy")).alias("lat2"),
-            (F.col("lon1") + F.col("dx")).alias("lon2"),
-        )
-    )
-    c = _read(spark, sf_dir, "customer").where(F.col("c_custkey").between(1, n_rows))
-    x = (F.col("c_custkey").cast("long") - 1).alias("x")
-    fx = c.select(
-        F.col("c_custkey").cast("long").alias("fid"),
-        (x % n_users).alias("user_id"),
-        F.floor(x / n_users).cast("long").alias("t"),
-    )
-    fr = ((F.col("t") + 1).cast("double") / 7.0)
-    jit_la = ((F.col("fid") - 1) * 13 % 9 - 4).cast("double") * 0.004
-    jit_lo = ((F.col("fid") - 1) * 17 % 7 - 3).cast("double") * 0.005
-    fixes = (
-        fx.join(base, fx["user_id"] % n_bundles + 1 == base["k"])
-        .select(
-            "fid",
-            "user_id",
-            (F.col("t") * 60).alias("ts_s"),
-            (F.col("by1") + 0.045 + fr * F.col("dy") + jit_la).alias("lat"),
-            (F.col("bx1") + 0.033 + fr * F.col("dx") + jit_lo).alias("lon"),
-        )
-    )
-    return fixes, segs
-
-
-def _match_sql_ctes() -> str:
-    """Shared oracle CTE chain: segments, fixes, exact candidate distance
-    (the snap join's three-case form), snapped point, fixed-point emission,
-    per-fix top-k — replicating _match_inputs + operators/matching.py
-    term-for-term."""
-    from osmgraft.operators.knn import DEG_M
-
-    radius_deg2 = (_MM_RADIUS_M / DEG_M) ** 2
-    sig2 = (_MM_SIGMA_M / DEG_M) ** 2
-    return (
-        # every fractional literal carries e0 (double), matching Spark's
-        # double-by-double evaluation — bare literals are DECIMAL in DuckDB
-        # and an exact-decimal chain diverges from IEEE in the last ulp
-        "s0 as (select cast(s_suppkey as bigint) as k, "
-        "(s_suppkey % 110) * 0.5e0 - 27.123e0 as by1, "
-        "(s_suppkey * 53 % 340) - 170.456e0 as bx1, "
-        "((s_suppkey % 7) - 3) * 0.8e0 + 0.123e0 as dy, "
-        "((s_suppkey % 11) - 5) * 0.6e0 + 0.234e0 as dx "
-        "from supplier where s_suppkey between 1 and 10), "
-        "segs as (select k*8 + j as sid, by1 + j*0.015e0 as y1, bx1 + j*0.011e0 as x1, "
-        "by1 + j*0.015e0 + dy as y2, bx1 + j*0.011e0 + dx as x2 "
-        "from s0 cross join (select unnest([0,1,2,3,4,5,6,7]) as j)), "
-        "fx0 as (select cast(c_custkey as bigint) as fid, cast(c_custkey as bigint) - 1 as x "
-        "from customer where c_custkey between 1 and 60), "
-        "fx1 as (select fid, x % 10 as user_id, cast(floor(x / 10) as bigint) as t from fx0), "
-        "fx as (select f.fid, f.user_id, f.t * 60 as ts_s, "
-        "s.by1 + 0.045e0 + (f.t + 1) / 7.0e0 * s.dy + ((f.fid - 1)*13 % 9 - 4) * 0.004e0 as lat, "
-        "s.bx1 + 0.033e0 + (f.t + 1) / 7.0e0 * s.dx + ((f.fid - 1)*17 % 7 - 3) * 0.005e0 as lon "
-        "from fx1 f join s0 s on s.k = f.user_id % 10 + 1), "
-        "c0 as (select f.user_id, f.fid, f.ts_s, f.lat, f.lon, g.sid, "
-        "(g.x1 - f.lon) * cos(radians(f.lat)) as xa, g.y1 - f.lat as ya, "
-        "(g.x2 - f.lon) * cos(radians(f.lat)) as xb, g.y2 - f.lat as yb, "
-        "g.y1, g.x1, g.y2, g.x2 from fx f, segs g), "
-        "c1 as (select *, xb - xa as ddx, yb - ya as ddy from c0), "
-        "c2 as (select *, ddx*ddx + ddy*ddy as len2, -(xa*ddx + ya*ddy) as u from c1), "
-        "c3 as (select *, case when u <= 0 then xa*xa + ya*ya "
-        "when u >= len2 then xb*xb + yb*yb "
-        "else greatest(0.0, xa*xa + ya*ya - u*u/len2) end as d2, "
-        "case when u <= 0 then 0.0 when u >= len2 then 1.0 else u / len2 end as tt from c2), "
-        "cand as (select user_id, fid, ts_s, lat, lon, sid, "
-        "y1 + tt*(y2 - y1) as sy, x1 + tt*(x2 - x1) as sx, "
-        "cos(radians(lat)) as cl, d2, "
-        f"cast(floor(d2 / {sig2!r} * 1000000000.0 + 0.5) as bigint) as emit_i "
-        f"from c3 where d2 <= {radius_deg2!r}), "
-        "ck as (select * from (select cand.*, "
-        "row_number() over (partition by fid order by d2, sid) as rk from cand) "
-        f"where rk <= {_MM_CAND_K})"
-    )
-
-
-def _match_cand_oracle_sql() -> str:
-    from osmgraft.operators.knn import DEG_M
-
-    return (
-        f"with {_match_sql_ctes()} "
-        "select user_id, fid, ts_s, rk as cand_rank, sid, "
-        f"sqrt(d2) * {DEG_M!r} as dist_m, emit_i from ck"
-    )
-
-
-def _viterbi_oracle_sql() -> str:
-    """Path-enumeration replay of the Viterbi decode: every trellis path
-    with exact int64 fixed-point costs (identical double expressions ->
-    identical ints), global min by (cost, path-lexicographic) — equal to
-    the kernel's DP because integer sums are exact and lexicographic
-    tie-breaks extend over fixed-width suffixes (see
-    operators/matching.py module docstring)."""
-    from osmgraft.operators.knn import DEG_M
-
-    beta_deg = _MM_BETA_M / DEG_M
-    return (
-        f"with recursive {_match_sql_ctes()}, "
-        "fsteps as (select user_id, fid, ts_s, lat, lon, "
-        "row_number() over (partition by user_id order by ts_s, fid) as t "
-        "from (select distinct user_id, fid, ts_s, lat, lon from ck)), "
-        "cc as (select s.user_id, s.t, s.ts_s, s.lat as py, s.lon as px, "
-        "k.cl, k.sid, k.sy, k.sx, k.emit_i from ck k join fsteps s on s.fid = k.fid), "
-        "maxt as (select user_id, max(t) as mt from cc group by 1), "
-        "paths(user_id, t, path, cost, sy, sx, py, px, cl) as ("
-        "select user_id, t, [sid], emit_i, sy, sx, py, px, cl from cc where t = 1 "
-        "union all "
-        "select c.user_id, c.t, list_append(p.path, c.sid), "
-        "p.cost + cast(floor(abs("
-        "sqrt(((c.sx - p.sx) * p.cl)*((c.sx - p.sx) * p.cl) + (c.sy - p.sy)*(c.sy - p.sy)) - "
-        "sqrt(((c.px - p.px) * p.cl)*((c.px - p.px) * p.cl) + (c.py - p.py)*(c.py - p.py))"
-        f") / {beta_deg!r} * 1000000000.0 + 0.5) as bigint) + c.emit_i, "
-        "c.sy, c.sx, c.py, c.px, c.cl "
-        "from paths p join cc c on c.user_id = p.user_id and c.t = p.t + 1), "
-        "best as (select p.user_id, p.path from paths p "
-        "join maxt m on m.user_id = p.user_id and p.t = m.mt "
-        "qualify row_number() over (partition by p.user_id order by p.cost, p.path) = 1), "
-        "o as (select s.user_id, s.ts_s, b.path[s.t] as sid, s.t "
-        "from best b join fsteps s on s.user_id = b.user_id) "
-        "select o.user_id, o.ts_s, o.sid, c.sy as snap_lat, c.sx as snap_lon "
-        "from o join cc c on c.user_id = o.user_id and c.t = o.t and c.sid = o.sid"
-    )
 
 
 _GEOFENCE_SQL = (
@@ -1485,43 +1259,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pts = _pts(spark, sf)
         return pts.select("pid", s2_cell_udf(12)(F.col("lat"), F.col("lon")).alias("s2_cell"))
 
-    def _traj_stays(spark, sf):
-        # deterministic synthetic trajectories over the events table:
-        # per-user base location + value-derived jitter (~<=0.02 deg), so
-        # step distances straddle the 1500 m break threshold
-        from osmgraft.operators.sessions import _epoch_seconds
-        from osmgraft.operators.trajectory import stay_points
-
-        ev = _read(spark, sf, "events")
-        fixes = ev.select(
-            "user_id",
-            "event_id",
-            _epoch_seconds(ev, "ts").alias("ts_s"),
-            ((F.col("user_id") % 120).cast("double") / 2.0 + F.col("value") % 0.01).alias("lat"),
-            ((F.col("user_id") * 37 % 360).cast("double") - 180.0 + F.col("value") % 0.01).alias("lon"),
-        )
-        return stay_points(
-            fixes,
-            ts_col="ts_s",
-            order_tiebreak="event_id",
-            jump_m=1500.0,
-            min_duration_s=600,
-            min_pts=3,
-        )
-
-    def q_stay_points(spark, sf):
-        out = _traj_stays(spark, sf)
-        return out.select(
-            "user_id",
-            "stay_seq",
-            "n_fixes",
-            "t_start",
-            "t_end",
-            "dwell_s",
-            F.round("lat", 4).alias("lat"),
-            F.round("lon", 4).alias("lon"),
-        )
-
     def q_smooth_box(spark, sf):
         from osmgraft.operators.raster import rasterize, smooth_box
 
@@ -1547,34 +1284,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.round("y0", 4).alias("y0"),
             F.round("x1", 4).alias("x1"),
             F.round("y1", 4).alias("y1"),
-        )
-
-    def q_rog(spark, sf):
-        from osmgraft.operators.sessions import _epoch_seconds
-        from osmgraft.operators.trajectory import radius_of_gyration
-
-        ev = _read(spark, sf, "events")
-        fixes = ev.select(
-            "user_id",
-            ((F.col("user_id") % 120).cast("double") / 2.0 + F.col("value") % 0.01).alias("lat"),
-            ((F.col("user_id") * 37 % 360).cast("double") - 180.0 + F.col("value") % 0.01).alias("lon"),
-        )
-        out = radius_of_gyration(fixes)
-        return out.select(
-            "user_id", "n_fixes", F.round("rog_m", 4).alias("rog_m")
-        )
-
-    def q_od_flows(spark, sf):
-        from osmgraft.operators.trajectory import od_flows
-
-        out = od_flows(_traj_stays(spark, sf), z=7, start_col="t_start")
-        return out.select(
-            "from_x",
-            "from_y",
-            "to_x",
-            "to_y",
-            "n_trips",
-            F.round("avg_transit_s", 4).alias("avg_transit_s"),
         )
 
     def q_s2_compact(spark, sf):
@@ -1821,17 +1530,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return hll_count_distinct(_hll_vals(spark, sf), "w", p=10)
 
-    # --- graph: fixed-iteration PageRank over a derived link graph ---------------
-    def q_pagerank(spark, sf):
-        from osmgraft.operators.graph import pagerank
-
-        d = _read(spark, sf, "documents").where(F.col("doc_id") < 5000)
-        edges = d.select(
-            (F.col("doc_id") % 500).alias("src"),
-            ((F.col("doc_id") * 13 + 7) % 500).alias("dst"),
-        )
-        return pagerank(edges, iterations=3)
-
     # --- curation: context-window chunking ---------------------------------------
     def q_chunk_docs(spark, sf):
         from osmgraft.operators.curation import chunk_docs
@@ -2052,41 +1750,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return zonal_stats(pts, polys, "val", strategy="broadcast")
 
-    # --- temporal: as-of join of events to a sparse snapshot stream ----------------
-    def q_asof_join(spark, sf):
-        from osmgraft.operators.temporal import asof_join
-
-        ev = _read(spark, sf, "events")
-        left = ev.select("event_id", "user_id", "ts", "value")
-        # snapshot stream: every 7th event, aggregated to unique (user, ts)
-        # (the operator's documented precondition on the right side)
-        snap = (
-            ev.where(F.col("event_id") % 7 == 0)
-            .groupBy("user_id", "ts")
-            .agg(F.max("value").alias("snap"))
-        )
-        return asof_join(left, snap, key="user_id")
-
-    # --- temporal: point-in-interval join (bucketized, long rail broadcast) --------
-    def q_interval_join(spark, sf):
-        from osmgraft.operators.temporal import interval_join
-
-        ev = _read(spark, sf, "events")
-        pts = ev.select("event_id", "user_id", "ts")
-        # interval stream: every 97th event opens a window of 0..98 hours,
-        # so both rails run — spans up to 16 buckets explode, longer ones
-        # take the broadcast theta rail
-        iv = ev.where(F.col("event_id") % 97 == 0).select(
-            F.col("event_id").alias("iv_id"),
-            "user_id",
-            F.col("ts").alias("start_ts"),
-            F.expr(
-                "ts + make_interval(0, 0, 0, 0, cast((event_id % 50) * 2 as int), 0, 0)"
-            ).alias("end_ts"),
-        )
-        out = interval_join(pts, iv, key="user_id", bucket_s=600.0, max_span_buckets=16)
-        return out.select("event_id", "user_id", "ts", "iv_id_iv")
-
     # --- overlay: polygon x polygon intersects join ---------------------------------
     def q_poly_overlap_rects(spark, sf):
         # nation rects (~8x12 deg) exceed max_cover_cells at res 5 and take
@@ -2140,28 +1803,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.array(rb, rb + _OVL_R_DX[0], rb + _OVL_R_DX[1]).alias("ring_lons"),
         )
         return poly_intersects_join(left, right, "lid", "rid", res=5, max_cover_cells=2048)
-
-    # --- snap: nearest-segment join (map-matching candidate stage) ------------------
-    def q_snap(spark, sf):
-        from osmgraft.operators.snap import snap_join
-
-        pts = _pts(spark, sf).select("pid", "lat", "lon")
-        s = _read(spark, sf, "supplier")
-        k = F.col("s_suppkey").cast("long")
-        y1 = (k % 110).cast("double") * 0.5 - 27.123
-        x1 = (k * 53 % 340).cast("double") - 170.456
-        y2 = y1 + ((k % 7).cast("double") - 3) * 0.8 + 0.123
-        x2 = x1 + ((k % 11).cast("double") - 5) * 0.6 + 0.234
-        segs = s.select(
-            k.alias("sid"),
-            y1.alias("lat1"),
-            x1.alias("lon1"),
-            y2.alias("lat2"),
-            x2.alias("lon2"),
-        )
-        # _pts latitudes stay within +-60, so min_cos_lat=0.45 (|lat| <=
-        # 63.2) keeps the disk guarantee while using res-2 cells
-        return snap_join(pts, segs, 250_000.0, min_cos_lat=0.45)
 
     # --- cdc: one-shuffle changelog fold into a snapshot -----------------------------
     def q_cdc(spark, sf):
@@ -2218,71 +1859,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pts = _pts(spark, sf)
         return box_query(pts, 10.0, 35.0, -20.0, 40.0)
 
-    # --- map matching: per-fix top-k snap candidates --------------------------------
-    def q_match_candidates(spark, sf):
-        from osmgraft.operators.matching import match_candidates
-
-        fixes, segs = _match_inputs(spark, sf)
-        out = match_candidates(
-            fixes, segs, _MM_RADIUS_M, _MM_SIGMA_M, cand_k=_MM_CAND_K
-        )
-        return out.select(
-            "user_id",
-            "fid",
-            "ts_s",
-            F.col("rank").alias("cand_rank"),
-            "sid",
-            "dist_m",
-            "emit_i",
-        )
-
-    # --- map matching: Viterbi decode over the candidate trellis --------------------
-    def q_viterbi(spark, sf):
-        from osmgraft.operators.matching import viterbi_match
-
-        fixes, segs = _match_inputs(spark, sf)
-        return viterbi_match(
-            fixes,
-            segs,
-            _MM_RADIUS_M,
-            sigma_m=_MM_SIGMA_M,
-            beta_m=_MM_BETA_M,
-            cand_k=_MM_CAND_K,
-        )
-
-    # --- graph: hop-bounded multi-source shortest paths -----------------------------
-    def q_sssp(spark, sf):
-        from osmgraft.operators.graph import sssp
-
-        d = _read(spark, sf, "documents").where(F.col("doc_id") < 5000)
-        # branching factor 4 (j-explode): every node gets 4 distinct
-        # out-edges so shortest paths genuinely merge at the min
-        edges = (
-            d.withColumn("j", F.explode(F.sequence(F.lit(0), F.lit(3))))
-            .select(
-                (F.col("doc_id") % 500).alias("src"),
-                ((F.col("doc_id") * 13 + F.col("j") * 97 + 7) % 500).alias("dst"),
-                ((F.col("doc_id") + F.col("j") * 31) % 97 + 1).cast("long").alias("w"),
-            )
-        )
-        srcs = d.where(F.col("doc_id") < 5).select(F.col("doc_id").alias("id"))
-        return sssp(edges, srcs, n_rounds=6)
-
-    # --- trajectory: fixed-interval linear resampling -------------------------------
-    def q_resample(spark, sf):
-        from osmgraft.operators.sessions import _epoch_seconds
-        from osmgraft.operators.trajectory import resample_track
-
-        ev = _read(spark, sf, "events")
-        fixes = ev.select(
-            "user_id",
-            "event_id",
-            _epoch_seconds(ev, "ts").alias("ts_s"),
-            ((F.col("user_id") % 120).cast("double") / 2.0 + F.col("value") % 0.01).alias("lat"),
-            ((F.col("user_id") * 37 % 360).cast("double") - 180.0 + F.col("value") % 0.01).alias("lon"),
-        )
-        return resample_track(fixes, 3600, order_tiebreak="event_id")
-
     # --- movement: geofence enter/exit events ---------------------------------------
     def q_geofence(spark, sf):
         from osmgraft.operators.geofence import geofence_events
@@ -2320,25 +1896,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("ring_lons"),
         )
         return geofence_events(fixes, polys, strategy="broadcast")
-
-    # --- trajectory: GPS spike removal ----------------------------------------------
-    def q_spike_filter(spark, sf):
-        from osmgraft.operators.sessions import _epoch_seconds
-        from osmgraft.operators.trajectory import spike_filter
-
-        ev = _read(spark, sf, "events")
-        fixes = ev.select(
-            "user_id",
-            "event_id",
-            _epoch_seconds(ev, "ts").alias("ts_s"),
-            (
-                (F.col("user_id") % 120).cast("double") / 2.0
-                + F.col("value") % 0.01
-                + F.when(F.col("event_id") % 17 == 0, 25.0).otherwise(0.0)
-            ).alias("lat"),
-            ((F.col("user_id") * 37 % 360).cast("double") - 180.0 + F.col("value") % 0.01).alias("lon"),
-        )
-        return spike_filter(fixes, max_speed_ms=30.0, order_tiebreak="event_id")
 
     # --- movement: geofence visits (dwell intervals) --------------------------------
     def q_dwell(spark, sf):
@@ -2407,7 +1964,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pip_triangles": q_pip_triangles,
         "poly_overlap_rects": q_poly_overlap_rects,
         "poly_overlap_tris": q_poly_overlap_tris,
-        "snap_points_ways": q_snap,
         "cdc_upsert": q_cdc,
         "scd2_intervals": q_scd2,
         "geohash_cells": q_geohash,
@@ -2446,20 +2002,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dedup_first": q_doc_dedup_first,
         "s2_cells": q_s2_cells,
         "s2_compact": q_s2_compact,
-        "stay_points": q_stay_points,
-        "match_candidates_topk": q_match_candidates,
-        "viterbi_match": q_viterbi,
         "dbscan_clusters": q_dbscan,
         "cluster_hulls": q_cluster_hulls,
-        "sssp_6hop": q_sssp,
-        "resample_track": q_resample,
         "geofence_events": q_geofence,
-        "spike_filter": q_spike_filter,
         "dwell_intervals": q_dwell,
-        "od_flows": q_od_flows,
         "smooth_box": q_smooth_box,
         "contour_segments": q_contours,
-        "radius_of_gyration": q_rog,
         "minhash_lsh_pairs": q_minhash_pairs,
         "ann_lsh_topk": q_ann_lsh,
         "ann_ivf_topk": q_ann_ivf,
@@ -2477,7 +2025,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": q_bm25_topk,
         "dup_spans": q_dup_spans,
         "chunk_docs": q_chunk_docs,
-        "pagerank_hosts": q_pagerank,
         "hll_registers": q_hll_registers,
         "hll_distinct_tokens": q_hll_estimate,
         "curation_pipeline": q_curation_pipeline,
@@ -2495,14 +2042,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ring_centroids": q_ring_centroids,
         "way_midpoints": q_way_midpoints,
         "zonal_stats_boxes": q_zonal_stats,
-        "asof_join_events": q_asof_join,
-        "interval_join_events": q_interval_join,
         "zorder_box_query": q_zorder_box,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    from osmgraft.operators.graph import pagerank_oracle_sql, sssp_oracle_sql
     from osmgraft.operators.curation import weighted_sample_oracle_sql
     from osmgraft.operators.geom import (
         polyline_length_oracle_sql,
@@ -2515,7 +2059,6 @@ def oracle_sql() -> dict[str, str]:
         quadkey_oracle_sql,
         zorder_oracle_sql,
     )
-    from osmgraft.operators.temporal import asof_oracle_sql
     from osmgraft.operators.sketch import (
         cms_oracle_sql,
         hist_quantiles_by_oracle_sql,
@@ -2669,7 +2212,6 @@ def oracle_sql() -> dict[str, str]:
             "and lo < ro + 12.1234 and ro < lo + 1.2345"
         ),
         "poly_overlap_tris": _poly_overlap_tris_sql(),
-        "snap_points_ways": _snap_oracle_sql(),
         # union-tag fold replay: snapshot enters at seq -1, latest change
         # per key wins, delete-latest keys drop
         "cdc_upsert": (
@@ -3067,30 +2609,8 @@ def oracle_sql() -> dict[str, str]:
             "select c as case_id, round(s.x0, 4) as x0, round(s.y0, 4) as y0, "
             "round(s.x1, 4) as x1, round(s.y1, 4) as y1 from seg"
         ),
-        "radius_of_gyration": (
-            "with fx as (select user_id, "
-            "cast(user_id % 120 as double)/2.0 + value % 0.01 as lat, "
-            "cast(user_id*37 % 360 as double) - 180.0 + value % 0.01 as lon from events), "
-            "cent as (select *, avg(lat) over w as clat, avg(lon) over w as clon from fx "
-            "window w as (partition by user_id)), "
-            "d as (select user_id, "
-            "2*6371008.8*asin(sqrt(pow(sin(radians(lat-clat)/2),2) + "
-            "cos(radians(clat))*cos(radians(lat))*pow(sin(radians(lon-clon)/2),2))) as dist from cent) "
-            "select user_id, count(*) as n_fixes, "
-            "round(sqrt(avg(dist*dist)), 4) as rog_m from d group by 1"
-        ),
-        "stay_points": _stay_oracle_sql(rounded=True),
-        "match_candidates_topk": _match_cand_oracle_sql(),
-        "viterbi_match": _viterbi_oracle_sql(),
         "dbscan_clusters": _dbscan_oracle_sql(hav),
         "cluster_hulls": _hull_oracle_sql(hav),
-        "sssp_6hop": sssp_oracle_sql(
-            "select doc_id % 500 as src, (doc_id * 13 + j * 97 + 7) % 500 as dst, "
-            "(doc_id + j * 31) % 97 + 1 as w from documents "
-            "cross join (select unnest([0,1,2,3]) as j) where doc_id < 5000",
-            "select doc_id as id from documents where doc_id < 5",
-            6,
-        ),
         # geofence: strict-box membership sets (== the even-odd PIP on axis
         # rects, proven by pip_rectangles), lag set-difference per mover
         "geofence_events": _GEOFENCE_SQL,
@@ -3103,77 +2623,6 @@ def oracle_sql() -> dict[str, str]:
             "select user_id, poly_id, ts_s as enter_s, "
             "cast(nxt as double) as exit_s, "
             "cast(nxt - ts_s as double) as dwell_s from dw where event = 'enter'"
-        ),
-        # spike filter: lag+lead legs with the engine's haversine, the
-        # same null / zero-dt / threshold case chain as the operator
-        "spike_filter": (
-            "with fx as (select user_id, event_id, "
-            "date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts)) as ts_s, "
-            "cast(user_id % 120 as double)/2.0 + value % 0.01 + "
-            "case when event_id % 17 = 0 then 25.0e0 else 0.0e0 end as lat, "
-            "cast(user_id*37 % 360 as double) - 180.0 + value % 0.01 as lon from events), "
-            "lg as (select *, lag(lat) over w as pla, lag(lon) over w as plo, "
-            "lag(ts_s) over w as pts, lead(lat) over w as nla, "
-            "lead(lon) over w as nlo, lead(ts_s) over w as nts from fx "
-            "window w as (partition by user_id order by ts_s asc, event_id asc)), "
-            "sp as (select *, "
-            "case when abs(pts - ts_s) = 0 then "
-            "2*6371008.8*asin(sqrt(pow(sin(radians(pla-lat)/2),2) + "
-            "cos(radians(lat))*cos(radians(pla))*pow(sin(radians(plo-lon)/2),2))) > 0 "
-            "else 2*6371008.8*asin(sqrt(pow(sin(radians(pla-lat)/2),2) + "
-            "cos(radians(lat))*cos(radians(pla))*pow(sin(radians(plo-lon)/2),2))) "
-            "/ cast(abs(pts - ts_s) as double) > 30.0 end as fin, "
-            "case when abs(nts - ts_s) = 0 then "
-            "2*6371008.8*asin(sqrt(pow(sin(radians(nla-lat)/2),2) + "
-            "cos(radians(lat))*cos(radians(nla))*pow(sin(radians(nlo-lon)/2),2))) > 0 "
-            "else 2*6371008.8*asin(sqrt(pow(sin(radians(nla-lat)/2),2) + "
-            "cos(radians(lat))*cos(radians(nla))*pow(sin(radians(nlo-lon)/2),2))) "
-            "/ cast(abs(nts - ts_s) as double) > 30.0 end as fout, "
-            "case when abs(nts - pts) = 0 then "
-            "2*6371008.8*asin(sqrt(pow(sin(radians(nla-pla)/2),2) + "
-            "cos(radians(pla))*cos(radians(nla))*pow(sin(radians(nlo-plo)/2),2))) > 0 "
-            "else 2*6371008.8*asin(sqrt(pow(sin(radians(nla-pla)/2),2) + "
-            "cos(radians(pla))*cos(radians(nla))*pow(sin(radians(nlo-plo)/2),2))) "
-            "/ cast(abs(nts - pts) as double) > 30.0 end as fbridge from lg) "
-            "select user_id, event_id, ts_s, lat, lon from sp "
-            "where not (pts is not null and nts is not null "
-            "and fin and fout and not fbridge)"
-        ),
-        # resample: lead pair + generate_series grid, interpolation spelled
-        # exactly like the Catalyst expression (int/int division -> double)
-        "resample_track": (
-            "with fx as (select user_id, event_id, "
-            "date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts)) as ts_s, "
-            "cast(user_id % 120 as double)/2.0 + value % 0.01 as lat, "
-            "cast(user_id*37 % 360 as double) - 180.0 + value % 0.01 as lon from events), "
-            "ld as (select *, lead(ts_s) over w as nts, lead(lat) over w as nla, "
-            "lead(lon) over w as nlo from fx "
-            "window w as (partition by user_id order by ts_s asc, event_id asc)), "
-            "ex as (select user_id, ts_s, lat, lon, nts, nla, nlo, "
-            "unnest(generate_series(cast(ceil(ts_s / 3600.0e0) as bigint) * 3600, "
-            "nts - 1, 3600)) as g from ld "
-            "where nts is not null and "
-            "cast(ceil(ts_s / 3600.0e0) as bigint) * 3600 <= nts - 1) "
-            "select user_id, g as ts_s, "
-            "lat + (g - ts_s) / (nts - ts_s) * (nla - lat) as lat, "
-            "lon + (g - ts_s) / (nts - ts_s) * (nlo - lon) as lon from ex"
-        ),
-        "od_flows": (
-            "with stays as (" + _stay_oracle_sql(rounded=False) + "), "
-            "legs as (select *, lead(lat) over w as nlat, lead(lon) over w as nlon, "
-            "lead(t_start) over w as nstart from stays "
-            "window w as (partition by user_id order by t_start asc)), "
-            "keyed as (select "
-            "least(cast(floor((lon+180.0)/360.0*128) as bigint), 127) as from_x, "
-            "cast(least(greatest(floor((1.0 - ln(tan(radians(least(greatest(lat, -85.05112878), 85.05112878))) "
-            "+ 1.0/cos(radians(least(greatest(lat, -85.05112878), 85.05112878))))/pi())/2.0*128), 0), 127) as bigint) as from_y, "
-            "least(cast(floor((nlon+180.0)/360.0*128) as bigint), 127) as to_x, "
-            "cast(least(greatest(floor((1.0 - ln(tan(radians(least(greatest(nlat, -85.05112878), 85.05112878))) "
-            "+ 1.0/cos(radians(least(greatest(nlat, -85.05112878), 85.05112878))))/pi())/2.0*128), 0), 127) as bigint) as to_y, "
-            "nstart - t_end as transit from legs where nlat is not null) "
-            "select from_x, from_y, to_x, to_y, count(*) as n_trips, "
-            "round(avg(transit), 4) as avg_transit_s "
-            "from keyed group by 1, 2, 3, 4"
         ),
         "minhash_lsh_pairs": (
             # exact token-jaccard pairs over the same derived corpus; the
@@ -3374,13 +2823,6 @@ def oracle_sql() -> dict[str, str]:
             f"from (select doc_id, unnest({tok}) as w from documents)",
             p=10,
         ),
-        # unrolled-CTE replica of the int64 fixed-point PageRank recurrence
-        # (osmgraft/operators/graph.py) — value-identical, not approximate
-        "pagerank_hosts": pagerank_oracle_sql(
-            "select doc_id % 500 as src, (doc_id * 13 + 7) % 500 as dst "
-            "from documents where doc_id < 5000",
-            iterations=3,
-        ),
         # chunk starts are multiples of the stride, so chunk_id = start // stride
         "chunk_docs": (
             f"with base as (select doc_id, {tok} as w from documents where doc_id < 500), "
@@ -3549,26 +2991,6 @@ def oracle_sql() -> dict[str, str]:
             "select poly_id, poly_name, count(val) as count_val, "
             "sum(val) as sum_val, avg(val) as mean_val "
             "from pz group by poly_id, poly_name"
-        ),
-        # DuckDB's NATIVE ASOF JOIN — an independent implementation of the
-        # same semantics, not a replica of the Spark plan
-        "asof_join_events": asof_oracle_sql(
-            "select event_id, user_id, ts, value from events",
-            "select user_id, ts, max(value) as snap from events "
-            "where event_id % 7 = 0 group by user_id, ts",
-            key="user_id",
-            left_cols=["event_id", "user_id", "ts", "value"],
-            right_payload=["ts", "snap"],
-        ),
-        # plain theta join IS the semantics; the engine's bucketized
-        # equi-join + broadcast long rail must reproduce it pair-for-pair
-        "interval_join_events": (
-            "with iv as (select event_id as iv_id, user_id, ts as start_ts, "
-            "ts + to_hours(cast((event_id % 50) * 2 as int)) as end_ts "
-            "from events where event_id % 97 = 0) "
-            "select p.event_id, p.user_id, p.ts, i.iv_id as iv_id_iv "
-            "from events p join iv i on p.user_id = i.user_id "
-            "and p.ts >= i.start_ts and p.ts <= i.end_ts"
         ),
         # the Morton cover is pruning-only: conjoined with the exact box
         # predicate the result equals the plain filter — which IS the oracle

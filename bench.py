@@ -325,11 +325,6 @@ def main() -> None:
         d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
         return dup_spans(d, n=5).count()
 
-    def q_asof():
-        from __spark_entry__ import queries
-
-        return queries()["asof_join_events"](spark, SF_DIR).count()
-
     def _entry(name):
         # the entry-registry queries are the exact code the correctness
         # oracle runs; timing them at SF_DIR makes the bench row and the
@@ -340,9 +335,6 @@ def main() -> None:
 
     def q_poly_overlap():
         return _entry("poly_overlap_tris")
-
-    def q_snap():
-        return _entry("snap_points_ways")
 
     def q_cdc():
         return _entry("cdc_upsert")
@@ -365,12 +357,6 @@ def main() -> None:
     def q_scd2():
         return _entry("scd2_intervals")
 
-    def q_stay():
-        return _entry("stay_points")
-
-    def q_od():
-        return _entry("od_flows")
-
     def q_smooth():
         return _entry("smooth_box")
 
@@ -385,26 +371,6 @@ def main() -> None:
 
     def q_geofence():
         return _entry("geofence_events")
-
-    def q_resample():
-        return _entry("resample_track")
-
-    def q_spike():
-        return _entry("spike_filter")
-
-    def q_sssp():
-        return _entry("sssp_6hop")
-
-    def q_viterbi():
-        # the oracled registry query pins a 60-fix trellis; the bench
-        # scales the SAME generator to 2000 movers x 6 fixes over 100
-        # road bundles (800 segments) so the row measures the candidate
-        # join + per-mover DP at real width
-        from __spark_entry__ import _MM_RADIUS_M, _MM_SIGMA_M, _match_inputs
-        from osmgraft.operators.matching import viterbi_match
-
-        fixes, segs = _match_inputs(spark, SF_DIR, n_rows=12_000, n_bundles=100)
-        return viterbi_match(fixes, segs, _MM_RADIUS_M, sigma_m=_MM_SIGMA_M).count()
 
     def q_tile_pyramid():
         from osmgraft.operators.tiles import tile_pyramid
@@ -458,9 +424,7 @@ def main() -> None:
         ("bm25_topk", q_bm25),
         ("dup_spans_5gram", q_dup_spans),
         ("tile_pyramid_z12_6", q_tile_pyramid),
-        ("asof_join_events", q_asof),
         ("poly_overlap_tris", q_poly_overlap),
-        ("snap_points_ways", q_snap),
         ("cdc_upsert", q_cdc),
         ("weighted_sample_docs", q_weighted_sample),
         ("hist_quantiles_by_lang", q_hist_quantiles_by),
@@ -468,17 +432,11 @@ def main() -> None:
         ("idw_surface", q_idw),
         ("vectorize_runs", q_vec_runs),
         ("scd2_intervals", q_scd2),
-        ("stay_points", q_stay),
-        ("od_flows", q_od),
         ("smooth_box", q_smooth),
         ("contour_segments", q_contours),
         ("s2_compact", q_s2c),
         ("dbscan_clusters", q_dbscan),
-        ("viterbi_match_12k", q_viterbi),
         ("geofence_events", q_geofence),
-        ("resample_track", q_resample),
-        ("spike_filter", q_spike),
-        ("sssp_6hop", q_sssp),
         ("wav_decode_12k", q_wav_codec),
         ("png_decode_12k", q_png_codec),
     ]

@@ -251,12 +251,10 @@ def legacy_ball_radius(label: str) -> float:
 
 
 def _replace_first_expr(c: Column, pat: str) -> Column:
-    """Replace the FIRST occurrence of 2-char ``pat`` with '%'."""
-    p = F.instr(c, pat)
-    return F.when(
-        p > 0,
-        F.concat(F.substring(c, F.lit(1), p - 1), F.lit("%"), F.substring(c, p + 2, F.length(c))),
-    ).otherwise(c)
+    """Replace the FIRST occurrence of ``pat`` (no regex metacharacters)
+    with '%'. One anchored regex refers to ``c`` once, so nesting this
+    call does not multiply the expression tree."""
+    return F.regexp_replace(c, "(?s)^(.*?)" + pat, "$1%")
 
 
 def legacy_split_expr(label, delims: str) -> Column:

@@ -4,20 +4,19 @@ insert/update/delete changes into a base snapshot in ONE shuffle.
 Engine extension (north_rule); absent from the reference (a batch
 importer has no notion of updates). At 10^12-document scale the input
 Iceberg table is maintained by exactly this operation — nightly
-snapshot + CDC deltas — and the naive formulations fail the same way
-they do for the as-of join:
+snapshot + CDC deltas — and the naive formulations fail:
 
 - MERGE INTO per delta batch -> one full-table rewrite per batch;
 - join snapshot x changelog -> one shuffle per side PLUS per-key
   latest-change resolution as a second shuffle.
 
-The scale-correct shape is the union-tag fold (same family as the as-of
-join, operators/temporal.py): snapshot rows enter the union as sequence
--1, changelog rows carry their own sequence, ONE hash shuffle on the
-key, and ``max(struct(seq, op, payload...))`` per key picks the final
-state — an algebraic aggregate, so map-side partial aggregation applies
-and the reduce side sees one pre-folded row per (map partition, key).
-Keys whose latest operation is a delete drop at the end.
+The scale-correct shape is the union-tag fold: snapshot rows enter the
+union as sequence -1, changelog rows carry their own sequence, ONE hash
+shuffle on the key, and ``max(struct(seq, op, payload...))`` per key
+picks the final state — an algebraic aggregate, so map-side partial
+aggregation applies and the reduce side sees one pre-folded row per
+(map partition, key). Keys whose latest operation is a delete drop at
+the end.
 
 Contracts: one snapshot row per key; changelog sequences are unique per
 key and non-negative (the snapshot's -1 sorts below all of them), so
@@ -98,8 +97,8 @@ def scd2_intervals(
     merge into one interval, so replayed or no-op updates don't mint
     versions; a delete closes the open interval without emitting one.
     ``valid_to`` is the next version's ``valid_from`` (half-open
-    intervals, exactly the shape interval_join consumes); open intervals
-    have ``valid_to`` NULL and ``is_current`` true.
+    intervals); open intervals have ``valid_to`` NULL and ``is_current``
+    true.
 
     Plan: ONE hash shuffle on the key. The change-mark lag, the
     interval lead, and the final filters all share the same window

@@ -133,9 +133,7 @@ def convex_hulls(
     as the O(n^2 * n) hull-edge test per group, feasible at oracle scale).
     One hash shuffle on the group key; each group decodes in one task —
     the semantic minimum, and hull inputs are cluster-sized, not
-    corpus-sized. The mover-batched mapInPandas rail (see
-    operators/matching.py) applies verbatim if groups ever become tiny
-    and numerous.
+    corpus-sized.
     """
     import pandas as pd
 

@@ -17,7 +17,7 @@ polygon set (sorted for determinism), ONE mover window computing the
 set difference against the lagged set, then a map-side explode of
 enters/exits. Movers partition the window; a mover's history sorts in
 one task (the semantic minimum for ordered transition detection — same
-note as sessionize/stay_points). The set per fix is bounded by polygon
+note as sessionize). The set per fix is bounded by polygon
 overlap depth, not polygon count.
 
 Determinism: collect_set order is pinned by sort_array, ties in the fix

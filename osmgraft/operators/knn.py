@@ -37,8 +37,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# res_for_radius (the hex probe size of snap/matching) is re-exported
-# because perfbench/workloads.py imports it from here
+# res_for_radius is re-exported only because perfbench/workloads.py
+# imports it from here
 from osmgraft.functions.cells import DEG_M, EARTH_RADIUS_M, res_for_radius  # noqa: F401
 
 _AXES = ("x", "y", "z")
@@ -258,6 +258,7 @@ def dedup_labels(
     ``prepass_min_rows`` is accepted for old callers and has no effect."""
     from osmgraft.operators.skew import auto_skew_bound
 
+    chord_side_m(radius_m)  # reject a bad radius before any job runs
     slim = labels.select(id_col, rank_col, "lat", "lon").localCheckpoint(eager=True)
     skew = None if slim.count() <= auto_skew_bound(slim.sparkSession) else "auto"
     suppressed = _dedup_frames(slim, radius_m, rank_col, id_col, skew)["suppressed"]

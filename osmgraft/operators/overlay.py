@@ -18,11 +18,10 @@ partitioned PIP join (operators/pip.py) but on BOTH sides:
 - polygons whose covering at that resolution would exceed
   ``max_cover_cells`` (continents, country outlines) instead take a
   **broadcast rail**: they are few by construction, so they broadcast
-  with (bbox + rings) and BNL-join the other side on strict bbox overlap
-  — the same oversize-escape design as the interval join's
-  ``max_span_buckets`` theta rail (operators/temporal.py). The three
-  paths (small x small via cells, big-left x all, big-right x small-left)
-  partition the pair space exactly, so their union needs no dedup.
+  with (bbox + rings) and BNL-join the other side on strict bbox overlap.
+  The three paths (small x small via cells, big-left x all, big-right x
+  small-left) partition the pair space exactly, so their union needs no
+  dedup.
 
 Candidate completeness: if two polygons intersect they share a point p;
 every cell-covered polygon's covering contains p's cell (the covering

@@ -765,3 +765,16 @@ def test_png_decode_meta_spark(spark):
     for r in staged.select("media_id", "w", "h").collect():
         v = feats[r["media_id"]]
         assert (v[0], v[1], v[2]) == (r["w"], r["h"], 1.0)
+
+
+def test_registry_and_oracles_share_keys():
+    """Every registry query has an oracle and every oracle a query: the
+    oracle checker iterates queries() only, so an oracle orphaned by a
+    deleted query would otherwise go unnoticed. Spark-free."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from __spark_entry__ import oracle_sql, queries
+
+    assert set(queries()) == set(oracle_sql())

@@ -648,6 +648,27 @@ def test_dedup_job_budget(spark):
     assert jobs == 11, jobs  # measured: 2 for the slim frame, 9 for the query
 
 
+def test_dedup_labels_rejects_bad_radius_before_any_job(spark):
+    """A radius that is not positive and finite raises ValueError before
+    dedup_labels runs a single Spark job (no slim checkpoint, no count)."""
+    from osmgraft.operators.knn import dedup_labels
+
+    df = spark.createDataFrame(
+        [(1, 45.0, 7.0, 1), (2, 45.001, 7.001, 2)],
+        "osm_id long, lat double, lon double, rank long",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_bad_radius", "dedup_bad_radius")
+    try:
+        for bad in (0.0, -1.0, math.nan, math.inf):
+            with pytest.raises(ValueError):
+                dedup_labels(df, bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup("dedup_bad_radius")) == []
+
+
 def test_skew_split_helpers_bound_hot_cells(spark):
     """hot_cell_map/salt_cells/replicate_cells: the hot cell's rows spread
     over ~ceil(n/bound) salt buckets, each bounded; cold cells untouched;

@@ -528,23 +528,6 @@ def main() -> None:
         ("tile pyramid — single corpus scan, cached per-level rollup", p26, notes26)
     )
 
-    # 27. as-of join — union-tag carry-forward: ONE shuffle of |L|+|R|,
-    # NO join node (the naive inequality join would be a per-key BNLJ)
-    q27 = entry_mod.queries()["asof_join_events"](spark, SF)
-    p27 = plan_of(q27)
-    notes27 = [
-        f"no join node of any kind: "
-        f"{all(j not in p27 for j in ('SortMergeJoin', 'BroadcastHashJoin', 'BroadcastNestedLoopJoin', 'Cartesian', 'ShuffledHashJoin'))}",
-        f"exactly one data exchange on the key (the window): "
-        f"{len(re.findall(r'Arguments: hashpartitioning[(]_k', p27)) == 1}",
-        f"pure Catalyst (no Python): {'Python' not in p27}",
-        f"scan pruned — event_type/props never read: "
-        f"{'event_type' not in p27 and 'props' not in p27}",
-    ]
-    sections.append(
-        ("as-of join — one union-tag shuffle, zero join nodes", p27, notes27)
-    )
-
     # 28. Morton box query — the exact box predicates reach the parquet
     # scan as PushedFilters; no shuffle, no Python
     q28 = entry_mod.queries()["zorder_box_query"](spark, SF)
@@ -557,22 +540,6 @@ def main() -> None:
     ]
     sections.append(
         ("Morton box query — pushed filters, zero shuffle", p28, notes28)
-    )
-
-    # 29. interval join — short intervals bucket-explode into an equi-join;
-    # the ONLY nested loop is the broadcast long-interval rail
-    q29 = entry_mod.queries()["interval_join_events"](spark, SF)
-    p29 = plan_of(q29)
-    notes29 = [
-        f"short rail is an equi-join: "
-        f"{bool(re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)', p29))}",
-        f"at most one BNLJ, and it is the broadcast long rail: "
-        f"{len(re.findall(r'BroadcastNestedLoopJoin', p29)) <= 1}",
-        f"no cartesian: {'CartesianProduct' not in p29}",
-        f"pure Catalyst (no Python): {'Python' not in p29}",
-    ]
-    sections.append(
-        ("interval join — bucketized equi-join + broadcast long rail", p29, notes29)
     )
 
     # 30. zonal stats — broadcast-strategy PIP join (bbox range condition
@@ -651,30 +618,6 @@ def main() -> None:
     ]
     sections.append(
         ("polygon-polygon intersects — cell equi-join + broadcast big rails", p33, notes33)
-    )
-
-    # 34. snap join — segments covered once (one Arrow pass), points probe
-    # disk(k) in pure Catalyst, ONE cell equi-join, and the nearest pick is
-    # an algebraic min(struct) with map-side partial aggregation — no
-    # pair-dedup exchange anywhere.
-    q34 = entry_mod.queries()["snap_points_ways"](spark, SF)
-    p34 = plan_of(q34)
-    _snap_join_ok = (
-        len(re.findall(r"[(]\d+[)] (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", p34))
-        == 1
-    )
-    notes34 = [
-        f"one cell equi-join node: {_snap_join_ok}",
-        f"nearest pick partially aggregated map-side: {'partial_min' in p34}",
-        f"exact distance + disk probe pure Catalyst — Python is exactly two "
-        f"narrow Arrow passes (segment covering, point cell-encode): "
-        f"{len(re.findall(_ARROW_OP_RE, p34, re.M)) == 2 and 'BatchEvalPython' not in p34}",
-        f"no pair-dedup exchange (min absorbs duplicate candidates): "
-        f"{'hashpartitioning(pid, sid' not in p34}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p34 and 'BroadcastNestedLoopJoin' not in p34}",
-    ]
-    sections.append(
-        ("snap join — one cell equi-join, min(struct) nearest, no pair dedup", p34, notes34)
     )
 
     # 35. CDC changelog apply — union-tag fold: ONE hash exchange total,
@@ -774,37 +717,6 @@ def main() -> None:
         ("S2 compaction — per-level window folds over persisted frames", p40, notes40)
     )
 
-    # 41. stay points — spatial sessionization: lag haversine break,
-    # running-sum numbering and the refined-key rollup share ONE hash
-    # exchange; pure Catalyst.
-    q41 = entry_mod.queries()["stay_points"](spark, SF)
-    p41 = plan_of(q41)
-    notes41 = [
-        f"exactly one wide exchange (mover key): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p41)) == 1}",
-        f"zero join nodes: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p41)}",
-        f"pure Catalyst (no Python): {'Python' not in p41}",
-    ]
-    sections.append(
-        ("stay points — one-shuffle spatial sessionization", p41, notes41)
-    )
-
-    # 42. OD flows — the leg lead rides the stay partitioning (window
-    # adds no exchange over the stay fold's); one more shuffle on the
-    # (from, to) cell pair with map-side partial counts.
-    q42 = entry_mod.queries()["od_flows"](spark, SF)
-    p42 = plan_of(q42)
-    notes42 = [
-        f"two wide exchanges total (mover fold + cell-pair agg): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p42)) == 2}",
-        f"cell-pair counts partially aggregated map-side: {'partial_count' in p42 or 'partial' in p42}",
-        f"zero join nodes: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p42)}",
-        f"pure Catalyst (no Python): {'Python' not in p42}",
-    ]
-    sections.append(("OD flows — lead rides the stay partitioning", p42, notes42))
-
     # 43. separable box smoothing — two 1-D scatters: 2(2r+1) rows/cell
     # instead of (2r+1)^2; each pass one exchange with map-side partials.
     q43 = entry_mod.queries()["smooth_box"](spark, SF)
@@ -819,21 +731,6 @@ def main() -> None:
     ]
     sections.append(
         ("separable box smoothing — 1-D scatter passes, linear fan-out", p43, notes43)
-    )
-
-    # 44. radius of gyration — unordered analytic centroid + same-key
-    # rollup: ONE exchange, no sort needed for the frameless window.
-    q44 = entry_mod.queries()["radius_of_gyration"](spark, SF)
-    p44 = plan_of(q44)
-    notes44 = [
-        f"exactly one wide exchange (mover key): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p44)) == 1}",
-        f"zero join nodes: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p44)}",
-        f"pure Catalyst (no Python): {'Python' not in p44}",
-    ]
-    sections.append(
-        ("radius of gyration — one-shuffle analytic centroid fold", p44, notes44)
     )
 
     # 45. marching-squares contours — corner scatter (fan-out 4) + ONE
@@ -853,30 +750,6 @@ def main() -> None:
         ("marching squares — corner scatter + one block pivot", p45, notes45)
     )
 
-    # 46. Viterbi map matching — candidate stage is ONE cell equi-join
-    # (segment covering explode x fix disk probe), emission/snap math in
-    # Catalyst; the decode is a single mapInPandas over mover-sorted
-    # partitions (no per-group Arrow roundtrips, no join after the
-    # candidates).
-    q46 = entry_mod.queries()["viterbi_match"](spark, SF)
-    p46 = plan_of(q46)
-    n_joins46 = len(
-        re.findall(r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", p46)
-    )
-    notes46 = [
-        f"no cartesian/BNLJ anywhere: "
-        f"{'Cartesian' not in p46 and 'BroadcastNestedLoopJoin' not in p46}",
-        # joins: 2 input-derivation joins (fixture) + 1 candidate cell join
-        f"equi-joins only, count {n_joins46} (<= 3)",
-        f"decode is mapInPandas (one python stage, no per-group FlatMapGroups): "
-        f"{'MapInPandas' in p46 and 'FlatMapGroupsInPandas' not in p46}",
-        f"no row-at-a-time Python (BatchEvalPython absent): "
-        f"{'BatchEvalPython' not in p46}",
-    ]
-    sections.append(
-        ("Viterbi map matching — one candidate equi-join + mover-batched decode", p46, notes46)
-    )
-
     # 47. DBSCAN — radius pairs via the chord-grid kNN equi-join (checkpointed
     # once for its three consumers), degree/border as same-key aggregates,
     # clusters via the log-round alternating-star CC. No cartesian, no
@@ -893,32 +766,6 @@ def main() -> None:
     sections.append(
         ("DBSCAN — checkpointed radius pairs + star-contracted components", p47, notes47)
     )
-
-    # 48. resample — ONE mover window exchange; the grid explode and the
-    # interpolation are map-side Catalyst (no joins, no Python).
-    q48 = entry_mod.queries()["resample_track"](spark, SF)
-    p48 = plan_of(q48)
-    notes48 = [
-        f"one wide exchange (the mover window): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p48)) == 1}",
-        f"zero join nodes: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p48)}",
-        f"grid explode map-side (Generate after the window, before any agg): "
-        f"{'Generate' in p48}",
-        f"pure Catalyst (no Python): {'Python' not in p48}",
-    ]
-    sections.append(("trajectory resampling — one window + map-side grid explode", p48, notes48))
-
-    # 49. spike filter — lag+lead legs share one mover sort; pure filter.
-    q49 = entry_mod.queries()["spike_filter"](spark, SF)
-    p49 = plan_of(q49)
-    notes49 = [
-        f"one wide exchange: {len(re.findall(r'Arguments: hashpartitioning', p49)) == 1}",
-        f"zero joins: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p49)}",
-        f"haversine legs in codegen (no Python): {'Python' not in p49}",
-    ]
-    sections.append(("GPS spike filter — one window, codegen haversine legs", p49, notes49))
 
     # 50. geofence — broadcast PIP + set groupBy + mover window; enters and
     # exits explode map-side from the set difference.
@@ -937,35 +784,6 @@ def main() -> None:
         f"set-difference explode present: {'Generate' in p50}",
     ]
     sections.append(("geofence events — broadcast PIP + lagged set difference", p50, notes50))
-
-    # 51. SSSP round plan — the operator checkpoints each round, so the
-    # final frame's plan is just the checkpoint scan (lineage one round
-    # deep — itself the property). Audit ONE round's shape inline: relax
-    # join + min agg, both keyed on the node id.
-    e51 = spark.createDataFrame(
-        [(i, (i * 7 + 1) % 40, (i % 9) + 1) for i in range(40)], "src long, dst long, w long"
-    )
-    d51 = spark.createDataFrame([(0,), (1,)], "id long").withColumn(
-        "dist", F.lit(0).cast("long")
-    )
-    relax51 = d51.join(e51, d51["id"] == e51["src"]).select(
-        F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist")
-    )
-    q51 = d51.unionByName(relax51).groupBy("id").agg(F.min("dist").alias("dist"))
-    p51 = plan_of(q51)
-    notes51 = [
-        f"no cartesian/BNLJ in the round: "
-        f"{'Cartesian' not in p51 and 'BroadcastNestedLoopJoin' not in p51}",
-        f"min agg partially aggregated map-side: {'partial_min' in p51}",
-        # 'Python' appears in the local-data scan's RDD name
-        # (applySchemaToPythonRDD) — check for Python EVAL operators only
-        f"pure Catalyst (no Python eval operators): "
-        f"{not re.search(r'(BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)', p51)}",
-        "final sssp() frame plans as a single checkpoint scan per round "
-        "(lineage stays O(1) deep across n_rounds — verified by the "
-        "operator's localCheckpoint call sites, graph.py)",
-    ]
-    sections.append(("SSSP round — co-partitioned relax join + map-side min", p51, notes51))
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
