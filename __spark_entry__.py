@@ -539,106 +539,6 @@ select min(doc_id) as doc_id, count(*) as n_dupes from keyed group by k
 """
 
 
-_GEOFENCE_SQL = (
-            "with fx as (select user_id, event_id as fid, "
-            "date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts)) as ts_s, "
-            "cast(user_id % 80 as double)/2.0 - 20.0 + (event_id % 37) * 0.45e0 as lat, "
-            "cast(user_id*29 % 300 as double) - 150.0 + (event_id % 23) * 0.8e0 as lon "
-            "from events), "
-            "boxes as (select cast(n_nationkey as bigint) as poly_id, "
-            "(n_nationkey % 9) * 9.0e0 - 40.5678e0 as la, "
-            "(n_nationkey * 29 % 300) - 150.5678e0 as lo from nation), "
-            "hit as (select f.user_id, f.fid, f.ts_s, b.poly_id from fx f join boxes b "
-            "on f.lat > b.la and f.lat < b.la + 8.1234e0 "
-            "and f.lon > b.lo and f.lon < b.lo + 12.1234e0), "
-            "pf as (select user_id, fid, ts_s, list_sort(list(distinct poly_id)) as cur "
-            "from hit group by 1, 2, 3), "
-            "base as (select f.user_id, f.fid, f.ts_s, "
-            "coalesce(p.cur, cast([] as bigint[])) as cur from fx f left join pf p "
-            "on p.user_id = f.user_id and p.fid = f.fid and p.ts_s = f.ts_s), "
-            "lg as (select user_id, ts_s, cur, "
-            "coalesce(lag(cur) over (partition by user_id order by ts_s asc, fid asc), "
-            "cast([] as bigint[])) as prv from base), "
-            "en as (select user_id, ts_s, "
-            "unnest(list_filter(cur, x -> not list_contains(prv, x))) as poly_id, "
-            "'enter' as event from lg), "
-            "ex as (select user_id, ts_s, "
-            "unnest(list_filter(prv, x -> not list_contains(cur, x))) as poly_id, "
-            "'exit' as event from lg) "
-            "select * from en union all select * from ex"
-        )
-
-
-_DBSCAN_EPS_M = 200_000.0
-_DBSCAN_MIN_PTS = 3
-
-
-def _hull_oracle_sql(hav: str) -> str:
-    """Hull-corner replay by the O(n^3) supporting-edge test per cluster:
-    a distinct-coordinate point v is a hull CORNER iff some other point b
-    has every remaining point strictly on one side of v->b, allowing
-    collinear points only BETWEEN v and b (collinear-beyond kills the
-    edge, which is exactly the strict-turn chain's corner set). Degenerate
-    clusters (<= 2 distinct coords) emit all their points. All cross/dot
-    arithmetic is exact on the query's dyadic lat grid + integral lons."""
-    return (
-        f"with lab as ({_dbscan_oracle_sql(hav)}), "
-        f"mem as (select l.pid, l.cluster, "
-        "floor(p2.lat * 64.0e0 + 0.5) / 64.0e0 as lat, p2.lon as lon "
-        f"from lab l join ({_PTS_SQL}) p2 on p2.pid = l.pid where l.cluster >= 0), "
-        "u as (select cluster, min(pid) as pid, lat, lon from mem "
-        "group by cluster, lat, lon), "
-        "sz as (select cluster, count(*) as n from u group by cluster), "
-        "small as (select u.cluster, u.pid, u.lat, u.lon from u "
-        "join sz on sz.cluster = u.cluster where sz.n <= 2), "
-        "cand as (select a.cluster, a.pid as vid, a.lat as vy, a.lon as vx, "
-        "b.lat as byy, b.lon as bxx from u a join u b on a.cluster = b.cluster "
-        "and (a.lat <> b.lat or a.lon <> b.lon)), "
-        "bad as (select distinct k.cluster, k.vid, k.byy, k.bxx "
-        "from cand k join u c on c.cluster = k.cluster "
-        "and (c.lat <> k.vy or c.lon <> k.vx) and (c.lat <> k.byy or c.lon <> k.bxx) "
-        "where not ( "
-        "(k.bxx - k.vx) * (c.lat - k.vy) - (k.byy - k.vy) * (c.lon - k.vx) > 0 "
-        "or ((k.bxx - k.vx) * (c.lat - k.vy) - (k.byy - k.vy) * (c.lon - k.vx) = 0 "
-        "and (c.lon - k.vx) * (k.bxx - k.vx) + (c.lat - k.vy) * (k.byy - k.vy) >= 0 "
-        "and (c.lon - k.vx) * (k.bxx - k.vx) + (c.lat - k.vy) * (k.byy - k.vy) <= "
-        "(k.bxx - k.vx) * (k.bxx - k.vx) + (k.byy - k.vy) * (k.byy - k.vy)))), "
-        "corner as (select distinct k.cluster, k.vid from cand k "
-        "left join bad d on d.cluster = k.cluster and d.vid = k.vid "
-        "and d.byy = k.byy and d.bxx = k.bxx where d.vid is null) "
-        "select c.cluster, c.vid as pid, u.lat, u.lon from corner c "
-        "join u on u.cluster = c.cluster and u.pid = c.vid "
-        "union all select cluster, pid, lat, lon from small"
-    )
-
-
-def _dbscan_oracle_sql(hav: str) -> str:
-    """Textbook-sequential-free DBSCAN replay: brute-force eps pairs with
-    the engine's haversine, core by neighbor count, clusters = recursive
-    min-reachable over the core-core graph, border = min core-neighbor
-    cluster (the deterministic pin, see operators/cluster.py)."""
-    return (
-        f"with recursive p as (select pid, lat, lon from ({_PTS_SQL})), "
-        "pr as (select a.pid as src, b.pid as dst from p a, p b "
-        f"where a.pid <> b.pid and {hav} <= {_DBSCAN_EPS_M!r}), "
-        "deg as (select p.pid as src, count(pr.dst) as d from p "
-        "left join pr on pr.src = p.pid group by 1), "
-        f"core as (select src as id from deg where d >= {_DBSCAN_MIN_PTS - 1}), "
-        "ce as (select pr.src, pr.dst from pr "
-        "join core x on x.id = pr.src join core y on y.id = pr.dst), "
-        "reach(id, r) as (select id, id from core union "
-        "select reach.id, ce.dst from reach join ce on ce.src = reach.r), "
-        "comp as (select id, min(r) as cluster from reach group by id), "
-        "border as (select pr.src as id, min(c.cluster) as cluster from pr "
-        "join comp c on c.id = pr.dst "
-        "where pr.src not in (select id from core) group by 1) "
-        "select p.pid, coalesce(co.cluster, bo.cluster, -1) as cluster, "
-        "case when co.id is not null then 'core' "
-        "when bo.id is not null then 'border' else 'noise' end as role "
-        "from p left join comp co on co.id = p.pid left join border bo on bo.id = p.pid"
-    )
-
-
 def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _read(spark, sf_dir, "customer")
     return c.select(
@@ -1165,12 +1065,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return ev.groupBy(
             F.col("user_id"), F.date_trunc("day", F.col("ts")).alias("day")
         ).agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
-
-    # --- gap-based sessionization (one shuffle: window + refined-key agg) ---------------
-    def q_sessionize_events(spark, sf):
-        from osmgraft.operators.sessions import session_stats
-
-        return session_stats(_read(spark, sf, "events"))
 
     # --- window top-k ------------------------------------------------------------------------
     def q_window_topk(spark, sf):
@@ -1804,41 +1698,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return poly_intersects_join(left, right, "lid", "rid", res=5, max_cover_cells=2048)
 
-    # --- cdc: one-shuffle changelog fold into a snapshot -----------------------------
-    def q_cdc(spark, sf):
-        from osmgraft.operators.cdc import apply_changelog
-
-        c = _read(spark, sf, "customer")
-        snap = c.select(
-            F.col("c_custkey").alias("id"),
-            F.col("c_acctbal").alias("bal"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
-        o = _read(spark, sf, "orders")
-        chg = o.select(
-            F.col("o_custkey").alias("id"),
-            F.col("o_totalprice").alias("bal"),
-            (F.col("o_orderkey") % 25).cast("long").alias("nat"),
-            F.col("o_orderkey").alias("seq"),
-            F.when(F.col("o_orderkey") % 10 == 0, "D").otherwise("U").alias("op"),
-        )
-        return apply_changelog(snap, chg, key="id")
-
-    def q_scd2(spark, sf):
-        from osmgraft.operators.cdc import scd2_intervals
-
-        o = _read(spark, sf, "orders")
-        chg = o.select(
-            F.col("o_custkey").alias("id"),
-            F.col("o_orderkey").alias("seq"),
-            F.when(F.col("o_orderkey") % 10 == 0, "D").otherwise("U").alias("op"),
-            F.col("o_orderstatus").alias("status"),
-            (F.col("o_orderkey") % 25).cast("long").alias("nat"),
-        )
-        out = scd2_intervals(chg, key="id", attrs=["status", "nat"])
-        # nullable bigint round-trips from DuckDB as float64; align kinds
-        return out.withColumn("valid_to", F.col("valid_to").cast("double"))
-
     # --- layout: geohash string key -------------------------------------------------
     def q_geohash(spark, sf):
         from osmgraft.operators.layout import geohash
@@ -1858,91 +1717,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         pts = _pts(spark, sf)
         return box_query(pts, 10.0, 35.0, -20.0, 40.0)
-
-    # --- movement: geofence enter/exit events ---------------------------------------
-    def q_geofence(spark, sf):
-        from osmgraft.operators.geofence import geofence_events
-        from osmgraft.operators.sessions import _epoch_seconds
-
-        ev = _read(spark, sf, "events")
-        fixes = ev.select(
-            "user_id",
-            F.col("event_id").alias("fid"),
-            _epoch_seconds(ev, "ts").alias("ts_s"),
-            (
-                (F.col("user_id") % 80).cast("double") / 2.0
-                - 20.0
-                + (F.col("event_id") % 37).cast("double") * 0.45
-            ).alias("lat"),
-            (
-                (F.col("user_id") * 29 % 300).cast("double")
-                - 150.0
-                + (F.col("event_id") % 23).cast("double") * 0.8
-            ).alias("lon"),
-        )
-        n = _read(spark, sf, "nation")
-        boxes = n.select(
-            F.col("n_nationkey").cast("long").alias("poly_id"),
-            ((F.col("n_nationkey") % 9).cast("double") * 9.0 - 40.5678).alias("_la"),
-            ((F.col("n_nationkey") * 29 % 300).cast("double") - 150.5678).alias("_lo"),
-        )
-        polys = boxes.select(
-            "poly_id",
-            F.array(
-                F.col("_la"), F.col("_la"), F.col("_la") + 8.1234, F.col("_la") + 8.1234
-            ).alias("ring_lats"),
-            F.array(
-                F.col("_lo"), F.col("_lo") + 12.1234, F.col("_lo") + 12.1234, F.col("_lo")
-            ).alias("ring_lons"),
-        )
-        return geofence_events(fixes, polys, strategy="broadcast")
-
-    # --- movement: geofence visits (dwell intervals) --------------------------------
-    def q_dwell(spark, sf):
-        from osmgraft.operators.geofence import dwell_intervals
-
-        out = dwell_intervals(q_geofence(spark, sf))
-        return out.select(
-            "user_id",
-            "poly_id",
-            "enter_s",
-            F.col("exit_s").cast("double").alias("exit_s"),
-            F.col("dwell_s").cast("double").alias("dwell_s"),
-        )
-
-    # --- cluster footprints: convex hull per DBSCAN cluster -------------------------
-    def q_cluster_hulls(spark, sf):
-        from osmgraft.operators.cluster import convex_hulls, dbscan
-
-        pts = _pts(spark, sf).select("pid", "lat", "lon")
-        lab = dbscan(pts, eps_m=_DBSCAN_EPS_M, min_pts=_DBSCAN_MIN_PTS)
-        # lats snap to a dyadic 1/64-deg grid: every cross product in the
-        # hull decisions is then EXACT in ieee doubles (lon is integral
-        # already), so the chain kernel and the oracle's edge test agree
-        # provably, not probabilistically
-        members = (
-            lab.where(F.col("cluster").isNotNull())
-            .select("pid", "cluster")
-            .join(pts, "pid")
-            .select(
-                "pid",
-                "cluster",
-                (F.floor(F.col("lat") * 64.0 + 0.5) / 64.0).alias("lat"),
-                "lon",
-            )
-        )
-        hull = convex_hulls(members)
-        return hull.select("cluster", "pid", "lat", "lon")
-
-    # --- density clustering: distributed DBSCAN -------------------------------------
-    def q_dbscan(spark, sf):
-        from osmgraft.operators.cluster import dbscan
-
-        pts = _pts(spark, sf).select("pid", "lat", "lon")
-        out = dbscan(pts, eps_m=_DBSCAN_EPS_M, min_pts=_DBSCAN_MIN_PTS)
-        return out.select(
-            "pid", F.coalesce(F.col("cluster"), F.lit(-1)).alias("cluster"), "role"
-        )
 
     return {
         "filter_scan": q_filter_scan,
@@ -1964,8 +1738,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pip_triangles": q_pip_triangles,
         "poly_overlap_rects": q_poly_overlap_rects,
         "poly_overlap_tris": q_poly_overlap_tris,
-        "cdc_upsert": q_cdc,
-        "scd2_intervals": q_scd2,
         "geohash_cells": q_geohash,
         "quadkeys": q_quadkeys,
         "rasterize_density": q_rasterize,
@@ -1991,7 +1763,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fingerprint": q_fingerprint,
         "ann_brute_topk": q_ann_brute,
         "events_daily": q_events_daily,
-        "sessionize_events": q_sessionize_events,
         "window_topk": q_window_topk,
         # engine-native, rows-only:
         "osm_label_pipeline": q_osm_labels,
@@ -2002,10 +1773,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dedup_first": q_doc_dedup_first,
         "s2_cells": q_s2_cells,
         "s2_compact": q_s2_compact,
-        "dbscan_clusters": q_dbscan,
-        "cluster_hulls": q_cluster_hulls,
-        "geofence_events": q_geofence,
-        "dwell_intervals": q_dwell,
         "smooth_box": q_smooth_box,
         "contour_segments": q_contours,
         "minhash_lsh_pairs": q_minhash_pairs,
@@ -2212,32 +1979,6 @@ def oracle_sql() -> dict[str, str]:
             "and lo < ro + 12.1234 and ro < lo + 1.2345"
         ),
         "poly_overlap_tris": _poly_overlap_tris_sql(),
-        # union-tag fold replay: snapshot enters at seq -1, latest change
-        # per key wins, delete-latest keys drop
-        "cdc_upsert": (
-            "with s as (select c_custkey as id, c_acctbal as bal, "
-            "cast(c_nationkey as bigint) as nat, cast(-1 as bigint) as _seq, 'U' as _op from customer), "
-            "c as (select o_custkey as id, o_totalprice as bal, "
-            "cast(o_orderkey % 25 as bigint) as nat, o_orderkey as _seq, "
-            "case when o_orderkey % 10 = 0 then 'D' else 'U' end as _op from orders), "
-            "u as (select * from s union all select * from c), "
-            "r as (select *, row_number() over (partition by id order by _seq desc) as rn from u) "
-            "select id, bal, nat from r where rn = 1 and _op <> 'D'"
-        ),
-        "scd2_intervals": (
-            "with chg as (select o_custkey as id, o_orderkey as seq, "
-            "case when o_orderkey % 10 = 0 then 'D' else 'U' end as op, "
-            "o_orderstatus as status, cast(o_orderkey % 25 as bigint) as nat from orders), "
-            "m as (select *, case when op is distinct from lag(op) over w "
-            "or status is distinct from lag(status) over w "
-            "or nat is distinct from lag(nat) over w then 1 else 0 end as chg "
-            "from chg window w as (partition by id order by seq)), "
-            "t as (select * from m where chg = 1), "
-            "iv as (select id, status, nat, op, seq as valid_from, "
-            "lead(seq) over (partition by id order by seq) as valid_to from t) "
-            "select id, status, nat, valid_from, cast(valid_to as double) as valid_to, "
-            "valid_to is null as is_current from iv where op = 'U'"
-        ),
         "tile_topk": (
             f"with t as (select pid as osm_id, "
             f"least(cast(floor((lon+180.0)/360.0*256) as bigint), 255) as tile_x, "
@@ -2512,26 +2253,6 @@ def oracle_sql() -> dict[str, str]:
             "select user_id, cast(date_trunc('day', ts) as timestamp) as day, count(*) as n_events, "
             "round(sum(value), 4) as total_value from events group by 1, 2"
         ),
-        "sessionize_events": (
-            # same second-truncated gap predicate as the Spark side:
-            # date_diff('second', a, b) counts second-boundary crossings,
-            # which equals cast(b as long) - cast(a as long)
-            "with lagged as (select user_id, event_id, ts, value, "
-            "lag(ts) over (partition by user_id order by ts asc, event_id asc) as prev_ts "
-            "from events), "
-            "flagged as (select *, case when prev_ts is null "
-            "or date_diff('second', prev_ts, ts) > 1800 then 1 else 0 end as is_new "
-            "from lagged), "
-            "sess as (select *, sum(is_new) over (partition by user_id "
-            "order by ts asc, event_id asc rows unbounded preceding) as session_seq "
-            "from flagged) "
-            "select user_id, cast(session_seq as bigint) as session_seq, "
-            "count(*) as n_events, "
-            "min(ts) as session_start, max(ts) as session_end, "
-            "cast(date_diff('second', min(ts), max(ts)) as bigint) as duration_s, "
-            "round(sum(value), 4) as total_value "
-            "from sess group by 1, 2"
-        ),
         "window_topk": (
             "select o_custkey, o_orderkey, rn from (select o_custkey, o_orderkey, "
             "row_number() over (partition by o_custkey order by o_totalprice desc, o_orderkey asc) as rn "
@@ -2608,21 +2329,6 @@ def oracle_sql() -> dict[str, str]:
             "end) as s from p2) "
             "select c as case_id, round(s.x0, 4) as x0, round(s.y0, 4) as y0, "
             "round(s.x1, 4) as x1, round(s.y1, 4) as y1 from seg"
-        ),
-        "dbscan_clusters": _dbscan_oracle_sql(hav),
-        "cluster_hulls": _hull_oracle_sql(hav),
-        # geofence: strict-box membership sets (== the even-odd PIP on axis
-        # rects, proven by pip_rectangles), lag set-difference per mover
-        "geofence_events": _GEOFENCE_SQL,
-        # dwell: lead-pairing of the geofence event stream per (user, poly)
-        "dwell_intervals": (
-            "with dw as (select user_id, poly_id, ts_s, event, "
-            "lead(ts_s) over (partition by user_id, poly_id "
-            "order by ts_s asc, event desc) as nxt "
-            f"from ({_GEOFENCE_SQL}) ev) "
-            "select user_id, poly_id, ts_s as enter_s, "
-            "cast(nxt as double) as exit_s, "
-            "cast(nxt - ts_s as double) as dwell_s from dw where event = 'enter'"
         ),
         "minhash_lsh_pairs": (
             # exact token-jaccard pairs over the same derived corpus; the

@@ -336,9 +336,6 @@ def main() -> None:
     def q_poly_overlap():
         return _entry("poly_overlap_tris")
 
-    def q_cdc():
-        return _entry("cdc_upsert")
-
     def q_weighted_sample():
         return _entry("weighted_sample_docs")
 
@@ -354,9 +351,6 @@ def main() -> None:
     def q_vec_runs():
         return _entry("vectorize_runs")
 
-    def q_scd2():
-        return _entry("scd2_intervals")
-
     def q_smooth():
         return _entry("smooth_box")
 
@@ -365,12 +359,6 @@ def main() -> None:
 
     def q_s2c():
         return _entry("s2_compact")
-
-    def q_dbscan():
-        return _entry("dbscan_clusters")
-
-    def q_geofence():
-        return _entry("geofence_events")
 
     def q_tile_pyramid():
         from osmgraft.operators.tiles import tile_pyramid
@@ -425,18 +413,14 @@ def main() -> None:
         ("dup_spans_5gram", q_dup_spans),
         ("tile_pyramid_z12_6", q_tile_pyramid),
         ("poly_overlap_tris", q_poly_overlap),
-        ("cdc_upsert", q_cdc),
         ("weighted_sample_docs", q_weighted_sample),
         ("hist_quantiles_by_lang", q_hist_quantiles_by),
         ("geohash_cells", q_geohash),
         ("idw_surface", q_idw),
         ("vectorize_runs", q_vec_runs),
-        ("scd2_intervals", q_scd2),
         ("smooth_box", q_smooth),
         ("contour_segments", q_contours),
         ("s2_compact", q_s2c),
-        ("dbscan_clusters", q_dbscan),
-        ("geofence_events", q_geofence),
         ("wav_decode_12k", q_wav_codec),
         ("png_decode_12k", q_png_codec),
     ]

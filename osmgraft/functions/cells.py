@@ -16,12 +16,12 @@ environment, so both encoders are implemented from scratch:
   neighborhoods. NOT bit-compatible with H3 (documented; the published
   H3 icosahedral projection is not reproducible cheaply without the
   library) but provides the same API surface the engine needs: cell
-  assignment, ring candidate pruning for line snapping, adaptive res
-  splitting. Distortion near poles is acknowledged: at |lat| -> 90 a
-  fixed degree-sized hex shrinks in ground meters.
+  assignment for the point-in-polygon join, adaptive res splitting.
+  Distortion near poles is acknowledged: at |lat| -> 90 a fixed
+  degree-sized hex shrinks in ground meters.
 
 Everything here is either numpy inside pandas UDFs (cell encode) or
-pure Catalyst integer arithmetic (pack/unpack/neighbors) — no per-row
+pure Catalyst integer arithmetic (S2 parents/children) — no per-row
 Python anywhere.
 """
 
@@ -345,15 +345,6 @@ def disk_offsets(k: int) -> list[tuple[int, int]]:
         for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
             out.append((dq, dr))
     return out
-
-
-def hex_neighbors_expr(cell: Column, k: int = 1, ring_only: bool = False) -> Column:
-    """array<long> of the disk(k) (or ring(k)) neighbor cell ids — pure
-    Catalyst integer arithmetic (codegen), no Python. Used to explode one
-    side of the kNN self-join."""
-    offs = ring_offsets(k) if ring_only else disk_offsets(k)
-    # cell + dq*2^29 + dr   (res bits untouched; packing is additive in q,r)
-    return F.array(*[cell + F.lit((dq << 29) + dr).cast("long") for dq, dr in offs])
 
 
 def hex_distance(a, b) -> np.ndarray:

@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 
@@ -149,8 +148,16 @@ def main(argv: list[str] | None = None) -> None:
         q.awaitTermination()
         # a fully-caught-up checkpoint drains zero micro-batches, so
         # foreachBatch never creates args.out — report 0 rows instead of
-        # crashing on PATH_NOT_FOUND
-        n = spark.read.parquet(args.out).count() if os.path.exists(args.out) else 0
+        # crashing on PATH_NOT_FOUND. Asking Spark, not os.path, keeps
+        # URI outputs (file://, s3://, hdfs://) countable.
+        from pyspark.errors import AnalysisException
+
+        try:
+            n = spark.read.parquet(args.out).count()
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            n = 0
         print(json.dumps({"status": "ok", "out": args.out, "rows": n, "mode": "streaming"}))
         if owns_session:
             spark.stop()

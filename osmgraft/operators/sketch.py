@@ -52,9 +52,7 @@ def md5_low64_expr(col: Column) -> Column:
 
 
 def hll_bucket_rho(col: Column, p: int) -> tuple[Column, Column]:
-    """The (bucket, rho) pair for one value — shared by the batch register
-    pass and the streaming sketch (``osmgraft.streaming.ingest.
-    stream_distinct_sketch``)."""
+    """The (bucket, rho) pair for one value, for the register pass."""
     if not 4 <= p <= 18:
         raise ValueError("p must be in [4, 18]")
     sbits = 64 - p

@@ -1,34 +1,22 @@
 """Structured Streaming ingest path (optional — SURVEY.md §2.9).
 
-The reference is a one-shot batch importer; the engine adds a streaming
-ingest surface for the 10^12-doc deployment where the documents table
-grows continuously:
+The reference is a one-shot batch importer; the engine adds one streaming
+ingest pipeline for deployments where the documents table grows
+continuously (CLI: ``job.py --streaming [--dedup-docs]``):
 
 - ``stream_documents``: file-source stream over the interleaved documents
   layout (new parquet files = new micro-batch; on a cluster this is the
   Iceberg/Kafka source with the same schema).
-- ``stream_node_labels``: the STATELESS slice of the pipeline — span
-  decode, tag filter, classification, name resolution, label balls, tile
-  assignment — run incrementally per micro-batch. Everything is a
-  stream-static plan (the blobs side is static; the levels dim is a
-  broadcast), so it needs no watermark and emits append-only rows.
-  Global rank is intentionally absent here: rank is a total order over
-  ALL rows and belongs to the batch finalization (the reference sorts
-  once at the end too, main.cpp:128).
-- ``stream_tag_histogram``: windowed per-key counts with a watermark —
-  the streaming analogue of A5 (poistatistics.cpp:157-169) for monitoring
-  ingest quality with bounded state.
+- ``stream_dedup_documents`` (optional): exact first-occurrence dedup of
+  documents across micro-batches by span-sequence fingerprint, built on
+  the custom STATEFUL operator ``stream_dedup_first_seen``
+  (``applyInPandasWithState``; one boolean of state per key, optional
+  TTL horizon).
 - ``stream_pipeline_foreach_batch``: batch-incremental mode — each
   micro-batch runs the FULL batch pipeline (incl. area assembly) and
-  appends to a parquet/lineage stage; resume is the sink's idempotent
-  overwrite per epoch id. This is the shape the north_rule's
-  checkpoint/resume rails expect.
-- ``stream_dedup_first_seen`` / ``stream_dedup_documents``: custom
-  STATEFUL operator (``applyInPandasWithState``) — exact first-occurrence
-  dedup across micro-batches (one boolean of state per key, optional TTL
-  horizon); the document variant keys on the span-sequence fingerprint
-  and composes in front of the labelers. CLI: ``job.py --streaming
-  [--dedup-docs]``.
+  lands in a per-epoch parquet partition; a replayed epoch overwrites its
+  own partition, so resume is idempotent. Global rank is a total order
+  over ALL rows; the per-epoch rank restarts at 0 each epoch.
 """
 
 from __future__ import annotations
@@ -41,9 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from osmgraft.schemas import DOCUMENTS
 
 
-
 def _duration_ms(text: str) -> int:
-    """Driver-side duration parse for the stateful operators' TTLs:
+    """Driver-side duration parse for the stateful dedup's TTL:
     '24 hours' / '10 minutes' / '30 seconds' / bare milliseconds. Raises
     a ValueError NAMING the accepted forms for anything else ('10s',
     '2 min', ...) instead of an opaque KeyError inside an executor."""
@@ -64,98 +51,13 @@ def _duration_ms(text: str) -> int:
             "in ms/seconds/minutes/hours/days (or a bare millisecond count)"
         ) from None
 
+
 def stream_documents(spark: SparkSession, path: str, max_files: int = 64) -> DataFrame:
     """File-source stream of interleaved documents (append-only directory)."""
     return (
         spark.readStream.schema(DOCUMENTS)
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
-    )
-
-
-def stream_node_labels(
-    docs_stream: DataFrame,
-    blobs: DataFrame,
-    cfg=None,
-) -> DataFrame:
-    """Stateless incremental node-POI labeling (decode -> classify -> label
-    ball -> tile). ``blobs`` is a STATIC frame (stream-static inner joins
-    are fully supported and stay append-only)."""
-    from osmgraft.functions.classify import filter_expr, level_expr, levels_rows
-    from osmgraft.functions.labels import attach_label_ball
-    from osmgraft.functions.names import import_name_expr, label_name_expr
-    from osmgraft.operators.tiles import assign_tiles
-    from osmgraft.schemas import LEVELS
-    from osmgraft.sources.config import default_config
-    from osmgraft.sources.decode import decode_points, geom_ref_array, tags_expr, doc_osm_id
-
-    cfg = cfg or default_config()
-    spark = blobs.sparkSession
-    levels = spark.createDataFrame(levels_rows(cfg), schema=LEVELS)
-
-    from osmgraft.sources import geoblob
-
-    node_docs = docs_stream.where(F.col("doc_id").startswith("node/"))
-    # ONE projection carries tags AND the geometry ref: a node document
-    # has exactly one geom span (S1 contract), so no tags-branch /
-    # refs-branch self-join is needed — one plan pass instead of two, and
-    # (load-bearing) it keeps the stream a single lineage: Spark cannot
-    # resolve a streaming self-join across a stateful operator
-    # ("conflicting attributes" when stream_dedup_documents feeds this),
-    # so single-pass is what makes dedup -> labels composable at all
-    tagged = node_docs.select(
-        doc_osm_id().alias("osm_id"),
-        "doc_id",
-        tags_expr().alias("tags"),
-        F.element_at(geom_ref_array(), 1).alias("blob_id"),
-    )
-    # the static blobs table mixes point and segment payloads; keep only
-    # point-kind blobs (1-byte kind header) before the fixed-size decoder
-    pt_blobs = blobs.where(
-        F.substring(F.col("payload"), 1, 1) == F.lit(bytes([geoblob.KIND_POINT]))
-    )
-    pts = decode_points(pt_blobs).withColumnRenamed("blob_id", "_bid")
-    pois = (
-        tagged.join(pts, tagged["blob_id"] == pts["_bid"])
-        .select("osm_id", "doc_id", "tags", "lat", "lon")
-        .where(filter_expr(cfg.filter_tree, F.col("tags")))
-        .withColumn("level_id", level_expr(cfg, F.col("tags")))
-        .where(F.col("level_id") != 0)
-        .withColumn("name", import_name_expr(F.col("tags")))
-        .join(F.broadcast(levels), "level_id")
-        .where((F.col("name") != "") | (F.col("icon") != ""))
-    )
-    labeled = attach_label_ball(
-        pois.withColumn("label_src", label_name_expr(F.col("tags"))), cfg, name_col="label_src"
-    )
-    out = labeled.select(
-        "osm_id", "lat", "lon", "level_id", "label", "radius",
-        F.col("factor").cast("double").alias("factor"),
-    )
-    return assign_tiles(out, z=12)
-
-
-def stream_tag_histogram(
-    docs_stream: DataFrame,
-    ts_col: str = "_ingest_ts",
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """A5 streaming analogue: per-window tag-key counts with bounded state.
-    Documents get an ingest timestamp at arrival (current_timestamp of the
-    micro-batch) unless the source already carries one."""
-    src = docs_stream
-    if ts_col not in src.columns:
-        src = src.withColumn(ts_col, F.current_timestamp())
-    keys = F.transform(
-        F.filter(F.col("spans"), lambda s: s["kind"] == F.lit("tag")),
-        lambda s: F.split_part(s["text"], F.lit("="), F.lit(1)),
-    )
-    return (
-        src.select(F.col(ts_col), F.explode(keys).alias("tag_key"))
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col("tag_key"))
-        .agg(F.count("*").alias("n"))
     )
 
 
@@ -229,7 +131,6 @@ def stream_dedup_first_seen(
     batch ``dedup_exact`` pays), Arrow-batched state function, no
     collect; skewed keys cost one state lookup per row, not a join
     fan-out."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import BooleanType, StructField, StructType
 
@@ -303,288 +204,9 @@ def stream_dedup_documents(docs_stream: DataFrame, state_ttl: str | None = None)
     """Streaming ingest dedup for the documents table: drop every document
     whose span-sequence fingerprint was already seen (first occurrence
     wins, ``doc_id`` tie-break within a batch). Composes in front of
-    :func:`stream_node_labels` / :func:`stream_pipeline_foreach_batch`."""
+    :func:`stream_pipeline_foreach_batch`."""
     fp = docs_stream.withColumn("_fp", document_fingerprint_expr())
     out = stream_dedup_first_seen(
         fp, key_cols=["_fp"], order_cols=["_fp", "doc_id"], state_ttl=state_ttl
     )
     return out.drop("_fp")
-
-
-def stream_distinct_sketch(stream: DataFrame, value_col: str, p: int = 12) -> DataFrame:
-    """Streaming HyperLogLog: a continuously-maintained distinct-count
-    register table over an unbounded stream.
-
-    The batch sketch (:mod:`osmgraft.operators.sketch`) is a
-    ``groupBy(bucket).max(rho)`` — and ``max`` is exactly the sketch's
-    merge operator, so the STREAMING version is the same aggregation run
-    by Structured Streaming: state is bounded at 2^p rows FOREVER (the
-    register table never grows with the data), no watermark needed, and
-    any micro-batch's output feeds :func:`osmgraft.operators.sketch.
-    hll_estimate` for a live distinct-count. This is the practical way to
-    track "distinct tokens/urls/docs seen so far" over a 10^12-row ingest
-    without a shuffle proportional to the data.
-
-    Use output mode "update" (emits changed registers per batch) or
-    "complete" (the full table; it is at most 2^p rows, so complete mode
-    is cheap here despite its usual cost)."""
-    from osmgraft.operators.sketch import hll_bucket_rho
-
-    bucket, rho = hll_bucket_rho(F.col(value_col), p)
-    return (
-        stream.where(F.col(value_col).isNotNull())
-        .select(bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def stream_sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-    idle_flush: str | None = "2 hours",
-) -> DataFrame:
-    """Custom STATEFUL streaming operator (``applyInPandasWithState``):
-    gap-based sessionization over an unbounded event stream — the
-    streaming form of :func:`osmgraft.operators.sessions.sessionize`.
-
-    State per user is ONE open session: ``(session_seq, start_s, last_s,
-    n_events)`` — constant bytes per user regardless of history length,
-    which is what makes this run forever at 10^12 events (the batch
-    window form needs the user's full ordered history in one task; the
-    streaming form never holds more than the open session). A micro-batch
-    for a user is sorted by (ts, order), folded into the open session,
-    and every session CLOSED by a gap is emitted append-only:
-    ``(user, session_seq, start_s, end_s, n_events)`` with the same
-    second-truncated epoch arithmetic as the batch operator (bit-equal
-    session boundaries). The still-open session stays in state and is
-    flushed by the ``idle_flush`` processing-time timeout (a user quiet
-    that long has, by gap >= definition, ended their session).
-
-    Ordering contract: events may arrive out of order WITHIN a micro-batch
-    (sorted before folding); an event arriving in a LATER batch than a
-    session that already closed extends the CURRENT session instead (the
-    standard no-watermark best-effort; exact replay is the batch
-    operator's job).
-
-    Scale shape: one hash exchange on the user key per micro-batch —
-    identical to the batch operator's single shuffle — plus an
-    Arrow-batched state fold. Skewed users cost a longer in-task fold,
-    never a join fan-out."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    user_type = events.schema[user_col].dataType
-    out_schema = StructType(
-        [
-            StructField(user_col, user_type),
-            StructField("session_seq", IntegerType()),
-            StructField("start_s", LongType()),
-            StructField("end_s", LongType()),
-            StructField("n_events", IntegerType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("session_seq", IntegerType()),
-            StructField("start_s", LongType()),
-            StructField("last_s", LongType()),
-            StructField("n_events", IntegerType()),
-        ]
-    )
-    ttl_ms = None
-    if idle_flush is not None:
-        ttl_ms = _duration_ms(idle_flush)
-
-    from osmgraft.operators.sessions import _epoch_seconds
-
-    # the SAME epoch construction as the batch operator (imported, not
-    # copied) — the bit-equal-boundaries claim holds by construction
-    slim = events.select(
-        F.col(user_col),
-        _epoch_seconds(events, ts_col).alias("_s"),
-        F.col(ts_col).alias("_o"),
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            seq, start_s, last_s, n = state.get
-            # keep a (seq, closed) tombstone instead of remove(): dropping
-            # the counter would restart the user's next session at seq 1
-            # and collide with the already-emitted (user, session_seq)
-            state.update((seq, None, None, 0))
-            if start_s is not None:
-                yield pd.DataFrame(
-                    [[key[0], seq, start_s, last_s, n]],
-                    columns=[user_col, "session_seq", "start_s", "end_s", "n_events"],
-                )
-            return
-        seq, start_s, last_s, n = (
-            state.get if state.exists else (0, None, None, 0)
-        )
-        closed = []
-        # one sort over the WHOLE micro-batch: pdfs yields multiple Arrow
-        # chunks for large groups, and folding chunks independently would
-        # violate the documented within-batch ordering contract
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            for s in whole.sort_values(["_s", "_o"], kind="stable")["_s"]:
-                s = int(s)
-                if start_s is None:
-                    seq, start_s, last_s, n = seq + 1, s, s, 1
-                elif s - last_s > gap_seconds:
-                    closed.append([key[0], seq, start_s, last_s, n])
-                    seq, start_s, last_s, n = seq + 1, s, s, 1
-                else:
-                    last_s = max(last_s, s)
-                    n += 1
-        state.update((seq, start_s, last_s, n))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=[user_col, "session_seq", "start_s", "end_s", "n_events"],
-            )
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return slim.groupBy(F.col(user_col)).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
-    )
-
-
-def stream_geofence(
-    fixes: DataFrame,
-    fences: list[tuple[int, list[float], list[float]]],
-    user_col: str = "user_id",
-    fix_id: str = "fid",
-    ts_col: str = "ts_s",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    state_ttl: str | None = None,
-) -> DataFrame:
-    """Custom STATEFUL streaming operator: geofence enter/exit events over
-    an unbounded fix stream — the streaming form of
-    :func:`osmgraft.operators.geofence.geofence_events`.
-
-    ``fences`` is the driver-side fence list ``(poly_id, ring_lats,
-    ring_lons)`` — closed over into the kernel, i.e. broadcast to every
-    task; right-sized for the usual 10^2..10^5 alerting fences (a
-    planet-scale fence SET would use the batch operator's cell-join
-    covering instead, recomputed per micro-batch). State per mover is the
-    SORTED currently-inside polygon-id tuple — bytes bounded by overlap
-    depth, never by history length, which is what lets this run forever.
-    Each micro-batch sorts a mover's fixes by (ts, fix id), evaluates the
-    even-odd ring test per fix, and emits one row per set-membership
-    transition: ``(user, ts_s, poly_id, event)`` append-only, identical
-    transitions to the batch operator under in-order arrival (tested
-    two-batch vs batch replay). Late fixes arriving after the mover's
-    state moved on fold in arrival order — the standard no-watermark
-    best-effort; exact replay is the batch operator's job.
-
-    ``state_ttl``: optional processing-time timeout that FORGETS a quiet
-    mover's state (memory rail). Forgetting is not an exit: silence says
-    nothing about position, so no event is emitted; a post-TTL fix
-    re-enters whatever it is inside of."""
-    import numpy as np
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    user_type = fixes.schema[user_col].dataType
-    out_schema = StructType(
-        [
-            StructField(user_col, user_type),
-            StructField(ts_col, LongType()),
-            StructField("poly_id", LongType()),
-            StructField("event", StringType()),
-        ]
-    )
-    state_schema = StructType([StructField("inside", ArrayType(LongType()))])
-
-    ttl_ms = None
-    if state_ttl is not None:
-        ttl_ms = _duration_ms(state_ttl)
-
-    # rings precompute their rolled (previous-vertex) copies ONCE — the
-    # even-odd loop is the per-fix hot path and the rolls are static
-    rings = []
-    for pid, la, lo in fences:
-        la = np.asarray(la, dtype=np.float64)
-        lo = np.asarray(lo, dtype=np.float64)
-        rings.append((int(pid), la, lo, np.roll(la, 1), np.roll(lo, 1)))
-
-    def _inside_set(py: float, px: float) -> tuple:
-        out = []
-        for pid, la, lo, lj, oj in rings:
-            cross = (la > py) != (lj > py)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xs = (oj - lo) * (py - la) / (lj - la) + lo
-            if bool(np.count_nonzero(cross & (px < xs)) & 1):
-                out.append(pid)
-        return tuple(sorted(out))
-
-    slim = fixes.select(
-        F.col(user_col),
-        F.col(fix_id).alias("_f"),
-        F.col(ts_col).cast("long").alias("_s"),
-        F.col(lat_col).alias("_y"),
-        F.col(lon_col).alias("_x"),
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()  # forget the quiet mover; silence is not an exit
-            return
-        (cur,) = state.get if state.exists else ((),)
-        cur = tuple(int(c) for c in (cur or ()))
-        events = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            whole = whole.sort_values(["_s", "_f"], kind="stable")
-            for s, py, px in zip(whole["_s"], whole["_y"], whole["_x"]):
-                nxt = _inside_set(float(py), float(px))
-                for p in nxt:
-                    if p not in cur:
-                        events.append([key[0], int(s), p, "enter"])
-                for p in cur:
-                    if p not in nxt:
-                        events.append([key[0], int(s), p, "exit"])
-                cur = nxt
-        state.update((list(cur),))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        if events:
-            yield pd.DataFrame(events, columns=[user_col, ts_col, "poly_id", "event"])
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return slim.groupBy(F.col(user_col)).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
-    )

@@ -205,6 +205,17 @@ def test_job_cli_streaming_incremental(spark, tmp_path, capsys):
     status = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert status["rows"] == 0 and not os.path.exists(out_empty)
 
+    # a URI --out (file://, as s3:// or hdfs:// on a cluster) reports the
+    # rows it wrote, not 0: the read-back must not go through os.path
+    out_uri = "file://" + str(tmp_path / "labels_stream_uri")
+    job.main([
+        "--docs", src, "--blobs", blobs, "--out", out_uri,
+        "--streaming", "--checkpoint", str(tmp_path / "ckpt_job_stream_uri"),
+    ])
+    status = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert status["rows"] > 0
+    assert status["rows"] == spark.read.parquet(out_uri).count()
+
     # guard rails: config conflicts fail fast
     with pytest.raises(SystemExit):
         job.main(argv + ["--text-format"])

@@ -1,9 +1,9 @@
-"""Structured Streaming ingest path: stateless node labeling, windowed
-histogram with watermark, foreachBatch batch-incremental full pipeline."""
+"""Structured Streaming ingest path: the foreachBatch batch-incremental
+full pipeline, the stateful first-seen document dedup in front of it, and
+the TTL parse of that dedup."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 
@@ -17,87 +17,24 @@ def staged(spark, tmp_path_factory):
     return root
 
 
-def test_stream_node_labels_matches_batch(spark, staged, tmp_path):
-    """availableNow stream over the docs dir == the batch node-POI path."""
-    from osmgraft.streaming.ingest import stream_documents, stream_node_labels
-
-    blobs = spark.read.parquet(f"{staged}/blobs.parquet")
-    stream = stream_documents(spark, f"{staged}/documents.parquet")
-    assert stream.isStreaming
-    out = stream_node_labels(stream, blobs)
-
-    q = (
-        out.writeStream.format("memory")
-        .queryName("node_labels_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from node_labels_stream")
-
-    # batch reference: same slice of the pipeline
-    from osmgraft.plans.pipeline import admitted_node_pois, levels_df
-    from osmgraft.functions.labels import attach_label_ball
-    from osmgraft.functions.names import label_name_expr
-    from osmgraft.sources.config import default_config
-    from osmgraft.sources.decode import decode_documents
-
-    cfg = default_config()
-    docs = spark.read.parquet(f"{staged}/documents.parquet")
-    frames = decode_documents(docs, blobs)
-    batch = attach_label_ball(
-        admitted_node_pois(frames.node_pois, cfg, levels_df(spark, cfg)).withColumn(
-            "label_src", label_name_expr(F.col("tags"))
-        ),
-        cfg,
-        name_col="label_src",
-    )
-    got_set = {(r["osm_id"], r["label"], round(r["radius"], 6)) for r in got.collect()}
-    want_set = {
-        (r["osm_id"], r["label"], round(r["radius"], 6)) for r in batch.collect()
-    }
-    assert got_set == want_set
-    assert len(got_set) > 0
-    # tiles attached and in range
-    z12 = 1 << 12
-    for r in got.select("tile_x", "tile_y").collect():
-        assert 0 <= r["tile_x"] < z12 and 0 <= r["tile_y"] < z12
-
-
-def test_stream_tag_histogram_watermark(spark, staged, tmp_path):
-    from osmgraft.streaming.ingest import stream_documents, stream_tag_histogram
-
-    stream = stream_documents(spark, f"{staged}/documents.parquet")
-    hist = stream_tag_histogram(stream, window="1 minute", watermark="2 minutes")
-    q = (
-        hist.writeStream.format("memory")
-        .queryName("tag_hist_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hist"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only closed windows; with a single micro-batch the
-    # watermark hasn't advanced past the window, so rows may be 0 — the
-    # contract here is that the plan is a VALID streaming agg (it started
-    # and terminated cleanly with bounded state).
-    assert not q.isActive
-    assert q.lastProgress is not None
-
-
 def test_foreach_batch_full_pipeline(spark, staged, tmp_path):
     """Batch-incremental mode: full pipeline per micro-batch, appended to
-    parquet; output rows match the one-shot batch pipeline on the same docs."""
+    parquet; output rows match the one-shot batch pipeline on the same docs,
+    label balls included, and the ``extra`` tiling step lands every row on
+    a z12 tile."""
+    from osmgraft.operators.tiles import assign_tiles
     from osmgraft.plans.pipeline import label_pipeline
     from osmgraft.streaming.ingest import stream_documents, stream_pipeline_foreach_batch
 
+    def tiled(df):
+        return assign_tiles(df, z=12)
+
     blobs = spark.read.parquet(f"{staged}/blobs.parquet")
     stream = stream_documents(spark, f"{staged}/documents.parquet", max_files=2)
+    assert stream.isStreaming
     out_path = str(tmp_path / "labels_out")
     q = stream_pipeline_foreach_batch(
-        spark, stream, blobs, out_path, str(tmp_path / "ckpt_fb")
+        spark, stream, blobs, out_path, str(tmp_path / "ckpt_fb"), extra=tiled
     )
     q.awaitTermination(180)
 
@@ -105,9 +42,14 @@ def test_foreach_batch_full_pipeline(spark, staged, tmp_path):
     docs = spark.read.parquet(f"{staged}/documents.parquet")
     want = label_pipeline(spark, docs, blobs)
     # per-batch rank is per-micro-batch (documented); compare the label sets
-    got_set = {(r["osm_id"], r["label"]) for r in got.collect()}
-    want_set = {(r["osm_id"], r["label"]) for r in want.collect()}
+    got_rows = got.collect()
+    got_set = {(r["osm_id"], r["label"], round(r["radius"], 6)) for r in got_rows}
+    want_set = {(r["osm_id"], r["label"], round(r["radius"], 6)) for r in want.collect()}
     assert got_set == want_set
+    assert len(got_set) > 0
+    z12 = 1 << 12
+    for r in got_rows:
+        assert 0 <= r["tile_x"] < z12 and 0 <= r["tile_y"] < z12
 
     # idempotent resume: replaying the same epochs (fresh checkpoint, same
     # input, same epoch ids) must OVERWRITE the per-epoch partitions, not
@@ -119,6 +61,7 @@ def test_foreach_batch_full_pipeline(spark, staged, tmp_path):
         blobs,
         out_path,
         str(tmp_path / "ckpt_fb_replay"),
+        extra=tiled,
     )
     q2.awaitTermination(180)
     assert spark.read.parquet(out_path).count() == n_first
@@ -193,196 +136,41 @@ def test_stream_dedup_documents(spark, staged, tmp_path):
 
 
 def test_stateful_dedup_composes_with_labeling(spark, staged, tmp_path):
-    """Regression: stream_dedup_documents -> stream_node_labels must
-    analyze and run as ONE streaming query. The labeling stage used to
-    self-join its tags and geom-ref branches, which Spark cannot resolve
-    across a stateful FlatMapGroupsInPandasWithState node ("conflicting
-    attributes"); the single-pass projection keeps the lineage linear."""
+    """stream_dedup_documents -> stream_pipeline_foreach_batch runs as ONE
+    streaming query (the ``job.py --streaming --dedup-docs`` composition):
+    the stateful FlatMapGroupsInPandasWithState node feeds the per-epoch
+    full pipeline, and labels land."""
     from osmgraft.streaming.ingest import (
         stream_documents,
         stream_dedup_documents,
-        stream_node_labels,
+        stream_pipeline_foreach_batch,
     )
 
     blobs = spark.read.parquet(f"{staged}/blobs.parquet")
     stream = stream_documents(spark, f"{staged}/documents.parquet", max_files=2)
-    out = stream_node_labels(stream_dedup_documents(stream), blobs)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_labels_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_compose"))
-        .trigger(availableNow=True)
-        .start()
+    out_path = str(tmp_path / "dedup_labels_out")
+    q = stream_pipeline_foreach_batch(
+        spark,
+        stream_dedup_documents(stream),
+        blobs,
+        out_path,
+        str(tmp_path / "ckpt_compose"),
     )
     q.awaitTermination(180)
-    assert spark.sql("select count(*) c from dedup_labels_stream").collect()[0]["c"] > 0
+    assert q.exception() is None
+    assert spark.read.parquet(out_path).count() > 0
 
 
-def test_stream_distinct_sketch_matches_batch(spark, staged, tmp_path):
-    """Streaming HLL register table == the batch sketch over the same data
-    (max IS the merge operator), and so is the estimate."""
-    from osmgraft.operators.sketch import hll_estimate, hll_registers
-    from osmgraft.streaming.ingest import stream_distinct_sketch, stream_documents
+def test_duration_ms_accepted_and_rejected_forms():
+    """The --dedup-ttl parse: '<number> <unit>' or bare milliseconds; any
+    other form is a ValueError that names the accepted units."""
+    from osmgraft.streaming.ingest import _duration_ms
 
-    def span_texts(df):
-        return (
-            df.select(F.explode("spans").alias("sp"))
-            .select(F.col("sp.text").alias("w"))
-            .where(F.col("w").isNotNull())
-        )
-
-    stream = stream_documents(spark, f"{staged}/documents.parquet")
-    vals = span_texts(stream)
-    q = (
-        stream_distinct_sketch(vals, "w", p=8)
-        .writeStream.format("memory")
-        .queryName("hll_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "hll_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["bucket"], r["rho"])
-        for r in spark.sql("select * from hll_stream").collect()
-    }
-
-    bvals = span_texts(spark.read.parquet(f"{staged}/documents.parquet"))
-    want = {(r["bucket"], r["rho"]) for r in hll_registers(bvals, "w", p=8).collect()}
-    assert got == want and len(got) > 0
-
-    est_stream = hll_estimate(
-        spark.sql("select * from hll_stream"), p=8
-    ).collect()[0]
-    est_batch = hll_estimate(hll_registers(bvals, "w", p=8), p=8).collect()[0]
-    assert est_stream == est_batch
-
-
-def test_stream_sessionize_matches_batch_closed_sessions(spark, tmp_path):
-    """Two-batch file stream: batch 2's events are > gap after batch 1's,
-    so every batch-1 session CLOSES and is emitted in batch 2. The emitted
-    closed sessions must equal the batch operator's sessions over the full
-    data, minus each user's final (still-open) session."""
-    from datetime import datetime, timedelta
-
-    from osmgraft.streaming.ingest import stream_sessionize
-
-    t0 = datetime(2024, 3, 1)
-    rows1, rows2 = [], []
-    eid = 0
-    # per user: two sessions in file 1 (split by a 40-min gap), then
-    # file 2 opens a third > gap after everything in file 1
-    for u in (1, 2, 3):
-        for s in (0, 60, 120):  # session A: 3 events, 1 min apart
-            rows1.append((eid, u, t0 + timedelta(seconds=u * 7 + s))); eid += 1
-        for s in (4000, 4030):  # session B after a 40-min gap (gap=1800)
-            rows1.append((eid, u, t0 + timedelta(seconds=u * 7 + s))); eid += 1
-        rows2.append((eid, u, t0 + timedelta(seconds=u * 7 + 9000))); eid += 1
-
-    src = str(tmp_path / "ev_src")
-    schema = "event_id long, user_id long, ts timestamp"
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = stream_sessionize(stream, gap_seconds=1800)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_seq"]): (r["start_s"], r["end_s"], r["n_events"])
-        for r in spark.sql("select * from sessions_stream").collect()
-    }
-
-    # batch reference over the full data, drop each user's LAST session
-    # (still open in the stream, awaiting the idle flush)
-    from osmgraft.operators.sessions import _epoch_seconds, sessionize
-
-    full = spark.createDataFrame(rows1 + rows2, schema)
-    batch = sessionize(full, user_col="user_id", ts_col="ts", gap_seconds=1800)
-    batch = batch.withColumn("_s", _epoch_seconds(batch, "ts"))
-    rows = (
-        batch.groupBy("user_id", "session_seq")
-        .agg(
-            F.min("_s").alias("start_s"),
-            F.max("_s").alias("end_s"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    )
-    last_seq = {}
-    for r in rows:
-        last_seq[r["user_id"]] = max(last_seq.get(r["user_id"], 0), r["session_seq"])
-    want = {
-        (r["user_id"], r["session_seq"]): (r["start_s"], r["end_s"], r["n"])
-        for r in rows
-        if r["session_seq"] != last_seq[r["user_id"]]
-    }
-    assert got == want
-    assert len(got) == 6  # 3 users x 2 closed sessions
-
-
-def test_stream_sessionize_multi_chunk_group_sorted_once(spark, tmp_path):
-    """With tiny Arrow batches a single user's micro-batch spans many
-    chunks; the fold must sort the WHOLE batch (not per chunk), or
-    out-of-order events across chunk boundaries corrupt session
-    boundaries. Events are written interleaved/reversed to force it."""
-    from datetime import datetime, timedelta
-
-    from osmgraft.streaming.ingest import stream_sessionize
-
-    t0 = datetime(2024, 4, 1)
-    # one user, 40 events: two sessions split by a 1-hour gap, written in
-    # REVERSE time order so chunk 1 holds the latest events
-    times = [i * 60 for i in range(20)] + [7200 + i * 60 for i in range(20)]
-    rows = [(i, 1, t0 + timedelta(seconds=s)) for i, s in enumerate(reversed(times))]
-    # closer: an event far after everything, so both sessions close
-    rows.append((99, 1, t0 + timedelta(seconds=50_000)))
-
-    src = str(tmp_path / "chunk_src")
-    schema = "event_id long, user_id long, ts timestamp"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
-        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        out = stream_sessionize(stream, gap_seconds=1800)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("chunk_sessions")
-            .option("checkpointLocation", str(tmp_path / "ckpt_chunk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r["session_seq"]: (r["start_s"], r["end_s"], r["n_events"])
-            for r in spark.sql("select * from chunk_sessions").collect()
-        }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    # naive epoch (matches _epoch_seconds), independent of the host TZ
-    base = int((t0 - datetime(1970, 1, 1)).total_seconds())
-    assert got == {
-        1: (base + 0, base + 19 * 60, 20),
-        2: (base + 7200, base + 7200 + 19 * 60, 20),
-    }
+    assert _duration_ms("24 hours") == 86_400_000
+    assert _duration_ms("10 minutes") == 600_000
+    assert _duration_ms("30 seconds") == 30_000
+    assert _duration_ms("1.5 hours") == 5_400_000
+    assert _duration_ms("1500") == 1500
+    for bad in ("10s", "2 min", ""):
+        with pytest.raises(ValueError, match="ms/seconds/minutes/hours/days"):
+            _duration_ms(bad)

@@ -459,23 +459,6 @@ def main() -> None:
         ("domain caps — URL curation rail, one window exchange", p22, notes22)
     )
 
-    # 23. sessionization — the window and the refined-key session rollup
-    # share ONE exchange (hashpartitioning on user_id); no Python eval
-    q23 = entry_mod.queries()["sessionize_events"](spark, SF)
-    p23 = plan_of(q23)
-    notes23 = [
-        f"exactly one exchange (user_id hash): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p23)) == 1 and 'hashpartitioning(user_id#' in p23}",
-        f"session rollup reuses the window partitioning (no second shuffle): "
-        f"{'HashAggregate' in p23}",
-        f"pure Catalyst (no Python): {'Python' not in p23}",
-        f"scan pruned — event_type/props never read: "
-        f"{'event_type' not in p23 and 'props' not in p23}",
-    ]
-    sections.append(
-        ("sessionization — one shuffle, window + in-partition rollup", p23, notes23)
-    )
-
     # 24. Count-Min table — one exchange whose input is bounded at d*w
     # rows per map partition (partial_sum combine), pure Catalyst hashing
     q24 = entry_mod.queries()["cms_heavy_hitters"](spark, SF)
@@ -620,22 +603,6 @@ def main() -> None:
         ("polygon-polygon intersects — cell equi-join + broadcast big rails", p33, notes33)
     )
 
-    # 35. CDC changelog apply — union-tag fold: ONE hash exchange total,
-    # zero join nodes, algebraic max(struct) with map-side partials.
-    q35 = entry_mod.queries()["cdc_upsert"](spark, SF)
-    p35 = plan_of(q35)
-    notes35 = [
-        f"exactly one wide exchange (the key fold): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p35)) == 1}",
-        f"zero join nodes (union-tag, not join): "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p35)}",
-        f"fold partially aggregated map-side: {'partial_max' in p35}",
-        f"pure Catalyst (no Python): {'Python' not in p35}",
-    ]
-    sections.append(
-        ("CDC changelog apply — one-shuffle union-tag fold, zero joins", p35, notes35)
-    )
-
     # 36. geohash key — pure codegen bit interleave + base-32 substring
     # chain: zero exchange, zero Python, one narrow projection.
     q36 = entry_mod.queries()["geohash_cells"](spark, SF)
@@ -680,24 +647,6 @@ def main() -> None:
     ]
     sections.append(
         ("run-length vectorize — window partitioning reused by the run fold", p38, notes38)
-    )
-
-    # 39. SCD2 intervals — ONE exchange; change-mark lag and interval
-    # lead are back-to-back windows over the same sort, zero joins.
-    q39 = entry_mod.queries()["scd2_intervals"](spark, SF)
-    p39 = plan_of(q39)
-    n_win39 = len(re.findall(r"[(]\d+[)] Window", p39))
-    n_sort39 = len(re.findall(r"[(]\d+[)] Sort", p39))
-    notes39 = [
-        f"exactly one wide exchange (the key history sort): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p39)) == 1}",
-        f"both windows share one sort: {n_win39 == 2 and n_sort39 == 1}",
-        f"zero join nodes: "
-        f"{not re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|NestedLoop|Cartesian)', p39)}",
-        f"pure Catalyst (no Python): {'Python' not in p39}",
-    ]
-    sections.append(
-        ("SCD2 intervals — one shuffle, two windows on one sort", p39, notes39)
     )
 
     # 40. S2 cell compaction — per-level window folds, no joins; each
@@ -749,41 +698,6 @@ def main() -> None:
     sections.append(
         ("marching squares — corner scatter + one block pivot", p45, notes45)
     )
-
-    # 47. DBSCAN — radius pairs via the chord-grid kNN equi-join (checkpointed
-    # once for its three consumers), degree/border as same-key aggregates,
-    # clusters via the log-round alternating-star CC. No cartesian, no
-    # Python anywhere (pair kernel is Catalyst haversine).
-    q47 = entry_mod.queries()["dbscan_clusters"](spark, SF)
-    p47 = plan_of(q47)
-    notes47 = [
-        f"no cartesian/BNLJ: "
-        f"{'Cartesian' not in p47 and 'BroadcastNestedLoopJoin' not in p47}",
-        f"pair set enters as a checkpointed scan (computed once): "
-        f"{'Scan ExistingRDD' in p47}",
-        f"no Python operators in the label plan: {'Python' not in p47}",
-    ]
-    sections.append(
-        ("DBSCAN — checkpointed radius pairs + star-contracted components", p47, notes47)
-    )
-
-    # 50. geofence — broadcast PIP + set groupBy + mover window; enters and
-    # exits explode map-side from the set difference.
-    q50 = entry_mod.queries()["geofence_events"](spark, SF)
-    p50 = plan_of(q50)
-    # the broadcast PIP strategy IS a nested-loop against the tiny
-    # broadcast polygon side (25 rects) — bounded by the dim, by design;
-    # what must NOT appear is a second copy of the PIP+window subtree
-    # (one explode serves both event kinds)
-    n_bnlj50 = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", p50))
-    n_win50 = len(re.findall(r"\(\d+\) Window", p50))
-    notes50 = [
-        f"exactly one nested-loop, against the broadcast fence dim: {n_bnlj50 == 1}",
-        f"no cartesian: {'Cartesian' not in p50}",
-        f"single PIP+window subtree (1 Window op, not 2): {n_win50 == 1}",
-        f"set-difference explode present: {'Generate' in p50}",
-    ]
-    sections.append(("geofence events — broadcast PIP + lagged set difference", p50, notes50))
 
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(
