@@ -34,32 +34,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Deterministic URL synthesis shared VERBATIM by the domain_caps Spark
-# query (via F.expr) and its DuckDB oracle — the documents table has no
-# URL column, so both engines derive the same one from (doc_id, source).
-# Coverage by construction: mixed-case schemes/hosts, default and
-# non-default ports, tracking params, fragments, multi-part TLDs, and
-# non-URL rows (mailto / free text) that must yield NULLs.
-_URL_FRAG = (
-    "case when doc_id % 97 = 0 then 'mailto:a@b.com' "
-    "when doc_id % 89 = 0 then 'not a url' "
-    "else concat("
-    "case when doc_id % 3 = 0 then 'https' when doc_id % 3 = 1 then 'HTTP' "
-    "else 'HtTpS' end, "
-    "'://', "
-    "case when doc_id % 2 = 0 then 'WWW.' else '' end, "
-    "source, "
-    "case when doc_id % 4 = 0 then '.CO.UK' when doc_id % 4 = 1 then '.com' "
-    "when doc_id % 4 = 2 then '.Example.COM' else '.org' end, "
-    "case when doc_id % 5 = 0 then ':443' when doc_id % 5 = 1 then ':80' "
-    "when doc_id % 5 = 2 then ':8080' else '' end, "
-    "'/p/', doc_id, "
-    "case when doc_id % 3 = 0 then concat('?utm_source=a&q=', doc_id % 7) "
-    "when doc_id % 3 = 1 then '?utm_campaign=x&gclid=1' else '' end, "
-    "case when doc_id % 2 = 1 then '#sec' else '' end) end"
-)
-
-
 def _synth_docs(spark: SparkSession, n_docs: int = 1200):
     from osmgraft.sources.synth import SynthParams, synth_blobs, synth_documents
 
@@ -821,15 +795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = pairwise_neighbors(emb, k=3, by_label="blk")
         return out.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"), "rk")
 
-    # --- quality filter (thresholded features) ------------------------------------
-    def q_quality_filter(spark, sf):
-        from osmgraft.operators.textstats import quality_filter
-
-        d = _read(spark, sf, "documents")
-        return quality_filter(
-            d, min_words=5, max_punct_ratio=0.2, min_alpha_ratio=0.5
-        ).select("doc_id")
-
     # --- raster <-> vector -------------------------------------------------------
     def q_rasterize(spark, sf):
         from osmgraft.operators.raster import rasterize
@@ -931,125 +896,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         pairs = embedding_dup_pairs(emb.unionByName(dup), threshold=0.99, exact=True)
         return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
-
-    # --- curation: benchmark n-gram decontamination ------------------------------
-    def q_decontaminate(spark, sf):
-        from osmgraft.operators.curation import contaminated_ids
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        bench = d.where(F.col("doc_id") % 10 == 7)  # scale-proportional eval set
-        corpus = d.where(F.col("doc_id") % 10 != 7)
-        out = contaminated_ids(corpus, bench, n=3, min_shared=2)
-        return out.select("doc_id", F.col("n_shared").cast("long").alias("n_shared"))
-
-    # --- curation: within-doc repetition signals (Gopher rules) -------------------
-    def q_repetition(spark, sf):
-        from osmgraft.operators.curation import repetition_features
-
-        d = _read(spark, sf, "documents").where(F.col("doc_id") < 300)
-        return repetition_features(d)
-
-    # --- curation: deterministic stratified sampling ------------------------------
-    def q_stratified_sample(spark, sf):
-        from osmgraft.operators.curation import stratified_sample
-
-        d = _read(spark, sf, "documents").select("doc_id", "lang")
-        # sql_exact: the Knuth-arithmetic hash the DuckDB oracle replays
-        # bit-for-bit (the library default is xxhash64)
-        return stratified_sample(
-            d, {"en": 0.8, "de": 0.5, "fr": 0.25}, strata_col="lang", seed=5, sql_exact=True
-        )
-
-    # --- curation: domain mixture resampling --------------------------------------
-    def q_mix_domains(spark, sf):
-        from osmgraft.operators.curation import mix_domains
-
-        d = _read(spark, sf, "documents").select("doc_id", "lang")
-        return mix_domains(
-            d, {"en": 0.5, "de": 0.3, "fr": 0.2}, domain_col="lang", seed=9, sql_exact=True
-        )
-
-    # --- curation: C4 boilerplate line removal -------------------------------------
-    def q_boilerplate(spark, sf):
-        from osmgraft.operators.curation import remove_duplicate_lines
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        # synth docs are single-line word soup; derive deterministic 2-word
-        # pseudo-lines so corpus-level line frequency is non-trivial
-        ws = F.split(F.trim(F.col("text")), r"\s+")
-        n_lines = F.ceil(F.size(ws) / F.lit(2.0)).cast("int")
-        lines = F.transform(
-            F.sequence(F.lit(0), n_lines - 1),
-            lambda i: F.array_join(F.slice(ws, i * 2 + 1, 2), " "),
-        )
-        lined = d.select("doc_id", F.array_join(lines, "\n").alias("text"))
-        return remove_duplicate_lines(lined, min_df=12)
-
-    # --- curation: deterministic training-shard packing ------------------------------
-    def q_assign_shards(spark, sf):
-        from osmgraft.operators.curation import assign_shards
-
-        d = _read(spark, sf, "documents").select(
-            "doc_id", F.col("n_chars").alias("n_tokens")
-        )
-        return assign_shards(
-            d, target_tokens=4000, n_buckets=8, seed=2, sql_exact=True
-        ).select("doc_id", "n_tokens", "bucket", "shard_ix")
-
-    # --- curation: PII redaction ----------------------------------------------------
-    def q_pii_redact(spark, sf):
-        from osmgraft.operators.curation import redact_pii
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        # inject deterministic synthetic PII (the corpus itself has none)
-        t2 = F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.lit(" reach admin@example.com or 192.168.1.77"),
-            ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, F.lit(" dial +1 555 0100 now")).otherwise(
-                F.lit("")
-            ),
-        )
-        return redact_pii(d.select("doc_id", t2.alias("text")))
-
-    # --- text quality ------------------------------------------------------------
-    def q_quality(spark, sf):
-        from osmgraft.operators.textstats import quality_features
-
-        d = _read(spark, sf, "documents")
-        qf = quality_features(d)
-        return qf.select(
-            "doc_id",
-            "n_chars",
-            F.col("n_words").cast("long").alias("n_words"),
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.round("avg_word_len", 4).alias("avg_word_len"),
-            F.round("punct_ratio", 4).alias("punct_ratio"),
-            F.round("alpha_ratio", 4).alias("alpha_ratio"),
-            F.round("stopword_ratio", 4).alias("stopword_ratio"),
-        )
-
-    # --- lang id -------------------------------------------------------------------
-    def q_lang_id(spark, sf):
-        from osmgraft.operators.textstats import lang_id
-
-        d = _read(spark, sf, "documents")
-        out = lang_id(d)
-        return out.select(
-            "doc_id",
-            F.col("en_hits").cast("long").alias("en_hits"),
-            F.col("de_hits").cast("long").alias("de_hits"),
-            F.col("fr_hits").cast("long").alias("fr_hits"),
-            "lang_guess",
-        )
-
-    # --- fingerprint ------------------------------------------------------------------
-    def q_fingerprint(spark, sf):
-        from osmgraft.operators.textstats import fingerprint
-
-        return fingerprint(_read(spark, sf, "documents"))
 
     # --- similarity: brute-force top-k --------------------------------------------------
     def q_ann_brute(spark, sf):
@@ -1365,13 +1211,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("doc_id", "n_dupes")
         )
 
-    # --- retrieval: BM25 keyword top-k (inverted-index shape) --------------------
-    def q_bm25_topk(spark, sf):
-        from osmgraft.operators.retrieval import bm25_topk
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        return bm25_topk(d, ["spark", "join", "window"], k=100)
-
     # --- dedup: exact duplicated-substring spans (suffix-array-free) -------------
     def q_dup_spans(spark, sf):
         from osmgraft.operators.dedup import dup_spans
@@ -1380,25 +1219,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # gram_hash='md5': the engine-replayable oracle configuration
         # (the library default is xxhash64, the narrower scale path)
         return dup_spans(d, n=5, min_docs=2, gram_hash="md5")
-
-    # --- curation: the composed end-to-end chain ----------------------------------
-    def q_curation_pipeline(spark, sf):
-        from osmgraft.operators.curation import curation_pipeline
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        corpus = d.where(F.col("doc_id") % 10 != 7)
-        dup = corpus.where(F.col("doc_id") < 300).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-        bench = d.where(F.col("doc_id") % 10 == 7)
-        # planted exact duplicates must vanish at stage 1; sql_exact: the
-        # Knuth-hash sampling configuration the oracle replays.
-        # min_shared=10: the synth vocabulary is ~40 tokens, so 3-grams
-        # recur across unrelated docs — at the default threshold the
-        # decontamination stage would flag ~86% of this corpus
-        return curation_pipeline(
-            corpus.unionByName(dup), bench, decontam_min_shared=10, sql_exact=True
-        )
 
     # --- sketch: HyperLogLog distinct-token count ---------------------------------
     def _hll_vals(spark, sf):
@@ -1424,34 +1244,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return hll_count_distinct(_hll_vals(spark, sf), "w", p=10)
 
-    # --- curation: context-window chunking ---------------------------------------
-    def q_chunk_docs(spark, sf):
-        from osmgraft.operators.curation import chunk_docs
-
-        d = _read(spark, sf, "documents").select("doc_id", "text").where(
-            F.col("doc_id") < 500
-        )
-        return chunk_docs(d, chunk_words=40, overlap=10)
-
-    # --- curation: URL canonicalization + per-domain caps --------------------
-    def q_domain_caps(spark, sf):
-        from osmgraft.operators.urltools import domain_caps
-
-        d = (
-            _read(spark, sf, "documents")
-            .where(F.col("doc_id") < 1500)
-            .select("doc_id", "source", "n_chars")
-            .withColumn("url", F.expr(_URL_FRAG))
-        )
-        out = domain_caps(d, url_col="url", quality_col="n_chars", max_per_domain=3)
-        return out.select(
-            "doc_id",
-            "url_canon",
-            "domain",
-            F.col("domain_rank").cast("int").alias("domain_rank"),
-            F.col("kept").cast("int").alias("kept"),
-        )
-
     # --- sketch: grouped HLL (distinct tokens per source) --------------------------
     def q_hll_by_source(spark, sf):
         from osmgraft.operators.dedup import tokens_expr
@@ -1465,22 +1257,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         vals = exp.select("g", F.concat_ws("-", "_t", "_b").alias("w"))
         return hll_count_distinct_by(vals, ["g"], "w", p=9)
-
-    # --- curation: deterministic weighted sampling (Efraimidis-Spirakis) -----------
-    def q_weighted_sample(spark, sf):
-        from osmgraft.operators.curation import weighted_sample
-
-        d = _read(spark, sf, "documents").select("doc_id", "lang", "n_chars")
-        return weighted_sample(
-            d, k=20, weight_col="n_chars", strata_cols=["lang"], seed=1
-        )
-
-    # --- curation: corpus-percentile quality gate -----------------------------------
-    def q_quantile_gate(spark, sf):
-        from osmgraft.operators.curation import quantile_gate
-
-        d = _read(spark, sf, "documents").select("doc_id", "n_chars")
-        return quantile_gate(d, "n_chars", q=0.9, lo=0.0, hi=2048.0, nbins=256)
 
     # --- sketch: Count-Min weighted heavy-hitter point estimates -----------------
     def q_cms_topk(spark, sf):
@@ -1747,20 +1523,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_topk": q_tile_topk,
         "salted_count": q_salted_count,
         "pairwise_knn": q_pairwise_knn,
-        "quality_filter": q_quality_filter,
         "dedup_exact": q_dedup_exact,
         "jaccard_pairs": q_jaccard_pairs,
-        "decontaminate_ngrams": q_decontaminate,
-        "repetition_features": q_repetition,
-        "stratified_sample": q_stratified_sample,
-        "mix_domains": q_mix_domains,
-        "boilerplate_lines": q_boilerplate,
-        "assign_shards": q_assign_shards,
-        "pii_redact": q_pii_redact,
         "embedding_dup_pairs": q_embedding_dup,
-        "text_quality": q_quality,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
         "ann_brute_topk": q_ann_brute,
         "events_daily": q_events_daily,
         "window_topk": q_window_topk,
@@ -1789,15 +1554,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_pairs": q_simhash_pairs,
         "legacy_split": q_legacy_split,
         "dedup_components": q_dedup_components,
-        "bm25_topk": q_bm25_topk,
         "dup_spans": q_dup_spans,
-        "chunk_docs": q_chunk_docs,
         "hll_registers": q_hll_registers,
         "hll_distinct_tokens": q_hll_estimate,
-        "curation_pipeline": q_curation_pipeline,
-        "domain_caps": q_domain_caps,
-        "weighted_sample_docs": q_weighted_sample,
-        "quantile_gate_p90": q_quantile_gate,
         "hll_distinct_by_source": q_hll_by_source,
         "cms_heavy_hitters": q_cms_topk,
         "hist_quantiles": q_hist_quantiles,
@@ -1814,7 +1573,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from osmgraft.operators.curation import weighted_sample_oracle_sql
     from osmgraft.operators.geom import (
         polyline_length_oracle_sql,
         polyline_point_at_oracle_sql,
@@ -1875,11 +1633,6 @@ def oracle_sql() -> dict[str, str]:
     )
 
     tok = "string_split_regex(trim(text), '\\s+')"
-    ltok = "string_split_regex(trim(lower(text)), '\\s+')"
-    bpe = "regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')"
-    en = "len(list_filter({w}, x -> x in ('the','a','of','and','to','in','is','it','that','for')))"
-    de = "len(list_filter({w}, x -> x in ('der','die','das','und','ist','ein','nicht','mit','auf','ich')))"
-    fr = "len(list_filter({w}, x -> x in ('le','la','les','et','un','une','est','que','pour','dans')))"
 
     return {
         "filter_scan": (
@@ -2003,12 +1756,6 @@ def oracle_sql() -> dict[str, str]:
             "(partition by id_a order by c desc, id_b asc) as rk from scored) "
             "select id_a, id_b, round(c, 4) as cosine, rk from ranked where rk <= 3"
         ),
-        "quality_filter": (
-            "select doc_id from documents where "
-            "len(string_split_regex(trim(text), '\\s+')) >= 5 and "
-            "cast(len(regexp_extract_all(text, '[^\\w\\s]')) as double)/length(text) <= 0.2 and "
-            "cast(len(regexp_extract_all(text, '[A-Za-z]')) as double)/length(text) >= 0.5"
-        ),
         "rasterize_density": (
             f"with src as (select lat, lon, least(greatest(lat, -85.05112878), 85.05112878) as lc "
             f"from ({_PTS_SQL}) p), "
@@ -2112,80 +1859,12 @@ def oracle_sql() -> dict[str, str]:
             "select reach.id, edges.dst from reach join edges on edges.src = reach.r) "
             "select id as doc_id, min(r) as component from reach group by id"
         ),
-        # word_shingles_expr replica: distinct 3-grams, whole-doc gram below 3 words
-        "decontaminate_ngrams": (
-            "with d as (select doc_id, text from documents), "
-            f"cw as (select doc_id, {tok} as ws from d where doc_id % 10 != 7), "
-            f"bw as (select {tok} as ws from d where doc_id % 10 = 7), "
-            "cg as (select doc_id, unnest(case when len(ws) >= 3 then "
-            "list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) "
-            "else [array_to_string(ws, ' ')] end) as g from cw), "
-            "bg as (select distinct g from (select unnest(case when len(ws) >= 3 then "
-            "list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) "
-            "else [array_to_string(ws, ' ')] end) as g from bw)) "
-            "select doc_id, cast(count(*) as bigint) as n_shared "
-            "from cg join bg using (g) group by doc_id having count(*) >= 2"
-        ),
-        "repetition_features": (
-            "with d as (select doc_id, text from documents where doc_id < 300), "
-            f"w as (select doc_id, unnest({tok}) as g from d), "
-            "wc as (select doc_id, g, count(*) as c from w group by 1, 2), "
-            "wa as (select doc_id, cast(sum(c) as bigint) as n_words, "
-            "cast(count(*) as bigint) as n_distinct_words, "
-            "cast(max(c) as bigint) as top_word_count from wc group by 1), "
-            f"bl as (select doc_id, {tok} as ws from d), "
-            "b as (select doc_id, unnest([ws[i] || ' ' || ws[i+1] for i in range(1, len(ws))]) as g from bl), "
-            "bc as (select doc_id, g, count(*) as c from b group by 1, 2), "
-            "ba as (select doc_id, cast(sum(c) as bigint) as bt, "
-            "cast(max(c) as bigint) as btop from bc group by 1) "
-            "select wa.doc_id, n_words, n_distinct_words, "
-            "round(n_distinct_words * 1.0 / n_words, 4) as distinct_frac, "
-            "top_word_count, round(top_word_count * 1.0 / n_words, 4) as top_word_frac, "
-            "coalesce(btop, cast(0 as bigint)) as top_bigram_count, "
-            "round(coalesce(btop * 1.0 / bt, 0.0), 4) as top_bigram_frac "
-            "from wa left join ba on wa.doc_id = ba.doc_id"
-        ),
         # bias-rounded symmetric int8 quantization, exact double replay
         "quantize_embeddings": (
             "with a as (select vec_id, cast(embedding as double[]) as v from embeddings), "
             "m as (select vec_id, v, list_max(list_transform(v, x -> abs(x))) as amax from a) "
             "select vec_id, list_transform(v, x -> cast(floor(x * (case when amax > 0 then 127.0 / amax else 0.0 end) + 0.5) as int)) as qvec, "
             "round(case when amax > 0 then 127.0 / amax else 0.0 end, 6) as scale from m"
-        ),
-        # Knuth bucket hash + greedy cumulative-sum shard packing, seed 2
-        "assign_shards": (
-            "with b as (select doc_id, n_chars as n_tokens, "
-            "cast(((doc_id % 2147483648 + 2) * 2654435761) % 8 as int) as bucket from documents), "
-            "c as (select *, sum(n_tokens) over (partition by bucket order by doc_id "
-            "rows between unbounded preceding and current row) as cum from b) "
-            "select doc_id, n_tokens, bucket, "
-            "cast(floor((cum - n_tokens) / 4000.0) as int) as shard_ix from c"
-        ),
-        # 2-word pseudo-lines; corpus-level line df via window; C4 removal
-        "boilerplate_lines": (
-            f"with w as (select doc_id, {tok} as ws from documents), "
-            "lt as (select doc_id, [array_to_string(ws[i*2+1:i*2+2], ' ') "
-            "for i in range(0, cast(ceil(len(ws)/2.0) as int))] as lines from w), "
-            "l as (select doc_id, unnest(list_zip(lines, range(1, len(lines)+1))) as u from lt), "
-            "e as (select doc_id, u[1] as line, u[2] as pos from l), "
-            "c as (select *, count(*) over (partition by line) as df from e) "
-            "select doc_id, string_agg(line, chr(10) order by pos) as text "
-            "from c where df < 12 group by doc_id"
-        ),
-        "pii_redact": (
-            "with d as (select doc_id, text || "
-            "case when doc_id % 7 = 0 then ' reach admin@example.com or 192.168.1.77' else '' end || "
-            "case when doc_id % 11 = 0 then ' dial +1 555 0100 now' else '' end as text "
-            "from documents) "
-            "select doc_id, "
-            "cast(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) as bigint) as n_email, "
-            "cast(len(regexp_extract_all(text, '([0-9]{1,3}\\.){3}[0-9]{1,3}')) as bigint) as n_ipv4, "
-            "cast(len(regexp_extract_all(text, '\\+[0-9][0-9() -]{6,}[0-9]')) as bigint) as n_phone, "
-            "regexp_replace(regexp_replace(regexp_replace(text, "
-            "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<email>', 'g'), "
-            "'([0-9]{1,3}\\.){3}[0-9]{1,3}', '<ipv4>', 'g'), "
-            "'\\+[0-9][0-9() -]{6,}[0-9]', '<phone>', 'g') as text "
-            "from d"
         ),
         "ann_ivf_topk": (
             "with sd(ci, sid) as (values (1,3),(2,17),(3,29),(4,41),(5,53),(6,61),(7,77),(8,89)), "
@@ -2203,46 +1882,6 @@ def oracle_sql() -> dict[str, str]:
             "list_cosine_similarity(b.v, q.qv) desc, c.vec_id asc) as rk "
             "from cand c join base b using (vec_id) join q using (q_id)) "
             "select q_id, vec_id, rk from rer where rk <= 5"
-        ),
-        # Knuth hash replica of sample_hash01(sql_exact=True), seed 5
-        "stratified_sample": (
-            "select doc_id, lang from documents where "
-            "(((doc_id % 2147483648) + 5) * 2654435761 % 4294967296) / 4294967296.0 < "
-            "case lang when 'en' then 0.8 when 'de' then 0.5 when 'fr' then 0.25 else 0.0 end"
-        ),
-        # mix_domains replica: feasible-total rate derivation + seed-9 Knuth hash
-        "mix_domains": (
-            "with t(lang, tgt) as (values ('en', 0.5), ('de', 0.3), ('fr', 0.2)), "
-            "c as (select lang, cast(count(*) as double) as cnt from documents "
-            "where lang in ('en', 'de', 'fr') group by 1), "
-            "f as (select min(cnt / tgt) as feas from c join t using (lang)), "
-            "r as (select lang, least(feas * tgt / cnt, 1.0) as rate from c join t using (lang), f) "
-            "select doc_id, d.lang from documents d join r on d.lang = r.lang where "
-            "(((doc_id % 2147483648) + 9) * 2654435761 % 4294967296) / 4294967296.0 < rate"
-        ),
-        "text_quality": (
-            f"select doc_id, length(text) as n_chars, "
-            f"cast(len({tok}) as bigint) as n_words, "
-            f"cast(len({bpe}) as bigint) as n_tokens, "
-            f"round(cast(length(text) as double)/len({tok}), 4) as avg_word_len, "
-            f"round(cast(len(regexp_extract_all(text, '[^\\w\\s]')) as double)/length(text), 4) as punct_ratio, "
-            f"round(cast(len(regexp_extract_all(text, '[A-Za-z]')) as double)/length(text), 4) as alpha_ratio, "
-            f"round(cast({en.format(w=ltok)} as double)/len({tok}), 4) as stopword_ratio "
-            "from documents"
-        ),
-        "lang_id": (
-            f"select doc_id, cast({en.format(w=ltok)} as bigint) as en_hits, "
-            f"cast({de.format(w=ltok)} as bigint) as de_hits, "
-            f"cast({fr.format(w=ltok)} as bigint) as fr_hits, "
-            f"case when {en.format(w=ltok)} >= {de.format(w=ltok)} and {en.format(w=ltok)} >= {fr.format(w=ltok)} "
-            f"and {en.format(w=ltok)} > 0 then 'en' "
-            f"when {de.format(w=ltok)} >= {fr.format(w=ltok)} and {de.format(w=ltok)} > 0 then 'de' "
-            f"when {fr.format(w=ltok)} > 0 then 'fr' else 'unknown' end as lang_guess "
-            "from documents"
-        ),
-        "fingerprint": (
-            "select doc_id, md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) as fp "
-            "from documents"
         ),
         "ann_brute_topk": (
             "with q as (select embedding as qv from embeddings where vec_id = 7) "
@@ -2443,24 +2082,6 @@ def oracle_sql() -> dict[str, str]:
             "else (case when strlen(res) > strlen(res) // 2 then strlen(res) else 0 end) end / 2.0 "
             "as double) as radius from c2"
         ),
-        # BM25: per-term contributions floored to 1e-9 fixed point in BOTH
-        # engines so the score sum is an order-free int64 sum (see
-        # osmgraft/operators/retrieval.py); arithmetic sub-expressions
-        # mirror the Spark plan literal-for-literal
-        "bm25_topk": (
-            f"with base as (select doc_id, {tok} as w from documents), "
-            "stats as (select count(*) as n_docs, avg(len(w)) as avgdl from base), "
-            "t as (select doc_id, len(w) as dl, unnest(w) as term from base), "
-            "tf as (select doc_id, dl, term, count(*) as tf from t "
-            "where term in ('spark', 'join', 'window') group by doc_id, dl, term), "
-            "dfreq as (select term, count(*) as df from tf group by term) "
-            "select tf.doc_id, count(*) as matched_terms, "
-            "sum(cast(floor(ln((n_docs - df + 0.5)/(df + 0.5) + 1.0) "
-            "* ((tf * (1.2 + 1.0)) / (tf + 1.2 * ((1.0 - 0.75) + 0.75 * dl / avgdl))) "
-            "* 1000000000.0) as bigint)) / 1000000000.0 as score "
-            "from tf join dfreq using (term) cross join stats "
-            "group by tf.doc_id order by score desc, tf.doc_id asc limit 100"
-        ),
         # duplicated 5-gram positions -> per-doc gaps-and-islands merge
         "dup_spans": (
             f"with base as (select doc_id, {tok} as w from documents), "
@@ -2475,40 +2096,6 @@ def oracle_sql() -> dict[str, str]:
             "select doc_id, min(pos) as start_word, cast(max(pos) + 4 as int) as end_word, "
             "cast(max(pos) - min(pos) + 5 as int) as span_words "
             "from hits group by doc_id, pos - rn"
-        ),
-        # the five curation stages as chained CTEs: exact dedup (min id per
-        # md5), quality predicate, 3-gram decontamination, Knuth-hash
-        # sample, overlapping chunking — chunk-for-chunk with Spark
-        "curation_pipeline": (
-            "with corpus as (select doc_id, text from documents where doc_id % 10 != 7 "
-            "union all select doc_id + 1000000 as doc_id, text from documents "
-            "where doc_id % 10 != 7 and doc_id < 300), "
-            "surv as (select doc_id, text from corpus where doc_id in "
-            "(select min(doc_id) from corpus group by md5(text))), "
-            "q as (select doc_id, text from surv where "
-            "len(string_split_regex(trim(text), '\\s+')) >= 5 and "
-            "cast(len(regexp_extract_all(text, '[^\\w\\s]')) as double)/length(text) <= 0.2 and "
-            "cast(len(regexp_extract_all(text, '[A-Za-z]')) as double)/length(text) >= 0.5), "
-            f"cw as (select doc_id, {tok} as ws from q), "
-            f"bw as (select {tok} as ws from documents where doc_id % 10 = 7), "
-            "cg as (select doc_id, unnest(case when len(ws) >= 3 then "
-            "list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) "
-            "else [array_to_string(ws, ' ')] end) as g from cw), "
-            "bg as (select distinct g from (select unnest(case when len(ws) >= 3 then "
-            "list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) "
-            "else [array_to_string(ws, ' ')] end) as g from bw)), "
-            "flag as (select doc_id from cg join bg using (g) "
-            "group by doc_id having count(*) >= 10), "
-            "kept as (select doc_id, text from q where doc_id not in "
-            "(select doc_id from flag)), "
-            "samp as (select doc_id, text from kept where "
-            "(((doc_id % 2147483648) + 5) * 2654435761 % 4294967296) / 4294967296.0 < 0.5), "
-            f"cbase as (select doc_id, {tok} as w from samp), "
-            "ce as (select doc_id, len(w) as n, w, "
-            "unnest(range(0, greatest(len(w) - 10, 1), 30)) as s from cbase) "
-            "select doc_id, cast(s // 30 as int) as chunk_id, cast(s as int) as start_word, "
-            "cast(least(40, n - s) as int) as n_words, "
-            "array_to_string(w[s + 1 : s + 40], ' ') as chunk_text from ce"
         ),
         # HyperLogLog: identical md5-low-64 hash, integer registers, and
         # an order-free DECIMAL harmonic sum (osmgraft/operators/sketch.py)
@@ -2528,80 +2115,6 @@ def oracle_sql() -> dict[str, str]:
             f"select w || '-' || cast(doc_id % 1000 as varchar) as v "
             f"from (select doc_id, unnest({tok}) as w from documents)",
             p=10,
-        ),
-        # chunk starts are multiples of the stride, so chunk_id = start // stride
-        "chunk_docs": (
-            f"with base as (select doc_id, {tok} as w from documents where doc_id < 500), "
-            "e as (select doc_id, len(w) as n, w, "
-            "unnest(range(0, greatest(len(w) - 10, 1), 30)) as s from base) "
-            "select doc_id, cast(s // 30 as int) as chunk_id, cast(s as int) as start_word, "
-            "cast(least(40, n - s) as int) as n_words, "
-            "array_to_string(w[s + 1 : s + 40], ' ') as chunk_text from e"
-        ),
-        # URL canonicalization + registrable domain + per-domain cap,
-        # reimplemented end-to-end in DuckDB string/list functions
-        # (urltools.py is pure Catalyst; this is the independent replica)
-        "domain_caps": (
-            "with d as (select doc_id, source, n_chars from documents "
-            "where doc_id < 1500), "
-            f"u as (select doc_id, n_chars, {_URL_FRAG} as url from d), "
-            "p1 as (select doc_id, n_chars, url, "
-            "lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) as s0, "
-            "regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://(.*)$', 1) as rest "
-            "from u), "
-            "p2 as (select *, case when s0 in ('http','https') then s0 end as scheme, "
-            "split_part(rest, '#', 1) as nofrag from p1), "
-            "p3 as (select *, regexp_extract(nofrag, '^([^/?]*)', 1) as hostport from p2), "
-            "p4 as (select *, lower(split_part(hostport, ':', 1)) as host, "
-            "case when contains(hostport, ':') then "
-            "substr(hostport, length(split_part(hostport, ':', 1)) + 2) else '' end as port, "
-            "substr(nofrag, length(hostport) + 1) as pathq from p3), "
-            "p5 as (select *, split_part(pathq, '?', 1) as path, "
-            "case when contains(pathq, '?') then "
-            "substr(pathq, length(split_part(pathq, '?', 1)) + 2) else '' end as query "
-            "from p4), "
-            "p6 as (select *, list_filter(string_split(query, '&'), "
-            "x -> x <> '' and not starts_with(x, 'utm_') and "
-            "not starts_with(x, 'fbclid') and not starts_with(x, 'gclid')) as kp from p5), "
-            "p7 as (select *, "
-            "case when len(kp) > 0 then '?' || array_to_string(kp, '&') else '' end as qout, "
-            "case when port <> '' and not (scheme = 'http' and port = '80') "
-            "and not (scheme = 'https' and port = '443') "
-            "then ':' || port else '' end as portpart from p6), "
-            "p8 as (select doc_id, n_chars, scheme, host, "
-            "case when scheme is not null and host <> '' then "
-            "scheme || '://' || host || portpart || path || qout end as url_canon, "
-            "string_split(host, '.') as labs from p7), "
-            "p9 as (select doc_id, n_chars, url_canon, "
-            "case when scheme is null or host = '' then null "
-            "when len(labs) <= 1 then host "
-            "when len(labs) >= 3 and (labs[-2] || '.' || labs[-1]) in "
-            "('co.uk','org.uk','ac.uk','gov.uk','com.au','net.au','org.au',"
-            "'co.jp','ne.jp','or.jp','com.br','com.cn','com.mx','co.in','co.kr','co.za') "
-            "then labs[-3] || '.' || labs[-2] || '.' || labs[-1] "
-            "else labs[-2] || '.' || labs[-1] end as domain from p8) "
-            "select doc_id, url_canon, domain, "
-            "cast(row_number() over (partition by domain "
-            "order by n_chars desc, doc_id asc) as int) as domain_rank, "
-            "cast((domain is not null and row_number() over (partition by domain "
-            "order by n_chars desc, doc_id asc) <= 3) as int) as kept from p9"
-        ),
-        # identical md5-derived u and ln(u)/w key -> the very same rows win
-        "weighted_sample_docs": weighted_sample_oracle_sql(
-            "select doc_id, lang, n_chars from documents",
-            k=20,
-            weight_col="n_chars",
-            strata_cols=["lang"],
-            seed=1,
-        ),
-        # sketch threshold + filter: the gate replays as the histogram
-        # quantile SQL joined back as a scalar threshold
-        "quantile_gate_p90": (
-            "select d.doc_id, d.n_chars from documents d, ("
-            + hist_quantiles_oracle_sql(
-                "select n_chars as v from documents", [0.9], lo=0.0, hi=2048.0, nbins=256
-            )
-            + ") t where cast(d.n_chars as double) >= t.value_est"
         ),
         # Count-Min: identical row-salted md5 hash + power-of-two mask +
         # integer sums replay bit-exactly (osmgraft/operators/sketch.py)

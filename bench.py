@@ -230,12 +230,10 @@ def main() -> None:
             verify_threshold=0.5,
         ).count()
         from osmgraft.operators.dedup import dup_spans
-        from osmgraft.operators.retrieval import bm25_topk
 
         dslice = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
             "doc_id", "text"
         ).limit(200)
-        bm25_topk(dslice, ["spark", "join", "window"], k=10).count()
         dup_spans(dslice, n=5).count()
 
     _warmup()
@@ -303,22 +301,6 @@ def main() -> None:
         )
         return connected_components(edges).count()
 
-    def q_decontam():
-        from osmgraft.operators.curation import contaminated_ids
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-        bench_side = d.where(F.col("doc_id") % 10 == 7)
-        corpus = d.where(F.col("doc_id") % 10 != 7)
-        return contaminated_ids(corpus, bench_side, n=3, min_shared=2).count()
-
-    def q_bm25():
-        from osmgraft.operators.retrieval import bm25_topk
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-        # top-k forces scoring of every matching document; the count is 100
-        # but the work is the full corpus tokenize + posting aggregation
-        return bm25_topk(d, ["spark", "join", "window"], k=100).count()
-
     def q_dup_spans():
         from osmgraft.operators.dedup import dup_spans
 
@@ -335,9 +317,6 @@ def main() -> None:
 
     def q_poly_overlap():
         return _entry("poly_overlap_tris")
-
-    def q_weighted_sample():
-        return _entry("weighted_sample_docs")
 
     def q_hist_quantiles_by():
         return _entry("hist_quantiles_by_lang")
@@ -407,13 +386,10 @@ def main() -> None:
         ("classify_global_rank", q_rank),
         ("minhash_lsh_docs", q_minhash),
         ("ann_brute_topk", q_ann),
-        ("decontam_3gram", q_decontam),
         ("cc_chains", q_components),
-        ("bm25_topk", q_bm25),
         ("dup_spans_5gram", q_dup_spans),
         ("tile_pyramid_z12_6", q_tile_pyramid),
         ("poly_overlap_tris", q_poly_overlap),
-        ("weighted_sample_docs", q_weighted_sample),
         ("hist_quantiles_by_lang", q_hist_quantiles_by),
         ("geohash_cells", q_geohash),
         ("idw_surface", q_idw),

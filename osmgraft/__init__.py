@@ -15,7 +15,7 @@ Layout
                    geometry kernel, font metrics, cell encoders.
 - ``operators``  : relational/spatial operators — area assembly, semi-joins,
                    rank, point-in-polygon, kNN dedup, tiling, skew handling,
-                   dedup/similarity/text-analysis extras.
+                   dedup/similarity/sketch extras.
 - ``plans``      : end-to-end pipelines (the reference's ``main``), lineage /
                    checkpoint-resume, statistics.
 - ``streaming``  : incremental ingest variants (Structured Streaming).

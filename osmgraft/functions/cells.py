@@ -12,11 +12,11 @@ environment, so both encoders are implemented from scratch:
   Used for partitioning/bucketing demonstrations and lineage keys.
 
 - **hex grid**: an H3-*like* axial hexagonal grid on the lon/lat plane
-  (pointy-top, cube-rounded), res 0-15, with exact ring(k)/disk(k)
-  neighborhoods. NOT bit-compatible with H3 (documented; the published
-  H3 icosahedral projection is not reproducible cheaply without the
-  library) but provides the same API surface the engine needs: cell
-  assignment for the point-in-polygon join, adaptive res splitting.
+  (pointy-top, cube-rounded), res 0-15. NOT bit-compatible with H3
+  (documented; the published H3 icosahedral projection is not
+  reproducible cheaply without the library) but provides the same API
+  surface the engine needs: cell assignment for the point-in-polygon
+  join, adaptive res splitting.
   Distortion near poles is acknowledged: at |lat| -> 90 a fixed
   degree-sized hex shrinks in ground meters.
 
@@ -250,22 +250,10 @@ def hex_edge_deg(res: int) -> float:
 
 
 def res_for_radius(radius_m: float, min_cos_lat: float = 0.2, probe_k: int = 1) -> int:
-    """Finest hex resolution satisfying the disk(``probe_k``) containment
-    guarantee: any point within ``radius_m`` of a query lies in the
-    3k(k+1)+1-cell disk around the query's cell. Sufficient condition:
-    k * hex inradius (sqrt(3)/2 * edge, in plane degrees) >= the search
-    radius in degrees, where longitude degrees are inflated by 1/cos(lat)
-    up to the supported latitude (induction on k: dilating a cell union by
-    one inradius stays within its one-ring expansion).
-
-    Why probe deeper than disk(1): cell edges are powers of two, so the
-    coarsest-fitting cell can be ~2x oversize and the probed area up to
-    ~4x the search circle ON TOP of the 7/pi disk overhead. Finer cells +
-    a wider probe track the circle better: probed-area factor is
-    (3 + 3/k + 1/k^2) * (rounded-edge inflation)^2, i.e. k=3 cuts true
-    candidate volume ~2-3x for radii that round badly at k=1, at the cost
-    of a 37-cell probe explode (cheap codegen integers vs real pairs
-    through the haversine)."""
+    """Finest hex resolution (15 down to 0) whose cell inradius
+    (sqrt(3)/2 * edge, in plane degrees) times ``probe_k`` is at least
+    ``radius_m`` in degrees, where a longitude degree counts as
+    ``min_cos_lat`` of a latitude degree; 0 when even res 0 is too small."""
     radius_deg = radius_m / (DEG_M * min_cos_lat)
     for res in range(15, -1, -1):
         if 0.866 * hex_edge_deg(res) * probe_k >= radius_deg:
@@ -345,10 +333,3 @@ def disk_offsets(k: int) -> list[tuple[int, int]]:
         for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
             out.append((dq, dr))
     return out
-
-
-def hex_distance(a, b) -> np.ndarray:
-    qa, ra, _ = unpack_hex(a)
-    qb, rb, _ = unpack_hex(b)
-    dq, dr = qa - qb, ra - rb
-    return ((np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2).astype(np.int64)

@@ -1,9 +1,9 @@
 """Polygon-polygon intersects join (spatial overlay candidate engine).
 
 Engine extension (north_rule); absent from the reference (osm_input never
-joins two area sets). A tiling/curation pipeline needs it constantly:
-admin x landuse overlay, polygon dedup between two extract versions,
-conflict detection between editor uploads.
+joins two area sets). It serves admin x landuse overlay, polygon dedup
+between two extract versions and conflict detection between editor
+uploads.
 
 The naive formulation is a cross join with an O(n*m) exact test per pair
 — dead at 10^8 x 10^6 polygons. The scale shape here mirrors the

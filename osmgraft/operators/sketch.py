@@ -469,8 +469,9 @@ def cms_oracle_sql(
 # Fixed-bin histogram quantiles: mergeable, deterministic, SQL-replayable
 # ---------------------------------------------------------------------------
 #
-# The curation rails need corpus-level percentile thresholds (doc length,
-# quality score) without a global sort. A fixed-bin histogram is the
+# The ``hist_quantiles`` and ``hist_quantiles_by_lang`` registry queries
+# take corpus-level percentiles of doc length without a global sort
+# (overall and per language). A fixed-bin histogram is the
 # simplest mergeable quantile sketch: ONE groupBy bounded at nbins rows
 # per partition, merge = sum of bin counts, and — unlike t-digest/KLL —
 # every step is integer-exact, so the result replays bit-identically in

@@ -101,35 +101,6 @@ def geom_refs(docs: DataFrame) -> DataFrame:
 # Arrow-batched blob kernels
 # ---------------------------------------------------------------------------
 
-_POINT_SCHEMA = StructType(
-    [
-        StructField("blob_id", StringType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-    ]
-)
-
-
-def decode_points(blob_rows: DataFrame) -> DataFrame:
-    """blobs(blob_id, payload) with POINT payloads -> (blob_id, lat, lon).
-
-    Fixed-size layout => one frombuffer per Arrow batch (true vectorization);
-    a payload of the wrong length or kind fails the task with a
-    ``ValueError`` naming its blob.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            coords = geoblob.unpack_points(pdf["blob_id"], pdf["payload"])
-            yield pd.DataFrame(
-                {"blob_id": pdf["blob_id"], "lat": coords[:, 0], "lon": coords[:, 1]}
-            )
-
-    return blob_rows.select("blob_id", "payload").mapInPandas(kernel, schema=_POINT_SCHEMA)
-
-
 _NODE_POI_SCHEMA = StructType(
     [
         StructField("osm_id", LongType()),

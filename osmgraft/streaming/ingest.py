@@ -21,6 +21,7 @@ continuously (CLI: ``job.py --streaming [--dedup-docs]``):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -33,7 +34,9 @@ def _duration_ms(text: str) -> int:
     """Driver-side duration parse for the stateful dedup's TTL:
     '24 hours' / '10 minutes' / '30 seconds' / bare milliseconds. Raises
     a ValueError NAMING the accepted forms for anything else ('10s',
-    '2 min', ...) instead of an opaque KeyError inside an executor."""
+    '2 min', ...) and for a duration that is not a finite count of at
+    least 1 ms ('0 hours', '-1 hours', 'inf hours'), instead of an opaque
+    KeyError or ``setTimeoutDuration`` error inside an executor."""
     qty, _, unit = text.partition(" ")
     mult = {
         "": 1, "ms": 1, "milliseconds": 1,
@@ -44,12 +47,16 @@ def _duration_ms(text: str) -> int:
     }
     u = unit.strip().lower()
     try:
-        return int(float(qty) * mult[u])
+        ms = float(qty) * mult[u]
     except (KeyError, ValueError):
+        ms = math.nan
+    if not (math.isfinite(ms) and ms >= 1):
         raise ValueError(
-            f"unsupported duration {text!r}: use '<number> <unit>' with unit "
-            "in ms/seconds/minutes/hours/days (or a bare millisecond count)"
-        ) from None
+            f"unsupported duration {text!r}: use '<number> <unit>' of at least "
+            "1 ms with unit in ms/seconds/minutes/hours/days (or a bare "
+            "millisecond count)"
+        )
+    return int(ms)
 
 
 def stream_documents(spark: SparkSession, path: str, max_files: int = 64) -> DataFrame:

@@ -240,14 +240,21 @@ def test_unpack_points_checks_each_payload():
         geoblob.unpack_points(["ok", "empty"], [a, b""])
 
 
-def test_decode_points_fails_loudly_on_bad_blob(spark):
+def test_decode_node_pois_fails_loudly_on_bad_blob(spark):
     import pytest
 
-    from osmgraft.sources.decode import decode_points
+    from osmgraft.sources.decode import decode_node_pois
 
+    spans = [
+        {"kind": "tag", "text": "place=city", "media_ref": None, "offset": 0},
+        {"kind": "geom", "text": None, "media_ref": "geom://p2", "offset": 1},
+    ]
+    docs = spark.createDataFrame(
+        [("node/2", spans)],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
     blobs = spark.createDataFrame(
-        [("p1", geoblob.pack_point(1.0, 2.0)), ("p2", geoblob.pack_point(3.0, 4.0)[:16])],
-        "blob_id string, payload binary",
-    ).coalesce(1)
+        [("p2", geoblob.pack_point(3.0, 4.0)[:16])], "blob_id string, payload binary"
+    )
     with pytest.raises(Exception, match="blob 'p2': 16 bytes"):
-        decode_points(blobs).collect()
+        decode_node_pois(docs, blobs).collect()

@@ -370,49 +370,6 @@ def test_pairwise_neighbors_blocked(spark, embeddings):
         assert sorted(r["rk"] for r in lst) == [1, 2, 3]
 
 
-# --- textstats -------------------------------------------------------------------
-
-
-def test_quality_features(spark, docs):
-    from osmgraft.operators.textstats import quality_features
-
-    out = quality_features(docs).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    raw = {r["doc_id"]: r["text"] for r in docs.collect()}
-    for did, r in list(by_id.items())[:20]:
-        t = raw[did]
-        assert r["n_chars"] == len(t)
-        assert r["n_words"] == len(t.split())
-        assert 0 <= r["alpha_ratio"] <= 1
-
-
-def test_lang_id_heuristic(spark):
-    from osmgraft.operators.textstats import lang_id
-
-    df = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat and it is a cat"),
-            (2, "der hund und die katze das ist ein tier"),
-            (3, "le chat et la souris dans une maison"),
-            (4, "zzz qqq xxx"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["lang_guess"] for r in lang_id(df).collect()}
-    assert got == {1: "en", 2: "de", 3: "fr", 4: "unknown"}
-
-
-def test_fingerprint_normalization(spark):
-    from osmgraft.operators.textstats import fingerprint
-
-    df = spark.createDataFrame(
-        [(1, "Hello   World"), (2, "hello world"), (3, "other")],
-        "doc_id long, text string",
-    )
-    fp = {r["doc_id"]: r["fp"] for r in fingerprint(df).collect()}
-    assert fp[1] == fp[2] != fp[3]
-
-
 # --- multimodal ------------------------------------------------------------------
 
 

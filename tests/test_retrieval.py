@@ -1,76 +1,14 @@
-"""BM25 retrieval, duplicated-substring spans, context-window chunking."""
+"""Duplicated-substring spans (`osmgraft/operators/dedup.py:dup_spans`)."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
 from pyspark.sql import functions as F
 
-from osmgraft.operators.curation import chunk_docs
 from osmgraft.operators.dedup import dup_spans
-from osmgraft.operators.retrieval import bm25_scores, bm25_topk
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# --- BM25 ---------------------------------------------------------------------
-
-
-def test_bm25_hand_computed(spark):
-    # 3 docs, query {"cat"}: df=2, N=3, dls 2/3/4, avgdl 3
-    d = _docs(
-        spark,
-        [(0, "cat dog"), (1, "cat cat dog"), (2, "fish dog bird whale")],
-    )
-    out = {r["doc_id"]: r for r in bm25_scores(d, ["cat"]).collect()}
-    assert set(out) == {0, 1}
-    k1, b = 1.2, 0.75
-    idf = math.log((3 - 2 + 0.5) / (2 + 0.5) + 1.0)
-
-    def tfn(tf, dl):
-        return tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / 3.0))
-
-    assert out[0]["score"] == pytest.approx(idf * tfn(1, 2), abs=2e-9)
-    assert out[1]["score"] == pytest.approx(idf * tfn(2, 3), abs=2e-9)
-    assert out[0]["matched_terms"] == 1
-
-
-def test_bm25_multi_term_sum_and_topk_order(spark):
-    d = _docs(
-        spark,
-        [
-            (0, "spark join window"),
-            (1, "spark spark spark spark"),
-            (2, "join join other words here"),
-            (3, "nothing relevant at all"),
-        ],
-    )
-    top = bm25_topk(d, ["spark", "join", "window"], k=2).collect()
-    assert len(top) == 2
-    # doc 0 matches all three terms; its summed score must lead
-    assert top[0]["doc_id"] == 0 and top[0]["matched_terms"] == 3
-    assert top[0]["score"] > top[1]["score"]
-    scores = bm25_scores(d, ["spark", "join", "window"])
-    assert scores.where(F.col("doc_id") == 3).count() == 0
-
-
-def test_bm25_rejects_empty_query(spark):
-    d = _docs(spark, [(0, "a b")])
-    with pytest.raises(ValueError):
-        bm25_scores(d, [])
-
-
-def test_bm25_tie_break_is_doc_id(spark):
-    # identical docs => identical quantized scores; k cuts on doc_id asc
-    d = _docs(spark, [(i, "spark lake") for i in range(6)])
-    top = bm25_topk(d, ["spark"], k=3).collect()
-    assert [r["doc_id"] for r in top] == [0, 1, 2]
-
-
-# --- duplicated-substring spans -------------------------------------------------
 
 
 def test_dup_spans_finds_planted_passage(spark):
@@ -156,49 +94,3 @@ def test_dup_spans_xxhash64_variant_same_spans(spark):
     a = sorted(map(tuple, dup_spans(d, n=5, gram_hash="md5").collect()))
     b = sorted(map(tuple, dup_spans(d, n=5, gram_hash="xxhash64").collect()))
     assert a == b and len(a) == 2
-
-
-# --- context-window chunking ----------------------------------------------------
-
-
-def test_chunk_docs_boundaries_and_tail(spark):
-    words = " ".join(f"w{i}" for i in range(25))
-    d = _docs(spark, [(0, words)])
-    out = sorted(
-        chunk_docs(d, chunk_words=10, overlap=3).collect(), key=lambda r: r["chunk_id"]
-    )
-    # stride 7; starts while start < 25-3=22 -> 0,7,14,21
-    assert [(r["chunk_id"], r["start_word"], r["n_words"]) for r in out] == [
-        (0, 0, 10),
-        (1, 7, 10),
-        (2, 14, 10),
-        (3, 21, 4),
-    ]
-    assert out[0]["chunk_text"].split(" ") == [f"w{i}" for i in range(10)]
-    assert out[3]["chunk_text"] == "w21 w22 w23 w24"
-
-
-def test_chunk_docs_short_doc_single_chunk(spark):
-    d = _docs(spark, [(0, "only four words here")])
-    out = chunk_docs(d, chunk_words=10, overlap=3).collect()
-    assert len(out) == 1
-    assert (out[0]["start_word"], out[0]["n_words"]) == (0, 4)
-    assert out[0]["chunk_text"] == "only four words here"
-
-
-def test_chunk_docs_every_word_covered(spark):
-    words = " ".join(f"t{i}" for i in range(53))
-    d = _docs(spark, [(0, words)])
-    out = chunk_docs(d, chunk_words=16, overlap=4).collect()
-    covered = set()
-    for r in out:
-        covered.update(range(r["start_word"], r["start_word"] + r["n_words"]))
-    assert covered == set(range(53))
-
-
-def test_chunk_docs_validates_overlap(spark):
-    d = _docs(spark, [(0, "a b c")])
-    with pytest.raises(ValueError):
-        chunk_docs(d, chunk_words=10, overlap=10)
-    with pytest.raises(ValueError):
-        chunk_docs(d, chunk_words=10, overlap=-1)

@@ -171,6 +171,6 @@ def test_duration_ms_accepted_and_rejected_forms():
     assert _duration_ms("30 seconds") == 30_000
     assert _duration_ms("1.5 hours") == 5_400_000
     assert _duration_ms("1500") == 1500
-    for bad in ("10s", "2 min", ""):
+    for bad in ("10s", "2 min", "", "0 hours", "-1 hours", "0.0001 seconds", "inf hours"):
         with pytest.raises(ValueError, match="ms/seconds/minutes/hours/days"):
             _duration_ms(bad)

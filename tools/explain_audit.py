@@ -231,20 +231,6 @@ def main() -> None:
     ]
     sections.append(("L7 legacy split — one narrow codegen-free JVM projection", p11, notes11))
 
-    # 12. lang_id — one regex-split pass per row (materialized in a lower
-    # projection; Catalyst does not dedupe HOF subtrees across aliases)
-    from osmgraft.operators.textstats import lang_id
-
-    q12 = lang_id(d)
-    p12 = plan_of(q12)
-    n_splits = len(re.findall(r"split\(trim\(lower", p12))
-    notes12 = [
-        f"regex split appears ONCE in the plan (shared lower projection): {n_splits == 1} ({n_splits})",
-        f"no Python operators: {'Python' not in p12}",
-        f"no shuffle: {'Exchange' not in p12}",
-    ]
-    sections.append(("lang_id — single split pass, shared across counters", p12, notes12))
-
     # 13. partitioned PIP — adaptive ring covering: bounded cells/polygon,
     # one equi-join, no cartesian fallback
     from osmgraft.operators.pip import pip_join
@@ -278,37 +264,6 @@ def main() -> None:
         f"{'Cartesian' not in p13b and 'BroadcastNestedLoopJoin' not in p13b}",
     ]
     sections.append(("partitioned PIP — adaptive ring covering equi-join", p13, notes13))
-
-    # 14. decontamination — bench grams broadcast, corpus side narrow until
-    # the per-doc count; sampling — pure narrow filter, zero exchange
-    from osmgraft.operators.curation import contaminated_ids, stratified_sample
-
-    bench_side = d.where(F.col("doc_id") % 10 == 7)
-    corpus = d.where(F.col("doc_id") % 10 != 7)
-    q14 = contaminated_ids(corpus, bench_side, n=3, min_shared=2)
-    p14 = plan_of(q14)
-    # formatted explain prints the operator line bare ("(4) Exchange") with
-    # partitioning in the details block — count operator lines
-    n_wide14 = len(re.findall(r"\(\d+\) Exchange\b", p14))
-    notes14 = [
-        f"bench gram set broadcast (no corpus-side gram shuffle): "
-        f"{'BroadcastHashJoin' in p14 or 'BroadcastExchange' in p14}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p14 and 'BroadcastNestedLoopJoin' not in p14}",
-        f"corpus-side wide exchanges (per-doc hit count + bench-gram dedup "
-        f"only): {n_wide14} (<= 3)",
-        f"no Python operators (grams are Catalyst zip_with): {'Python' not in p14}",
-    ]
-    sections.append(("decontamination — broadcast eval grams, narrow corpus scan", p14, notes14))
-
-    d15 = d.withColumn("stratum", F.pmod(F.col("doc_id"), F.lit(3)).cast("string"))
-    q15 = stratified_sample(d15, {"0": 0.5, "1": 0.25}, strata_col="stratum", id_col="doc_id")
-    p15 = plan_of(q15)
-    notes15 = [
-        f"zero exchange (pure filter over the scan): {'Exchange' not in p15}",
-        f"whole-stage codegen: {'codegen id' in p15}",
-        f"no Python operators: {'Python' not in p15}",
-    ]
-    sections.append(("deterministic stratified sampling — narrow codegen filter", p15, notes15))
 
     # 16. IVF ANN — narrow assignment, nprobe-cell equi-join, no cartesian
     from osmgraft.operators.simsearch import ivf_topk
@@ -352,35 +307,6 @@ def main() -> None:
         ("connected components — one large-star/small-star round", p17, notes17)
     )
 
-    # 18. BM25 — posting filter BEFORE any exchange, idf/stats broadcast
-    from osmgraft.operators.retrieval import bm25_topk
-
-    # materialize_postings=False exposes the full lineage: the default
-    # lazily checkpoints the aggregated tf frame (the plan then shows a
-    # Scan ExistingRDD), which is what caps corpus scans at two
-    q18 = bm25_topk(
-        d.select("doc_id", "text"),
-        ["spark", "join", "window"],
-        k=100,
-        materialize_postings=False,
-    )
-    p18 = plan_of(q18)
-    n_bcast18 = p18.count("BroadcastExchange")
-    # the query-term IN filter must sit in the scan stage, i.e. its detail
-    # node precedes the first shuffle's hashpartitioning detail (node
-    # numbering follows the plan tree bottom-up)
-    first_ex = p18.find("Arguments: hashpartitioning")
-    filt_pos = p18.find("IN (spark,join,window)")
-    notes18 = [
-        f"df + corpus-stats sides broadcast: {n_bcast18 >= 2} ({n_bcast18} BroadcastExchange)",
-        f"query-term posting filter precedes the first shuffle: "
-        f"{0 <= filt_pos < first_ex if first_ex != -1 else False}",
-        f"top-k is TakeOrdered, not a global sort: {'TakeOrderedAndProject' in p18}",
-        f"no Python operators: {'Python' not in p18}",
-        f"map-side partial tf aggregation: {'partial_count' in p18 or 'partial' in p18}",
-    ]
-    sections.append(("BM25 top-k — filtered postings, broadcast idf", p18, notes18))
-
     # 19. duplicated-substring spans — one gram-hash shuffle, per-doc window
     from osmgraft.operators.dedup import dup_spans
 
@@ -421,43 +347,7 @@ def main() -> None:
     ]
     sections.append(("HyperLogLog registers — one 2^p-row exchange", p20, notes20))
 
-    # 21. composed curation pipeline — narrow stages fused around the
-    # dedup/decontam shuffles, bench grams broadcast
-    from osmgraft.operators.curation import curation_pipeline
-
-    corpus21 = d.select("doc_id", "text").where(F.col("doc_id") % 10 != 7)
-    bench21 = d.select("doc_id", "text").where(F.col("doc_id") % 10 == 7)
-    q21 = curation_pipeline(corpus21, bench21, decontam_min_shared=10, sql_exact=True)
-    p21 = plan_of(q21)
-    notes21 = [
-        f"benchmark gram set broadcast (no corpus-side gram shuffle): "
-        f"{'BroadcastExchange' in p21}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p21 and 'BroadcastNestedLoopJoin' not in p21}",
-        f"sample + quality predicates and chunking stay narrow (no Python): "
-        f"{'Python' not in p21}",
-        f"no single-partition stage: {'SinglePartition' not in p21}",
-    ]
-    sections.append(
-        ("curation pipeline — five stages, two real shuffles", p21, notes21)
-    )
-
-    # 22. domain caps — URL canonicalize/domain ride the scan; the only
-    # exchange is the per-domain rank window
     import __spark_entry__ as entry_mod
-
-    q22 = entry_mod.queries()["domain_caps"](spark, SF)
-    p22 = plan_of(q22)
-    notes22 = [
-        f"canonicalize + domain are pure Catalyst (no Python): {'Python' not in p22}",
-        f"exactly one exchange (the domain window): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p22)) == 1 and 'hashpartitioning(domain#' in p22}",
-        f"scan pruned to (doc_id, source, n_chars) — text never read: "
-        f"{'text:string' not in p22}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p22 and 'BroadcastNestedLoopJoin' not in p22}",
-    ]
-    sections.append(
-        ("domain caps — URL curation rail, one window exchange", p22, notes22)
-    )
 
     # 24. Count-Min table — one exchange whose input is bounded at d*w
     # rows per map partition (partial_sum combine), pure Catalyst hashing
@@ -544,21 +434,6 @@ def main() -> None:
     ]
     sections.append(
         ("zonal stats — broadcast PIP join + single algebraic rollup", p30, notes30)
-    )
-
-    # 31. weighted sampling — the ES key is a narrow codegen expression;
-    # selection is ONE per-stratum window exchange, no Python
-    q31 = entry_mod.queries()["weighted_sample_docs"](spark, SF)
-    p31 = plan_of(q31)
-    notes31 = [
-        f"exactly one exchange (the stratum window): "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p31)) == 1}",
-        f"pure Catalyst (no Python): {'Python' not in p31}",
-        f"scan pruned — text never read: {'text' not in p31}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p31 and 'BroadcastNestedLoopJoin' not in p31}",
-    ]
-    sections.append(
-        ("weighted sampling — codegen ES key, one stratum window", p31, notes31)
     )
 
     # 32. grouped histogram quantiles — both windows and the rank groupBy
