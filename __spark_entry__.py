@@ -8,7 +8,7 @@ table; the generator is seed-fixed, SURVEY.md §7.1).
 ``queries``/``oracle_sql`` cover every operator class from SURVEY.md §2:
 SQL-expressible operators run over the driver's sf tables and are
 value-checked against DuckDB; engine-native operators (span decode,
-polygon assembly, label UDF, cell encode, LSH) are included as rows-only
+polygon assembly, label kernel, cell encode, LSH) are included as rows-only
 checks (documented — no ANSI-SQL equivalent exists for them).
 
 Float-producing oracled queries round to >=4 decimals on BOTH sides so

@@ -310,26 +310,3 @@ def hex_cell_udf(res: int):
 
     return _enc
 
-
-def ring_offsets(k: int) -> list[tuple[int, int]]:
-    """Axial (dq, dr) offsets of the ring at exactly distance k (6k cells)."""
-    if k == 0:
-        return [(0, 0)]
-    dirs = [(1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1)]
-    q, r = -k, k  # start at direction 4 scaled by k
-    out = []
-    for d in range(6):
-        for _ in range(k):
-            out.append((q, r))
-            q += dirs[d][0]
-            r += dirs[d][1]
-    return out
-
-
-def disk_offsets(k: int) -> list[tuple[int, int]]:
-    """All offsets within hex distance k (3k(k+1)+1 cells)."""
-    out = []
-    for dq in range(-k, k + 1):
-        for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1):
-            out.append((dq, dr))
-    return out

@@ -5,10 +5,12 @@ Faithful re-implementation of the reference label kernel
 (the reference round-trips UTF-8 <-> UTF-32, utf8helper.cpp:57-121; Python
 strings are already codepoint sequences).
 
-Executed as an Arrow-vectorized pandas UDF: batches arrive as Arrow
-buffers; the per-string control flow is irregular (median scan, delimiter
-search) exactly as in the reference, but strings are short (labels), so the
-per-batch Python cost is bounded and there is NO per-row serialization.
+Executed over Arrow batches (``label_balls``): inside the pipeline's fused
+point and area kernels (plans/pipeline.py), or as the pandas UDF
+``label_ball_udf``. The per-string control flow is irregular (median scan,
+delimiter search) exactly as in the reference, but strings are short
+(labels), so the per-batch Python cost is bounded and there is NO per-row
+serialization.
 
 Semantics notes (all pinned by tests):
 - ``replaceAllOf`` replaces only the FIRST occurrence of each form
@@ -317,6 +319,33 @@ _BALL_SCHEMA = StructType(
 )
 
 
+def label_balls(
+    names: Iterable,
+    icons: Iterable,
+    factors: Iterable,
+    split_bound: int,
+    split_chars: frozenset[str],
+    metrics: FontMetrics = DEFAULT_METRICS,
+) -> tuple[list[str], list[float]]:
+    """compute_label_ball over a batch of (name, icon, factor) columns ->
+    (labels, radii). A null name or icon counts as ''. The one label loop
+    of the UDF below and of the pipeline's fused label kernels."""
+    labels: list[str] = []
+    radii: list[float] = []
+    for n, ic, fa in zip(names, icons, factors):
+        lb, r = compute_label_ball(
+            n if isinstance(n, str) else "",
+            ic if isinstance(ic, str) else "",
+            int(fa),
+            split_bound,
+            split_chars,
+            metrics,
+        )
+        labels.append(lb)
+        radii.append(r)
+    return labels, radii
+
+
 def label_ball_udf(split_bound: int, split_chars: frozenset[str], metrics: FontMetrics = DEFAULT_METRICS):
     """Arrow-batched (name, icon, factor) -> struct(label, radius).
 
@@ -327,19 +356,9 @@ def label_ball_udf(split_bound: int, split_chars: frozenset[str], metrics: FontM
 
     @F.pandas_udf(_BALL_SCHEMA)
     def _ball(name: pd.Series, icon: pd.Series, factor: pd.Series) -> pd.DataFrame:
-        labels: list[str] = []
-        radii: list[float] = []
-        for n, ic, fa in zip(name.to_numpy(), icon.to_numpy(), factor.to_numpy()):
-            lb, r = compute_label_ball(
-                n if isinstance(n, str) else "",
-                ic if isinstance(ic, str) else "",
-                int(fa),
-                split_bound,
-                chars,
-                metrics,
-            )
-            labels.append(lb)
-            radii.append(r)
+        labels, radii = label_balls(
+            name.to_numpy(), icon.to_numpy(), factor.to_numpy(), split_bound, chars, metrics
+        )
         return pd.DataFrame({"label": labels, "radius": radii})
 
     return _ball

@@ -19,6 +19,8 @@ reproduce the reference binary exactly; both behaviors are pinned by tests.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -129,7 +131,11 @@ _AREA_OUT = StructType(
 )
 
 
-def _finalize_batches(literal_bugs: bool, passthrough: tuple[str, ...] = ()):
+def _finalize_batches(
+    literal_bugs: bool,
+    passthrough: tuple[str, ...] = (),
+    finish: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
+):
     """Batched A1+A2 kernel over packed (rel_id, mem) rows — thousands of
     relations per Arrow batch, plain-Python inner loop bounded by P8.
     (A ``groupBy().applyInPandas`` builds one pandas frame per relation,
@@ -138,8 +144,8 @@ def _finalize_batches(literal_bugs: bool, passthrough: tuple[str, ...] = ()):
     ``passthrough`` columns (e.g. the tags map) ride through the kernel for
     surviving rows, so relation metadata needs NO re-join after assembly —
     a re-join would re-execute the whole member-join subtree a second time
-    (ReuseExchange does not fire across the differing projections)."""
-    from collections.abc import Iterator
+    (ReuseExchange does not fire across the differing projections).
+    ``finish`` maps each batch's surviving rows in the same worker."""
 
     def finalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -171,20 +177,25 @@ def _finalize_batches(literal_bugs: bool, passthrough: tuple[str, ...] = ()):
                 out_keep.append(row_i)
             out = {"rel_id": out_rel, "lat": out_lat, "lon": out_lon}
             for c in passthrough:
-                vals = pdf[c]
-                out[c] = [vals.iloc[i] for i in out_keep]
-            yield pd.DataFrame(out)
+                out[c] = pdf[c].to_numpy()[out_keep]
+            yield finish(pd.DataFrame(out)) if finish else pd.DataFrame(out)
 
     return finalize
 
 
 def packed_area_centroids(
-    rel_packed: DataFrame, literal_bugs: bool = False, passthrough: tuple[str, ...] = ()
+    rel_packed: DataFrame,
+    literal_bugs: bool = False,
+    passthrough: tuple[str, ...] = (),
+    finish: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """(rel_id, lat, lon[, passthrough...]) straight from the decode stage's
     packed relations (rel_id, mem, has_missing, tags) — zero extra
     shuffles: P9 and P8 are Catalyst filters on the packed row, assembly is
-    one narrow Arrow pass, and metadata columns ride through the kernel."""
+    one narrow Arrow pass, and metadata columns ride through the kernel.
+    ``finish`` (a pandas frame -> frame map, output ``schema``) turns each
+    batch of those rows into its own output inside the same kernel."""
     outer_refs = F.aggregate(
         F.filter(F.col("mem"), lambda m: m["role"] == F.lit(0)),
         F.lit(0),
@@ -195,10 +206,9 @@ def packed_area_centroids(
         .where(outer_refs.between(1, MAX_OUTER_NODE_REFS))  # P8 (:226-235)
         .select("rel_id", "mem", *passthrough)
     )
-    schema = StructType(
-        _AREA_OUT.fields + [rel_packed.schema[c] for c in passthrough]
-    )
-    return src.mapInPandas(_finalize_batches(literal_bugs, passthrough), schema=schema)
+    if finish is None:
+        schema = StructType(_AREA_OUT.fields + [rel_packed.schema[c] for c in passthrough])
+    return src.mapInPandas(_finalize_batches(literal_bugs, passthrough, finish), schema=schema)
 
 
 def area_pois(packed: DataFrame, literal_bugs: bool = False) -> DataFrame:

@@ -4,14 +4,22 @@ admin-polygon frames.
 The graft analogue of the reference's PBF scans S1-S4
 (/root/reference/src/input/osminputhelper.cpp:516-584, 277-359, 373-414,
 428-466). Tag extraction stays ENTIRELY in Catalyst (array filter/transform
-+ ``map_from_entries`` — whole-stage codegen, pushdown-friendly); only the
-opaque geometry payloads cross into Python, as Arrow-batched kernels:
++ ``map_from_entries`` — whole-stage codegen, pushdown-friendly). The
+geometry payloads cross into Python as Arrow-batched kernels:
 
-- point blobs: fixed 17-byte layout, checked and decoded with one
-  ``np.frombuffer`` per batch (``geoblob.unpack_points``; no per-row
-  parsing);
-- segment blobs: variable length, decoded per blob with numpy views
-  (bounded by the synth segment sizes; only ~10%% of documents are areas).
+- point blobs (``decode_point_rows``): fixed 17-byte layout, checked and
+  decoded with one ``np.frombuffer`` per batch (``geoblob.unpack_points``;
+  no per-row parsing). The label pipeline (``plans.pipeline.label_rows``)
+  admits node docs on their tags in Catalyst first, so only admitted rows
+  join the blobs and enter the kernel, without ``tags``; a truncated or
+  foreign blob that only a non-admitted node references is never decoded
+  and does not fail the job. ``decode_node_pois`` decodes every node doc
+  and carries ``tags`` through the kernel, for callers that classify
+  afterwards;
+- segment blobs (``decode_segments``): variable length, decoded per blob
+  with numpy views (bounded by the synth segment sizes; only ~10%% of
+  documents are areas). Only blobs that relation or admin docs reference
+  are decoded.
 
 Doc-kind routing uses the ``doc_id`` prefix (``node/ rel/ admin/``), a
 plain string predicate the optimizer can push into the scan.
@@ -19,7 +27,7 @@ plain string predicate the optimizer can push into the scan.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
@@ -111,14 +119,9 @@ _NODE_POI_SCHEMA = StructType(
 )
 
 
-def decode_node_pois(
-    node_docs: DataFrame, blobs: DataFrame, literal_names: bool = False
-) -> DataFrame:
-    """Single-shuffle node-POI decode: (tags + first geom ref) extracted in
-    one Catalyst pass over the docs, ONE equi-join with the blobs table,
-    then a narrow Arrow kernel unpacks the fixed-size point payloads while
-    tags ride through the batch. (The previous shape used three shuffles:
-    a blobs semi-join, a refs-points join, and a tags re-join.)
+def node_doc_rows(node_docs: DataFrame, literal_names: bool = False) -> DataFrame:
+    """(osm_id, tags, blob_id[, _name_lit]) from node docs in one Catalyst
+    pass; no blob is touched.
 
     ``literal_names=True`` additionally computes the reference binary's
     order-dependent get_name result (``_name_lit``) from the ordered tag
@@ -134,29 +137,48 @@ def decode_node_pois(
     ]
     if literal_names:
         cols.append(import_name_literal_expr(tag_entries_expr()).alias("_name_lit"))
-    base = node_docs.select(*cols)
-    keep = ["osm_id", "tags"] + (["_name_lit"] if literal_names else [])
-    joined = base.join(blobs, "blob_id").select(*keep, "blob_id", "payload")
+    return node_docs.select(*cols)
+
+
+def decode_point_rows(
+    rows: DataFrame,
+    blobs: DataFrame,
+    schema: StructType,
+    finish: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
+) -> DataFrame:
+    """ONE equi-join of ``rows`` (any columns plus ``blob_id``) with the
+    blobs table, then one narrow Arrow kernel: the fixed-size point
+    payloads are checked and unpacked per batch, ``blob_id``/``payload``
+    are replaced by ``lat``/``lon``, and ``finish`` (default: select the
+    ``schema`` columns) maps the batch to ``schema`` in the same worker."""
+    joined = rows.join(blobs.select("blob_id", "payload"), "blob_id")
+    names = schema.fieldNames()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             coords = geoblob.unpack_points(pdf["blob_id"], pdf["payload"])
-            out = {
-                "osm_id": pdf["osm_id"],
-                "lat": coords[:, 0],
-                "lon": coords[:, 1],
-                "tags": pdf["tags"],
-            }
-            if "_name_lit" in pdf.columns:
-                out["_name_lit"] = pdf["_name_lit"]
-            yield pd.DataFrame(out)
+            pdf = pdf.drop(columns=["blob_id", "payload"]).assign(
+                lat=coords[:, 0], lon=coords[:, 1]
+            )
+            yield finish(pdf) if finish else pdf[names]
 
+    return joined.mapInPandas(kernel, schema=schema)
+
+
+def decode_node_pois(
+    node_docs: DataFrame, blobs: DataFrame, literal_names: bool = False
+) -> DataFrame:
+    """Every node doc -> (osm_id, lat, lon, tags[, _name_lit]): tags and
+    the first geom ref in one Catalyst pass, one blob join, and the point
+    kernel with the tags riding through the batch. The label pipeline
+    admits node docs on their tags first and decodes only those
+    (``plans.pipeline.label_rows``)."""
     schema = _NODE_POI_SCHEMA
     if literal_names:
         schema = StructType(_NODE_POI_SCHEMA.fields + [StructField("_name_lit", StringType())])
-    return joined.mapInPandas(kernel, schema=schema)
+    return decode_point_rows(node_doc_rows(node_docs, literal_names), blobs, schema)
 
 
 _SEGMENT_SCHEMA = StructType(
@@ -207,23 +229,12 @@ class DecodedFrames:
     rel_packed: DataFrame
 
 
-def decode_documents(
-    docs: DataFrame, blobs: DataFrame, literal_names: bool = False
-) -> DecodedFrames:
-    """Full decode. Blob decodes are demand-driven: only blobs referenced by
-    surviving documents are read (left-semi join = the reference's
-    requested-id passes J1/J2, osminputhelper.cpp:604-631).
-
-    ``literal_names=True`` carries the order-dependent literal import-name
-    (``_name_lit``) on node_pois and rel_packed for the fidelity mode."""
-    node_docs = docs.where(F.col("doc_id").startswith("node/"))
-    rel_docs = docs.where(F.col("doc_id").startswith("rel/"))
-    admin_docs = docs.where(F.col("doc_id").startswith("admin/"))
-
-    # --- node POIs (single-shuffle path) --------------------------------
-    node_pois = decode_node_pois(node_docs, blobs, literal_names=literal_names)
-
-    # --- packed relations ------------------------------------------------
+def decode_relations(
+    rel_docs: DataFrame, blobs: DataFrame, literal_names: bool = False
+) -> DataFrame:
+    """Relation docs -> packed relations (rel_id, mem, has_missing, tags
+    [, _name_lit]): the segment decode, member resolution and ONE rel_id
+    exchange. Only blobs referenced by relation docs are decoded."""
     rel_refs = geom_refs(rel_docs).withColumn(
         "rel_id", F.split_part(F.col("doc_id"), F.lit("/"), F.lit(2)).cast("long")
     )
@@ -268,8 +279,24 @@ def decode_documents(
         from osmgraft.functions.names import import_name_literal_expr
 
         rel_tag_cols.append(import_name_literal_expr(tag_entries_expr()).alias("_name_lit"))
-    rel_tags = rel_docs.select(*rel_tag_cols)
-    rel_packed = rel_grouped.join(rel_tags, "rel_id")
+    return rel_grouped.join(rel_docs.select(*rel_tag_cols), "rel_id")
+
+
+def decode_documents(
+    docs: DataFrame, blobs: DataFrame, literal_names: bool = False
+) -> DecodedFrames:
+    """Full decode. Blob decodes are demand-driven: only blobs referenced by
+    surviving documents are read (left-semi join = the reference's
+    requested-id passes J1/J2, osminputhelper.cpp:604-631).
+
+    ``literal_names=True`` carries the order-dependent literal import-name
+    (``_name_lit``) on node_pois and rel_packed for the fidelity mode."""
+    node_docs = docs.where(F.col("doc_id").startswith("node/"))
+    rel_docs = docs.where(F.col("doc_id").startswith("rel/"))
+    admin_docs = docs.where(F.col("doc_id").startswith("admin/"))
+
+    node_pois = decode_node_pois(node_docs, blobs, literal_names=literal_names)
+    rel_packed = decode_relations(rel_docs, blobs, literal_names=literal_names)
 
     # --- admin polygons --------------------------------------------------
     admin_refs = geom_refs(admin_docs)

@@ -240,21 +240,66 @@ def test_unpack_points_checks_each_payload():
         geoblob.unpack_points(["ok", "empty"], [a, b""])
 
 
+def _node_docs(spark, nodes):
+    """One node doc per (osm_id, tag texts, blob_id)."""
+    rows = []
+    for osm_id, tags, blob_id in nodes:
+        spans = [
+            {"kind": "tag", "text": t, "media_ref": None, "offset": i} for i, t in enumerate(tags)
+        ]
+        spans.append({"kind": "geom", "text": None, "media_ref": f"geom://{blob_id}", "offset": len(tags)})
+        rows.append((f"node/{osm_id}", spans))
+    return spark.createDataFrame(
+        rows,
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+
+
 def test_decode_node_pois_fails_loudly_on_bad_blob(spark):
     import pytest
 
     from osmgraft.sources.decode import decode_node_pois
 
-    spans = [
-        {"kind": "tag", "text": "place=city", "media_ref": None, "offset": 0},
-        {"kind": "geom", "text": None, "media_ref": "geom://p2", "offset": 1},
-    ]
-    docs = spark.createDataFrame(
-        [("node/2", spans)],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
+    docs = _node_docs(spark, [(2, ["place=city"], "p2")])
     blobs = spark.createDataFrame(
         [("p2", geoblob.pack_point(3.0, 4.0)[:16])], "blob_id string, payload binary"
     )
     with pytest.raises(Exception, match="blob 'p2': 16 bytes"):
         decode_node_pois(docs, blobs).collect()
+
+
+def test_label_pipeline_fails_loudly_on_bad_admitted_blob(spark):
+    """The fused point + label kernel keeps unpack_points' length check."""
+    import pytest
+
+    from osmgraft.plans.pipeline import label_pipeline
+
+    docs = _node_docs(spark, [(2, ["place=city", "name=Ort"], "p2")])
+    blobs = spark.createDataFrame(
+        [("p2", geoblob.pack_point(3.0, 4.0)[:16])], "blob_id string, payload binary"
+    )
+    with pytest.raises(Exception, match="blob 'p2': 16 bytes"):
+        label_pipeline(spark, docs, blobs).collect()
+
+
+def test_label_pipeline_never_decodes_blobs_of_unadmitted_nodes(spark):
+    """Admission runs on the tags before the blob join: a truncated blob
+    that only non-admitted nodes reference (one fails the P1 filter, one
+    has no level) is never decoded and does not fail the job."""
+    from osmgraft.plans.pipeline import label_pipeline
+
+    docs = _node_docs(
+        spark,
+        [
+            (2, ["place=city", "name=Ort"], "p2"),
+            (3, ["shop=bakery", "name=Laden"], "p3"),
+            (4, ["amenity=bench", "name=Bank"], "p4"),
+        ],
+    )
+    bad = geoblob.pack_point(5.0, 6.0)[:16]
+    blobs = spark.createDataFrame(
+        [("p2", geoblob.pack_point(3.0, 4.0)), ("p3", bad), ("p4", bad)],
+        "blob_id string, payload binary",
+    )
+    out = label_pipeline(spark, docs, blobs).collect()
+    assert [(r["osm_id"], r["lat"], r["lon"], r["label"]) for r in out] == [(2, 3.0, 4.0, "Ort")]

@@ -8,11 +8,12 @@ documents — every Spark output row must match it exactly.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from osmgraft.functions.classify import levels_rows, py_filter, py_level
 from osmgraft.functions.labels import compute_label_ball
 from osmgraft.operators.areas import assemble_polygon, centroid_of_rings
-from osmgraft.plans.pipeline import label_pipeline
+from osmgraft.plans.pipeline import label_pipeline, label_rows
 from osmgraft.sources import geoblob
 from osmgraft.sources.config import default_config
 from osmgraft.sources.synth import SynthParams, _cluster_centers, _make
@@ -202,3 +203,76 @@ def test_pipeline_sql_oracle_matches_engine(spark, tmp_path):
     assert len(got) == len(want) > 300
     mism = {k: (got[k], want.get(k)) for k in got if got[k] != want.get(k)}
     assert not mism, dict(list(mism.items())[:3])
+
+
+def _python_operators(df):
+    """(name, input column names) of each Python operator in ``df``'s
+    optimized plan; a cached input is a leaf."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    ops, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = seq(node.children())
+        if node.nodeName() in ("MapInPandas", "ArrowEvalPython"):
+            ops.append((node.nodeName(), {a.name() for k in kids for a in seq(k.output())}))
+        stack.extend(kids)
+    return ops
+
+
+@pytest.mark.parametrize("literal_bugs", [False, True])
+def test_label_rows_plans_three_python_operators(spark, synth_small, literal_bugs):
+    """Point + label kernel, segment decode, area + label kernel — and
+    the tags map (or the literal name) reaches none of them."""
+    docs, blobs, _ = synth_small
+    ops = _python_operators(label_rows(spark, docs, blobs, CFG, literal_bugs=literal_bugs))
+    assert len(ops) == 3, ops
+    for name, cols in ops:
+        assert not cols & {"tags", "_name_lit"}, (name, cols)
+
+
+def test_literal_mode_pipeline_equals_composed_blocks(spark, synth_small):
+    """literal_bugs=True through the fused kernels equals the kept blocks
+    composed by hand: decode_documents(literal_names=True) ->
+    admitted_node_pois / admitted_area_pois (extract_pois) ->
+    attach_label_ball on the literal label source -> global_rank."""
+    from osmgraft.functions.labels import attach_label_ball
+    from osmgraft.functions.names import label_name_literal_expr, population_expr
+    from osmgraft.operators.rank import global_rank
+    from osmgraft.plans.pipeline import extract_pois
+    from osmgraft.sources.decode import decode_documents
+
+    docs, blobs, _ = synth_small
+    cols = ["lat", "lon", "level_id", "rank", "radius", "osm_id", "label", "factor"]
+    pois = extract_pois(spark, docs, blobs, CFG, literal_bugs=True)
+    labeled = attach_label_ball(
+        pois.withColumn("population", population_expr(F.col("tags"))).withColumn(
+            "label_src", label_name_literal_expr(F.col("tags"))
+        ),
+        CFG,
+        name_col="label_src",
+    )
+    slim = labeled.select(
+        "lat", "lon", "level_id", "population", "osm_id", "label", "radius",
+        F.col("factor").cast("double").alias("factor"),
+    )
+    composed = global_rank(slim).select(*cols)
+    fused = label_pipeline(spark, docs, blobs, CFG, literal_bugs=True)
+    # nullability too: stage lineage rewrites a chunk whose schema differs
+    assert fused.schema == composed.schema
+    want = sorted(tuple(r) for r in composed.collect())
+    got = sorted(tuple(r) for r in fused.collect())
+    assert got == want and len(got) > 100
+
+    # the reference's assembly bails on every relation with several outer
+    # segments; the intended mode keeps some of them
+    outer = F.filter("mem", lambda m: m["role"] == geoblob.ROLE_OUTER)
+    multi = {
+        r["rel_id"]
+        for r in decode_documents(docs, blobs).rel_packed.where(F.size(outer) > 1).collect()
+    }
+    intended = {r["osm_id"] for r in label_pipeline(spark, docs, blobs, CFG).collect()}
+    assert multi & intended
+    assert not multi & {r[cols.index("osm_id")] for r in got}

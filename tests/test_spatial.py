@@ -166,13 +166,6 @@ def test_hex_roundtrip_center():
         assert np.all(np.abs(clat - lats) < 2.2 * cells.hex_edge_deg(res))
 
 
-def test_hex_ring_sizes():
-    assert len(cells.ring_offsets(0)) == 1
-    assert len(cells.ring_offsets(1)) == 6
-    assert len(cells.ring_offsets(3)) == 18
-    assert len(cells.disk_offsets(2)) == 19
-
-
 def test_hex_neighbors_contain_nearby(spark):
     # any point within the inradius guard is inside disk(1) of the cell,
     # as enumerated by the offsets the PIP boundary covering applies

@@ -4,6 +4,8 @@ operator plans and greps them for the properties the engine promises:
 - parquet scans show PushedFilters / pruned ReadSchema (column pruning)
 - classification & tile math run inside WholeStageCodegen (no Python)
 - small dims join via BroadcastHashJoin
+- the label path admits nodes before the blob join and plans three Python
+  operators, none of which receives the tags map
 - the global rank plan contains NO single-partition Exchange over data
 - the area path has exactly ONE wide exchange (the rel_id groupBy)
 
@@ -16,6 +18,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,6 +38,29 @@ def plan_of(df) -> str:
 def audit(name: str, df, checks: dict[str, bool | None] = None) -> tuple[str, str]:
     p = plan_of(df)
     return name, p
+
+
+def operators(plan: str) -> dict[int, str]:
+    """Operator id -> its detail block in a formatted plan."""
+    return {
+        int(m.group(1)): m.group(0)
+        for m in re.finditer(r"^\((\d+)\) .*?(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+    }
+
+
+def subtree(plan: str, op_id: int) -> list[int]:
+    """Ids of the operators below ``op_id`` in a formatted plan's tree."""
+    tree = [
+        (m.start(1) - m.start(0), int(m.group(2)))
+        for m in re.finditer(r"^[ :+-]*(\w.*?) \((\d+)\)$", plan.split("\n\n\n")[0], re.M)
+    ]
+    at = next(k for k, (_, i) in enumerate(tree) if i == op_id)
+    below = []
+    for col, i in tree[at + 1 :]:
+        if col <= tree[at][0]:
+            break
+        below.append(i)
+    return below
 
 
 def main() -> None:
@@ -74,22 +100,45 @@ def main() -> None:
     ]
     sections.append(("classification (C1) — Catalyst only", p2, notes2))
 
-    # 3. levels dim broadcast join in the pipeline's node path
-    from osmgraft.plans.pipeline import admitted_node_pois, levels_df
+    # 3. label rows — admission below the blob join, three Python operators
+    from osmgraft.plans.pipeline import label_rows
     from osmgraft.sources.decode import decode_documents
-    from osmgraft.sources.synth import SynthParams, synth_blobs, synth_documents
+    from osmgraft.sources.synth import SynthParams, synth_blobs, synth_documents, write_synth
 
     params = SynthParams(n_docs=500, seed=3)
     docs = synth_documents(spark, params, partitions=4)
     blobs = synth_blobs(spark, params, partitions=4)
     frames = decode_documents(docs, blobs)
-    q3 = admitted_node_pois(frames.node_pois, cfg, levels_df(spark, cfg))
-    p3 = plan_of(q3)
+    with tempfile.TemporaryDirectory() as tmp:
+        # parquet input, as the job reads it (the in-memory synth source is
+        # itself a MapInPandas and would count as a Python operator)
+        write_synth(spark, tmp, params, partitions=4)
+        q3 = label_rows(
+            spark, spark.read.parquet(f"{tmp}/documents.parquet"),
+            spark.read.parquet(f"{tmp}/blobs.parquet"), cfg,
+        )
+        p3 = plan_of(q3).replace(tmp, "<synth dir>")
+    ops3 = operators(p3)
+    kind3 = {i: re.match(r"\(\d+\) (\w+)", b).group(1) for i, b in ops3.items()}
+    py3 = [i for i, k in kind3.items() if k in ("MapInPandas", "ArrowEvalPython")]
+    level_joins = [i for i, b in ops3.items() if "Join" in kind3[i] and "keys [1]: [level_id#" in b]
+    # the node blob join: the inner join on blob_id with no Python below it
+    node_join = next(
+        i for i, b in ops3.items()
+        if "Join" in kind3[i] and "Left keys [1]: [blob_id#" in b and "Join type: Inner" in b
+        and not set(subtree(p3, i)) & set(py3)
+    )
+    under = subtree(p3, node_join)
+    tags_in = [i for i in py3 if re.search(r"Input \[\d+\]: \[[^]]*\b(tags|_name_lit)#", ops3[i])]
     notes3 = [
-        f"BroadcastHashJoin for levels dim: {'BroadcastHashJoin' in p3}",
-        f"blob decode is ArrowEval (vectorized): {'ArrowEvalPython' in p3 or 'MapInPandas' in p3}",
+        f"levels dim joins are BroadcastHashJoin: "
+        f"{len(level_joins) == 2 and all(kind3[i] == 'BroadcastHashJoin' for i in level_joins)}",
+        f"admission below the node blob join (P1 tag filter and P7 level join under it): "
+        f"{any(kind3[i] == 'Filter' and 'element_at(' in ops3[i] for i in under) and any(i in level_joins for i in under)}",
+        f"Python operators: {len(py3)} (expect 3: point+label kernel, segment decode, area+label kernel)",
+        f"no Python operator receives tags or _name_lit: {not tags_in}",
     ]
-    sections.append(("node path — broadcast dim join", p3, notes3))
+    sections.append(("label rows — admission below the blob join, three Python operators", p3, notes3))
 
     # 4. global rank — no single-partition exchange over data
     from osmgraft.operators.rank import importance_sort

@@ -106,7 +106,7 @@ def seeds() -> dict[str, tuple[bytes, object]]:
         "decode_media": (_png_seed(), lambda b: decode_media(b, "image/png")),
         # geometry blobs: the flagship decode path's own payload format
         "geoblob_point": (geoblob.pack_point(48.1, 11.5), geoblob.unpack),
-        # the batch kernel's checked point unpack (decode_node_pois)
+        # the point kernels' checked unpack (decode.decode_point_rows)
         "geoblob_points": (
             geoblob.pack_point(48.1, 11.5),
             lambda b: geoblob.unpack_points(["b0", "b1"], [geoblob.pack_point(0.0, 0.0), b]),
