@@ -8,7 +8,7 @@ table; the generator is seed-fixed, SURVEY.md §7.1).
 ``queries``/``oracle_sql`` cover every operator class from SURVEY.md §2:
 SQL-expressible operators run over the driver's sf tables and are
 value-checked against DuckDB; engine-native operators (span decode,
-polygon assembly, label kernel, cell encode, LSH) are included as rows-only
+polygon assembly, label kernel, cell encode) are included as rows-only
 checks (documented — no ANSI-SQL equivalent exists for them).
 
 Float-producing oracled queries round to >=4 decimals on BOTH sides so
@@ -785,16 +785,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         li = _read(spark, sf, "lineitem").select(F.col("l_returnflag").alias("k"))
         return salted_count(li, "k", n_salts=16)
 
-    # --- similarity: exact blocked pairwise kNN -----------------------------------
-    def q_pairwise_knn(spark, sf):
-        from osmgraft.operators.simsearch import pairwise_neighbors
-
-        emb = _read(spark, sf, "embeddings").where(F.col("vec_id") < 120).withColumn(
-            "blk", F.col("vec_id") % 4
-        )
-        out = pairwise_neighbors(emb, k=3, by_label="blk")
-        return out.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"), "rk")
-
     # --- raster <-> vector -------------------------------------------------------
     def q_rasterize(spark, sf):
         from osmgraft.operators.raster import rasterize
@@ -846,64 +836,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.round(F.element_at("ring_lons", 1), 4).alias("west"),
             F.round(F.element_at("ring_lons", 2), 4).alias("east"),
         )
-
-    # --- dedup: exact ----------------------------------------------------------
-    def q_dedup_exact(spark, sf):
-        from osmgraft.operators.dedup import exact_dedup
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        dup = d.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-        return exact_dedup(d.unionByName(dup)).select("doc_id")
-
-    # --- dedup: n-gram jaccard pairs -------------------------------------------
-    def q_jaccard_pairs(spark, sf):
-        from osmgraft.operators.dedup import jaccard_pairs
-
-        d = _read(spark, sf, "documents").select("doc_id", "text").where(F.col("doc_id") < 200)
-        # max_df=None: the exact-jaccard oracle configuration (the library
-        # default keeps the hot-token damping rail on)
-        return jaccard_pairs(d, threshold=0.4, max_df=None).select(
-            "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
-        )
-
-    # --- dedup: pairs -> clusters (alternating-star connected components) -------
-    def q_dedup_components(spark, sf):
-        from osmgraft.operators.dedup import connected_components, jaccard_pairs
-
-        docs = _read(spark, sf, "documents")
-        d = docs.select("doc_id", "text").where(F.col("doc_id") < 200)
-        near = jaccard_pairs(d, threshold=0.4, max_df=None).select("id_a", "id_b")
-        # a 63-edge id chain: forces multi-round transitive closure (a
-        # single-hop formulation would leave the chain in 64 components)
-        chain = (
-            docs.where((F.col("doc_id") >= 300) & (F.col("doc_id") <= 362))
-            .select(F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b"))
-        )
-        comp = connected_components(near.unionByName(chain))
-        return comp.select(F.col("id").alias("doc_id"), "component")
-
-    # --- dedup: embedding-cosine near-dup (exact path == SQL oracle) ------------
-    def q_embedding_dup(spark, sf):
-        from osmgraft.operators.dedup import embedding_dup_pairs
-
-        emb = (
-            _read(spark, sf, "embeddings")
-            .where(F.col("vec_id") < 150)
-            .select("vec_id", "embedding")
-        )
-        dup = emb.where(F.col("vec_id") < 15).select(
-            (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-        )
-        pairs = embedding_dup_pairs(emb.unionByName(dup), threshold=0.99, exact=True)
-        return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
-
-    # --- similarity: brute-force top-k --------------------------------------------------
-    def q_ann_brute(spark, sf):
-        from osmgraft.operators.simsearch import brute_force_topk
-
-        emb = _read(spark, sf, "embeddings")
-        qv = [float(x) for x in emb.where(F.col("vec_id") == 7).collect()[0]["embedding"]]
-        return brute_force_topk(emb, qv, 10).select("vec_id")
 
     # --- events daily rollup (streaming-analog batch) ------------------------------------
     def q_events_daily(spark, sf):
@@ -1043,82 +975,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         kids = c12.select(F.explode(s2_children_expr(F.col("c"), 13)).alias("cell"))
         return compact_cells(kids, level=13, min_level=10)
 
-    def q_minhash_pairs(spark, sf):
-        # Oracled configuration: 32 single-row bands and token shingles
-        # (shingle_n=1). A pair with token-jaccard >= 0.6 misses all 32
-        # bands with probability <= 0.4^32 ~ 2e-13 — and xxhash64 on fixed
-        # data is deterministic, so on the sf tables the verified LSH
-        # output EQUALS the exact token-jaccard pairs the SQL computes
-        # (verified locally; recall failures would be permanent, not
-        # flaky). The scale configuration (banded rows, word 3-shingles)
-        # is exercised by pytest recall tests instead.
-        from osmgraft.operators.dedup import minhash_lsh_pairs
-
-        d = _read(spark, sf, "documents").select("doc_id", "text").where(F.col("doc_id") < 300)
-        dup = d.where(F.col("doc_id") < 30).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" tailword")).alias("text"),
-        )
-        return minhash_lsh_pairs(
-            d.unionByName(dup), num_hashes=32, bands=32, shingle_n=1, verify_threshold=0.6
-        ).select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-
-    def q_simhash_pairs(spark, sf):
-        # Oracled: the token hash equals DuckDB's md5_number_lower, so the
-        # SQL recomputes the signatures bit-exactly and enumerates all
-        # pairs within the Hamming budget; the 4 rotated prefix tables
-        # have candidate recall 1.0 on the sf data (deterministic), so the
-        # multi-probe output equals the brute-force SQL set.
-        from osmgraft.operators.dedup import simhash_pairs
-
-        d = _read(spark, sf, "documents").select("doc_id", "text").where(F.col("doc_id") < 300)
-        dup = d.where(F.col("doc_id") < 30).select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
-        # signature='md5' is the oracle configuration; the library default
-        # is the Catalyst xxhash64 path (pytest-pinned against a replay of
-        # Spark's own token hashes — no ANSI-SQL equivalent exists)
-        return simhash_pairs(
-            d.unionByName(dup), max_hamming=4, prefix_bits=12, n_tables=4, signature="md5"
-        )
-
-    def q_ann_lsh(spark, sf):
-        # Oracled configuration: dense tables (2 planes x 24 tables) give
-        # candidate recall 1.0 on the sf embeddings (deterministic: planes
-        # are seed-derived, data is fixed), so the LSH top-k EQUALS the
-        # brute-force top-k the SQL computes. Sparse scale configurations
-        # are covered by the pytest recall test.
-        from osmgraft.operators.simsearch import ann_topk
-
-        emb = _read(spark, sf, "embeddings")
-        qs = emb.where(F.col("vec_id") < 16).select(F.col("vec_id").alias("q_id"), "embedding")
-        return ann_topk(emb, qs, k=5, dim=64, n_planes=2, n_tables=24).select(
-            "q_id", "vec_id", "rk"
-        )
-
-    def q_ann_ivf(spark, sf):
-        # Oracled configuration: seed-id coarse quantizer (no Lloyd) +
-        # Catalyst rounded-argmax assignment, so the SQL replays cell
-        # membership, probe order AND the cell-pruned rerank exactly.
-        # k-means configurations are covered by the pytest recall tests.
-        from osmgraft.operators.simsearch import ivf_topk
-
-        emb = _read(spark, sf, "embeddings")
-        qs = emb.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("q_id"), "embedding")
-        return ivf_topk(
-            emb,
-            qs,
-            k=5,
-            nprobe=3,
-            seed_ids=[3, 17, 29, 41, 53, 61, 77, 89],
-            exact_assign=True,
-        ).select("q_id", "vec_id", "rk")
-
-    def q_quantize_embeddings(spark, sf):
-        from osmgraft.operators.simsearch import quantize_embeddings
-
-        emb = _read(spark, sf, "embeddings")
-        out = quantize_embeddings(emb)
-        return out.select("vec_id", "qvec", F.round("scale", 6).alias("scale"))
-
     def q_multimodal_features(spark, sf):
         from osmgraft.operators.multimodal import extract_features
 
@@ -1211,26 +1067,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("doc_id", "n_dupes")
         )
 
-    # --- dedup: exact duplicated-substring spans (suffix-array-free) -------------
-    def q_dup_spans(spark, sf):
-        from osmgraft.operators.dedup import dup_spans
-
-        d = _read(spark, sf, "documents").select("doc_id", "text")
-        # gram_hash='md5': the engine-replayable oracle configuration
-        # (the library default is xxhash64, the narrower scale path)
-        return dup_spans(d, n=5, min_docs=2, gram_hash="md5")
-
     # --- sketch: HyperLogLog distinct-token count ---------------------------------
     def _hll_vals(spark, sf):
         # (token, doc bucket) pairs: the synth vocabulary alone is ~40
         # tokens — too few to exercise a sketch — so distinct values are
         # token x doc-bucket (thousands at sf0.01)
-        from osmgraft.operators.dedup import tokens_expr
-
         d = _read(spark, sf, "documents")
         exp = d.select(
             (F.col("doc_id") % 1000).cast("string").alias("_b"),
-            F.explode(tokens_expr(F.col("text"))).alias("_t"),
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
         )
         return exp.select(F.concat_ws("-", F.col("_t"), F.col("_b")).alias("w"))
 
@@ -1246,14 +1091,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- sketch: grouped HLL (distinct tokens per source) --------------------------
     def q_hll_by_source(spark, sf):
-        from osmgraft.operators.dedup import tokens_expr
         from osmgraft.operators.sketch import hll_count_distinct_by
 
         d = _read(spark, sf, "documents")
         exp = d.select(
             F.col("source").alias("g"),
             (F.col("doc_id") % 1000).cast("string").alias("_b"),
-            F.explode(tokens_expr(F.col("text"))).alias("_t"),
+            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
         )
         vals = exp.select("g", F.concat_ws("-", "_t", "_b").alias("w"))
         return hll_count_distinct_by(vals, ["g"], "w", p=9)
@@ -1522,11 +1366,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vectorize_runs": q_vectorize_runs,
         "tile_topk": q_tile_topk,
         "salted_count": q_salted_count,
-        "pairwise_knn": q_pairwise_knn,
-        "dedup_exact": q_dedup_exact,
-        "jaccard_pairs": q_jaccard_pairs,
-        "embedding_dup_pairs": q_embedding_dup,
-        "ann_brute_topk": q_ann_brute,
         "events_daily": q_events_daily,
         "window_topk": q_window_topk,
         # engine-native, rows-only:
@@ -1540,10 +1379,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s2_compact": q_s2_compact,
         "smooth_box": q_smooth_box,
         "contour_segments": q_contours,
-        "minhash_lsh_pairs": q_minhash_pairs,
-        "ann_lsh_topk": q_ann_lsh,
-        "ann_ivf_topk": q_ann_ivf,
-        "quantize_embeddings": q_quantize_embeddings,
         "multimodal_features": q_multimodal_features,
         "wav_decode": q_wav_decode,
         "png_decode": q_png_decode,
@@ -1551,10 +1386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_labels_pts": q_dedup_labels_pts,
         "hex_cells": q_hex_cells,
         "adaptive_cells_pts": q_adaptive_cells_pts,
-        "simhash_pairs": q_simhash_pairs,
         "legacy_split": q_legacy_split,
-        "dedup_components": q_dedup_components,
-        "dup_spans": q_dup_spans,
         "hll_registers": q_hll_registers,
         "hll_distinct_tokens": q_hll_estimate,
         "hll_distinct_by_source": q_hll_by_source,
@@ -1746,16 +1578,6 @@ def oracle_sql() -> dict[str, str]:
         "salted_count": (
             "select l_returnflag as k, count(*) as count from lineitem group by 1"
         ),
-        "pairwise_knn": (
-            "with e as (select vec_id, cast(embedding as double[]) as v, vec_id % 4 as blk "
-            "from embeddings where vec_id < 120), "
-            "scored as (select a.vec_id as id_a, b.vec_id as id_b, "
-            "list_cosine_similarity(a.v, b.v) as c from e a join e b "
-            "on a.blk = b.blk and a.vec_id <> b.vec_id), "
-            "ranked as (select id_a, id_b, c, row_number() over "
-            "(partition by id_a order by c desc, id_b asc) as rk from scored) "
-            "select id_a, id_b, round(c, 4) as cosine, rk from ranked where rk <= 3"
-        ),
         "rasterize_density": (
             f"with src as (select lat, lon, least(greatest(lat, -85.05112878), 85.05112878) as lc "
             f"from ({_PTS_SQL}) p), "
@@ -1813,80 +1635,6 @@ def oracle_sql() -> dict[str, str]:
             "round(degrees(atan((exp(pi() - 2*pi()*gy/4096.0) - exp(-(pi() - 2*pi()*gy/4096.0)))/2.0)), 4) as north, "
             "round(degrees(atan((exp(pi() - 2*pi()*(gy+1)/4096.0) - exp(-(pi() - 2*pi()*(gy+1)/4096.0)))/2.0)), 4) as south "
             "from runs group by gy, value, run"
-        ),
-        "dedup_exact": (
-            "with corpus as (select doc_id, text from documents "
-            "union all select doc_id + 1000000 as doc_id, text from documents) "
-            "select doc_id from corpus where doc_id in "
-            "(select min(doc_id) from corpus group by md5(text))"
-        ),
-        "embedding_dup_pairs": (
-            "with corpus as (select vec_id, embedding from embeddings where vec_id < 150 "
-            "union all select vec_id + 1000000 as vec_id, embedding from embeddings where vec_id < 15), "
-            "pairs as (select a.vec_id as id_a, b.vec_id as id_b, "
-            "list_cosine_similarity(cast(a.embedding as double[]), cast(b.embedding as double[])) as c "
-            "from corpus a join corpus b on a.vec_id < b.vec_id) "
-            "select id_a, id_b, round(c, 4) as cosine from pairs where c >= 0.99"
-        ),
-        "jaccard_pairs": (
-            "with d as (select doc_id, text from documents where doc_id < 200), "
-            f"tok as (select distinct doc_id as id, unnest({tok}) as w from d), "
-            "sizes as (select id, count(*) as sz from tok group by id), "
-            "inter as (select a.id as id_a, b.id as id_b, count(*) as i from tok a "
-            "join tok b on a.w = b.w and a.id < b.id group by 1, 2) "
-            "select id_a, id_b, round(cast(i as double)/(sa.sz + sb.sz - i), 4) as jaccard "
-            "from inter join sizes sa on id_a = sa.id join sizes sb on id_b = sb.id "
-            "where cast(i as double)/(sa.sz + sb.sz - i) >= 0.4"
-        ),
-        # component = min reachable id; DuckDB replays the alternating-star
-        # result with a recursive transitive closure over the same edges
-        "dedup_components": (
-            "with recursive d as (select doc_id, text from documents where doc_id < 200), "
-            f"tok as (select distinct doc_id as id, unnest({tok}) as w from d), "
-            "sizes as (select id, count(*) as sz from tok group by id), "
-            "inter as (select a.id as id_a, b.id as id_b, count(*) as i from tok a "
-            "join tok b on a.w = b.w and a.id < b.id group by 1, 2), "
-            "near as (select id_a, id_b from inter "
-            "join sizes sa on id_a = sa.id join sizes sb on id_b = sb.id "
-            "where cast(i as double)/(sa.sz + sb.sz - i) >= 0.4), "
-            "chain as (select doc_id as id_a, doc_id + 1 as id_b from documents "
-            "where doc_id between 300 and 362), "
-            "pairs as (select * from near union select * from chain), "
-            "edges as (select id_a as src, id_b as dst from pairs where id_a <> id_b "
-            "union select id_b, id_a from pairs where id_a <> id_b), "
-            "nodes as (select distinct src as id from edges), "
-            "reach(id, r) as (select id, id from nodes union "
-            "select reach.id, edges.dst from reach join edges on edges.src = reach.r) "
-            "select id as doc_id, min(r) as component from reach group by id"
-        ),
-        # bias-rounded symmetric int8 quantization, exact double replay
-        "quantize_embeddings": (
-            "with a as (select vec_id, cast(embedding as double[]) as v from embeddings), "
-            "m as (select vec_id, v, list_max(list_transform(v, x -> abs(x))) as amax from a) "
-            "select vec_id, list_transform(v, x -> cast(floor(x * (case when amax > 0 then 127.0 / amax else 0.0 end) + 0.5) as int)) as qvec, "
-            "round(case when amax > 0 then 127.0 / amax else 0.0 end, 6) as scale from m"
-        ),
-        "ann_ivf_topk": (
-            "with sd(ci, sid) as (values (1,3),(2,17),(3,29),(4,41),(5,53),(6,61),(7,77),(8,89)), "
-            "cent as (select ci, cast(e.embedding as double[]) as cv from sd join embeddings e on e.vec_id = sd.sid), "
-            "base as (select vec_id, cast(embedding as double[]) as v from embeddings), "
-            "ascore as (select vec_id, ci, round(list_cosine_similarity(v, cv), 4) as s from base cross join cent), "
-            "assign as (select vec_id, ci from (select vec_id, ci, row_number() over "
-            "(partition by vec_id order by s desc, ci asc) as r from ascore) where r = 1), "
-            "q as (select vec_id as q_id, cast(embedding as double[]) as qv from embeddings where vec_id < 8), "
-            "qscore as (select q_id, ci, round(list_cosine_similarity(qv, cv), 4) as s from q cross join cent), "
-            "probes as (select q_id, ci from (select q_id, ci, row_number() over "
-            "(partition by q_id order by s desc, ci asc) as r from qscore) where r <= 3), "
-            "cand as (select p.q_id, a.vec_id from probes p join assign a using (ci)), "
-            "rer as (select c.q_id, c.vec_id, row_number() over (partition by c.q_id order by "
-            "list_cosine_similarity(b.v, q.qv) desc, c.vec_id asc) as rk "
-            "from cand c join base b using (vec_id) join q using (q_id)) "
-            "select q_id, vec_id, rk from rer where rk <= 5"
-        ),
-        "ann_brute_topk": (
-            "with q as (select embedding as qv from embeddings where vec_id = 7) "
-            "select vec_id from (select vec_id, list_cosine_similarity(cast(embedding as double[]), cast(qv as double[])) as c "
-            "from embeddings, q order by c desc, vec_id asc limit 10) t"
         ),
         "events_daily": (
             "select user_id, cast(date_trunc('day', ts) as timestamp) as day, count(*) as n_events, "
@@ -1969,30 +1717,6 @@ def oracle_sql() -> dict[str, str]:
             "select c as case_id, round(s.x0, 4) as x0, round(s.y0, 4) as y0, "
             "round(s.x1, 4) as x1, round(s.y1, 4) as y1 from seg"
         ),
-        "minhash_lsh_pairs": (
-            # exact token-jaccard pairs over the same derived corpus; the
-            # 32-single-row-band LSH config is full-recall on this data,
-            # so the verified candidates equal this set (see the query)
-            "with corpus as (select doc_id, text from documents where doc_id < 300 "
-            "union all select doc_id + 1000000 as doc_id, text || ' tailword' as text "
-            "from documents where doc_id < 30), "
-            f"tok as (select distinct doc_id as id, unnest({tok}) as w from corpus), "
-            "sizes as (select id, count(*) as sz from tok group by id), "
-            "inter as (select a.id as id_a, b.id as id_b, count(*) as i from tok a "
-            "join tok b on a.w = b.w and a.id < b.id group by 1, 2) "
-            "select id_a, id_b, round(cast(i as double)/(sa.sz + sb.sz - i), 4) as jaccard "
-            "from inter join sizes sa on id_a = sa.id join sizes sb on id_b = sb.id "
-            "where cast(i as double)/(sa.sz + sb.sz - i) >= 0.6"
-        ),
-        "ann_lsh_topk": (
-            "with q as (select vec_id as q_id, embedding as qv from embeddings where vec_id < 16), "
-            "scored as (select q.q_id, e.vec_id, "
-            "list_cosine_similarity(cast(e.embedding as double[]), cast(q.qv as double[])) as c "
-            "from embeddings e, q) "
-            "select q_id, vec_id, rk from (select q_id, vec_id, "
-            "row_number() over (partition by q_id order by c desc, vec_id asc) as rk "
-            "from scored) t where rk <= 5"
-        ),
         "multimodal_features": (
             f"select media_id, cast(octet_length(payload) as bigint) as n_bytes "
             f"from read_parquet('{_stage_media_oracle()}')"
@@ -2028,27 +1752,6 @@ def oracle_sql() -> dict[str, str]:
             f"select pid, {_hex_cell_sql_expr('lat', 'lon', 7)} as cell from p"
         ),
         "adaptive_cells_pts": _adaptive_cells_sql(base_res=0, max_rows=5, max_res=3),
-        "simhash_pairs": (
-            # bit-exact signature replay: h64(w) == md5_number_lower(w);
-            # majority vote per bit, two's-complement fold, exact Hamming.
-            # Empty tokens are filtered so the tokenization agrees with the
-            # engine's str.split() on degenerate input (empty/whitespace
-            # text), and token-less docs fall back to sig 0 via the left
-            # join — exactly the kernel's behavior.
-            "with corpus as (select doc_id, text from documents where doc_id < 300 "
-            "union all select doc_id + 1000000 as doc_id, text from documents where doc_id < 30), "
-            f"tok as (select doc_id as id, unnest(list_filter({tok}, w -> w <> '')) as w from corpus), "
-            "bits as (select id, b, sum(case when (md5_number_lower(w) >> b) & 1 = 1 then 1 else -1 end) as votes "
-            "from tok, range(64) t(b) group by id, b), "
-            "sigs_u as (select id, sum(case when votes > 0 then cast(1::ubigint << b as hugeint) else 0 end) as s "
-            "from bits group by id), "
-            "sigs_s as (select id, cast(case when s >= 9223372036854775808 then s - 18446744073709551616 else s end as bigint) as sig from sigs_u), "
-            "sigs as (select c.doc_id as id, coalesce(ss.sig, 0) as sig "
-            "from corpus c left join sigs_s ss on c.doc_id = ss.id) "
-            "select a.id as id_a, b.id as id_b, bit_count(xor(a.sig, b.sig)) as hamming "
-            "from sigs a join sigs b on a.id < b.id "
-            "where bit_count(xor(a.sig, b.sig)) <= 4"
-        ),
         "legacy_split": (
             # L7 legacy split replica (osmpoi.cpp:121-199). DuckDB length/
             # substr/strpos are codepoint-based like the C++ u32string
@@ -2081,21 +1784,6 @@ def oracle_sql() -> dict[str, str]:
             "else strlen(res) - strlen(substr(res, 1, strpos(res, '%') - 1)) end) "
             "else (case when strlen(res) > strlen(res) // 2 then strlen(res) else 0 end) end / 2.0 "
             "as double) as radius from c2"
-        ),
-        # duplicated 5-gram positions -> per-doc gaps-and-islands merge
-        "dup_spans": (
-            f"with base as (select doc_id, {tok} as w from documents), "
-            "idx as (select doc_id, w, unnest(range(1, len(w) - 5 + 2)) as i "
-            "from base where len(w) >= 5), "
-            "pos as (select doc_id, cast(i - 1 as int) as pos, "
-            "md5(array_to_string(w[i:i+4], ' ')) as gh from idx), "
-            "dup as (select gh from pos group by gh having count(distinct doc_id) >= 2), "
-            "hits as (select doc_id, pos, "
-            "row_number() over (partition by doc_id order by pos) as rn "
-            "from pos where gh in (select gh from dup)) "
-            "select doc_id, min(pos) as start_word, cast(max(pos) + 4 as int) as end_word, "
-            "cast(max(pos) - min(pos) + 5 as int) as span_words "
-            "from hits group by doc_id, pos - rn"
         ),
         # HyperLogLog: identical md5-low-64 hash, integer registers, and
         # an order-free DECIMAL harmonic sum (osmgraft/operators/sketch.py)

@@ -198,7 +198,6 @@ def main() -> None:
     # throughput, not JVM cold-start (the target deployment is a long-lived
     # cluster, not a fresh JVM per query)
     def _warmup():
-        from osmgraft.operators.dedup import minhash_lsh_pairs
         from osmgraft.operators.knn import dedup_labels
         from osmgraft.operators.pip import pip_join
         from osmgraft.operators.tiles import assign_tiles
@@ -223,18 +222,6 @@ def main() -> None:
         croot = stage_codec_media(spark)
         wav_decode_meta(spark.read.parquet(f"{croot}/wav.parquet").limit(200)).count()
         png_decode_meta(spark.read.parquet(f"{croot}/png.parquet").limit(200)).count()
-        minhash_lsh_pairs(
-            spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text").limit(200),
-            num_hashes=32,
-            bands=8,
-            verify_threshold=0.5,
-        ).count()
-        from osmgraft.operators.dedup import dup_spans
-
-        dslice = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-            "doc_id", "text"
-        ).limit(200)
-        dup_spans(dslice, n=5).count()
 
     _warmup()
 
@@ -275,37 +262,6 @@ def main() -> None:
         from __spark_entry__ import queries
 
         return queries()["global_rank"](spark, SF_DIR).count()
-
-    def q_minhash():
-        from osmgraft.operators.dedup import minhash_lsh_pairs
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-        return minhash_lsh_pairs(d, num_hashes=32, bands=8, verify_threshold=0.5).count()
-
-    def q_ann():
-        from osmgraft.operators.simsearch import brute_force_topk
-
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        qv = [float(x) for x in emb.where(F.col("vec_id") == 7).collect()[0]["embedding"]]
-        return brute_force_topk(emb, qv, 10).count()
-
-    def q_components():
-        from osmgraft.operators.dedup import connected_components
-
-        # 16-long id chains over an id space the size of the staged corpus:
-        # the adversarial depth case for pair->cluster closure (forces ~4-5
-        # alternating large/small-star rounds; one-hop would not converge)
-        ids = spark.range(n_docs).select(F.col("id").alias("doc_id"))
-        edges = ids.where((F.col("doc_id") % 16 != 15) & (F.col("doc_id") + 1 < n_docs)).select(
-            F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-        )
-        return connected_components(edges).count()
-
-    def q_dup_spans():
-        from osmgraft.operators.dedup import dup_spans
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-        return dup_spans(d, n=5).count()
 
     def _entry(name):
         # the entry-registry queries are the exact code the correctness
@@ -384,10 +340,6 @@ def main() -> None:
         ("pip_partitioned", q_pip),
         ("knn_dedup_2km", q_dedup),
         ("classify_global_rank", q_rank),
-        ("minhash_lsh_docs", q_minhash),
-        ("ann_brute_topk", q_ann),
-        ("cc_chains", q_components),
-        ("dup_spans_5gram", q_dup_spans),
         ("tile_pyramid_z12_6", q_tile_pyramid),
         ("poly_overlap_tris", q_poly_overlap),
         ("hist_quantiles_by_lang", q_hist_quantiles_by),

@@ -8,12 +8,15 @@ Build the dependency zip and submit:
         --conf spark.sql.shuffle.partitions=<2-3x total cores> \
         osmgraft/job.py \
         --docs s3://bucket/documents --blobs s3://bucket/blobs \
-        --out s3://bucket/labels --stage-dir s3://bucket/_stages \
+        --out s3://bucket/labels --stage-dir /mnt/shared/_stages \
         --tile-zoom 12 [--dedup-radius-m 2000] [--resume] \
         [--resume-chunks 64 --chunk-by osm_id]
 
 Stages (each materialized via plans/lineage.py when --stage-dir is given,
-so a killed job resumes at the first incomplete stage):
+so a killed job resumes at the first incomplete stage). The stage dir must
+be a local or mounted path, not a URI: the lineage sidecars, `_SUCCESS`
+markers and parquet footers that resume trusts are read and written through
+the local filesystem.
 
     decode+extract -> rank -> label -> [knn dedup] -> tiles -> sink
 
@@ -44,6 +47,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import sys
 
 
@@ -53,7 +57,7 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--blobs", required=True, help="geometry blobs table path/URI")
     ap.add_argument("--out", required=True, help="output labels path")
     ap.add_argument("--config", default=None, help="labeling config JSON (default built-in)")
-    ap.add_argument("--stage-dir", default=None, help="stage materialization dir (enables resume)")
+    ap.add_argument("--stage-dir", default=None, help="local or mounted stage dir (enables resume)")
     ap.add_argument("--resume", action="store_true", help="skip complete stages in --stage-dir")
     ap.add_argument(
         "--resume-chunks",
@@ -100,8 +104,57 @@ def build_parser() -> argparse.ArgumentParser:
     return ap
 
 
+def check_args(args: argparse.Namespace) -> None:
+    """Reject flag combinations that ``main`` would otherwise ignore without
+    a word. Runs before any SparkSession exists, so a bad command line costs
+    no cluster start-up."""
+    if args.stage_dir and "://" in args.stage_dir:
+        raise SystemExit(
+            f"--stage-dir {args.stage_dir!r}: stage lineage is read and written "
+            "through the local filesystem, so it needs a local or mounted path, "
+            "not a URI"
+        )
+    if args.resume and not args.stage_dir:
+        raise SystemExit("--resume requires --stage-dir")
+    if args.resume_chunks < 1:
+        raise SystemExit(f"--resume-chunks must be at least 1, got {args.resume_chunks}")
+    if not (math.isfinite(args.dedup_radius_m) and args.dedup_radius_m >= 0):
+        raise SystemExit(
+            f"--dedup-radius-m must be a finite radius >= 0 (0 = no kNN dedup), "
+            f"got {args.dedup_radius_m}"
+        )
+    if args.export_hierarchy and not args.text_format:
+        raise SystemExit("--export-hierarchy requires --text-format")
+    if args.streaming:
+        if not args.checkpoint:
+            raise SystemExit("--streaming requires --checkpoint")
+        if args.text_format or args.stage_dir or args.dedup_radius_m > 0:
+            raise SystemExit(
+                "--streaming is incompatible with --text-format/--stage-dir/"
+                "--dedup-radius-m (see --help)"
+            )
+    else:
+        for flag, given in (
+            ("--dedup-docs", args.dedup_docs),
+            ("--dedup-ttl", args.dedup_ttl is not None),
+            ("--checkpoint", args.checkpoint is not None),
+        ):
+            if given:
+                raise SystemExit(f"{flag} requires --streaming")
+    if args.dedup_ttl is not None:
+        if not args.dedup_docs:
+            raise SystemExit("--dedup-ttl requires --dedup-docs")
+        from osmgraft.streaming.ingest import _duration_ms
+
+        try:
+            _duration_ms(args.dedup_ttl)
+        except ValueError as e:
+            raise SystemExit(f"--dedup-ttl: {e}") from None
+
+
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
+    check_args(args)
 
     from pyspark.sql import Observation, SparkSession
     from pyspark.sql import functions as F
@@ -120,13 +173,6 @@ def main(argv: list[str] | None = None) -> None:
     cfg = load_config(args.config) if args.config else default_config()
 
     if args.streaming:
-        if not args.checkpoint:
-            raise SystemExit("--streaming requires --checkpoint")
-        if args.text_format or args.stage_dir or args.dedup_radius_m > 0:
-            raise SystemExit(
-                "--streaming is incompatible with --text-format/--stage-dir/"
-                "--dedup-radius-m (see --help)"
-            )
         from osmgraft.streaming.ingest import (
             stream_documents,
             stream_dedup_documents,
@@ -172,7 +218,7 @@ def main(argv: list[str] | None = None) -> None:
             )
 
             path = f"{args.stage_dir}/{name}"
-            n_chunks = max(args.resume_chunks, 1)
+            n_chunks = args.resume_chunks
             chunk_by = [c.strip() for c in args.chunk_by.split(",") if c.strip()]
             if args.resume:
                 return resume_or_compute(

@@ -19,8 +19,7 @@ on Spark the whole sketch is ONE tiny aggregation:
 Spark's own ``approx_count_distinct`` is HLL++ behind an opaque binary
 buffer; this implementation exists because the engine's contract is
 value-level SQL replayability: the hash is the md5-low-64 construction
-DuckDB evaluates natively (``md5_number_lower``, same trick as the
-SimHash oracle — ``osmgraft/operators/dedup.py``), every register is an
+DuckDB evaluates natively (``md5_number_lower``), every register is an
 integer (bit-exact across engines by construction), and the estimator's
 floating-point path is made order-free by summing the harmonic terms
 ``2^(SUFFIX_BITS - rho)`` as exact DECIMAL integers instead of doubles.

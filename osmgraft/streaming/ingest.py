@@ -134,8 +134,8 @@ def stream_dedup_first_seen(
     of a key emits exactly one, reproducibly. Output schema = input
     schema, append-only.
 
-    Scale shape: one hash exchange on ``key_cols`` (the same shuffle the
-    batch ``dedup_exact`` pays), Arrow-batched state function, no
+    Scale shape: one hash exchange on ``key_cols`` (the same shuffle a
+    batch ``dropDuplicates(key_cols)`` pays), Arrow-batched state function, no
     collect; skewed keys cost one state lookup per row, not a join
     fan-out."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout

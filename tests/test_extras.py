@@ -1,6 +1,6 @@
-"""Training-data extras: dedup families, similarity search, text stats,
-multimodal plumbing — checked on the driver tables at sf0.001 plus
-constructed fixtures."""
+"""Extras outside the label path: int8 embedding quantization, multimodal
+plumbing, the parquet catalog and the registry/oracle key check — checked
+on the driver tables at sf0.001 plus constructed fixtures."""
 
 from __future__ import annotations
 
@@ -12,316 +12,15 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
 def embeddings(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
-# --- dedup ---------------------------------------------------------------
-
-
-def test_exact_dedup(spark):
-    from osmgraft.operators.dedup import exact_dedup
-
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "a b c"), (3, "x y"), (4, "a  b c")],
-        "doc_id long, text string",
-    )
-    kept = sorted(r["doc_id"] for r in exact_dedup(df).collect())
-    assert kept == [1, 3, 4]  # 2 is an exact dup of 1; 4 differs by spacing
-
-
-def test_jaccard_pairs_small(spark):
-    from osmgraft.operators.dedup import jaccard_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps"),
-            (2, "the quick brown fox sleeps"),
-            (3, "entirely different words here"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_pairs(df, threshold=0.5).collect()}
-    assert set(pairs) == {(1, 2)}
-    assert abs(pairs[(1, 2)] - 4 / 6) < 1e-12
-
-
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    from osmgraft.operators.dedup import jaccard_pairs, minhash_lsh_pairs
-
-    # plant near-duplicates: copy 10 docs with one word changed
-    base = docs.limit(10).select("doc_id", "text")
-    dups = base.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extraword")).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(dups)
-    got = minhash_lsh_pairs(corpus, num_hashes=32, bands=16, shingle_n=3, verify_threshold=0.6)
-    got_pairs = {(r["id_a"], r["id_b"]) for r in got.collect()}
-    planted = {(i, i + 100000) for i in range(10)}
-    # banded LSH with 16 bands @ threshold ~(1/16)^(1/2)=0.25 catches >=0.6 pairs
-    assert planted <= got_pairs
-    # verification step keeps only true near-dups
-    truth = {
-        (r["id_a"], r["id_b"])
-        for r in jaccard_pairs(corpus.where(F.col("doc_id").isin([*range(10), *[i + 100000 for i in range(10)]])), threshold=0.0).collect()
-        if r["jaccard"] >= 0.6
-    }
-    assert got_pairs >= planted and planted <= truth
-
-
-def test_minhash_dedup_removes_planted(spark, docs):
-    from osmgraft.operators.dedup import minhash_dedup
-
-    base = docs.limit(10).select("doc_id", "text")
-    dups = base.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    corpus = docs.select("doc_id", "text").unionByName(dups)
-    out = minhash_dedup(corpus, num_hashes=32, bands=16, shingle_n=3, verify_threshold=0.9)
-    ids = {r["doc_id"] for r in out.select("doc_id").collect()}
-    assert not any(i + 100000 in ids for i in range(10))  # dups suppressed
-    assert set(range(10)) <= ids  # originals kept
-
-
-def test_simhash_pairs(spark):
-    from osmgraft.operators.dedup import simhash_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "alpha beta gamma delta epsilon zeta eta iota"),
-            (3, "one two three four five six seven eight"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(df, max_hamming=16, prefix_bits=4).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_simhash_multiprobe_beats_single_table(spark, docs):
-    # Near-dup twins whose signature diffs land in the top prefix bits are
-    # invisible to a single prefix table; the rotated multi-probe tables
-    # must recover them. Recall is measured against exact Hamming truth.
-    import hashlib
-
-    import numpy as np
-
-    from osmgraft.operators.dedup import simhash_pairs
-
-    base = docs.limit(40).select("doc_id", "text")
-    twins = base.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zq xv qj")).alias("text"),
-    )
-    corpus = base.unionByName(twins)
-
-    # exact truth from the same signature definition, computed locally
-    def h64(w):
-        return int.from_bytes(hashlib.md5(w.encode()).digest()[8:16], "little")
-
-    def sig_of(t):
-        hs = np.array([h64(w) for w in t.split()], dtype=np.uint64)
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(np.int32)
-        votes = (2 * bits - 1).sum(axis=0)
-        s = np.uint64(0)
-        for b in np.nonzero(votes > 0)[0]:
-            s |= np.uint64(1) << np.uint64(b)
-        return s
-
-    rows = corpus.collect()
-    sigs = {r["doc_id"]: sig_of(r["text"]) for r in rows}
-    max_h = 10
-    truth = set()
-    prefix_hit = set()
-    ids = sorted(sigs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            x = int(sigs[a] ^ sigs[b])
-            if bin(x).count("1") <= max_h:
-                truth.add((a, b))
-                if x >> 48:  # any differing bit in the top 16 = prefix zone
-                    prefix_hit.add((a, b))
-    assert prefix_hit, "fixture must contain prefix-differing near-dup pairs"
-
-    single = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(corpus, max_hamming=max_h, prefix_bits=16, n_tables=1, signature="md5").collect()
-    }
-    multi = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(corpus, max_hamming=max_h, prefix_bits=16, n_tables=4, signature="md5").collect()
-    }
-    assert single <= truth and multi <= truth  # verify step admits no junk
-    assert single.isdisjoint(prefix_hit)  # single table provably misses these
-    assert multi > single  # rotations recover pairs the prefix killed
-    assert len(multi & prefix_hit) > 0
-
-
-def test_jaccard_hot_token_damping(spark):
-    from osmgraft.operators.dedup import jaccard_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, "the alpha beta gamma"),
-            (2, "the alpha beta delta"),
-            (3, "the unrelated words entirely"),
-            (4, "the other stuff altogether"),
-        ],
-        "doc_id long, text string",
-    )
-    # undamped: every doc pairs through "the" at threshold 0
-    full = {(r["id_a"], r["id_b"]) for r in jaccard_pairs(df, threshold=0.01).collect()}
-    assert (3, 4) in full
-    # df cutoff 2 drops "the" (df=4); only real overlap survives, and the
-    # jaccard is computed on the damped sets (2/4 for docs 1-2)
-    damped = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs(df, threshold=0.01, max_df=2).collect()
-    }
-    assert set(damped) == {(1, 2)}
-    assert abs(damped[(1, 2)] - 2 / 4) < 1e-12
-
-
-# --- similarity search --------------------------------------------------------
-
-
-def test_brute_force_topk_matches_numpy(spark, embeddings):
-    from osmgraft.operators.simsearch import brute_force_topk
-
-    rows = embeddings.collect()
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    ids = np.array([r["vec_id"] for r in rows])
-    q = mat[7]
-    cos = (mat @ q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
-    order = np.lexsort((ids, -cos))[:5]
-    want = list(ids[order])
-    got = [r["vec_id"] for r in brute_force_topk(embeddings, list(map(float, q)), 5).collect()]
-    assert got == want
-
-
-def test_ann_recall_vs_brute(spark, embeddings):
-    from osmgraft.operators.simsearch import ann_topk, brute_force_topk
-
-    queries = embeddings.limit(8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding")
-    )
-    ann = ann_topk(embeddings, queries, k=5, dim=64, n_planes=6, n_tables=10)
-    got = {(r["q_id"], r["vec_id"]) for r in ann.collect()}
-    # every query finds at least itself (same bucket, cosine 1)
-    for q in [r["q_id"] for r in queries.collect()]:
-        assert (q, q) in got
-    # recall@5 averaged over queries is positive and sane
-    hits = total = 0
-    for q in [r["q_id"] for r in queries.select("q_id").collect()]:
-        qv = [
-            float(x)
-            for x in embeddings.where(F.col("vec_id") == q).collect()[0]["embedding"]
-        ]
-        truth = {r["vec_id"] for r in brute_force_topk(embeddings, qv, 5).collect()}
-        hits += len(truth & {v for (qq, v) in got if qq == q})
-        total += 5
-    assert hits / total > 0.2  # single-table LSH; exactness not claimed
-
-
-def test_ivf_full_probe_equals_brute_force(spark, embeddings):
-    """nprobe == n_cells probes every inverted list -> IVF must return the
-    exact brute-force top-k, regardless of how the quantizer carved the
-    space (the IVF analogue of the LSH full-recall pin)."""
-    from osmgraft.operators.simsearch import brute_force_topk, ivf_topk
-
-    queries = embeddings.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    out = ivf_topk(embeddings, queries, k=5, n_cells=8, nprobe=8, seed=3, iters=2)
-    got = {(r["q_id"], r["vec_id"], r["rk"]) for r in out.collect()}
-    for q in [r["q_id"] for r in queries.collect()]:
-        qv = [
-            float(x)
-            for x in embeddings.where(F.col("vec_id") == q).collect()[0]["embedding"]
-        ]
-        truth = brute_force_topk(embeddings, qv, 5).collect()
-        for rk, row in enumerate(truth, 1):
-            assert (q, row["vec_id"], rk) in got
-
-
-def test_ivf_partial_probe_recall_and_pruning(spark, embeddings):
-    from osmgraft.operators.simsearch import brute_force_topk, ivf_topk
-
-    queries = embeddings.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
-    out = ivf_topk(embeddings, queries, k=5, n_cells=16, nprobe=4, seed=3, iters=3)
-    got = {(r["q_id"], r["vec_id"]) for r in out.collect()}
-    # a query's own vector shares its cell -> always found at cosine 1
-    hits = total = 0
-    for q in [r["q_id"] for r in queries.select("q_id").collect()]:
-        assert (q, q) in got
-        qv = [
-            float(x)
-            for x in embeddings.where(F.col("vec_id") == q).collect()[0]["embedding"]
-        ]
-        truth = {r["vec_id"] for r in brute_force_topk(embeddings, qv, 5).collect()}
-        hits += len(truth & {v for (qq, v) in got if qq == q})
-        total += 5
-    assert hits / total > 0.4  # 4-of-16 cells probed; exactness not claimed
-    # pruning is real: fewer candidates than brute force would rerank
-    assert out.count() <= 8 * 5
-
-
-def test_ivf_exact_assign_matches_udf_assign(spark, embeddings):
-    """The Catalyst rounded-argmax assignment (oracle path) and the numpy
-    matmul assignment agree cell-for-cell on real data (rounding to 4
-    decimals never flips an argmax on the synth vectors)."""
-    from osmgraft.operators.simsearch import (
-        _ivf_assign_udf,
-        _ivf_cell_expr,
-        ivf_centroids,
-    )
-
-    cents = ivf_centroids(embeddings, 8, seed_ids=[3, 17, 29, 41, 53, 61, 77, 89])
-    exact = {
-        r["vec_id"]: r["_cell"]
-        for r in embeddings.select(
-            "vec_id", _ivf_cell_expr(F.col("embedding"), cents)
-        ).collect()
-    }
-    fast = {
-        r["vec_id"]: r["c"]
-        for r in embeddings.select(
-            "vec_id", _ivf_assign_udf(cents)(F.col("embedding")).alias("c")
-        ).collect()
-    }
-    assert exact == fast
-
-
-def test_ivf_centroids_seed_ids_and_determinism(spark, embeddings):
-    import numpy as np
-
-    from osmgraft.operators.simsearch import ivf_centroids
-
-    cents = ivf_centroids(embeddings, 2, seed_ids=[5, 9])
-    want = {
-        r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-        for r in embeddings.where(F.col("vec_id").isin([5, 9])).collect()
-    }
-    assert np.allclose(cents[0], want[5] / np.linalg.norm(want[5]))
-    assert np.allclose(cents[1], want[9] / np.linalg.norm(want[9]))
-    with pytest.raises(ValueError, match="not found"):
-        ivf_centroids(embeddings, 2, seed_ids=[5, 10**9])
-    a = ivf_centroids(embeddings, 8, seed=3, iters=3)
-    b = ivf_centroids(embeddings, 8, seed=3, iters=3)
-    assert np.array_equal(a, b)
+# --- int8 quantization -----------------------------------------------------------
 
 
 def test_quantize_embeddings_roundtrip(spark, embeddings):
-    import numpy as np
-
-    from osmgraft.operators.simsearch import dequantize_expr, quantize_embeddings
+    from osmgraft.operators.quantize import dequantize_expr, quantize_embeddings
 
     q = quantize_embeddings(embeddings)
     joined = q.join(embeddings, "vec_id").select(
@@ -338,7 +37,7 @@ def test_quantize_embeddings_roundtrip(spark, embeddings):
 
 
 def test_quantize_embeddings_zero_vector_and_plan(spark):
-    from osmgraft.operators.simsearch import dequantize_expr, quantize_embeddings
+    from osmgraft.operators.quantize import dequantize_expr, quantize_embeddings
 
     df = spark.createDataFrame(
         [(1, [0.0, 0.0, 0.0]), (2, [1.0, -2.0, 0.5])],
@@ -355,19 +54,6 @@ def test_quantize_embeddings_zero_vector_and_plan(spark):
     assert deq[1] == [0.0, 0.0, 0.0]
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Python" not in plan  # narrow, JVM-side
-
-
-def test_pairwise_neighbors_blocked(spark, embeddings):
-    from osmgraft.operators.simsearch import pairwise_neighbors
-
-    out = pairwise_neighbors(embeddings.limit(50), k=3)
-    rows = out.collect()
-    by_a = {}
-    for r in rows:
-        by_a.setdefault(r["id_a"], []).append(r)
-    for a, lst in by_a.items():
-        assert len(lst) == 3
-        assert sorted(r["rk"] for r in lst) == [1, 2, 3]
 
 
 # --- multimodal ------------------------------------------------------------------
@@ -523,141 +209,6 @@ def test_tag_keys_stats_column(spark, synth_small):
     assert set(row["tag_keys"]) == span_keys
 
 
-# --- embedding-cosine near-dup ---------------------------------------------------
-
-
-def test_embedding_dedup_exact_vs_lsh(spark):
-    import numpy as np
-
-    from osmgraft.operators.dedup import embedding_dedup, embedding_dup_pairs
-
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((60, 16)).astype("float32")
-    rows = [(i, [float(x) for x in base[i]]) for i in range(60)]
-    # near-duplicates of the first 6 vectors (tiny perturbation)
-    rows += [
-        (1000 + i, [float(x) for x in (base[i] + rng.normal(0, 1e-4, 16).astype("float32"))])
-        for i in range(6)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    exact = embedding_dup_pairs(emb, threshold=0.999, exact=True)
-    got = {(r["id_a"], r["id_b"]) for r in exact.collect()}
-    assert got == {(i, 1000 + i) for i in range(6)}
-
-    # LSH path: candidates are a superset-threshold check; with 8 tables the
-    # 6 true near-dup pairs must all be recovered
-    lsh = embedding_dup_pairs(emb, threshold=0.999, dim=16, n_planes=6, n_tables=8)
-    got_lsh = {(r["id_a"], r["id_b"]) for r in lsh.collect()}
-    assert got_lsh == got
-
-    kept = embedding_dedup(emb, threshold=0.999, exact=True)
-    ids = {r["vec_id"] for r in kept.collect()}
-    assert ids == set(range(60))  # all 1000+ dupes suppressed
-
-
-def test_simhash_degenerate_text(spark):
-    # Empty / whitespace-only / NULL documents: signature 0 on the engine
-    # side (str.split() -> no tokens), pairing only with each other — the
-    # SQL oracle reproduces this via its w <> '' filter + sig-0 fallback.
-    from osmgraft.operators.dedup import simhash_pairs, simhash_udf
-
-    df = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, None), (4, "real content here okay")],
-        "doc_id long, text string",
-    )
-    sigs = {r["doc_id"]: r["sig"] for r in df.select("doc_id", simhash_udf()(F.col("text")).alias("sig")).collect()}
-    assert sigs[1] == sigs[2] == sigs[3] == 0
-    assert sigs[4] != 0
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(df, max_hamming=4).collect()}
-    assert pairs == {(1, 2), (1, 3), (2, 3)}
-
-
-def test_simhash_expr_matches_replayed_xxhash_votes(spark, docs):
-    # Pin the Catalyst signature kernel (the default/scale path): replay
-    # Spark's OWN xxhash64 token hashes through a plain-Python majority
-    # vote and require bit-identical signatures. (xxhash64 itself is the
-    # trusted builtin; this pins the vote/fold expression around it.)
-    import numpy as np
-
-    from osmgraft.operators.dedup import simhash_expr
-
-    corpus = docs.limit(60).select("doc_id", "text")
-    got = {
-        r["doc_id"]: r["sig"]
-        for r in corpus.select("doc_id", simhash_expr(F.col("text")).alias("sig")).collect()
-    }
-    tok_hashes = (
-        corpus.select(
-            "doc_id",
-            F.explode(F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != F.lit(""))).alias("w"),
-        )
-        .select("doc_id", F.xxhash64(F.col("w")).alias("h"))
-        .collect()
-    )
-    by_doc: dict[int, list[int]] = {}
-    for r in tok_hashes:
-        by_doc.setdefault(r["doc_id"], []).append(r["h"])
-    for doc_id, sig in got.items():
-        hs = np.array(by_doc.get(doc_id, []), dtype=np.int64).view(np.uint64)
-        if len(hs) == 0:
-            assert sig == 0
-            continue
-        bits = ((hs[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(np.int32)
-        votes = (2 * bits - 1).sum(axis=0)
-        want = np.uint64(0)
-        for b in np.nonzero(votes > 0)[0]:
-            want |= np.uint64(1) << np.uint64(b)
-        assert sig == np.int64(want.view(np.int64)), doc_id
-
-
-def test_simhash_catalyst_default_finds_planted_pairs(spark):
-    # The default (Catalyst) path end-to-end: planted near-dup twins pair,
-    # unrelated docs don't, and degenerate text folds to signature 0 like
-    # the md5 kernel.
-    from osmgraft.operators.dedup import simhash_expr, simhash_pairs
-
-    df = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-            (2, "alpha beta gamma delta epsilon zeta eta theta iota kappb"),
-            (3, "one two three four five six seven eight nine ten"),
-            (4, None),
-        ],
-        "doc_id long, text string",
-    )
-    sigs = {r["doc_id"]: r["sig"] for r in df.select("doc_id", simhash_expr(F.col("text")).alias("sig")).collect()}
-    assert sigs[4] == 0
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(df, max_hamming=16, prefix_bits=4).collect()}
-    assert (1, 2) in pairs
-    assert not any(3 in p for p in pairs)
-
-
-def test_jaccard_default_damps_planted_stopword(spark):
-    # The damping rail must be on BY DEFAULT: a corpus where every document
-    # shares one stopword would otherwise feed an all-pairs self-join
-    # (1500 docs -> ~1.1M intersection rows here; quadratic at scale).
-    from osmgraft.operators.dedup import jaccard_pairs
-
-    docs = spark.range(1500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("the unique"), F.col("id").cast("string"),
-                 F.lit(" tok"), (F.col("id") * 7).cast("string")).alias("text"),
-    )
-    # default (finite max_df): the stopword is dropped, no pair shares a
-    # surviving token -> zero rows, and the plan stays bucketed
-    assert jaccard_pairs(docs, threshold=0.01).count() == 0
-    # explicit opt-out reproduces exact jaccard: all pairs share only 'the'
-    # (1/5 each) -> a planted twin is still found above threshold
-    twin = spark.createDataFrame(
-        [(100000, "the unique3 tok21")], "doc_id long, text string"
-    )
-    exact = jaccard_pairs(
-        docs.where(F.col("doc_id") < 50).unionByName(twin), threshold=0.9, max_df=None
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in exact} == {(3, 100000)}
-
-
 def test_multimodal_codec_seam(spark):
     # Contract test for the codec seam: use_codec=True must (a) raise with
     # the default stub (nothing silently trains on fake pixels) and (b)
@@ -735,3 +286,53 @@ def test_registry_and_oracles_share_keys():
     from __spark_entry__ import oracle_sql, queries
 
     assert set(queries()) == set(oracle_sql())
+
+
+def test_osmgraft_imports_resolve():
+    """Every ``from osmgraft.… import name`` in the repo's Python files
+    resolves. Registry queries, bench rows, tools and many tests import
+    lazily inside functions that tier-1 never runs, so a deleted module or
+    function would otherwise leave a dangling import behind unnoticed.
+    Parses the files with ``ast`` and imports only osmgraft modules; no
+    SparkSession is started."""
+    import ast
+    import glob
+    import importlib.util
+    import os
+    import sys
+
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    sys.path.insert(0, repo)
+    files = [os.path.join(repo, f) for f in ("__spark_entry__.py", "bench.py")]
+    for pattern in ("tools/*.py", "perfbench/*.py", "osmgraft/**/*.py", "tests/*.py"):
+        files += glob.glob(os.path.join(repo, pattern), recursive=True)
+
+    def resolves(module: str, name: str | None) -> bool:
+        try:
+            mod = importlib.import_module(module)
+        except ModuleNotFoundError:
+            return False
+        if name is None or name == "*" or hasattr(mod, name):
+            return True
+        return importlib.util.find_spec(f"{module}.{name}") is not None
+
+    checked, dangling = 0, []
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level == 0:
+                targets = [(node.module, a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                targets = [(a.name, None) for a in node.names]
+            else:
+                continue
+            for module, name in targets:
+                if module != "osmgraft" and not module.startswith("osmgraft."):
+                    continue
+                checked += 1
+                if not resolves(module, name):
+                    where = os.path.relpath(path, repo)
+                    dangling.append(f"{where}:{node.lineno} {module} {name or ''}".rstrip())
+    assert checked > 100, checked
+    assert not dangling, dangling

@@ -221,3 +221,75 @@ def test_job_cli_streaming_incremental(spark, tmp_path, capsys):
         job.main(argv + ["--text-format"])
     with pytest.raises(SystemExit):
         job.main(["--docs", src, "--blobs", blobs, "--out", out, "--streaming"])
+
+
+_BASE = ["--docs", "d", "--blobs", "b", "--out", "o"]
+
+
+@pytest.fixture
+def no_session(monkeypatch):
+    """Fail if job.main builds a SparkSession: a rejected command line must
+    exit before any cluster start-up."""
+    from pyspark.sql import SparkSession
+
+    def refuse(self):
+        raise AssertionError("job.main built a SparkSession")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", refuse)
+
+
+def test_job_rejects_uri_stage_dir(no_session, tmp_path, monkeypatch):
+    """Stage lineage goes through the local filesystem, so a URI stage dir
+    would never find its `_SUCCESS` markers and every --resume would
+    recompute everything; the job refuses it up front. Spark-free."""
+    from osmgraft import job
+
+    monkeypatch.chdir(tmp_path)
+    for uri in ("s3://bucket/_stages", "file:///tmp/osmgraft_stages"):
+        with pytest.raises(SystemExit, match="local or mounted path"):
+            job.main([*_BASE, "--stage-dir", uri, "--resume"])
+    assert os.listdir(tmp_path) == []  # no ./file: or ./s3: directory left behind
+
+
+@pytest.mark.parametrize(
+    "extra, message",
+    [
+        (["--resume"], "--resume requires --stage-dir"),
+        (["--dedup-docs"], "--dedup-docs requires --streaming"),
+        (["--dedup-ttl", "24 hours"], "--dedup-ttl requires --streaming"),
+        (["--checkpoint", "c"], "--checkpoint requires --streaming"),
+        (["--streaming", "--checkpoint", "c", "--dedup-ttl", "24 hours"],
+         "--dedup-ttl requires --dedup-docs"),
+        (["--streaming", "--checkpoint", "c", "--dedup-docs", "--dedup-ttl", "10s"],
+         "unsupported duration"),
+        (["--export-hierarchy"], "--export-hierarchy requires --text-format"),
+        (["--resume-chunks", "0"], "--resume-chunks must be at least 1"),
+        (["--dedup-radius-m", "-1"], "--dedup-radius-m must be a finite radius"),
+        (["--dedup-radius-m", "nan"], "--dedup-radius-m must be a finite radius"),
+        (["--dedup-radius-m", "inf"], "--dedup-radius-m must be a finite radius"),
+        (["--streaming"], "--streaming requires --checkpoint"),
+        (["--streaming", "--checkpoint", "c", "--text-format"], "incompatible"),
+        (["--streaming", "--checkpoint", "c", "--stage-dir", "s"], "incompatible"),
+        (["--streaming", "--checkpoint", "c", "--dedup-radius-m", "100"], "incompatible"),
+        # the command lines the job serves pass the checks and reach Spark
+        ([], None),
+        (["--stage-dir", "st", "--resume-chunks", "8", "--tile-zoom", "12"], None),
+        (["--stage-dir", "st", "--resume", "--resume-chunks", "2", "--chunk-by", "osm_id"], None),
+        (["--text-format", "--export-hierarchy", "--dedup-radius-m", "2000"], None),
+        (["--streaming", "--checkpoint", "c", "--dedup-docs", "--dedup-ttl", "24 hours",
+          "--max-files-per-trigger", "1"], None),
+    ],
+)
+def test_job_checks_flags_before_spark(no_session, extra, message):
+    """Flag combinations the job would otherwise ignore without a word exit
+    with a message naming the flag, before a SparkSession is built; the
+    supported ones get as far as building it. Spark-free."""
+    from osmgraft import job
+
+    if message is None:
+        with pytest.raises(AssertionError, match="built a SparkSession"):
+            job.main([*_BASE, *extra])
+        return
+    with pytest.raises(SystemExit) as exc:
+        job.main([*_BASE, *extra])
+    assert message in str(exc.value.code)

@@ -21,7 +21,7 @@ sys.path.insert(0, REPO)
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
-VIEWS = "region nation customer supplier part orders lineitem events documents embeddings".split()
+VIEWS = "region nation customer supplier part orders lineitem events documents".split()
 
 
 def _spark_dtype_kind(dt: str) -> str:

@@ -230,45 +230,11 @@ def main() -> None:
     ]
     sections.append(("adaptive cell split — broadcast hot-cell join", p8, notes8))
 
-    # 9. embedding LSH dedup — bucket exchange carries ids only, no vectors
-    from osmgraft.operators.dedup import embedding_dup_pairs
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    q9 = embedding_dup_pairs(emb, 0.9, dim=64)
-    p9 = plan_of(q9)
-    ex_lines = [l for l in p9.splitlines() if "Exchange hashpartitioning" in l]
-    vec_in_exchange = False
-    for line in ex_lines:
-        m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", line)
-        if m and "embedding" in m.group(0):
-            vec_in_exchange = True
-    notes9 = [
-        f"hash exchanges: {len(ex_lines)}",
-        f"no embedding column in any exchange key: {not vec_in_exchange}",
-        f"posexplode buckets present: {'posexplode' in p9}",
-    ]
-    sections.append(("embedding LSH dedup — vector-free bucket exchange", p9, notes9))
-
-    # 10. default SimHash signature pass — JVM token hashing, shuffle-free,
-    # one Arrow crossing carrying only the 8-byte hash arrays
-    from osmgraft.operators.dedup import simhash_expr
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    q10 = d.select("doc_id", simhash_expr(F.col("text")).alias("sig"))
-    p10 = plan_of(q10)
-    notes10 = [
-        f"token hashing in JVM (xxhash64 in plan): {'xxhash64' in p10}",
-        # formatted explain names each operator twice (tree + detail block)
-        "exactly one Arrow crossing (the vote kernel): "
-        + str(len(re.findall(_ARROW_OP_RE, p10, re.M)) == 1),
-        f"no shuffle in the signature pass: {'Exchange' not in p10}",
-    ]
-    sections.append(("simhash default path — JVM hash + one Arrow vote, shuffle-free", p10, notes10))
-
     # 11. L7 legacy split — whole split + radius as one narrow JVM
     # projection over a pruned scan (no Python, no shuffle)
     from osmgraft.functions.labels import legacy_ball_radius_expr, legacy_split_expr
 
+    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     lbl = F.substring(F.col("text"), 1, 40)
     sp = legacy_split_expr(lbl, " -/")
     q11 = d.select("doc_id", sp.alias("split_label"), legacy_ball_radius_expr(sp).alias("radius"))
@@ -313,72 +279,6 @@ def main() -> None:
         f"{'Cartesian' not in p13b and 'BroadcastNestedLoopJoin' not in p13b}",
     ]
     sections.append(("partitioned PIP — adaptive ring covering equi-join", p13, notes13))
-
-    # 16. IVF ANN — narrow assignment, nprobe-cell equi-join, no cartesian
-    from osmgraft.operators.simsearch import ivf_topk
-
-    emb16 = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs16 = emb16.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("q_id"), "embedding")
-    q16 = ivf_topk(emb16, qs16, k=5, n_cells=8, nprobe=3, seed=3, iters=2)
-    p16 = plan_of(q16)
-    n_arrow16 = len(re.findall(_ARROW_OP_RE, p16, re.M))
-    notes16 = [
-        f"no cartesian/BNLJ (candidates via _cell equi-join): "
-        f"{'Cartesian' not in p16 and 'BroadcastNestedLoopJoin' not in p16}",
-        f"assignment is Arrow-batched matmul, not row Python: "
-        f"{'BatchEvalPython' not in p16} ({n_arrow16} Arrow ops)",
-        f"exact re-rank windows on q_id (bounded partitions), no global "
-        f"single-partition sort: {'SinglePartition' not in p16}",
-    ]
-    sections.append(("IVF ANN — broadcast centroids, nprobe-cell equi-join", p16, notes16))
-
-    # 17. connected components — one alternating-star round (the loop body;
-    # the full operator repeats this plan O(log n) times over a
-    # localCheckpoint-ed frame, so the per-round plan IS the scale story)
-    from osmgraft.operators.dedup import _large_star, _small_star
-
-    e17 = (
-        d.where(F.col("doc_id") < 400)
-        .select(F.col("doc_id").alias("u"), (F.col("doc_id") + 1).alias("v"))
-    )
-    q17 = _small_star(_large_star(e17))
-    p17 = plan_of(q17)
-    n_hash_u = len(re.findall(r"hashpartitioning\(u#", p17))
-    notes17 = [
-        f"no cartesian/BNLJ: {'Cartesian' not in p17 and 'BroadcastNestedLoopJoin' not in p17}",
-        f"every exchange keys on the node id u (co-partitioned min-agg + "
-        f"join): {n_hash_u >= 2} ({n_hash_u} hashpartitioning(u) exchanges)",
-        f"no single-partition stage: {'SinglePartition' not in p17}",
-        f"no Python operators (pure Catalyst round): {'Python' not in p17}",
-        f"map-side partial min before each exchange: {'partial_min' in p17 or p17.count('min(v') >= 2}",
-    ]
-    sections.append(
-        ("connected components — one large-star/small-star round", p17, notes17)
-    )
-
-    # 19. duplicated-substring spans — one gram-hash shuffle, per-doc window
-    from osmgraft.operators.dedup import dup_spans
-
-    q19 = dup_spans(d.select("doc_id", "text"), n=5)
-    p19 = plan_of(q19)
-    n_gh = len(re.findall(r"hashpartitioning\(gh#", p19))
-    bcast_semi = bool(re.search(r"BroadcastHashJoin LeftSemi", p19))
-    # Two valid shapes: (a) >=2 gh exchanges = shuffle semi-join co-partitioned
-    # with the gram agg (the 100-TB shape); (b) 1 gh exchange + a broadcast
-    # LeftSemi = AQE found the dup-gram list small enough to broadcast —
-    # strictly fewer shuffles, the better plan when it fits.
-    notes19 = [
-        f"dup-gram semi-join co-partitioned OR broadcast (no extra shuffle): "
-        f"{n_gh >= 2 or (n_gh == 1 and bcast_semi)} "
-        f"({n_gh} hashpartitioning(gh) exchanges, broadcast semi: {bcast_semi})",
-        f"island window partitioned by doc (never one task): "
-        f"{'SinglePartition' not in p19}",
-        f"no cartesian/BNLJ: {'Cartesian' not in p19 and 'BroadcastNestedLoopJoin' not in p19}",
-        f"no Python operators (pure Catalyst): {'Python' not in p19}",
-    ]
-    sections.append(
-        ("dup_spans — gram-hash shuffle + per-doc island window", p19, notes19)
-    )
 
     # 20. HyperLogLog — one bucket-keyed exchange, pure codegen hash
     from osmgraft.operators.sketch import hll_registers
