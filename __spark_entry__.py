@@ -387,77 +387,6 @@ def _pip_triangles_sql() -> str:
     )
 
 
-# Overlay-join oracle geometry: per-side triangle vertex offsets (literal
-# doubles shared verbatim between the Spark frames and the SQL replay, so
-# both engines compute bit-identical orientation signs).
-_OVL_L_DY = (1.7321, 0.8913)
-_OVL_L_DX = (0.4567, 1.9876)
-_OVL_R_DY = (4.6912, 1.1358)
-_OVL_R_DX = (6.247, 8.4692)
-
-_OVL_L_SQL = (
-    "select cast(c_custkey as bigint) as lid, "
-    "(c_custkey % 120) * 0.55 - 33.13579 as a, "
-    "(c_custkey * 37 % 320) * 0.9 - 144.24683 as b from customer"
-)
-_OVL_R_SQL = (
-    "select cast(n_nationkey as bigint) as rid, "
-    "(n_nationkey % 9) * 9.0 - 36.78913 as a, "
-    "(n_nationkey * 29 % 300) - 150.56789 as b from nation"
-)
-
-
-def _poly_overlap_tris_sql() -> str:
-    """SQL replica of the overlay join's EXACT kernel over two triangle
-    sets (operators/overlay.py rings_intersect): intersect iff some edge
-    pair properly crosses (strict orientation-sign products) OR — when no
-    edges cross — vertex 1 of either triangle is inside the other
-    (half-open even-odd, same arithmetic as the PIP kernel replay)."""
-    lv = ", ".join(
-        [f"a as ly1, b as lx1"]
-        + [f"a + {repr(_OVL_L_DY[i])} as ly{i + 2}, b + {repr(_OVL_L_DX[i])} as lx{i + 2}" for i in range(2)]
-    )
-    rv = ", ".join(
-        [f"a as ry1, b as rx1"]
-        + [f"a + {repr(_OVL_R_DY[i])} as ry{i + 2}, b + {repr(_OVL_R_DX[i])} as rx{i + 2}" for i in range(2)]
-    )
-
-    def orient(ax, ay, bx, by, px, py):
-        # exact parenthesization of overlay._orient
-        return f"(({bx} - {ax}) * ({py} - {ay}) - ({by} - {ay}) * ({px} - {ax}))"
-
-    edges = [(1, 2), (2, 3), (3, 1)]
-    cross_terms = []
-    for i, j in edges:
-        for k, m in edges:
-            d1 = orient(f"lx{i}", f"ly{i}", f"lx{j}", f"ly{j}", f"rx{k}", f"ry{k}")
-            d2 = orient(f"lx{i}", f"ly{i}", f"lx{j}", f"ly{j}", f"rx{m}", f"ry{m}")
-            d3 = orient(f"rx{k}", f"ry{k}", f"rx{m}", f"ry{m}", f"lx{i}", f"ly{i}")
-            d4 = orient(f"rx{k}", f"ry{k}", f"rx{m}", f"ry{m}", f"lx{j}", f"ly{j}")
-            cross_terms.append(f"({d1} * {d2} < 0 and {d3} * {d4} < 0)")
-
-    def inside(px, py, pre):
-        hits = []
-        for i, j in edges:
-            y1, y2 = f"{pre}y{i}", f"{pre}y{j}"
-            x1, x2 = f"{pre}x{i}", f"{pre}x{j}"
-            hits.append(
-                f"(case when (({y1} > {py}) != ({y2} > {py})) "
-                f"and {px} < {x1} + ({py} - {y1})/({y2} - {y1})*({x2} - {x1}) then 1 else 0 end)"
-            )
-        return "(" + " + ".join(hits) + ") % 2 = 1"
-
-    pred = (
-        "(" + " or ".join(cross_terms) + ")"
-        f" or ({inside('lx1', 'ly1', 'r')}) or ({inside('rx1', 'ry1', 'l')})"
-    )
-    return (
-        f"with lt as ({_OVL_L_SQL}), lv as (select lid, {lv} from lt), "
-        f"rt as ({_OVL_R_SQL}), rv as (select rid, {rv} from rt) "
-        f"select lid, rid from lv, rv where {pred}"
-    )
-
-
 def _label_pipeline_oracle_sql() -> str:
     """DuckDB replica of the FULL flagship pipeline over the staged synth
     corpus (see osmgraft/plans/sql_oracle.py for the derivation notes)."""
@@ -1067,72 +996,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("doc_id", "n_dupes")
         )
 
-    # --- sketch: HyperLogLog distinct-token count ---------------------------------
-    def _hll_vals(spark, sf):
-        # (token, doc bucket) pairs: the synth vocabulary alone is ~40
-        # tokens — too few to exercise a sketch — so distinct values are
-        # token x doc-bucket (thousands at sf0.01)
-        d = _read(spark, sf, "documents")
-        exp = d.select(
-            (F.col("doc_id") % 1000).cast("string").alias("_b"),
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
-        )
-        return exp.select(F.concat_ws("-", F.col("_t"), F.col("_b")).alias("w"))
-
-    def q_hll_registers(spark, sf):
-        from osmgraft.operators.sketch import hll_registers
-
-        return hll_registers(_hll_vals(spark, sf), "w", p=10)
-
-    def q_hll_estimate(spark, sf):
-        from osmgraft.operators.sketch import hll_count_distinct
-
-        return hll_count_distinct(_hll_vals(spark, sf), "w", p=10)
-
-    # --- sketch: grouped HLL (distinct tokens per source) --------------------------
-    def q_hll_by_source(spark, sf):
-        from osmgraft.operators.sketch import hll_count_distinct_by
-
-        d = _read(spark, sf, "documents")
-        exp = d.select(
-            F.col("source").alias("g"),
-            (F.col("doc_id") % 1000).cast("string").alias("_b"),
-            F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("_t"),
-        )
-        vals = exp.select("g", F.concat_ws("-", "_t", "_b").alias("w"))
-        return hll_count_distinct_by(vals, ["g"], "w", p=9)
-
-    # --- sketch: Count-Min weighted heavy-hitter point estimates -----------------
-    def q_cms_topk(spark, sf):
-        from osmgraft.operators.sketch import cms_point_query, cms_table
-
-        d = _read(spark, sf, "documents").select(
-            (F.col("doc_id") % 37).cast("string").alias("v"), "n_chars"
-        )
-        table = cms_table(d, "v", d=4, w=256, weight_col="n_chars")
-        probes = spark.range(40).select(F.col("id").cast("string").alias("v"))
-        return cms_point_query(table, probes, "v", d=4, w=256)
-
-    # --- sketch: fixed-bin histogram quantiles ------------------------------------
-    def q_hist_quantiles(spark, sf):
-        from osmgraft.operators.sketch import hist_bins, hist_quantiles
-
-        d = _read(spark, sf, "documents")
-        bins = hist_bins(d, "n_chars", lo=0.0, hi=2048.0, nbins=256)
-        return hist_quantiles(
-            bins, [0.1, 0.25, 0.5, 0.75, 0.9, 0.99], lo=0.0, hi=2048.0, nbins=256
-        )
-
-    # --- sketch: per-group histogram quantiles --------------------------------------
-    def q_hist_by_lang(spark, sf):
-        from osmgraft.operators.sketch import hist_bins_by, hist_quantiles_by
-
-        d = _read(spark, sf, "documents")
-        bins = hist_bins_by(d, ["lang"], "n_chars", lo=0.0, hi=2048.0, nbins=256)
-        return hist_quantiles_by(
-            bins, ["lang"], [0.25, 0.5, 0.9], lo=0.0, hi=2048.0, nbins=256
-        )
-
     # --- layout: Z-order (Morton) clustering key ----------------------------------
     def q_zorder_keys(spark, sf):
         from osmgraft.operators.layout import zorder_key
@@ -1264,60 +1127,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return zonal_stats(pts, polys, "val", strategy="broadcast")
 
-    # --- overlay: polygon x polygon intersects join ---------------------------------
-    def q_poly_overlap_rects(spark, sf):
-        # nation rects (~8x12 deg) exceed max_cover_cells at res 5 and take
-        # the broadcast rail; customer rects stay cell-covered — the oracle
-        # (strict bbox overlap, exact for axis-aligned rects) checks the
-        # rail end-to-end.
-        from osmgraft.operators.overlay import poly_intersects_join
-
-        c = _read(spark, sf, "customer")
-        k = F.col("c_custkey").cast("long")
-        la = (k % 120).cast("double") * 0.55 - 33.13579
-        lo = (k * 37 % 320).cast("double") * 0.9 - 144.24683
-        left = c.select(
-            k.alias("lid"),
-            F.array(la, la, la + 0.9876, la + 0.9876).alias("ring_lats"),
-            F.array(lo, lo + 1.2345, lo + 1.2345, lo).alias("ring_lons"),
-        )
-        n = _read(spark, sf, "nation")
-        m = F.col("n_nationkey").cast("long")
-        ra = (m % 9).cast("double") * 9.0 - 40.5678
-        ro = (m * 29 % 300).cast("double") - 150.5678
-        right = n.select(
-            m.alias("rid"),
-            F.array(ra, ra, ra + 8.1234, ra + 8.1234).alias("ring_lats"),
-            F.array(ro, ro + 12.1234, ro + 12.1234, ro).alias("ring_lons"),
-        )
-        return poly_intersects_join(left, right, "lid", "rid", res=5, max_cover_cells=256)
-
-    def q_poly_overlap_tris(spark, sf):
-        # both triangle sets stay under the covering budget -> the shared-
-        # cell equi-join path; the oracle replays the exact segment-
-        # crossing + even-odd containment kernel in SQL.
-        from osmgraft.operators.overlay import poly_intersects_join
-
-        c = _read(spark, sf, "customer")
-        k = F.col("c_custkey").cast("long")
-        a = (k % 120).cast("double") * 0.55 - 33.13579
-        b = (k * 37 % 320).cast("double") * 0.9 - 144.24683
-        left = c.select(
-            k.alias("lid"),
-            F.array(a, a + _OVL_L_DY[0], a + _OVL_L_DY[1]).alias("ring_lats"),
-            F.array(b, b + _OVL_L_DX[0], b + _OVL_L_DX[1]).alias("ring_lons"),
-        )
-        n = _read(spark, sf, "nation")
-        m = F.col("n_nationkey").cast("long")
-        ra = (m % 9).cast("double") * 9.0 - 36.78913
-        rb = (m * 29 % 300).cast("double") - 150.56789
-        right = n.select(
-            m.alias("rid"),
-            F.array(ra, ra + _OVL_R_DY[0], ra + _OVL_R_DY[1]).alias("ring_lats"),
-            F.array(rb, rb + _OVL_R_DX[0], rb + _OVL_R_DX[1]).alias("ring_lons"),
-        )
-        return poly_intersects_join(left, right, "lid", "rid", res=5, max_cover_cells=2048)
-
     # --- layout: geohash string key -------------------------------------------------
     def q_geohash(spark, sf):
         from osmgraft.operators.layout import geohash
@@ -1356,8 +1165,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_radius_pairs": q_knn_pairs,
         "pip_rectangles": q_pip_boxes,
         "pip_triangles": q_pip_triangles,
-        "poly_overlap_rects": q_poly_overlap_rects,
-        "poly_overlap_tris": q_poly_overlap_tris,
         "geohash_cells": q_geohash,
         "quadkeys": q_quadkeys,
         "rasterize_density": q_rasterize,
@@ -1387,12 +1194,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hex_cells": q_hex_cells,
         "adaptive_cells_pts": q_adaptive_cells_pts,
         "legacy_split": q_legacy_split,
-        "hll_registers": q_hll_registers,
-        "hll_distinct_tokens": q_hll_estimate,
-        "hll_distinct_by_source": q_hll_by_source,
-        "cms_heavy_hitters": q_cms_topk,
-        "hist_quantiles": q_hist_quantiles,
-        "hist_quantiles_by_lang": q_hist_by_lang,
         "zorder_keys": q_zorder_keys,
         "tile_pyramid": q_tile_pyramid,
         "way_lengths": q_way_lengths,
@@ -1415,13 +1216,6 @@ def oracle_sql() -> dict[str, str]:
         geohash_oracle_sql,
         quadkey_oracle_sql,
         zorder_oracle_sql,
-    )
-    from osmgraft.operators.sketch import (
-        cms_oracle_sql,
-        hist_quantiles_by_oracle_sql,
-        hist_quantiles_oracle_sql,
-        hll_by_oracle_sql,
-        hll_oracle_sql,
     )
 
     def _tile_level_sql(z: int) -> str:
@@ -1463,8 +1257,6 @@ def oracle_sql() -> dict[str, str]:
         "pow(sin(radians(b.lat-a.lat)/2),2) + "
         "cos(radians(a.lat))*cos(radians(b.lat))*pow(sin(radians(b.lon-a.lon)/2),2)))"
     )
-
-    tok = "string_split_regex(trim(text), '\\s+')"
 
     return {
         "filter_scan": (
@@ -1550,20 +1342,6 @@ def oracle_sql() -> dict[str, str]:
             "where p.lat > la and p.lat < la + 8.1234 and p.lon > lo and p.lon < lo + 12.1234"
         ),
         "pip_triangles": _pip_triangles_sql(),
-        # axis-aligned rects: interiors intersect iff bboxes STRICTLY
-        # overlap — exact for the rail path the nation rects take
-        "poly_overlap_rects": (
-            "with l as (select cast(c_custkey as bigint) as lid, "
-            "(c_custkey % 120) * 0.55 - 33.13579 as la, "
-            "(c_custkey * 37 % 320) * 0.9 - 144.24683 as lo from customer), "
-            "r as (select cast(n_nationkey as bigint) as rid, "
-            "(n_nationkey % 9) * 9.0 - 40.5678 as ra, "
-            "(n_nationkey * 29 % 300) - 150.5678 as ro from nation) "
-            "select lid, rid from l, r "
-            "where la < ra + 8.1234 and ra < la + 0.9876 "
-            "and lo < ro + 12.1234 and ro < lo + 1.2345"
-        ),
-        "poly_overlap_tris": _poly_overlap_tris_sql(),
         "tile_topk": (
             f"with t as (select pid as osm_id, "
             f"least(cast(floor((lon+180.0)/360.0*256) as bigint), 255) as tile_x, "
@@ -1784,51 +1562,6 @@ def oracle_sql() -> dict[str, str]:
             "else strlen(res) - strlen(substr(res, 1, strpos(res, '%') - 1)) end) "
             "else (case when strlen(res) > strlen(res) // 2 then strlen(res) else 0 end) end / 2.0 "
             "as double) as radius from c2"
-        ),
-        # HyperLogLog: identical md5-low-64 hash, integer registers, and
-        # an order-free DECIMAL harmonic sum (osmgraft/operators/sketch.py)
-        "hll_registers": hll_oracle_sql(
-            f"select w || '-' || cast(doc_id % 1000 as varchar) as v "
-            f"from (select doc_id, unnest({tok}) as w from documents)",
-            p=10,
-            registers_only=True,
-        ),
-        "hll_distinct_by_source": hll_by_oracle_sql(
-            f"select source as g, w || '-' || cast(doc_id % 1000 as varchar) as v "
-            f"from (select doc_id, source, unnest({tok}) as w from documents)",
-            ["g"],
-            p=9,
-        ),
-        "hll_distinct_tokens": hll_oracle_sql(
-            f"select w || '-' || cast(doc_id % 1000 as varchar) as v "
-            f"from (select doc_id, unnest({tok}) as w from documents)",
-            p=10,
-        ),
-        # Count-Min: identical row-salted md5 hash + power-of-two mask +
-        # integer sums replay bit-exactly (osmgraft/operators/sketch.py)
-        "cms_heavy_hitters": cms_oracle_sql(
-            "select cast(doc_id % 37 as varchar) as v, n_chars from documents",
-            "select cast(range as varchar) as v from range(40)",
-            d=4,
-            w=256,
-            weight="n_chars",
-        ),
-        # fixed-bin histogram: identical clamp/floor binning + integer
-        # cumulative ranks — deterministic, unlike approx_percentile
-        "hist_quantiles": hist_quantiles_oracle_sql(
-            "select n_chars as v from documents",
-            [0.1, 0.25, 0.5, 0.75, 0.9, 0.99],
-            lo=0.0,
-            hi=2048.0,
-            nbins=256,
-        ),
-        "hist_quantiles_by_lang": hist_quantiles_by_oracle_sql(
-            "select lang, n_chars as v from documents",
-            ["lang"],
-            [0.25, 0.5, 0.9],
-            lo=0.0,
-            hi=2048.0,
-            nbins=256,
         ),
         # Morton key: same quantization + same spread masks; bigint bit
         # ops evaluate identically in both engines

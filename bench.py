@@ -271,12 +271,6 @@ def main() -> None:
 
         return queries()[name](spark, SF_DIR).count()
 
-    def q_poly_overlap():
-        return _entry("poly_overlap_tris")
-
-    def q_hist_quantiles_by():
-        return _entry("hist_quantiles_by_lang")
-
     def q_geohash():
         return _entry("geohash_cells")
 
@@ -341,8 +335,6 @@ def main() -> None:
         ("knn_dedup_2km", q_dedup),
         ("classify_global_rank", q_rank),
         ("tile_pyramid_z12_6", q_tile_pyramid),
-        ("poly_overlap_tris", q_poly_overlap),
-        ("hist_quantiles_by_lang", q_hist_quantiles_by),
         ("geohash_cells", q_geohash),
         ("idw_surface", q_idw),
         ("vectorize_runs", q_vec_runs),

@@ -69,9 +69,10 @@ def build_parser() -> argparse.ArgumentParser:
     )
     ap.add_argument(
         "--chunk-by",
-        default="osm_id",
-        help="comma-separated columns driving chunk membership (default "
-        "osm_id — a stable natural id keeps chunking content-deterministic)",
+        default=None,
+        help="with --resume-chunks > 1: comma-separated columns driving chunk "
+        "membership (default osm_id — a stable natural id keeps chunking "
+        "content-deterministic)",
     )
     ap.add_argument("--tile-zoom", type=int, default=12)
     ap.add_argument("--dedup-radius-m", type=float, default=0.0, help="0 = no kNN dedup")
@@ -99,7 +100,10 @@ def build_parser() -> argparse.ArgumentParser:
         help='state TTL horizon for --dedup-docs (e.g. "24 hours"; default unbounded)',
     )
     ap.add_argument(
-        "--max-files-per-trigger", type=int, default=64, help="streaming micro-batch size (files)"
+        "--max-files-per-trigger",
+        type=int,
+        default=None,
+        help="with --streaming: micro-batch size in files (default 64)",
     )
     return ap
 
@@ -118,6 +122,10 @@ def check_args(args: argparse.Namespace) -> None:
         raise SystemExit("--resume requires --stage-dir")
     if args.resume_chunks < 1:
         raise SystemExit(f"--resume-chunks must be at least 1, got {args.resume_chunks}")
+    if args.resume_chunks > 1 and not args.stage_dir:
+        raise SystemExit("--resume-chunks > 1 requires --stage-dir")
+    if args.chunk_by is not None and args.resume_chunks <= 1:
+        raise SystemExit("--chunk-by requires --stage-dir and --resume-chunks > 1")
     if not (math.isfinite(args.dedup_radius_m) and args.dedup_radius_m >= 0):
         raise SystemExit(
             f"--dedup-radius-m must be a finite radius >= 0 (0 = no kNN dedup), "
@@ -138,6 +146,7 @@ def check_args(args: argparse.Namespace) -> None:
             ("--dedup-docs", args.dedup_docs),
             ("--dedup-ttl", args.dedup_ttl is not None),
             ("--checkpoint", args.checkpoint is not None),
+            ("--max-files-per-trigger", args.max_files_per_trigger is not None),
         ):
             if given:
                 raise SystemExit(f"{flag} requires --streaming")
@@ -179,7 +188,8 @@ def main(argv: list[str] | None = None) -> None:
             stream_pipeline_foreach_batch,
         )
 
-        stream = stream_documents(spark, args.docs, max_files=args.max_files_per_trigger)
+        max_files = 64 if args.max_files_per_trigger is None else args.max_files_per_trigger
+        stream = stream_documents(spark, args.docs, max_files=max_files)
         if args.dedup_docs:
             stream = stream_dedup_documents(stream, state_ttl=args.dedup_ttl)
         q = stream_pipeline_foreach_batch(
@@ -219,7 +229,7 @@ def main(argv: list[str] | None = None) -> None:
 
             path = f"{args.stage_dir}/{name}"
             n_chunks = args.resume_chunks
-            chunk_by = [c.strip() for c in args.chunk_by.split(",") if c.strip()]
+            chunk_by = [c.strip() for c in (args.chunk_by or "osm_id").split(",") if c.strip()]
             if args.resume:
                 return resume_or_compute(
                     spark, path, name, builder, n_chunks=n_chunks, chunk_by=chunk_by

@@ -278,6 +278,13 @@ def test_job_rejects_uri_stage_dir(no_session, tmp_path, monkeypatch):
         (["--text-format", "--export-hierarchy", "--dedup-radius-m", "2000"], None),
         (["--streaming", "--checkpoint", "c", "--dedup-docs", "--dedup-ttl", "24 hours",
           "--max-files-per-trigger", "1"], None),
+        # flags main parses but would never read without the flags they need
+        (["--resume-chunks", "64"], "--resume-chunks > 1 requires --stage-dir"),
+        (["--chunk-by", "osm_id"], "--chunk-by requires --stage-dir"),
+        (["--resume-chunks", "8", "--chunk-by", "osm_id"], "--resume-chunks > 1 requires --stage-dir"),
+        (["--stage-dir", "st", "--chunk-by", "osm_id"],
+         "--chunk-by requires --stage-dir and --resume-chunks > 1"),
+        (["--max-files-per-trigger", "1"], "--max-files-per-trigger requires --streaming"),
     ],
 )
 def test_job_checks_flags_before_spark(no_session, extra, message):

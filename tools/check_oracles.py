@@ -17,6 +17,9 @@ import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the JVM and its Python workers inherit this environment, so UDF workers
+# can import osmgraft whatever directory the tool runs from
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None

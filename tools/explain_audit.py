@@ -23,6 +23,9 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the JVM and its Python workers inherit this environment, so UDF workers
+# can import osmgraft whatever directory the tool runs from
+os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 _ARROW_OP_RE = r"^[(]\d+[)] ArrowEvalPython"
@@ -280,39 +283,7 @@ def main() -> None:
     ]
     sections.append(("partitioned PIP — adaptive ring covering equi-join", p13, notes13))
 
-    # 20. HyperLogLog — one bucket-keyed exchange, pure codegen hash
-    from osmgraft.operators.sketch import hll_registers
-
-    v20 = d.select(F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"))
-    q20 = hll_registers(v20, "w", p=12)
-    p20 = plan_of(q20)
-    notes20 = [
-        f"exactly one exchange, keyed on the sketch bucket: "
-        f"{len(re.findall(r'Arguments: hashpartitioning', p20)) == 1 and 'hashpartitioning(bucket#' in p20}",
-        f"map-side partial max before the exchange: {'partial_max' in p20}",
-        f"hash/bucket/rho pure Catalyst (no Python): {'Python' not in p20}",
-        f"scan pruned to the one input column: "
-        f"{'ReadSchema: struct<text:string>' in p20}",
-    ]
-    sections.append(("HyperLogLog registers — one 2^p-row exchange", p20, notes20))
-
     import __spark_entry__ as entry_mod
-
-    # 24. Count-Min table — one exchange whose input is bounded at d*w
-    # rows per map partition (partial_sum combine), pure Catalyst hashing
-    q24 = entry_mod.queries()["cms_heavy_hitters"](spark, SF)
-    p24 = plan_of(q24)
-    notes24 = [
-        f"pure Catalyst (no Python): {'Python' not in p24}",
-        f"map-side combine before the cell exchange (partial_sum): "
-        f"{'partial_sum' in p24}",
-        f"probe join broadcast (table <= d*w rows): {'BroadcastHashJoin' in p24}",
-        f"scan pruned to (doc_id, n_chars) — text never read: "
-        f"{'text' not in p24}",
-    ]
-    sections.append(
-        ("Count-Min sketch — bounded cell exchange, broadcast probe", p24, notes24)
-    )
 
     # 25. Z-order key — a narrow pure-codegen projection: NO exchange, no
     # Python, scan pruned to the three source columns
@@ -383,48 +354,6 @@ def main() -> None:
     ]
     sections.append(
         ("zonal stats — broadcast PIP join + single algebraic rollup", p30, notes30)
-    )
-
-    # 32. grouped histogram quantiles — both windows and the rank groupBy
-    # share the per-group partitioning; no single-task stage
-    q32 = entry_mod.queries()["hist_quantiles_by_lang"](spark, SF)
-    p32 = plan_of(q32)
-    notes32 = [
-        f"no single-partition exchange over data: "
-        f"{'SinglePartition' not in p32.replace('Exchange SinglePartition, ENSURE_REQUIREMENTS', '') or p32.count('SinglePartition') == 0}",
-        f"windows partitioned by the group key: {'hashpartitioning(lang' in p32}",
-        # the q-list literal is a driver-local PythonRDD CONSTANT (3 rows);
-        # the check targets actual Python EVAL operators in the data path
-        f"no Python eval in the data path: "
-        f"{not re.search(r'(ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)', p32)}",
-        f"broadcast q-list join: {'BroadcastNestedLoopJoin' in p32 or 'BroadcastHashJoin' in p32}",
-    ]
-    sections.append(
-        ("grouped histogram quantiles — per-group windows, no one-task stage", p32, notes32)
-    )
-
-    # 33. polygon-polygon intersects join — path A is ONE cell equi-join
-    # with the bbox prefilter codegen-side before the pair-dedup shuffle;
-    # the only nested loops are the two broadcast big-polygon rails.
-    q33 = entry_mod.queries()["poly_overlap_rects"](spark, SF)
-    p33 = plan_of(q33)
-    _bnlj_ok = (
-        len(re.findall(r"[(]\d+[)] BroadcastNestedLoopJoin", p33)) == 2
-        and len(re.findall(r"BroadcastNestedLoopJoin Inner Build(?:Left|Right)", p33)) == 2
-    )
-    notes33 = [
-        f"cell candidates via an equi-join node (hash family; broadcast at "
-        f"this SF by AQE, shuffle equi-join at scale): "
-        f"{bool(re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)', p33))}",
-        f"pair-dedup shuffle keyed on the pair: "
-        f"{'hashpartitioning(_lid' in p33}",
-        f"exactly two BNLJ nodes, both broadcast big-polygon rails: {_bnlj_ok}",
-        f"no cartesian: {'CartesianProduct' not in p33}",
-        f"Python confined to covering + exact kernel (Arrow passes only): "
-        f"{'BatchEvalPython' not in p33 and len(re.findall(_ARROW_OP_RE, p33, re.M)) >= 1}",
-    ]
-    sections.append(
-        ("polygon-polygon intersects — cell equi-join + broadcast big rails", p33, notes33)
     )
 
     # 36. geohash key — pure codegen bit interleave + base-32 substring
