@@ -996,110 +996,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("doc_id", "n_dupes")
         )
 
-    # --- layout: Z-order (Morton) clustering key ----------------------------------
-    def q_zorder_keys(spark, sf):
-        from osmgraft.operators.layout import zorder_key
-
-        pts = _pts(spark, sf)
-        return pts.select("pid", zorder_key(F.col("lat"), F.col("lon"), 16))
-
     # --- tiles: multi-resolution rollup pyramid -----------------------------------
     def q_tile_pyramid(spark, sf):
         from osmgraft.operators.tiles import tile_pyramid
 
         pts = _pts(spark, sf)
         return tile_pyramid(pts, z_max=8, z_min=5, rank_col="pid")
-
-    # --- geospatial: geodesic polyline length over derived ways --------------------
-    def _ways(spark, sf):
-        pts = _pts(spark, sf).where(F.col("pid") < 2000)
-        w = pts.groupBy(F.col("grp").alias("way_id")).agg(
-            F.sort_array(F.collect_list(F.struct("pid", "lat", "lon"))).alias("_s")
-        )
-        return w.select(
-            "way_id",
-            F.expr("transform(_s, x -> x.lat)").alias("lats"),
-            F.expr("transform(_s, x -> x.lon)").alias("lons"),
-        )
-
-    def q_way_midpoints(spark, sf):
-        from osmgraft.operators.geom import polyline_point_at
-
-        w = _ways(spark, sf)
-        p = polyline_point_at(F.col("lats"), F.col("lons"), frac=0.5)
-        return w.select(
-            "way_id",
-            F.round(p["lat"], 4).alias("plat"),
-            F.round(p["lon"], 4).alias("plon"),
-        )
-
-    def q_way_lengths(spark, sf):
-        from osmgraft.operators.geom import polyline_length_m
-
-        w = _ways(spark, sf)
-        return w.select(
-            "way_id",
-            F.round(
-                polyline_length_m(F.col("lats"), F.col("lons")) / 1000.0, 3
-            ).alias("length_km"),
-        )
-
-    # --- geospatial: spherical ring areas over the PIP rectangles ------------------
-    def q_ring_centroids(spark, sf):
-        from osmgraft.operators.geom import ring_centroid
-
-        n = _read(spark, sf, "nation")
-        rings = n.select(
-            F.col("n_nationkey").cast("long").alias("ring_id"),
-            ((F.col("n_nationkey") % 9).cast("double") * 9.0 - 40.5678).alias("_la"),
-            ((F.col("n_nationkey") * 29 % 300).cast("double") - 150.5678).alias("_lo"),
-        ).select(
-            "ring_id",
-            F.array(
-                F.col("_la"),
-                F.col("_la"),
-                F.col("_la") + 8.1234,
-                F.col("_la") + 8.1234,
-                F.col("_la") + 4.0,
-            ).alias("lats"),
-            F.array(
-                F.col("_lo"),
-                F.col("_lo") + 12.1234,
-                F.col("_lo") + 12.1234,
-                F.col("_lo") + 6.0,
-                F.col("_lo") + 6.0,
-            ).alias("lons"),
-        )
-        c = ring_centroid(F.col("lats"), F.col("lons"))
-        return rings.select(
-            "ring_id",
-            F.round(c["lat"], 4).alias("clat"),
-            F.round(c["lon"], 4).alias("clon"),
-        )
-
-    def q_ring_areas(spark, sf):
-        from osmgraft.operators.geom import ring_area_m2
-
-        n = _read(spark, sf, "nation")
-        rings = n.select(
-            F.col("n_nationkey").cast("long").alias("ring_id"),
-            ((F.col("n_nationkey") % 9).cast("double") * 9.0 - 40.5678).alias("_la"),
-            ((F.col("n_nationkey") * 29 % 300).cast("double") - 150.5678).alias("_lo"),
-        ).select(
-            "ring_id",
-            F.array(
-                F.col("_la"), F.col("_la"), F.col("_la") + 8.1234, F.col("_la") + 8.1234
-            ).alias("lats"),
-            F.array(
-                F.col("_lo"), F.col("_lo") + 12.1234, F.col("_lo") + 12.1234, F.col("_lo")
-            ).alias("lons"),
-        )
-        return rings.select(
-            "ring_id",
-            F.round(ring_area_m2(F.col("lats"), F.col("lons")) / 1e6, 3).alias(
-                "area_km2"
-            ),
-        )
 
     # --- geospatial: zonal statistics over the PIP rectangles ----------------------
     def q_zonal_stats(spark, sf):
@@ -1127,26 +1029,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         return zonal_stats(pts, polys, "val", strategy="broadcast")
 
-    # --- layout: geohash string key -------------------------------------------------
-    def q_geohash(spark, sf):
-        from osmgraft.operators.layout import geohash
-
-        pts = _pts(spark, sf)
-        return pts.select("pid", geohash(F.col("lat"), F.col("lon"), 7).alias("gh"))
-
-    def q_quadkeys(spark, sf):
-        from osmgraft.operators.layout import quadkey
-
-        pts = _pts(spark, sf)
-        return pts.select("pid", quadkey(F.col("lat"), F.col("lon"), 12).alias("qk"))
-
-    # --- layout: Morton-range-accelerated exact box query --------------------------
-    def q_zorder_box(spark, sf):
-        from osmgraft.operators.layout import box_query
-
-        pts = _pts(spark, sf)
-        return box_query(pts, 10.0, 35.0, -20.0, 40.0)
-
     return {
         "filter_scan": q_filter_scan,
         "classify_levels": q_classify,
@@ -1165,8 +1047,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_radius_pairs": q_knn_pairs,
         "pip_rectangles": q_pip_boxes,
         "pip_triangles": q_pip_triangles,
-        "geohash_cells": q_geohash,
-        "quadkeys": q_quadkeys,
         "rasterize_density": q_rasterize,
         "raster_vectorize": q_raster_vectorize,
         "idw_surface": q_idw_surface,
@@ -1194,30 +1074,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hex_cells": q_hex_cells,
         "adaptive_cells_pts": q_adaptive_cells_pts,
         "legacy_split": q_legacy_split,
-        "zorder_keys": q_zorder_keys,
         "tile_pyramid": q_tile_pyramid,
-        "way_lengths": q_way_lengths,
-        "ring_areas": q_ring_areas,
-        "ring_centroids": q_ring_centroids,
-        "way_midpoints": q_way_midpoints,
         "zonal_stats_boxes": q_zonal_stats,
-        "zorder_box_query": q_zorder_box,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    from osmgraft.operators.geom import (
-        polyline_length_oracle_sql,
-        polyline_point_at_oracle_sql,
-        ring_area_oracle_sql,
-        ring_centroid_oracle_sql,
-    )
-    from osmgraft.operators.layout import (
-        geohash_oracle_sql,
-        quadkey_oracle_sql,
-        zorder_oracle_sql,
-    )
-
     def _tile_level_sql(z: int) -> str:
         # identical Web-Mercator formula as tiles.tile_xy, aggregated
         # DIRECTLY from the points at zoom z — so the pyramid oracle also
@@ -1563,60 +1425,9 @@ def oracle_sql() -> dict[str, str]:
             "else (case when strlen(res) > strlen(res) // 2 then strlen(res) else 0 end) end / 2.0 "
             "as double) as radius from c2"
         ),
-        # Morton key: same quantization + same spread masks; bigint bit
-        # ops evaluate identically in both engines
-        "zorder_keys": zorder_oracle_sql(_PTS_SQL, bits=16),
-        "geohash_cells": geohash_oracle_sql(_PTS_SQL, precision=7),
-        "quadkeys": quadkey_oracle_sql(_PTS_SQL, z=12),
         # per-level DIRECT aggregation (no rollup) — equality with the
         # engine's cached single-scan rollup proves the parent identity
         "tile_pyramid": " union all ".join(_tile_level_sql(z) for z in range(5, 9)),
-        # per-segment haversine (identical formula), summed in pid order;
-        # rounded to 3 decimals of km so float-order noise (~1e-15 rel)
-        # stays far below the comparator's resolution
-        "way_lengths": (
-            "select way_id, round(length_m / 1000.0, 3) as length_km from ("
-            + polyline_length_oracle_sql(
-                "select grp as way_id, list(lat order by pid) as lats, "
-                f"list(lon order by pid) as lons from ({_PTS_SQL}) p "
-                "where pid < 2000 group by grp"
-            )
-            + ")"
-        ),
-        "way_midpoints": (
-            "select way_id, round(plat, 4) as plat, round(plon, 4) as plon from ("
-            + polyline_point_at_oracle_sql(
-                "select grp as way_id, list(lat order by pid) as lats, "
-                f"list(lon order by pid) as lons from ({_PTS_SQL}) p "
-                "where pid < 2000 group by grp",
-                frac=0.5,
-            )
-            + ")"
-        ),
-        "ring_centroids": (
-            "select ring_id, round(clat, 4) as clat, round(clon, 4) as clon from ("
-            + ring_centroid_oracle_sql(
-                "select cast(n_nationkey as bigint) as ring_id, "
-                "[la, la, la + 8.1234, la + 8.1234, la + 4.0] as lats, "
-                "[lo, lo + 12.1234, lo + 12.1234, lo + 6.0, lo + 6.0] as lons from ("
-                "select n_nationkey, (n_nationkey % 9) * 9.0 - 40.5678 as la, "
-                "(n_nationkey * 29 % 300) - 150.5678 as lo from nation)"
-            )
-            + ")"
-        ),
-        # identical wrap-around Chamberlain-Duquette terms, summed in
-        # index order, rounded to 3 decimals of km^2
-        "ring_areas": (
-            "select ring_id, round(area_m2 / 1e6, 3) as area_km2 from ("
-            + ring_area_oracle_sql(
-                "select cast(n_nationkey as bigint) as ring_id, "
-                "[la, la, la + 8.1234, la + 8.1234] as lats, "
-                "[lo, lo + 12.1234, lo + 12.1234, lo] as lons from ("
-                "select n_nationkey, (n_nationkey % 9) * 9.0 - 40.5678 as la, "
-                "(n_nationkey * 29 % 300) - 150.5678 as lo from nation)"
-            )
-            + ")"
-        ),
         # the PIP rectangle join + one algebraic rollup; avg replays as
         # sum/count of exact doubles
         "zonal_stats_boxes": (
@@ -1631,11 +1442,5 @@ def oracle_sql() -> dict[str, str]:
             "select poly_id, poly_name, count(val) as count_val, "
             "sum(val) as sum_val, avg(val) as mean_val "
             "from pz group by poly_id, poly_name"
-        ),
-        # the Morton cover is pruning-only: conjoined with the exact box
-        # predicate the result equals the plain filter — which IS the oracle
-        "zorder_box_query": (
-            f"select * from ({_PTS_SQL}) p where lat >= 10.0 and lat <= 35.0 "
-            "and lon >= -20.0 and lon <= 40.0"
         ),
     }

@@ -271,9 +271,6 @@ def main() -> None:
 
         return queries()[name](spark, SF_DIR).count()
 
-    def q_geohash():
-        return _entry("geohash_cells")
-
     def q_idw():
         return _entry("idw_surface")
 
@@ -335,7 +332,6 @@ def main() -> None:
         ("knn_dedup_2km", q_dedup),
         ("classify_global_rank", q_rank),
         ("tile_pyramid_z12_6", q_tile_pyramid),
-        ("geohash_cells", q_geohash),
         ("idw_surface", q_idw),
         ("vectorize_runs", q_vec_runs),
         ("smooth_box", q_smooth),

@@ -131,6 +131,8 @@ def check_args(args: argparse.Namespace) -> None:
             f"--dedup-radius-m must be a finite radius >= 0 (0 = no kNN dedup), "
             f"got {args.dedup_radius_m}"
         )
+    if not 0 <= args.tile_zoom <= 30:
+        raise SystemExit(f"--tile-zoom must be a zoom level in 0..30, got {args.tile_zoom}")
     if args.export_hierarchy and not args.text_format:
         raise SystemExit("--export-hierarchy requires --text-format")
     if args.streaming:

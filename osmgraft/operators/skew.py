@@ -205,11 +205,3 @@ def replicate_cells(df: DataFrame, hot: DataFrame, cell_col: str) -> DataFrame:
     # so the exploded salt is already int — no cast around the generator
     return j.withColumn("_cell_salt", F.explode(salts)).drop("_n_salts")
 
-
-def repartition_by_cell(df: DataFrame, cell_col: str = "cell", partitions: int | None = None) -> DataFrame:
-    """Co-locate rows by (mixed-res) cell for downstream grouped spatial
-    kernels; after adaptive splitting no partition is dominated by one
-    hot cell."""
-    if partitions:
-        return df.repartition(partitions, F.col(cell_col))
-    return df.repartition(F.col(cell_col))

@@ -278,14 +278,48 @@ def test_png_decode_meta_spark(spark):
 def test_registry_and_oracles_share_keys():
     """Every registry query has an oracle and every oracle a query: the
     oracle checker iterates queries() only, so an oracle orphaned by a
-    deleted query would otherwise go unnoticed. Spark-free."""
+    deleted query would otherwise go unnoticed. The bench rows and the plan
+    audit name registry keys as string literals (``_entry("…")``,
+    ``queries()["…"]``), which no import check sees, so each such literal
+    must also be a key. Parses those files with ``ast``; Spark-free."""
+    import ast
     import os
     import sys
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    sys.path.insert(0, repo)
     from __spark_entry__ import oracle_sql, queries
 
-    assert set(queries()) == set(oracle_sql())
+    keys = set(queries())
+    assert keys == set(oracle_sql())
+
+    def is_queries_call(node) -> bool:
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and (
+            isinstance(f, ast.Name) and f.id == "queries"
+            or isinstance(f, ast.Attribute) and f.attr == "queries"
+        )
+
+    named = []
+    for rel in ("bench.py", "tools/explain_audit.py"):
+        with open(os.path.join(repo, rel)) as f:
+            tree = ast.parse(f.read(), filename=rel)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Subscript) and is_queries_call(node.value):
+                lit = node.slice
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "_entry"
+                and node.args
+            ):
+                lit = node.args[0]
+            else:
+                continue
+            if isinstance(lit, ast.Constant) and isinstance(lit.value, str):
+                named.append((rel, lit.value))
+    assert {rel for rel, _ in named} == {"bench.py", "tools/explain_audit.py"}
+    assert [(rel, k) for rel, k in named if k not in keys] == []
 
 
 def test_osmgraft_imports_resolve():

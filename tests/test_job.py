@@ -285,6 +285,11 @@ def test_job_rejects_uri_stage_dir(no_session, tmp_path, monkeypatch):
         (["--stage-dir", "st", "--chunk-by", "osm_id"],
          "--chunk-by requires --stage-dir and --resume-chunks > 1"),
         (["--max-files-per-trigger", "1"], "--max-files-per-trigger requires --streaming"),
+        # tiles.tile_xy computes 1 << z, only after the labels stage has run
+        (["--tile-zoom", "-1"], "--tile-zoom must be a zoom level in 0..30"),
+        (["--tile-zoom", "31"], "--tile-zoom must be a zoom level in 0..30"),
+        (["--tile-zoom", "0"], None),
+        (["--tile-zoom", "30"], None),
     ],
 )
 def test_job_checks_flags_before_spark(no_session, extra, message):

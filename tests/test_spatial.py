@@ -1254,163 +1254,6 @@ def test_tile_pyramid_single_scan_of_source(spark):
     assert run(False) == 4 * 500  # one rescan per level without the persist
 
 
-def test_zorder_key_bit_exact_vs_duckdb(spark):
-    duckdb = pytest.importorskip("duckdb")
-    from osmgraft.operators.layout import zorder_key, zorder_oracle_sql
-
-    rows = [
-        (i, ((i * 7919) % 18000) / 100.0 - 90.0, ((i * 104729) % 36000) / 100.0 - 180.0)
-        for i in range(500)
-    ] + [(9001, 90.0, 180.0), (9002, -90.0, -180.0)]
-    df = spark.createDataFrame(rows, "pid long, lat double, lon double")
-    got = dict(
-        (r["pid"], r["zkey"])
-        for r in df.select("pid", zorder_key(F.col("lat"), F.col("lon"), 16)).collect()
-    )
-    con = duckdb.connect()
-    con.execute("create table pts(pid bigint, lat double, lon double)")
-    con.executemany("insert into pts values (?, ?, ?)", rows)
-    sql = zorder_oracle_sql("select pid, lat, lon from pts", bits=16)
-    assert got == dict(con.execute(sql).fetchall())
-
-
-def test_zrange_quad_containment():
-    """Every point inside a quadtree cell has its Morton key inside the
-    cell's contiguous range, and every point outside falls outside."""
-    from osmgraft.operators.layout import zrange_for_quad
-
-    bits = 8
-
-    def key(gx, gy):
-        k = 0
-        for i in range(bits):
-            k |= ((gx >> i) & 1) << (2 * i) | ((gy >> i) & 1) << (2 * i + 1)
-        return k
-
-    level = 3  # 8x8 quads of a 256x256 grid; each quad spans 32x32 cells
-    lo, hi = zrange_for_quad(2, 5, level, bits)
-    span = 1 << (bits - level)
-    inside = [(2 * span, 5 * span), (2 * span + span - 1, 5 * span + span - 1)]
-    outside = [(2 * span - 1, 5 * span), (3 * span, 5 * span), (2 * span, 6 * span)]
-    for gx, gy in inside:
-        assert lo <= key(gx, gy) <= hi
-    for gx, gy in outside:
-        assert not (lo <= key(gx, gy) <= hi)
-    with pytest.raises(ValueError):
-        zrange_for_quad(8, 0, level, bits)
-    with pytest.raises(ValueError):
-        zrange_for_quad(0, 0, 9, bits)
-
-
-def test_zorder_layout_prunes_files(spark, tmp_path):
-    """The point of the layout: after cluster_by_zorder, a quad-aligned
-    box query prunes most files by footer min/max alone; the same data in
-    ingest (hash) order prunes nothing."""
-    from osmgraft.operators.layout import (
-        cluster_by_zorder,
-        file_zkey_stats,
-        pruned_fraction,
-        zorder_key,
-        zrange_for_quad,
-    )
-
-    df = spark.range(20000).selectExpr(
-        "id as pid",
-        "cast((id * 7919 % 18000) / 100.0 - 90.0 as double) as lat",
-        "cast((id * 104729 % 36000) / 100.0 - 180.0 as double) as lon",
-    )
-    zpath = str(tmp_path / "zsorted")
-    cluster_by_zorder(df, n_files=16).write.parquet(zpath)
-    rpath = str(tmp_path / "rand")
-    df.withColumn("zkey", zorder_key(F.col("lat"), F.col("lon"), 16)).repartition(
-        16
-    ).write.parquet(rpath)
-
-    lo, hi = zrange_for_quad(1, 2, 2, 16)  # one quarter-of-a-quarter of the globe
-    zstats = [tuple(r) for r in file_zkey_stats(spark, zpath).collect()]
-    rstats = [tuple(r) for r in file_zkey_stats(spark, rpath).collect()]
-    assert len(zstats) == 16
-    z_pruned = pruned_fraction(zstats, lo, hi)
-    r_pruned = pruned_fraction(rstats, lo, hi)
-    assert r_pruned == 0.0  # every ingest-order file spans the whole curve
-    assert z_pruned >= 0.75  # clustered layout skips >= 12/16 files
-
-
-def test_zranges_cover_box_and_box_query_exact(spark):
-    """The Morton cover must be a superset of the box (pruning predicate),
-    and box_query must return EXACTLY the plain-filter rows — on both a
-    zkey-carrying frame and a raw lat/lon frame."""
-    from osmgraft.operators.layout import box_query, zorder_key, zranges_for_box
-
-    rows = [
-        (i, ((i * 7919) % 18000) / 100.0 - 90.0, ((i * 104729) % 36000) / 100.0 - 180.0)
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "pid long, lat double, lon double")
-    box = (10.0, 35.0, -20.0, 40.0)
-
-    want = sorted(
-        r["pid"]
-        for r in df.where(
-            (F.col("lat") >= box[0]) & (F.col("lat") <= box[1])
-            & (F.col("lon") >= box[2]) & (F.col("lon") <= box[3])
-        ).collect()
-    )
-    assert want  # box is non-trivial
-    got = sorted(r["pid"] for r in box_query(df, *box).collect())
-    assert got == want
-
-    keyed = df.withColumn("zkey", zorder_key(F.col("lat"), F.col("lon"), 16))
-    got2 = sorted(r["pid"] for r in box_query(keyed, *box).collect())
-    assert got2 == want
-
-    # cover property: every in-box point's key inside some range
-    ranges = zranges_for_box(*box, bits=16, max_ranges=64)
-    assert 1 <= len(ranges) <= 64
-    keys = {
-        r["pid"]: r["zkey"]
-        for r in keyed.select("pid", "zkey").collect()
-    }
-    for pid in want:
-        assert any(lo <= keys[pid] <= hi for lo, hi in ranges)
-
-    with pytest.raises(ValueError):
-        zranges_for_box(5.0, 4.0, 0.0, 1.0)
-
-
-def test_box_query_prunes_clustered_files(spark, tmp_path):
-    """End-to-end pruning: over a zorder-clustered parquet layout, the
-    box_query range predicate skips most FILES by footer min/max alone
-    (measured the same way a reader does), while returning exact rows."""
-    from osmgraft.operators.layout import (
-        cluster_by_zorder,
-        file_zkey_stats,
-        pruned_fraction,
-        zranges_for_box,
-    )
-
-    df = spark.range(20000).selectExpr(
-        "id as pid",
-        "cast((id * 7919 % 18000) / 100.0 - 90.0 as double) as lat",
-        "cast((id * 104729 % 36000) / 100.0 - 180.0 as double) as lon",
-    )
-    path = str(tmp_path / "zclustered")
-    cluster_by_zorder(df, n_files=16).write.parquet(path)
-    box = (40.0, 55.0, 5.0, 25.0)  # ~western-Europe-sized box
-    ranges = zranges_for_box(*box, bits=16, max_ranges=64)
-    stats = [tuple(r) for r in file_zkey_stats(spark, path).collect()]
-    # a file survives if ANY cover range intersects it
-    hit = sum(
-        1
-        for _, mn, mx in stats
-        if any(not (mx < lo or mn > hi) for lo, hi in ranges)
-    )
-    assert 1.0 - hit / len(stats) >= 0.5  # at least half the files skip
-    # and the hit files do contain every box row (sanity via pruned_fraction
-    # of the single widest range; box rows come from the exact filter anyway)
-    assert pruned_fraction(stats, ranges[0][0], ranges[-1][1]) < 1.0
-
-
 def test_zonal_stats_matches_bruteforce(spark, pip_data):
     from osmgraft.operators.zonal import zonal_stats
 

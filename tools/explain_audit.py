@@ -285,21 +285,6 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
 
-    # 25. Z-order key — a narrow pure-codegen projection: NO exchange, no
-    # Python, scan pruned to the three source columns
-    q25 = entry_mod.queries()["zorder_keys"](spark, SF)
-    p25 = plan_of(q25)
-    notes25 = [
-        f"no exchange (narrow projection): {'Exchange' not in p25}",
-        f"whole-stage codegen: {'codegen id' in p25}",
-        f"pure Catalyst (no Python): {'Python' not in p25}",
-        f"scan pruned — c_name/c_address never read: "
-        f"{'c_name' not in p25 and 'c_address' not in p25}",
-    ]
-    sections.append(
-        ("Z-order key — pure codegen bit interleave, zero shuffle", p25, notes25)
-    )
-
     # 26. tile pyramid — the corpus is scanned ONCE (base level cached);
     # every coarser level reads the previous level's InMemoryTableScan
     q26 = entry_mod.queries()["tile_pyramid"](spark, SF)
@@ -319,20 +304,6 @@ def main() -> None:
     ]
     sections.append(
         ("tile pyramid — single corpus scan, cached per-level rollup", p26, notes26)
-    )
-
-    # 28. Morton box query — the exact box predicates reach the parquet
-    # scan as PushedFilters; no shuffle, no Python
-    q28 = entry_mod.queries()["zorder_box_query"](spark, SF)
-    p28 = plan_of(q28)
-    notes28 = [
-        f"box predicates pushed to the scan: {'PushedFilters: [IsNotNull' in p28}",
-        f"no exchange (narrow filter): {'Exchange' not in p28}",
-        f"pure Catalyst (no Python): {'Python' not in p28}",
-        f"whole-stage codegen: {'codegen id' in p28}",
-    ]
-    sections.append(
-        ("Morton box query — pushed filters, zero shuffle", p28, notes28)
     )
 
     # 30. zonal stats — broadcast-strategy PIP join (bbox range condition
@@ -355,17 +326,6 @@ def main() -> None:
     sections.append(
         ("zonal stats — broadcast PIP join + single algebraic rollup", p30, notes30)
     )
-
-    # 36. geohash key — pure codegen bit interleave + base-32 substring
-    # chain: zero exchange, zero Python, one narrow projection.
-    q36 = entry_mod.queries()["geohash_cells"](spark, SF)
-    p36 = plan_of(q36)
-    notes36 = [
-        f"zero exchanges: {'Exchange' not in p36}",
-        f"pure Catalyst (no Python): {'Python' not in p36}",
-        f"whole-stage codegen: {'codegen id' in p36}",
-    ]
-    sections.append(("geohash key — pure codegen, zero shuffle", p36, notes36))
 
     # 37. IDW surface — scatter formulation: the bounded neighbor explode
     # replaces any point-by-grid join; ONE exchange on the pixel key with
