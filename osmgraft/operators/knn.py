@@ -13,8 +13,9 @@ points within the radius lie less than ``c`` apart on every axis and
 their cells are at most one apart per axis: the 3x3x3 block of cells
 around a query point holds every neighbor within the radius. The sphere
 in 3-D has no seams, so the grid needs no special case at the poles or at
-lon +-180, and no grid resolution depends on latitude. Dense-city skew is
-handled by operators/skew.py, as for every cell-keyed join.
+lon +-180, and no grid resolution depends on latitude. A dense-city cell
+is a skewed equi-join partition, and AQE's skew-join split spreads it
+over several tasks, as for every cell-keyed join.
 
 Label dedup (:func:`dedup_labels`: drop a label if a better-ranked label
 lies within ``r``) is one linear plan, after the background-grid argument
@@ -96,7 +97,6 @@ def _candidate_pairs(
     radius_m: float,
     left_cols: tuple[str, str],
     right_cols: tuple[str, str],
-    skew_max_rows: int | None | str,
 ) -> DataFrame:
     """Every pair the cell equi-join of :func:`knn_candidates` emits, with
     its haversine ``dist_m`` and before the radius filter: the pairs the
@@ -110,24 +110,7 @@ def _candidate_pairs(
     r_cell = _chord_cell(F.col(right_cols[0]), F.col(right_cols[1]), side)
     r_exp = right.select(_suffix_right(right) + [r_cell.alias("_cell_r")])
 
-    if skew_max_rows == "auto":
-        from osmgraft.operators.skew import auto_skew_bound
-
-        skew_max_rows = auto_skew_bound(left.sparkSession)
-    if skew_max_rows:
-        from osmgraft.operators.skew import hot_cell_map, replicate_cells, salt_cells
-
-        hot = hot_cell_map(r_exp, "_cell_r", skew_max_rows)
-        r_exp = salt_cells(
-            r_exp, hot, "_cell_r", [f"{right_cols[0]}_r", f"{right_cols[1]}_r"]
-        )
-        l_exp = replicate_cells(l_exp, hot.withColumnRenamed("_cell_r", "_cand"), "_cand")
-        pairs = l_exp.join(
-            r_exp,
-            (l_exp["_cand"] == r_exp["_cell_r"]) & (l_exp["_cell_salt"] == r_exp["_cell_salt"]),
-        ).drop("_cand", "_cell_r", "_cell_salt")
-    else:
-        pairs = l_exp.join(r_exp, l_exp["_cand"] == r_exp["_cell_r"]).drop("_cand", "_cell_r")
+    pairs = l_exp.join(r_exp, l_exp["_cand"] == r_exp["_cell_r"]).drop("_cand", "_cell_r")
     dist = haversine_m(
         F.col(left_cols[0]), F.col(left_cols[1]), F.col(f"{right_cols[0]}_r"), F.col(f"{right_cols[1]}_r")
     )
@@ -140,26 +123,12 @@ def knn_candidates(
     radius_m: float,
     left_cols: tuple[str, str] = ("lat", "lon"),
     right_cols: tuple[str, str] = ("lat", "lon"),
-    skew_max_rows: int | None | str = "auto",
 ) -> DataFrame:
     """All (left, right) pairs within ``radius_m`` — chord-grid equi-join
     (see module docstring) + exact haversine filter, each pair once. Right
     columns arrive suffixed with ``_r``; ``radius_m`` must be positive and
-    finite.
-
-    ``skew_max_rows``: split hot cells before the equi-join —
-    right rows in cells over the bound are salted (pure hash of their
-    coordinates), left probe rows replicate once per salt bucket, and the
-    join runs on (cell, salt). Identical pairs out (tested), but a dense
-    urban cell's reduce work spreads over ceil(n/bound) tasks instead of
-    pinning one. Best-effort past ``hot_cell_map``'s 64-salt replication
-    cap: a cell beyond ``64 * skew_max_rows`` rows splits 64 ways
-    proportionally (see :func:`osmgraft.operators.skew.hot_cell_map`).
-    The default ``"auto"`` derives the bound from AQE's advisory
-    partition size (:func:`osmgraft.operators.skew.auto_skew_bound`), so
-    the rail is on unless explicitly disabled with ``None``.
-    """
-    pairs = _candidate_pairs(left, right, radius_m, left_cols, right_cols, skew_max_rows)
+    finite."""
+    pairs = _candidate_pairs(left, right, radius_m, left_cols, right_cols)
     return pairs.where(F.col("dist_m") <= radius_m)
 
 
@@ -191,7 +160,7 @@ def election_side_deg(radius_m: float) -> float:
 
 
 def _dedup_frames(
-    slim: DataFrame, radius_m: float, rank_col: str, id_col: str, skew_max_rows: int | None | str
+    slim: DataFrame, radius_m: float, rank_col: str, id_col: str
 ) -> dict[str, DataFrame]:
     """The plan of :func:`dedup_labels` over its slim (id, rank, lat, lon)
     frame, its intermediate frames exposed for tests: ``leaders`` (each
@@ -203,7 +172,7 @@ def _dedup_frames(
     # null for a null rank: such a label is neither a leader nor suppressed
     elected = slim.withColumn("_lead", F.col(rank_col) == F.min(rank_col).over(cell))
     leaders = elected.where(F.col("_lead")).drop("_lead")
-    probed = _candidate_pairs(leaders, slim, radius_m, ("lat", "lon"), ("lat", "lon"), skew_max_rows)
+    probed = _candidate_pairs(leaders, slim, radius_m, ("lat", "lon"), ("lat", "lon"))
     beaten = probed.where(
         (F.col("dist_m") <= radius_m)
         & (F.col(f"{rank_col}_r") < F.col(rank_col))
@@ -253,13 +222,9 @@ def dedup_labels(
 
     The slim (id, rank, lat, lon) projection is localCheckpointed once:
     both join sides read it, and a nondeterministic upstream could
-    otherwise disagree with itself between them. Its count switches the
-    probe's skew rail off when no cell can exceed the rail's bound.
-    ``prepass_min_rows`` is accepted for old callers and has no effect."""
-    from osmgraft.operators.skew import auto_skew_bound
-
+    otherwise disagree with itself between them. ``prepass_min_rows`` is
+    accepted for old callers and has no effect."""
     chord_side_m(radius_m)  # reject a bad radius before any job runs
     slim = labels.select(id_col, rank_col, "lat", "lon").localCheckpoint(eager=True)
-    skew = None if slim.count() <= auto_skew_bound(slim.sparkSession) else "auto"
-    suppressed = _dedup_frames(slim, radius_m, rank_col, id_col, skew)["suppressed"]
+    suppressed = _dedup_frames(slim, radius_m, rank_col, id_col)["suppressed"]
     return labels.join(suppressed, id_col, "left_anti")

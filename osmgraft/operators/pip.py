@@ -16,8 +16,9 @@ Two physical strategies behind one API:
   ``{res, res-2, res-4, res-6, 0}``; each polygon picks the finest level whose
   estimated covering stays under ``max_cover_cells``), explode (polygon
   replicated per covering cell), equi-join with cell-encoded points
-  (shuffle on cell — co-partitioned, skew-salvageable), then the exact
-  kernel per candidate pair. This is the 10-TB-polygon path.
+  (shuffle on cell — co-partitioned; AQE's skew-join split spreads a hot
+  cell over several tasks), then the exact kernel per candidate pair.
+  This is the 10-TB-polygon path.
 
   The covering is exact-rasterized, not bbox-sampled: cells that the ring
   passes through (edge sampling at one inradius step + disk(1) expansion)
@@ -258,7 +259,6 @@ def pip_join(
     broadcast_threshold: int = 10_000,
     how: str = "inner",
     max_cover_cells: int = 128,
-    skew_max_rows: int | None | str = "auto",
     id_col: str | None = None,
 ) -> DataFrame:
     """points x polygons -> one row per (point, containing polygon).
@@ -268,23 +268,6 @@ def pip_join(
     is the FINEST covering resolution (ladder top — see module docstring)
     and ``max_cover_cells`` the per-polygon covering budget that picks
     each polygon's ladder level.
-
-    ``skew_max_rows`` (partitioned strategy): split hot cells before the
-    equi-join. A dense urban cell with 10^6 point emissions would
-    otherwise pin the whole cell onto one shuffle task; with a bound set,
-    a count pre-pass finds cells over the bound, point rows in them are
-    salted (pure row hash of lat/lon) and the polygon's covering rows
-    replicate once per salt bucket — same join output (tested), reduce
-    side bounded at ~``skew_max_rows`` rows per task. The default
-    ``"auto"`` derives the bound from AQE's advisory partition size
-    (:func:`osmgraft.operators.skew.auto_skew_bound`), so the rail is on
-    unless explicitly disabled with ``None``. This is the
-    adaptive-cell-split rail applied at the join key (hex cells don't
-    nest across resolutions, so splitting by salt preserves the covering
-    contract where re-encoding finer could not). The bound is best-effort
-    past ``hot_cell_map``'s replication cap (64 salts): a cell with more
-    than ``64 * skew_max_rows`` rows splits 64 ways proportionally — see
-    :func:`osmgraft.operators.skew.hot_cell_map`.
 
     ``how='left'`` keeps points with no containing polygon (NULL
     poly_id/poly_name). Pass ``id_col`` (any unique row id) to make the
@@ -323,19 +306,7 @@ def pip_join(
         pts = points.withColumn(
             "_cell", F.explode(_point_cells_udf(res)(F.col(lat), F.col(lon)))
         )
-        join_key = ["_cell"]
-        if skew_max_rows == "auto":
-            from osmgraft.operators.skew import auto_skew_bound
-
-            skew_max_rows = auto_skew_bound(points.sparkSession)
-        if skew_max_rows:
-            from osmgraft.operators.skew import hot_cell_map, replicate_cells, salt_cells
-
-            hot = hot_cell_map(pts, "_cell", skew_max_rows)
-            pts = salt_cells(pts, hot, "_cell", [lat, lon])
-            poly_cells = replicate_cells(poly_cells, hot, "_cell")
-            join_key = ["_cell", "_cell_salt"]
-        cand = pts.join(poly_cells, join_key).where(
+        cand = pts.join(poly_cells, "_cell").where(
             (F.col(lat) >= F.col("_minlat"))
             & (F.col(lat) <= F.col("_maxlat"))
             & (F.col(lon) >= F.col("_minlon"))

@@ -1,9 +1,14 @@
-"""Skew rails: salted repartitioning + adaptive cell splitting.
+"""Skew rails for aggregations: salted repartitioning + adaptive cell
+splitting.
 
 Dense urban clusters put millions of rows in a handful of hex/S2 cells
-(the synth generator's Zipf layout reproduces this). Two mitigations,
-both explicit user-space layout decisions (AQE's skew-join handles joins
-but cannot split grouped-UDF or groupBy hot keys):
+(the synth generator's Zipf layout reproduces this). Join-side skew is
+AQE's: the session enables ``spark.sql.adaptive.skewJoin``, whose
+``OptimizeSkewedJoin`` splits an oversized shuffle partition of a
+sort-merge join into map-block ranges and replicates the other side's
+matching partition, so the cell equi-joins of ``pip_join`` and
+``knn_candidates`` carry no rail of their own. AQE cannot split a
+grouped-UDF or groupBy hot key, so two explicit mitigations remain:
 
 - ``salt``: spread a hot key over ``n_salts`` subkeys for aggregations
   that can be computed partially (count/sum/min/max) and re-merged.
@@ -17,42 +22,10 @@ but cannot split grouped-UDF or groupBy hot keys):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmgraft.functions.cells import hex_cell_udf
-
-
-def _parse_size_bytes(s: str) -> int:
-    """Spark size-string parser ('64m', '64MB', '67108864', '1g')."""
-    s = s.strip().lower()
-    mult = 1
-    for suffix in ("kb", "mb", "gb", "tb", "pb", "k", "m", "g", "t", "p", "b"):
-        if s.endswith(suffix):
-            mult = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40, "p": 2**50, "b": 1}[
-                suffix[0]
-            ]
-            s = s[: -len(suffix)]
-            break
-    return int(float(s) * mult)
-
-
-def auto_skew_bound(spark, row_bytes: int = 48) -> int:
-    """Default per-cell row bound for the spatial-join skew rails, derived
-    from AQE's advisory partition size: a cell whose candidate rows exceed
-    roughly one advisory partition's worth (``advisory_bytes /
-    row_bytes``; 48 B ~ a slim (id, rank, lat, lon, cell) shuffle row)
-    would pin a reduce task past the size AQE itself plans around, so
-    that is where salting starts. Floor of 100k keeps the rail out of the
-    way on toy inputs. This makes the rails ON BY DEFAULT in
-    ``pip_join``/``knn_candidates`` — a deployment hits a Tokyo-density
-    cell safely without knowing the knob exists — at the cost of one
-    map-side-combined count pre-pass per join."""
-    try:
-        adv = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    except Exception:
-        adv = None
-    return max(_parse_size_bytes(adv or "64m") // row_bytes, 100_000)
 
 
 def salt(
@@ -151,57 +124,17 @@ def hot_cell_map(
     df: DataFrame, cell_col: str, max_rows: int, n_cap: int = 64
 ) -> DataFrame:
     """``(cell, _n_salts)`` for every cell whose row count exceeds
-    ``max_rows`` — the broadcastable split plan for a cell-keyed skew join.
-    ``_n_salts = ceil(count / max_rows)`` (capped at ``n_cap``), so each
-    split bucket holds ~``max_rows`` rows. Small by construction
-    (<= total/max_rows entries), like :func:`adaptive_cell_split`'s hot
-    list.
+    ``max_rows``, with ``_n_salts = ceil(count / max_rows)`` capped at
+    ``n_cap``: how many ways a hot cell would split to hold ~``max_rows``
+    rows per bucket. Small by construction (<= total/max_rows entries),
+    like :func:`adaptive_cell_split`'s hot list.
 
-    ``n_cap`` bounds the PROBE-side replication cost (every probe row
-    pointing at a hot cell fans out ``_n_salts`` x in
-    :func:`replicate_cells`): a cell with more than ``n_cap * max_rows``
-    rows still splits into only ``n_cap`` buckets, each holding
-    ``count / n_cap`` rows — the per-task bound degrades gracefully to
-    best-effort instead of letting one mega-cell multiply the whole probe
-    side. Callers (``pip_join`` / ``knn_candidates``) advertise the same
-    contract: reduce-side tasks are bounded at ~``max_rows`` up to
-    ``n_cap * max_rows`` rows per cell, proportional-split beyond."""
+    No engine path calls it: the spatial joins leave hot cells to AQE. It
+    is kept only because ``perfbench/workloads.py`` imports it for the
+    ``skew.*`` probe, and goes with that probe in the next benchmark
+    change."""
     counts = df.groupBy(cell_col).agg(F.count("*").alias("_n"))
     return counts.where(F.col("_n") > max_rows).select(
         F.col(cell_col),
         F.least(F.ceil(F.col("_n") / max_rows), F.lit(n_cap)).cast("int").alias("_n_salts"),
     )
-
-
-def salt_cells(
-    df: DataFrame, hot: DataFrame, cell_col: str, hash_cols: list[str]
-) -> DataFrame:
-    """BIG side of a cell equi-join: rows in hot cells get
-    ``_cell_salt = pmod(xxhash64(hash_cols), n_salts)`` (a pure row
-    function — retry-deterministic, see :func:`salt`); cold rows get 0.
-    The hot map joins broadcast, so the big side is never shuffled here."""
-    j = df.join(F.broadcast(hot), cell_col, "left")
-    salt_expr = (
-        F.when(
-            F.col("_n_salts").isNotNull(),
-            F.pmod(F.xxhash64(*[F.col(c) for c in hash_cols]), F.col("_n_salts")),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return j.withColumn("_cell_salt", salt_expr).drop("_n_salts")
-
-
-def replicate_cells(df: DataFrame, hot: DataFrame, cell_col: str) -> DataFrame:
-    """PROBE side of a cell equi-join: rows pointing at a hot cell
-    replicate once per salt bucket (cold rows once, salt 0), so joining on
-    ``(cell, _cell_salt)`` reproduces the plain cell join exactly while the
-    hot cell's reduce work spreads over ``n_salts`` tasks."""
-    j = df.join(F.broadcast(hot), cell_col, "left")
-    salts = F.when(
-        F.col("_n_salts").isNotNull(), F.sequence(F.lit(0), F.col("_n_salts") - 1)
-    ).otherwise(F.array(F.lit(0)))
-    # both branches are array<int> (sequence of int bounds / array(lit 0)),
-    # so the exploded salt is already int — no cast around the generator
-    return j.withColumn("_cell_salt", F.explode(salts)).drop("_n_salts")
-

@@ -5,10 +5,11 @@ total label mass per landuse polygon, raster cells (as their center
 points) reduced per watershed. It composes the engine's existing scale
 machinery rather than inventing new shuffles: the point->zone mapping is
 :func:`osmgraft.operators.pip.pip_join` (broadcast or cell-partitioned
-covering equi-join, skew rail on by default — see pip.py), and the
-reduction is ONE algebraic groupBy over the join output, so map-side
-partial aggregation applies and the only data-sized shuffles are the
-PIP join's cell exchange plus the zone rollup.
+covering equi-join, whose hot cells AQE's skew-join split spreads over
+tasks — see pip.py), and the reduction is ONE algebraic groupBy over the
+join output, so map-side partial aggregation applies and the only
+data-sized shuffles are the PIP join's cell exchange plus the zone
+rollup.
 
 Points inside k overlapping zones contribute to all k (standard zonal
 semantics over non-disjoint zones). Raster zonal stats come free:
@@ -36,7 +37,7 @@ def zonal_stats(
     that contains at least one point (or per polygon, with
     ``include_empty_zones`` — empty zones carry count 0 and NULL
     sum/mean/min/max). Extra ``pip_kwargs`` pass through to
-    :func:`pip_join` (strategy, res, skew rail, ...).
+    :func:`pip_join` (strategy, res, max_cover_cells, ...).
 
     Output: ``(poly_id, poly_name, <stat>_<value_col>...)``.
     """

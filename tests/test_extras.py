@@ -1,6 +1,6 @@
-"""Extras outside the label path: int8 embedding quantization, multimodal
-plumbing, the parquet catalog and the registry/oracle key check — checked
-on the driver tables at sf0.001 plus constructed fixtures."""
+"""Extras outside the label path: multimodal plumbing, the parquet catalog
+and the registry/oracle key check — checked on the driver tables at
+sf0.001 plus constructed fixtures."""
 
 from __future__ import annotations
 
@@ -9,51 +9,6 @@ import pyspark.sql.functions as F
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
-
-
-# --- int8 quantization -----------------------------------------------------------
-
-
-def test_quantize_embeddings_roundtrip(spark, embeddings):
-    from osmgraft.operators.quantize import dequantize_expr, quantize_embeddings
-
-    q = quantize_embeddings(embeddings)
-    joined = q.join(embeddings, "vec_id").select(
-        "vec_id", "embedding", dequantize_expr(F.col("qvec"), F.col("scale")).alias("deq"), "qvec"
-    )
-    for r in joined.limit(50).collect():
-        orig = np.array(r["embedding"], dtype=np.float64)
-        deq = np.array(r["deq"])
-        assert np.all(np.abs(np.array(r["qvec"])) <= 127)
-        # max error bound: 0.5/scale = max|v|/254
-        assert np.max(np.abs(orig - deq)) <= np.max(np.abs(orig)) / 254 + 1e-12
-        cos = orig @ deq / (np.linalg.norm(orig) * np.linalg.norm(deq))
-        assert cos > 0.9995
-
-
-def test_quantize_embeddings_zero_vector_and_plan(spark):
-    from osmgraft.operators.quantize import dequantize_expr, quantize_embeddings
-
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0, 0.0]), (2, [1.0, -2.0, 0.5])],
-        "vec_id bigint, embedding array<double>",
-    )
-    q = quantize_embeddings(df)
-    rows = {r["vec_id"]: r for r in q.collect()}
-    assert rows[1]["qvec"] == [0, 0, 0] and rows[1]["scale"] == 0.0
-    assert rows[2]["qvec"] == [64, -127, 32]  # floor(x*63.5 + 0.5)
-    deq = {
-        r["vec_id"]: r["d"]
-        for r in q.select("vec_id", dequantize_expr(F.col("qvec"), F.col("scale")).alias("d")).collect()
-    }
-    assert deq[1] == [0.0, 0.0, 0.0]
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan  # narrow, JVM-side
 
 
 # --- multimodal ------------------------------------------------------------------

@@ -602,7 +602,7 @@ def test_dedup_hot_cell_bounded(spark):
     df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
 
     slim = df.select("osm_id", "rank", "lat", "lon").localCheckpoint(eager=True)
-    fr = _dedup_frames(slim, 2000.0, "rank", "osm_id", None)
+    fr = _dedup_frames(slim, 2000.0, "rank", "osm_id")
     n_leaders = fr["leaders"].count()
     n_probed = fr["probed"].count()
     # the blob spans a handful of election cells; the background is one
@@ -619,10 +619,22 @@ def test_dedup_hot_cell_bounded(spark):
     assert len(hot_survivors) == 1  # the blob collapses to its best label
 
 
+def _jobs_in_group(spark, group, action) -> int:
+    """Spark jobs that ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_dedup_job_budget(spark):
     """dedup_labels plus a noop write of its output runs a fixed number of
-    Spark jobs: the slim checkpoint, its count, and the stages of the one
-    output query. No driver-side probe of the data is taken."""
+    Spark jobs: the slim checkpoint and the stages of the one output query.
+    No driver-side probe of the data is taken, not even a count."""
     from osmgraft.operators.knn import dedup_labels
 
     rng = np.random.default_rng(7)
@@ -633,15 +645,45 @@ def test_dedup_job_budget(spark):
     ]
     df = spark.createDataFrame(rows, "osm_id long, lat double, lon double, rank long")
     df = df.localCheckpoint(eager=True)
-    sc = spark.sparkContext
-    sc.setJobGroup("dedup_budget", "dedup_budget")
-    try:
-        dedup_labels(df, 2000.0).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("dedup_budget"))
-    assert jobs == 11, jobs  # measured: 2 for the slim frame, 9 for the query
+    jobs = _jobs_in_group(
+        spark,
+        "dedup_budget",
+        lambda: dedup_labels(df, 2000.0).write.format("noop").mode("overwrite").save(),
+    )
+    assert jobs == 9, jobs  # measured: 1 for the slim checkpoint, 8 for the query
+
+
+def test_pip_job_budget(spark):
+    """pip_join(partitioned) plus a noop write of its output runs a fixed
+    number of Spark jobs, and its plan evaluates Python exactly three
+    times: the polygon covering, the point cells and the even-odd kernel.
+    No count pre-pass runs, and no point-cell UDF is planned twice."""
+    from osmgraft.operators.pip import pip_join
+
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(
+        [
+            (i, float(45.0 + rng.normal(0, 0.05)), float(7.0 + rng.normal(0, 0.05)))
+            for i in range(2_000)
+        ],
+        "pid long, lat double, lon double",
+    ).localCheckpoint(eager=True)
+    polys = spark.createDataFrame(
+        [
+            (1, [44.8, 44.8, 45.2, 45.2], [6.8, 7.2, 7.2, 6.8]),
+            (2, [44.9, 44.9, 45.0, 45.0], [6.9, 7.0, 7.0, 6.9]),
+        ],
+        "poly_id long, ring_lats array<double>, ring_lons array<double>",
+    ).localCheckpoint(eager=True)
+
+    out = pip_join(pts, polys, strategy="partitioned", res=6)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 3, plan
+    assert "BatchEvalPython" not in plan, plan
+    jobs = _jobs_in_group(
+        spark, "pip_budget", lambda: out.write.format("noop").mode("overwrite").save()
+    )
+    assert jobs == 4, jobs  # measured; no count pre-pass runs
 
 
 def test_dedup_labels_rejects_bad_radius_before_any_job(spark):
@@ -666,10 +708,9 @@ def test_dedup_labels_rejects_bad_radius_before_any_job(spark):
 
 
 def test_skew_split_helpers_bound_hot_cells(spark):
-    """hot_cell_map/salt_cells/replicate_cells: the hot cell's rows spread
-    over ~ceil(n/bound) salt buckets, each bounded; cold cells untouched;
-    joining on (cell, salt) reproduces the plain cell join exactly."""
-    from osmgraft.operators.skew import hot_cell_map, replicate_cells, salt_cells
+    """hot_cell_map: only the cell over the bound is listed, with
+    ceil(n / bound) salt buckets."""
+    from osmgraft.operators.skew import hot_cell_map
 
     big = spark.range(10_100).select(
         F.col("id"),
@@ -678,29 +719,12 @@ def test_skew_split_helpers_bound_hot_cells(spark):
     hot = hot_cell_map(big, "cell", max_rows=1000)
     assert {(r["cell"], r["_n_salts"]) for r in hot.collect()} == {(1, 10)}
 
-    salted = salt_cells(big, hot, "cell", ["id"]).cache()
-    per_bucket = salted.groupBy("cell", "_cell_salt").count().collect()
-    hot_counts = [r["count"] for r in per_bucket if r["cell"] == 1]
-    assert len(hot_counts) == 10  # all 10 buckets in use
-    assert max(hot_counts) < 2500  # ~1000 each, hash-variance slack
-    assert [r["_cell_salt"] for r in per_bucket if r["cell"] == 2] == [0]
 
-    probe = spark.createDataFrame([(100, 1), (101, 1), (102, 2), (103, 3)], "pid long, cell int")
-    repl = replicate_cells(probe, hot, "cell").cache()
-    assert repl.count() == 2 * 10 + 1 + 1  # hot x n_salts, cold once
-    # equivalence: (cell, salt) join == plain cell join
-    plain = {(r["pid"], r["id"]) for r in probe.join(big, "cell").select("pid", "id").collect()}
-    split = {
-        (r["pid"], r["id"])
-        for r in repl.join(salted, ["cell", "_cell_salt"]).select("pid", "id").collect()
-    }
-    assert split == plain
-
-
-def test_skew_split_spatial_joins_identical_output(spark):
+def test_aqe_splits_hot_cell_in_spatial_joins(spark):
     """Zipf hot cluster through pip_join(partitioned) and knn_candidates:
-    with skew_max_rows set the join outputs are IDENTICAL while the hot
-    cell's join key is split over multiple salt buckets."""
+    AQE's skew-join split takes the hot cell's partition apart (the final
+    plan reads SortMergeJoin(skew=true)), and the outputs equal the same
+    calls with the split switched off."""
     from osmgraft.operators.knn import knn_candidates
     from osmgraft.operators.pip import pip_join
 
@@ -708,11 +732,16 @@ def test_skew_split_spatial_joins_identical_output(spark):
     n_hot, n_bg = 1500, 300
     lats = np.concatenate([45.0 + rng.normal(0, 0.004, n_hot), rng.uniform(-60, 60, n_bg)])
     lons = np.concatenate([7.0 + rng.normal(0, 0.004, n_hot), rng.uniform(-170, 170, n_bg)])
-    pts = spark.createDataFrame(
-        [(i, float(lats[i]), float(lons[i])) for i in range(n_hot + n_bg)],
-        "pid long, lat double, lon double",
-    ).localCheckpoint(eager=True)
-
+    # AQE splits a reduce partition along map-output blocks, so the hot
+    # cell's rows must come from several map tasks
+    pts = (
+        spark.createDataFrame(
+            [(i, float(lats[i]), float(lons[i])) for i in range(n_hot + n_bg)],
+            "pid long, lat double, lon double",
+        )
+        .repartition(8)
+        .localCheckpoint(eager=True)
+    )
     polys = spark.createDataFrame(
         [
             (1, [44.8, 44.8, 45.2, 45.2], [6.8, 7.2, 7.2, 6.8]),  # covers the cluster
@@ -722,30 +751,57 @@ def test_skew_split_spatial_joins_identical_output(spark):
         "poly_id long, ring_lats array<double>, ring_lons array<double>",
     ).withColumn("name", F.concat(F.lit("P"), F.col("poly_id")))
 
-    def pip_pairs(**kw):
-        out = pip_join(pts, polys, strategy="partitioned", res=6, **kw)
-        return sorted((r["pid"], r["poly_id"]) for r in out.collect())
+    def final_plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
 
-    base = pip_pairs()
-    split = pip_pairs(skew_max_rows=500)
-    assert split == base
-    assert len({p for p, _ in base if p < n_hot}) > 0  # cluster actually joined
+    def pip_pairs():
+        out = pip_join(pts, polys, strategy="partitioned", res=6)
+        pairs = sorted((r["pid"], r["poly_id"]) for r in out.collect())
+        return pairs, final_plan(out)
 
-    # The dense cluster emits O(n_hot^2) pairs, so verify equivalence
-    # Spark-side (count + order-insensitive pair-hash sum) instead of
-    # collecting millions of rows to the driver.
-    def knn_digest(**kw):
-        out = knn_candidates(
-            pts.select("pid", "lat", "lon"), pts.select("pid", "lat", "lon"), 300.0, **kw
-        )
-        row = out.agg(
+    # The dense cluster emits O(n_hot^2) pairs, so compare them Spark-side
+    # (count + order-insensitive pair-hash sum) instead of collecting
+    # millions of rows to the driver.
+    def knn_digest():
+        slim = pts.select("pid", "lat", "lon")
+        out = knn_candidates(slim, slim, 2000.0).agg(
             F.count("*").alias("n"),
             F.sum(F.xxhash64(F.col("pid"), F.col("pid_r")).cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
+        )
+        row = out.collect()[0]
+        return (row["n"], row["h"]), final_plan(out)
 
-    kbase = knn_digest()
-    ksplit = knn_digest(skew_max_rows=500)
+    # AQE's split at toy scale: a partition counts as skewed past 1 KiB and
+    # twice the median, and splits into map-block ranges of at least the
+    # advisory size. Broadcast is off so the cell joins stay sort-merge
+    # joins, and 16 shuffle partitions keep the partitions that hold the
+    # PIP ladder's five hot cells (one per level) a minority, so the median
+    # partition stays cold.
+    conf = {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": "16",
+    }
+    saved = {k: spark.conf.get(k) for k in [*conf, "spark.sql.adaptive.skewJoin.enabled"]}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        split, pip_plan = pip_pairs()
+        ksplit, knn_plan = knn_digest()
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+        base, base_plan = pip_pairs()
+        kbase, _ = knn_digest()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    assert "SortMergeJoin(skew=true)" in pip_plan, pip_plan
+    assert "SortMergeJoin(skew=true)" in knn_plan, knn_plan
+    assert "skew=true" not in base_plan, base_plan
+    assert split == base
+    assert len({p for p, _ in base if p < n_hot}) > 0  # cluster actually joined
     assert ksplit == kbase and kbase[0] > n_hot  # dense cluster pairs survive
 
 

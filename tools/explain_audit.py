@@ -191,10 +191,7 @@ def main() -> None:
     from osmgraft.operators.knn import knn_candidates
 
     pts_id = pts.withColumn("pid", F.monotonically_increasing_id())
-    # core shape with the skew rail off: exactly ONE equi-join
-    q7 = knn_candidates(
-        pts_id, pts_id.select("pid", "lat", "lon"), radius_m=2000.0, skew_max_rows=None
-    )
+    q7 = knn_candidates(pts_id, pts_id.select("pid", "lat", "lon"), radius_m=2000.0)
     p7 = plan_of(q7)
     n_joins7 = len(re.findall(r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", p7))
     notes7 = [
@@ -204,22 +201,6 @@ def main() -> None:
         f"no Python operators: {'Python' not in p7}",
     ]
     sections.append(("chord-grid kNN candidates — one equi-join on a 3-D cell key", p7, notes7))
-
-    # default path (skew rail ON): the salted join stays an equi-join on
-    # (cell, salt); the only additions are the broadcast hot-map joins
-    q7b = knn_candidates(pts_id, pts_id.select("pid", "lat", "lon"), radius_m=2000.0)
-    p7b = plan_of(q7b)
-    notes7b = [
-        f"no cartesian/BNLJ: {'Cartesian' not in p7b and 'BroadcastNestedLoopJoin' not in p7b}",
-        f"hot-cell map reaches the big side as a BROADCAST join (never a shuffle "
-        f"of the label side): {'BroadcastHashJoin' in p7b or 'BroadcastExchange' in p7b}",
-        # at audit scale AQE may broadcast the salted side — BroadcastHashJoin
-        # is still a hash equi-join, the property is "never nested-loop"
-        f"salted main join still a hash equi-join (SMJ/SHJ/BHJ): "
-        f"{bool(re.search(r'(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)', p7b))}",
-        f"no Python operators: {'Python' not in p7b}",
-    ]
-    sections.append(("chord-grid kNN candidates — auto skew rail active (default)", p7b, notes7b))
 
     # 8. adaptive cell split — hot cells via broadcast join, never an IN-literal
     from osmgraft.operators.skew import adaptive_cell_split
@@ -260,15 +241,11 @@ def main() -> None:
         ],
         "poly_id long, ring_lats array<double>, ring_lons array<double>",
     )
-    # core shape with the skew rail off: one cell equi-join; the default
-    # rails-on plan only adds broadcast hot-map joins (see kNN section)
-    q13 = pip_join(pts, polys, broadcast_threshold=0, skew_max_rows=None)
+    q13 = pip_join(pts, polys, broadcast_threshold=0)
     p13 = plan_of(q13)
     n_joins13 = len(
         re.findall(r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", p13)
     )
-    q13b = pip_join(pts, polys, broadcast_threshold=0)  # default: rail on
-    p13b = plan_of(q13b)
     notes13 = [
         f"no cartesian/BNLJ even with a continent-size polygon: "
         f"{'Cartesian' not in p13 and 'BroadcastNestedLoopJoin' not in p13}",
@@ -277,9 +254,6 @@ def main() -> None:
         f"max_cover_cells, see test_spatial): {'explode(' in p13}",
         f"even-odd kernel is Arrow-batched (no row Python): "
         f"{'BatchEvalPython' not in p13}",
-        f"default auto skew rail adds only broadcast joins, no extra shuffle "
-        f"join or cartesian: "
-        f"{'Cartesian' not in p13b and 'BroadcastNestedLoopJoin' not in p13b}",
     ]
     sections.append(("partitioned PIP — adaptive ring covering equi-join", p13, notes13))
 
