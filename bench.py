@@ -42,8 +42,6 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-import pyspark.sql.functions as F  # noqa: E402
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SEED = 42
@@ -88,99 +86,6 @@ def stage_synth(spark, n_docs: int) -> tuple[str, str]:
     return docs_p, blobs_p
 
 
-def codec_fingerprint() -> str:
-    return _fingerprint([f"{REPO}/osmgraft/operators/multimodal.py"])
-
-
-def stage_codec_media(spark, n: int = 12_000) -> str:
-    """Stage >=10^4 payloads per codec (WAV / PNG) so codec
-    throughput appears in the bench record — the correctness oracles are
-    120-150 rows, too small to see a decode regression. Generation is
-    distributed (mapInPandas over spark.range) and keyed on the codec
-    sources so a codec change restages."""
-    import numpy as np
-    import pandas as pd
-
-    root = f"/tmp/osmgraft_bench_codec_{n}_{codec_fingerprint()}"
-    paths = {k: f"{root}/{k}.parquet" for k in ("wav", "png")}
-    if all(os.path.exists(f"{p}/_SUCCESS") for p in paths.values()):
-        return root
-
-    schema = "media_id long, payload binary"
-
-    def gen_wav(batches):
-        from osmgraft.operators.multimodal import encode_wav_pcm16
-
-        for pdf in batches:
-            ids, pls = [], []
-            for i in pdf["id"]:
-                rng = np.random.default_rng([11, int(i)])
-                x = rng.standard_normal(2000) * 0.3
-                ids.append(int(i))
-                pls.append(encode_wav_pcm16(x, 8000))
-            yield pd.DataFrame({"media_id": ids, "payload": pls})
-
-    def gen_png(batches):
-        import struct
-        import zlib
-
-        def chunk(tag, payload):
-            return (
-                struct.pack(">I", len(payload))
-                + tag
-                + payload
-                + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-            )
-
-        for pdf in batches:
-            ids, pls = [], []
-            for i in pdf["id"]:
-                rng = np.random.default_rng([13, int(i)])
-                img = rng.integers(0, 256, (64, 64, 3), dtype=np.uint8)
-                flat = img.reshape(64, 192).astype(np.int32)
-                ftype = int(i) % 5  # cycle all five filters incl. Paeth
-                left = np.zeros_like(flat)
-                left[:, 3:] = flat[:, :-3]
-                up = np.zeros_like(flat)
-                up[1:] = flat[:-1]
-                ul = np.zeros_like(flat)
-                ul[1:, 3:] = flat[:-1, :-3]
-                if ftype == 0:
-                    res = flat
-                elif ftype == 1:
-                    res = flat - left
-                elif ftype == 2:
-                    res = flat - up
-                elif ftype == 3:
-                    res = flat - ((left + up) >> 1)
-                else:
-                    p = left + up - ul
-                    pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-                    pred = np.where(
-                        (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)
-                    )
-                    res = flat - pred
-                raw = b"".join(
-                    bytes([ftype]) + (res[y] & 0xFF).astype(np.uint8).tobytes()
-                    for y in range(64)
-                )
-                png = (
-                    b"\x89PNG\r\n\x1a\n"
-                    + chunk(b"IHDR", struct.pack(">IIBBBBB", 64, 64, 8, 2, 0, 0, 0))
-                    + chunk(b"IDAT", zlib.compress(raw, 1))
-                    + chunk(b"IEND", b"")
-                )
-                ids.append(int(i))
-                pls.append(png)
-            yield pd.DataFrame({"media_id": ids, "payload": pls})
-
-    for kind, gen in (("wav", gen_wav), ("png", gen_png)):
-        spark.range(n).repartition(CPUS * 2).mapInPandas(gen, schema).write.mode(
-            "overwrite"
-        ).parquet(paths[kind])
-    return root
-
-
 def main() -> None:
     from osmgraft.session import get_spark
 
@@ -217,11 +122,6 @@ def main() -> None:
             res=4,
         ).count()
         dedup_labels(labels, radius_m=2000.0).count()
-        from osmgraft.operators.multimodal import png_decode_meta, wav_decode_meta
-
-        croot = stage_codec_media(spark)
-        wav_decode_meta(spark.read.parquet(f"{croot}/wav.parquet").limit(200)).count()
-        png_decode_meta(spark.read.parquet(f"{croot}/png.parquet").limit(200)).count()
 
     _warmup()
 
@@ -303,29 +203,6 @@ def main() -> None:
             frame.unpersist()
         return n
 
-    # codec throughput rows: staged (untimed) >=10^4-payload tables; each
-    # query decodes every payload byte-for-byte on executors and reduces
-    # to one number so nothing short-circuits the kernel
-    codec_root = stage_codec_media(spark)
-    codec_bytes = {
-        k: spark.read.parquet(f"{codec_root}/{k}.parquet")
-        .agg(F.sum(F.octet_length("payload")))
-        .collect()[0][0]
-        for k in ("wav", "png")
-    }
-
-    def q_wav_codec():
-        from osmgraft.operators.multimodal import wav_decode_meta
-
-        m = spark.read.parquet(f"{codec_root}/wav.parquet")
-        return wav_decode_meta(m).agg(F.sum("n_samples")).collect()[0][0]
-
-    def q_png_codec():
-        from osmgraft.operators.multimodal import png_decode_meta
-
-        m = spark.read.parquet(f"{codec_root}/png.parquet")
-        return png_decode_meta(m).agg(F.sum("px_sum")).collect()[0][0]
-
     QUERIES = [
         ("osm_pipeline_tiles", q_pipeline),
         ("pip_partitioned", q_pip),
@@ -337,8 +214,6 @@ def main() -> None:
         ("smooth_box", q_smooth),
         ("contour_segments", q_contours),
         ("s2_compact", q_s2c),
-        ("wav_decode_12k", q_wav_codec),
-        ("png_decode_12k", q_png_codec),
     ]
 
     # ---- interleaved campaign ----------------------------------------------
@@ -368,11 +243,6 @@ def main() -> None:
                 "rounds": rounds,
                 "poi_rows": n_labels,
                 "poi_rows_per_sec": round(n_labels / times["osm_pipeline_tiles"], 1),
-                "codec_bytes": codec_bytes,
-                "codec_mb_per_sec": {
-                    k: round(codec_bytes[k] / 2**20 / times[f"{k}_decode_12k"], 1)
-                    for k in ("wav", "png")
-                },
                 "query_samples": samples,
             }
         )

@@ -1,14 +1,13 @@
 """Boundary guard for parsers over untrusted bytes.
 
-Every parser over untrusted bytes (`decode_wav`, `decode_png`,
-`decode_pnm`, `parse_mp4_meta`, `functions.ttf.parse_ttf`,
-`sources.geoblob.unpack`) documents one contract: malformed input raises
-``ValueError``. The parser BODIES use stdlib primitives whose own
-exception types leak on adversarial bytes — ``struct.error`` on a short
-buffer, ``zlib.error`` on corrupt deflate, ``IndexError`` /
-``OverflowError`` on a tampered offset or length field. Uncaught, any of
-those kills the Spark task (and after task retries, the 10^12-document
-job) on ONE bad payload.
+Every parser over untrusted bytes (`operators.multimodal.decode_png`,
+`functions.ttf.parse_ttf`, `sources.geoblob.unpack`) documents one
+contract: malformed input raises ``ValueError``. The parser BODIES use
+stdlib primitives whose own exception types leak on adversarial bytes —
+``struct.error`` on a short buffer, ``zlib.error`` on corrupt deflate,
+``IndexError`` / ``OverflowError`` on a tampered offset or length
+field. Uncaught, any of those kills the Spark task (and after task
+retries, the 10^12-document job) on ONE bad payload.
 
 :func:`untrusted_parser` converts that closed set to ``ValueError`` at
 the function boundary (verified by ``tools/fuzz_codecs.py``'s mutation

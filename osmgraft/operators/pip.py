@@ -16,9 +16,17 @@ Two physical strategies behind one API:
   ``{res, res-2, res-4, res-6, 0}``; each polygon picks the finest level whose
   estimated covering stays under ``max_cover_cells``), explode (polygon
   replicated per covering cell), equi-join with cell-encoded points
-  (shuffle on cell — co-partitioned; AQE's skew-join split spreads a hot
-  cell over several tasks), then the exact kernel per candidate pair.
-  This is the 10-TB-polygon path.
+  (shuffle on cell — co-partitioned), then the exact kernel per candidate
+  pair. This is the 10-TB-polygon path.
+
+  Join skew is left to AQE's skew-join split, which cuts a shuffle
+  partition larger than ``spark.sql.adaptive.skewJoin.skewedPartitionFactor``
+  times the median partition. It does not always fire here: a point
+  emits one row per ladder level (below), so a dense cluster is five hot
+  cells, not one. With ``spark.sql.shuffle.partitions`` at 8 or fewer
+  (``session.get_spark`` defaults it to the core count) those five fill so
+  many partitions that the median partition is itself hot, and AQE splits
+  nothing.
 
   The covering is exact-rasterized, not bbox-sampled: cells that the ring
   passes through (edge sampling at one inradius step + disk(1) expansion)
@@ -273,7 +281,12 @@ def pip_join(
     poly_id/poly_name). Pass ``id_col`` (any unique row id) to make the
     keep-misses re-join correct under duplicate coordinates; without it
     the re-join keys on all point columns and REQUIRES distinct rows.
+
+    Raises ``ValueError`` for any other ``how`` (Spark synonyms such as
+    ``'left_outer'`` included) before any Spark job runs.
     """
+    if how not in ("inner", "left"):
+        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     lat, lon = point_cols
     polys = _poly_with_bbox(polygons)
 

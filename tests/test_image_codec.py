@@ -1,10 +1,10 @@
-"""Stdlib image codecs behind the multimodal seam (no Spark needed).
+"""The stdlib PNG decoder (no Spark needed).
 
 decode_png: 8-bit gray/RGB/RGBA, all five scanline filters (the test
-forward-filters a known image per type and asserts exact inversion).
-decode_pnm: binary P5/P6 with header comments. image_features: analytic
-pins. These make `image/png` + PNM real mimes for decode_media alongside
-audio/wav; JPEG/video still raise (honest seam)."""
+forward-filters a known image per type and asserts exact inversion),
+palette, sub-byte and 16-bit depths, gray-alpha and Adam7 interlace,
+bomb-safe geometry caps, and agreement with the font atlas writer
+``fontmetrics.write_png_gray8``."""
 
 from __future__ import annotations
 
@@ -14,12 +14,7 @@ import zlib
 import numpy as np
 import pytest
 
-from osmgraft.operators.multimodal import (
-    decode_media,
-    decode_png,
-    decode_pnm,
-    image_features,
-)
+from osmgraft.operators.multimodal import decode_png
 
 
 def _png_chunk(tag: bytes, payload: bytes) -> bytes:
@@ -188,54 +183,6 @@ def test_png_decode_bomb_safe():
     # error with a raised cap too (still no crash path)
     with pytest.raises(ValueError):
         decode_png(bomb, max_samples=10**18)
-
-
-def test_pnm_p5_p6_with_comments():
-    img = _test_img(6, 5, 1)
-    p5 = b"P5 # gray\n# another comment\n 5 6\n255\n" + img.tobytes()
-    assert np.array_equal(decode_pnm(p5), img)
-    rgb = _test_img(3, 4, 3)
-    p6 = b"P6\n4 3\n255\n" + rgb.tobytes()
-    assert np.array_equal(decode_pnm(p6), rgb)
-    with pytest.raises(ValueError):
-        decode_pnm(b"P3\n1 1\n255\n0")  # ascii PNM unsupported
-    with pytest.raises(ValueError):
-        decode_pnm(b"P5\n5 6\n255\n" + img.tobytes()[:-3])  # truncated
-    with pytest.raises(ValueError):
-        decode_pnm(b"P5\n5 6\n65535\n" + img.tobytes())  # 2-byte maxval
-
-
-def test_image_features_analytic():
-    img = np.full((10, 20), 128, dtype=np.uint8)
-    v = image_features(img)
-    assert v.shape == (64,)
-    w, h, c, mean, std = v[:5]
-    assert (w, h, c) == (20.0, 10.0, 1.0)
-    assert abs(mean - 128 / 255) < 1e-6 and std == 0.0
-    hist = v[5:]
-    assert abs(hist.sum() - 1.0) < 1e-6
-    assert np.count_nonzero(hist) == 1  # constant image -> single bin
-    # RGB mean over channels
-    rgb = np.zeros((4, 4, 3), dtype=np.uint8)
-    rgb[..., 0] = 255  # pure red: gray = 1/3
-    v2 = image_features(rgb)
-    assert v2[2] == 3.0
-    assert abs(v2[3] - (1 / 3)) < 1e-6
-
-
-def test_decode_media_image_mimes_real():
-    img = _test_img(8, 8, 3)
-    v = decode_media(_encode_png(img, 4), "image/png")
-    assert v.shape == (64,) and v[0] == 8.0
-    v2 = decode_media(b"P6\n8 8\n255\n" + img.tobytes(), "image/x-portable-pixmap")
-    # same pixels through two container formats -> identical features
-    assert np.array_equal(v, v2)
-    # JPEG and video have no codec here: they keep the
-    # NotImplementedError seam instead of decoding fake pixels
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\xff\xd8\xff", "image/jpeg")
-    with pytest.raises(NotImplementedError):
-        decode_media(b"\x00\x00\x00\x18ftypmp42", "video/mp4")
 
 
 # --- extended envelope: palette / sub-byte / 16-bit / gray-alpha ----------

@@ -707,6 +707,35 @@ def test_dedup_labels_rejects_bad_radius_before_any_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup("dedup_bad_radius")) == []
 
 
+def test_pip_join_rejects_unknown_how_before_any_job(spark):
+    """Only 'inner' and 'left' are joins pip_join implements; any other
+    ``how`` (Spark's own 'left_outer' included) raises ValueError before
+    a single Spark job runs, ahead of the ``strategy='auto'`` polygon
+    count. zonal_stats passes ``how`` through and fails the same way."""
+    from osmgraft.operators.pip import pip_join
+    from osmgraft.operators.zonal import zonal_stats
+
+    pts = spark.createDataFrame(
+        [(1, 45.0, 7.0, 2.0)], "pid long, lat double, lon double, v double"
+    )
+    polys = spark.createDataFrame(
+        [(1, [44.8, 44.8, 45.2, 45.2], [6.8, 7.2, 7.2, 6.8])],
+        "poly_id long, ring_lats array<double>, ring_lons array<double>",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("pip_bad_how", "pip_bad_how")
+    try:
+        for bad in ("outer", "right", "left_outer", "full"):
+            with pytest.raises(ValueError, match="how"):
+                pip_join(pts, polys, how=bad)
+        with pytest.raises(ValueError, match="how"):
+            zonal_stats(pts, polys, "v", how="outer")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup("pip_bad_how")) == []
+
+
 def test_skew_split_helpers_bound_hot_cells(spark):
     """hot_cell_map: only the cell over the bound is listed, with
     ceil(n / bound) salt buckets."""

@@ -1,11 +1,11 @@
 """Deterministic mutation fuzzer for the untrusted-bytes parser surface.
 
-Every decoder in ``osmgraft.operators.multimodal``, ``functions.ttf``
-and ``sources.geoblob`` documents one contract: a malformed payload raises
-``ValueError`` (or ``NotImplementedError`` for an out-of-envelope but
-well-formed variant). Nothing else may escape — a ``struct.error`` /
-``zlib.error`` / ``IndexError`` reaching the Spark kernel is an executor
-task death, and at 10^12 documents a single adversarial payload must not
+Every parser over untrusted bytes (``operators.multimodal.decode_png``,
+``functions.ttf.parse_ttf`` and ``sources.geoblob``) documents one
+contract: a malformed payload raises ``ValueError`` (or
+``NotImplementedError`` for an out-of-envelope but well-formed variant).
+Nothing else may escape — a ``struct.error`` / ``zlib.error`` /
+``IndexError`` reaching the Spark kernel is an executor task death, and at 10^12 documents a single adversarial payload must not
 be able to kill a job (or stall it: each call is also wall-clocked).
 
 Run: ``python tools/fuzz_codecs.py [iterations-per-codec] [seed]``.
@@ -27,15 +27,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from osmgraft.functions.ttf import parse_ttf
-from osmgraft.operators.multimodal import (
-    decode_media,
-    decode_png,
-    decode_pnm,
-    decode_wav,
-    encode_mp4_stub,
-    encode_wav_pcm16,
-    parse_mp4_meta,
-)
+from osmgraft.operators.multimodal import decode_png
 from osmgraft.sources import geoblob
 
 ALLOWED = (ValueError, NotImplementedError)
@@ -92,18 +84,9 @@ def _parse_ttf_bytes(payload: bytes):
 
 
 def seeds() -> dict[str, tuple[bytes, object]]:
-    rng = np.random.default_rng(3)
-    wav = encode_wav_pcm16((rng.standard_normal(600) * 0.4).astype(np.float64), 8000)
-    pnm = b"P6\n7 9\n255\n" + rng.integers(0, 256, 7 * 9 * 3, dtype=np.uint8).tobytes()
-    mp4 = encode_mp4_stub(duration_ms=1200, width=64, height=48, timescale=600)
     return {
-        "wav": (wav, lambda b: decode_wav(b)),
-        "pnm": (pnm, lambda b: decode_pnm(b)),
         "png": (_png_seed(), lambda b: decode_png(b)),
-        "mp4": (mp4, lambda b: parse_mp4_meta(b)),
         "ttf": (_ttf_seed(), _parse_ttf_bytes),
-        # the dispatch seam itself (mime sniff + route)
-        "decode_media": (_png_seed(), lambda b: decode_media(b, "image/png")),
         # geometry blobs: the flagship decode path's own payload format
         "geoblob_point": (geoblob.pack_point(48.1, 11.5), geoblob.unpack),
         # the point kernels' checked unpack (decode.decode_point_rows)
